@@ -33,12 +33,3 @@ def md5int64_seeded(col: Column, seed: int | str) -> Column:
 def fast_hash64(col: Column) -> Column:
     """Production path (no oracle requirement): xxhash64, JVM codegen."""
     return F.xxhash64(col)
-
-
-def duckdb_md5int64(expr: str) -> str:
-    """The DuckDB SQL rendering of md5int64 for oracle strings."""
-    return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def duckdb_md5int64_seeded(expr: str, seed: int | str) -> str:
-    return duckdb_md5int64(f"concat('{seed}:', {expr})")

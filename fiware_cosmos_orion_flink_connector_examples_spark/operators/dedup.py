@@ -857,25 +857,6 @@ def dot_vectorized():
     return pair_dot
 
 
-def _blocked_cosine_pairs(
-    v: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Within-block pair scoring shared by the label- and IVF-blocked
-    variants.  ``v`` must have (id_col, blk, v[normalized]).  The join
-    is an equi-join on the block key — quadratic only inside a block."""
-    a = v.select(F.col(id_col).alias("d1"), "blk", F.col("v").alias("v1"))
-    b = v.select(F.col(id_col).alias("d2"), "blk", F.col("v").alias("v2"))
-    # JVM fold, not the Arrow pandas scorer: shipping two 64-dim arrays
-    # per PAIR through Arrow measured 30% slower than the interpreted
-    # fold — vectorization only pays when compute/transfer ratio is high
-    return (
-        a.join(b, ["blk"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", F.round(dot(F.col("v1"), F.col("v2")), 6).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-
-
 def _sequential_normalize(M):
     """numpy L2-normalize with the JVM fold's exact summation order:
     per-dim sequential accumulation for the norm (NOT numpy's pairwise

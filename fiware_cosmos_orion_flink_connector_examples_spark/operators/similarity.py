@@ -241,22 +241,6 @@ def kmeans_fit(
     return centroids
 
 
-def _argmin_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """Index of the nearest centroid (squared L2), k×dim multiply-adds
-    JVM-side.  Implemented as sort-of-(dist,idx)-structs: a chained
-    when(d<best,…) fold would embed the running best expression twice
-    per step — 2^k tree nodes, planner OOM at k=16 (measured)."""
-    return _topn_centroids(vec, centroids, 1)[0]
-
-
-def _sq_dist_lit(vec: Column, centroid: list[float]) -> Column:
-    d = F.lit(0.0)
-    for i, c in enumerate(centroid):
-        diff = vec[i] - F.lit(float(c))
-        d = d + diff * diff
-    return d
-
-
 def topk_cosine_ivf(
     df: DataFrame,
     queries: DataFrame,
@@ -345,18 +329,6 @@ def _probe_cells(
     d = -2.0 * (M @ C.T) + c_norms
     idx = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
     return {int(x) for row in idx for x in row}
-
-
-def _topn_centroids(vec: Column, centroids: list[list[float]], n: int) -> Column:
-    """Array of the n nearest centroid indices (by squared L2),
-    computed as sort of a literal (dist, idx) struct array."""
-    pairs = F.array(
-        *[
-            F.struct(_sq_dist_lit(vec, c).alias("d"), F.lit(i).alias("i"))
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.slice(F.transform(F.array_sort(pairs), lambda s: s["i"]), 1, n)
 
 
 def topk_cosine_signbucket(

@@ -390,18 +390,6 @@ def simhash_table(
     return votes.select(F.col(id_col), F.expr(sim).alias("sim"))
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document stats projection used by the registry queries."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        bpe_token_count(text_col).alias("n_bpe_tokens"),
-        stopword_count(text_col).alias("n_stopwords"),
-        quality_score(text_col).alias("quality"),
-        predicted_lang(text_col).alias("pred_lang"),
-    )
-
-
 # PII patterns chosen to behave identically under Java regex (Spark)
 # and RE2 (DuckDB oracle): character classes + bounded repetition only,
 # no backreferences or lookaround.

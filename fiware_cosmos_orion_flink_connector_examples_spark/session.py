@@ -9,6 +9,7 @@ threshold keeps dimension-table joins shuffle-free.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -59,6 +60,29 @@ def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package once per process into a private temp dir that
+    is removed at interpreter exit."""
+    import atexit
+    import shutil
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    zdir = tempfile.mkdtemp(prefix="engine_pkg_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "engine_pkg.zip")
+    with zipfile.ZipFile(zpath, "w") as z:
+        for dirpath, _, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    z.write(full, os.path.relpath(full, root))
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -70,24 +94,7 @@ def _ship_package(spark: SparkSession) -> None:
     Arrow/pandas stage."""
     if getattr(spark, "_engine_pkg_shipped", False):
         return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"spark_ngsi_engine_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for dirpath, _, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        z.write(full, os.path.relpath(full, root))
-        os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(_package_zip())
     spark._engine_pkg_shipped = True
 
 

@@ -511,99 +511,6 @@ def recover_merge_upsert(spark, path: str) -> dict:
     return {"restored": sorted(restored), "cleaned": sorted(cleaned)}
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    fmt: str = "parquet",
-) -> dict:
-    """Write the SERVING artifact a training dataloader consumes: docs
-    hash-assigned to ``n_shards`` hive-partitioned shard directories,
-    rows inside each shard's files sorted by the curriculum position
-    (high-quality-first — the curriculum_shard_order contract), plus a
-    ``_shards_manifest.json`` recording per-shard doc/token counts for
-    the dataloader's deterministic epoch plan.  Returns the manifest
-    dict.
-
-    Shape: the position comes from the same two-pass (shard, tier)
-    rank the registered query proves (no whole-shard single-task
-    sort); the write repartitions on the shard column so each shard
-    directory is one task's files, sorted within via
-    sortWithinPartitions — the write_clustered discipline.  At 100 TB
-    n_shards grows with the corpus (shards ≈ tokens / shard budget),
-    keeping per-task work constant."""
-    import json
-
-    from pyspark.sql.window import Window
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
-        md5int64_seeded,
-    )
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators.text import (
-        quality_score,
-        token_count,
-    )
-
-    base = df.filter(F.col(text_col).isNotNull()).withColumn(
-        "_shard",
-        F.pmod(md5int64_seeded(F.col(id_col).cast("string"), "shard"), F.lit(n_shards)),
-    ).withColumn("_q", quality_score(text_col)).withColumn(
-        "_nt", token_count(text_col).cast("long")
-    ).withColumn("_tier", F.floor(F.col("_q") * 10).cast("int"))
-    wt = (
-        Window.partitionBy("_shard")
-        .orderBy(F.desc("_tier"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefixes = (
-        base.groupBy("_shard", "_tier")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_prefix", F.coalesce(F.sum("_n").over(wt), F.lit(0)))
-        .select("_shard", "_tier", "_prefix")
-    )
-    ww = Window.partitionBy("_shard", "_tier").orderBy(
-        F.desc("_q"), F.asc(id_col)
-    )
-    ordered = (
-        base.join(F.broadcast(prefixes), ["_shard", "_tier"])
-        .withColumn("_position", (F.col("_prefix") + F.row_number().over(ww)).cast("long"))
-        .drop("_tier", "_prefix")
-    )
-    (
-        ordered.repartition(F.col("_shard"))
-        .sortWithinPartitions("_position")
-        .write.partitionBy("_shard")
-        .format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )
-    manifest_rows = (
-        ordered.groupBy("_shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_nt").alias("n_tokens"),
-        )
-        .collect()
-    )  # bounded by n_shards — a layout constant
-    manifest = {
-        "n_shards": n_shards,
-        "shards": {
-            str(r["_shard"]): {"n_docs": r["n_docs"], "n_tokens": r["n_tokens"]}
-            for r in manifest_rows
-        },
-    }
-    spark = df.sparkSession
-    jvm = spark._jvm
-    meta = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_shards_manifest.json")
-    fs = meta.getFileSystem(spark._jsc.hadoopConfiguration())
-    st = fs.create(meta, True)
-    st.write(bytearray(json.dumps(manifest, sort_keys=True).encode()))
-    st.close()
-    return manifest
-
-
 # --- snapshot-isolated tables (manifest commit log) --------------------------
 #
 # The missing metadata layer merge_upsert's docstring names: plain

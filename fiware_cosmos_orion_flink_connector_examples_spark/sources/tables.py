@@ -127,8 +127,7 @@ def _scan_spread(
 # + mtime_ns; for directory-style parquet, the sorted (name, size,
 # mtime_ns) of every entry).  This caches METADATA only — every
 # invocation still plans and reads all row data from parquet; a
-# rewritten file changes the key and re-infers.  Kill switch:
-# SPARK_GRAFT_SCHEMA_CACHE=0 (read per call).
+# rewritten file changes the key and re-infers.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
@@ -165,28 +164,23 @@ def _file_identity(path: str) -> tuple:
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the identity-keyed schema
-    cache (round 18, extending the round-17 ``load_table`` cache to the
-    engine's OWN parquet artifacts — keyed tables, serving indexes):
-    every uncached read pays driver-side datasource resolution + footer
-    schema inference (and, for multi-file directories, a whole Spark
-    JOB to merge footers), ~15× a schema-supplied read.  Metadata-only:
-    the scan itself is unchanged, every invocation reads all row data;
-    any file/dir change re-infers (recursive identity).  Kill switch:
-    SPARK_GRAFT_SCHEMA_CACHE=0 (read per call).  At 100 TB the same
-    fix is "store schemas in the catalog" — inference cost scales with
-    file COUNT, not data size."""
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CACHE", "1") != "0":
-        try:
-            key = _file_identity(path)
-        except OSError:
-            key = None
-        if key is not None:
-            schema = _SCHEMA_CACHE.get(key)
-            if schema is None:
-                schema = spark.read.parquet(path).schema
-                _SCHEMA_CACHE[key] = schema
-            return spark.read.schema(schema).parquet(path)
-    return spark.read.parquet(path)
+    cache, for the engine's OWN parquet artifacts (keyed tables,
+    serving indexes) as well as testdata: every uncached read pays
+    driver-side datasource resolution + footer schema inference (and,
+    for multi-file directories, a whole Spark JOB to merge footers),
+    ~15× a schema-supplied read.  Metadata-only: the scan itself is
+    unchanged, every invocation reads all row data; any file/dir change
+    re-infers (recursive identity).  At 100 TB the same fix is "store
+    schemas in the catalog" — inference cost scales with file COUNT,
+    not data size."""
+    try:
+        key = _file_identity(path)
+    except OSError:  # missing path: the reader raises its own error
+        return spark.read.parquet(path)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(
@@ -209,25 +203,8 @@ def load_table(
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = None
-    if os.environ.get("SPARK_GRAFT_SCHEMA_CACHE", "1") != "0":
-        try:
-            key = _file_identity(path)
-        except OSError:
-            key = None
-        if key is not None:
-            schema = _SCHEMA_CACHE.get(key)
-            if schema is None:
-                schema = spark.read.parquet(path).schema
-                _SCHEMA_CACHE[key] = schema
-    if schema is not None:
-        # Supplying the (previously inferred, identity-keyed) schema
-        # skips per-call footer inference; the scan itself is unchanged.
-        df = spark.read.schema(schema).parquet(path)
-        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-    else:
-        df = spark.read.parquet(path)
-        dtypes = dict(df.dtypes)
+    df = read_parquet_cached(spark, path)
+    dtypes = dict(df.dtypes)
     if name == "events" and dtypes.get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     ntz_cols = [c for c, t in dtypes.items() if t == "timestamp_ntz"]

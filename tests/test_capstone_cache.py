@@ -1,12 +1,13 @@
-"""The build-once capstone fixture cache (VERDICT r15 #6 + ADVICE
-r15): content-aware fingerprints (a regenerated testdata at IDENTICAL
-row counts must miss the cache) and an atomic first-writer-wins
-publish (the check-then-rename race is gone — a losing builder
-discards its dir and serves the winner's)."""
+"""The build-once capstone memo: content-aware fingerprints (testdata
+rewritten at IDENTICAL row counts must miss the memo), one build per
+process, and no build artefact — capstone dir or shipped package zip —
+left in the temp dir once the process exits."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -15,6 +16,8 @@ from fiware_cosmos_orion_flink_connector_examples_spark.plans.extensions import 
     _capstone_cache,
     _sf_print,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_docs(path, texts):
@@ -61,42 +64,58 @@ def test_cache_builds_once_then_serves(tmp_path):
         assert f.read() == "built"
 
 
-def test_cache_publish_race_loser_discards_and_serves_winner(tmp_path):
-    """A competitor publishing BETWEEN our existence check and our
-    publish (the ADVICE r15 race window) must win: os.link is atomic,
-    the loser's dir is removed, and the loser returns the winner's
-    path."""
-    import hashlib
-    import tempfile
+# Builds one capstone twice in a fresh interpreter; prints the build count.
+_BUILD_IN_FRESH_PROCESS = """
+import os
+from fiware_cosmos_orion_flink_connector_examples_spark.plans.extensions import (
+    _capstone_cache,
+)
+builds = []
+def build(work):
+    builds.append(work)
+    with open(os.path.join(work, "artifact"), "w") as f:
+        f.write("built")
+paths = {_capstone_cache("unit_proc", "fp", build) for _ in range(2)}
+assert len(paths) == 1 and os.path.isfile(os.path.join(paths.pop(), "artifact"))
+print("BUILDS", len(builds))
+"""
 
-    from fiware_cosmos_orion_flink_connector_examples_spark.plans import (
-        extensions as ext,
+
+def _run_fresh(code: str, tmpdir) -> str:
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
     )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout
 
-    fp = f"{tmp_path}:unit-test-race"
-    name = "unit_race"
-    key = hashlib.md5(
-        f"{name}:{fp}:{ext._FIXTURE_VERSION}".encode()
-    ).hexdigest()[:12]
-    ptr = os.path.join(
-        tempfile.gettempdir(), f"sg_capstone_{name}_{key}.ptr"
+
+def test_each_process_builds_once_and_leaves_nothing(tmp_path):
+    """Two fresh processes sharing one TMPDIR: each runs the build (no
+    state crosses processes) and neither leaves an ``sg_*`` entry."""
+    for _ in range(2):
+        out = _run_fresh(_BUILD_IN_FRESH_PROCESS, tmp_path)
+        assert "BUILDS 1" in out.splitlines()
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("sg_")]
+
+
+def test_package_zip_removed_at_exit(tmp_path):
+    out = _run_fresh(
+        """
+import os
+from fiware_cosmos_orion_flink_connector_examples_spark import session
+spark = session.get_spark(cpus=1)
+session.ensure_engine_confs(spark)
+assert os.path.isfile(session._package_zip())
+print("ZIP", session._package_zip())
+""",
+        tmp_path,
     )
-    winner_dir = str(tmp_path / "winner")
-    os.makedirs(winner_dir)
-
-    loser_dirs = []
-
-    def build(work):
-        loser_dirs.append(work)
-        # simulate the competitor winning while we were building
-        with open(ptr + ".tmp", "w") as f:
-            f.write(winner_dir)
-        os.rename(ptr + ".tmp", ptr)
-
-    try:
-        got = _capstone_cache(name, fp, build)
-        assert got == winner_dir
-        assert loser_dirs and not os.path.isdir(loser_dirs[0])  # no leak
-    finally:
-        if os.path.isfile(ptr):
-            os.remove(ptr)
+    zpath = next(ln.split(" ", 1)[1] for ln in out.splitlines() if ln.startswith("ZIP "))
+    assert zpath.startswith(str(tmp_path))
+    assert not os.path.exists(os.path.dirname(zpath))

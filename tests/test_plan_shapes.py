@@ -713,11 +713,25 @@ def test_hybrid_rrf_fusion_is_bounded(spark):
     assert "PythonUDF" not in plan
 
 
-def test_cms_sketch_is_partial_agged(spark):
+def test_cms_sketch_is_partial_agged(spark, monkeypatch):
     """The CMS build is a plain (d, bucket) hash agg — partial counts
     map-side (mergeable by addition), candidates via
-    TakeOrderedAndProject, probe join broadcast."""
-    plan = plan_of(spark, "heavy_hitters_cms")
+    TakeOrderedAndProject, probe join broadcast.  Pinned on the
+    PRE-checkpoint frame: the registered query wraps it in eagerly(),
+    whose localCheckpoint collapses the returned plan."""
+    from fiware_cosmos_orion_flink_connector_examples_spark.plans.extensions import (
+        _heavy_hitters_cms_frames,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "0")
+    res, caches = _heavy_hitters_cms_frames(spark, SF)
+    try:
+        plan = res._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        )
+    finally:
+        for c in caches:
+            c.unpersist()
     assert "TakeOrderedAndProject" in plan
     assert plan.count("HashAggregate") >= 4  # partial+final × sketch/exact
     assert "BroadcastHashJoin" in plan

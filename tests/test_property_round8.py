@@ -203,14 +203,17 @@ def test_hash_dup_pairs_releases_bands_cache(spark):
     """ADVICE r7 #3: the default (materialize=True) path leaves no
     bands cache behind — the result is already computed rows."""
     spark.catalog.clearCache()
+    # delta-based, like the band_df_cap variant below: clearCache() does
+    # not remove localCheckpoint blocks left by earlier tests
+    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     df = spark.createDataFrame(
         [(i, i * 1_000_003) for i in range(30)] + [(100, 1_000_003)],
         "media_id long, phash long",
     )
     out = dedup.hash_dup_pairs(df, "media_id", max_hamming=6)
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     # only the (tiny) checkpoint block remains, never the bands cache
-    assert len(infos) <= 1
+    assert after <= before + 1
     assert {(r.d1, r.d2) for r in out.collect()} == {(1, 100)}
 
 
@@ -453,6 +456,28 @@ def test_eagerly_materializes_and_releases_caches(spark):
     assert {(r.k, r.n) for r in out.collect()} == {
         (i, 143 if i < 6 else 142) for i in range(7)
     }
+
+
+def test_heavy_hitters_cms_releases_its_persist(spark, sf_dir):
+    """heavy_hitters_cms persists its vocab-scale exact counts for three
+    consumers and must release them once the result is materialized:
+    the persistent-RDD count is unchanged by the query.  The returned
+    frame's own localCheckpoint (eagerly) is the caller's result and
+    lives as long as the frame, so checkpointed RDDs are not counted."""
+    from fiware_cosmos_orion_flink_connector_examples_spark.plans.registry import (
+        QUERIES,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> int:
+        rdds = jsc.getPersistentRDDs().values()
+        return sum(1 for r in rdds if not r.isCheckpointed())
+
+    before = persisted()
+    out = QUERIES["heavy_hitters_cms"].fn(spark, sf_dir)
+    assert len(out.collect()) == 20
+    assert persisted() == before
 
 
 def test_attach_pair_sides_regimes_identical_rows(spark):

@@ -4,9 +4,9 @@ Arms alternate INSIDE one session per repeat (the box-noise
 discipline): arm "off" sets $AB_ENV=$AB_OFF, arm "on" sets
 $AB_ENV=$AB_ON (default: off="0", on="1").  Use for any optimization
 gated on an env var that the code reads per call
-(SPARK_GRAFT_DSIR_PERSIST_PRE, SPARK_GRAFT_SCHEMA_CACHE, ...).
+(SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES, ...).
 
-Usage: AB_ENV=SPARK_GRAFT_DSIR_PERSIST_PRE python tools/ab_env.py q1 q2
+Usage: AB_ENV=SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES AB_ON=262144 python tools/ab_env.py q1 q2
 Env: SPARK_GRAFT_SF_DIR, AB_REPEATS (default 3), AB_ENV, AB_OFF, AB_ON.
 """
 
