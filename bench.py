@@ -6,6 +6,9 @@ LAST (the driver's bounded tail capture parses the final line).
 
 Each query is fully materialized executor-side via the noop sink (no
 driver collect — measures the distributed plan, not row transfer).
+
+Usage: python bench.py [q1 q2 ...] — named queries time only those and
+never write the BENCH_local.json sidecar.
 """
 
 from __future__ import annotations
@@ -27,6 +30,8 @@ from fiware_cosmos_orion_flink_connector_examples_spark.session import get_spark
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    subset = sys.argv[1:]
+    selected = {n: QUERIES[n] for n in subset} if subset else QUERIES
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -42,7 +47,7 @@ def main() -> None:
             pass
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
-    for name, spec in QUERIES.items():
+    for name, spec in selected.items():
         best = float("inf")
         try:
             for _ in range(repeats):  # min-of-N damps JIT/GC noise
@@ -81,10 +86,10 @@ def main() -> None:
     # Full artifact to a sidecar file too: the driver's bounded tail
     # capture truncated the single JSON line in round 2 (parsed: null),
     # so a durable on-disk copy guarantees the numbers survive.
-    # sf0.1 ONLY: the sidecar is the driver/quiet-box record; sf0.01
-    # verify-loop runs must not clobber it (it is gitignored, so a
-    # clobbered record is unrecoverable).
-    if isinstance(result["sf"], float) and abs(result["sf"] - 0.1) < 1e-9:
+    # Full sf0.1 suite ONLY: the sidecar is the driver/quiet-box record;
+    # sf0.01 verify-loop and subset runs must not clobber it (it is
+    # gitignored, so a clobbered record is unrecoverable).
+    if not subset and isinstance(result["sf"], float) and abs(result["sf"] - 0.1) < 1e-9:
         try:
             Path(_REPO, "BENCH_local.json").write_text(
                 json.dumps(result) + "\n"

@@ -24,7 +24,33 @@ shape, durable storage.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame
+
+
+class _ModelLRU:
+    """Bounded driver-side module memo: hits refresh recency, inserts
+    past ``cap`` evict the least recently used (count, not bytes)."""
+
+    def __init__(self, cap: int = 32):
+        self.cap = cap
+        self._d: "OrderedDict[tuple, object]" = OrderedDict()
+
+    def get(self, key):
+        hit = self._d.get(key)
+        if hit is not None:
+            self._d.move_to_end(key)
+        return hit
+
+    def __setitem__(self, key, value):
+        self._d[key] = value
+        self._d.move_to_end(key)
+        while len(self._d) > self.cap:
+            self._d.popitem(last=False)
+
+    def __len__(self):
+        return len(self._d)
 
 
 def eagerly(df: DataFrame, *caches: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
     md5int64,  # noqa: F401  (re-exported for oracle-reproducible hashing)
 )
+from fiware_cosmos_orion_flink_connector_examples_spark.operators.caching import _ModelLRU
 from fiware_cosmos_orion_flink_connector_examples_spark.operators.text import TOKEN_RE
 
 _P31 = 2147483647  # 2^31 - 1 (Mersenne prime) — universal-hash modulus
@@ -1527,7 +1528,7 @@ def _cut_covered_tokens(
 # same discipline as _QUANTIZER_CACHE: the bloom is a TRAIN-corpus
 # artifact, so repeated queries (and bench min-of-N repeats) must not
 # re-pay the build scan.  Values are bits/64 int64s (128 KiB at 2^20).
-_BLOOM_CACHE: dict[tuple, "object"] = {}
+_BLOOM_CACHE = _ModelLRU(cap=32)
 
 
 def ngram_contamination_bloom(

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fiware_cosmos_orion_flink_connector_examples_spark.operators.caching import _ModelLRU
 from fiware_cosmos_orion_flink_connector_examples_spark.operators.dedup import (
     dot,
     l2_normalize,
@@ -108,36 +109,6 @@ def _assign_udf(centroids: list[list[float]]):
         return pd.Series(d.argmin(axis=1).astype("int32"))
 
     return assign
-
-
-class _ModelLRU:
-    """Bounded model-artifact memo (ADVICE r10: the module-level dicts
-    were unbounded — a long session touching many corpora/k values
-    accumulated artifacts indefinitely).  Plain LRU over an ordered
-    dict: hits refresh recency, inserts past ``cap`` evict the least
-    recently used.  Entries are tiny (k×dim floats), so the cap bounds
-    count, not bytes."""
-
-    def __init__(self, cap: int = 32):
-        from collections import OrderedDict
-
-        self.cap = cap
-        self._d: "OrderedDict[tuple, object]" = OrderedDict()
-
-    def get(self, key):
-        hit = self._d.get(key)
-        if hit is not None:
-            self._d.move_to_end(key)
-        return hit
-
-    def __setitem__(self, key, value):
-        self._d[key] = value
-        self._d.move_to_end(key)
-        while len(self._d) > self.cap:
-            self._d.popitem(last=False)
-
-    def __len__(self):
-        return len(self._d)
 
 
 # Trained coarse quantizers memoized per (applicationId, corpus tag,

@@ -17,7 +17,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import md5int64
-from fiware_cosmos_orion_flink_connector_examples_spark.operators.caching import eagerly
+from fiware_cosmos_orion_flink_connector_examples_spark.operators.caching import (
+    _ModelLRU,
+    eagerly,
+)
 
 # Dialect caveat (hypothesis-found): outside ASCII the regex engines
 # diverge — Java/RE2 class \s is ASCII (NBSP counts as a word char)
@@ -682,8 +685,8 @@ def source_unigram_kl(
 # distributed word count.  The learned merge table is itself the
 # registered, driver-checked artifact (bpe_learned_merges).
 
-_BPE_MERGE_CACHE: dict[tuple, list] = {}
-_WORD_FREQ_CACHE: dict[tuple, list] = {}
+_BPE_MERGE_CACHE = _ModelLRU(cap=32)
+_WORD_FREQ_CACHE = _ModelLRU(cap=32)
 
 
 def collect_word_freq(
@@ -721,9 +724,11 @@ def cached_word_freq(
     if cache_key is None:
         return collect_word_freq(docs, text_col, vocab_max)
     key = (cache_key, text_col, vocab_max)
-    if key not in _WORD_FREQ_CACHE:
-        _WORD_FREQ_CACHE[key] = collect_word_freq(docs, text_col, vocab_max)
-    return _WORD_FREQ_CACHE[key]
+    wf = _WORD_FREQ_CACHE.get(key)
+    if wf is None:
+        wf = collect_word_freq(docs, text_col, vocab_max)
+        _WORD_FREQ_CACHE[key] = wf
+    return wf
 
 
 def learn_bpe_merges(
@@ -801,8 +806,8 @@ def bpe_merge_table(
     keeps bench repeats and downstream consumers from re-paying the
     corpus scan, same discipline as _BLOOM_CACHE."""
     key = (cache_key, text_col, n_merges, vocab_max)
-    if cache_key is not None and key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
+    if cache_key is not None and (hit := _BPE_MERGE_CACHE.get(key)) is not None:
+        return hit
     merges = learn_bpe_merges(
         cached_word_freq(docs, text_col, vocab_max, cache_key), n_merges
     )

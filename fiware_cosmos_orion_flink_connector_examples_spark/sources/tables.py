@@ -59,15 +59,9 @@ SPREAD_KEYS = {
 
 # Scan-spread floor: files below this size stay single-task (spreading
 # a 2 KB dimension table costs an exchange and 32 near-empty tasks for
-# nothing).  Env-tunable (read per call so tests can pin plan shapes
-# with the spread off); ≤0 disables spreading entirely.
-def _spread_min_bytes() -> int:
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", str(256 * 1024))
-        )
-    except ValueError:
-        return 256 * 1024
+# nothing).  Read at call time so tests can pin plan shapes with the
+# spread off; <=0 disables spreading entirely.
+SPREAD_MIN_BYTES = 256 * 1024
 
 
 def _scan_spread(
@@ -94,7 +88,7 @@ def _scan_spread(
     local[32] constant.  Filter/column pushdown still reaches the scan
     (Catalyst pushes both through Repartition; pinned in
     tests/test_plan_shapes.py)."""
-    floor = _spread_min_bytes()
+    floor = SPREAD_MIN_BYTES
     if floor <= 0:
         return df
     try:

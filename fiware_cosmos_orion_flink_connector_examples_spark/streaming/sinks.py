@@ -8,8 +8,8 @@ fire-and-forget there; we provide at-least-once via foreachBatch (a
 retried batch re-sends — pair with PATCH upserts for idempotence,
 SURVEY.md §7 'hard parts' #5).
 
-Implementation: ``foreachBatch`` → ``foreachPartition`` → pooled
-stdlib HTTP connections per partition (no driver collect; N partitions
+Implementation: ``foreachBatch`` → ``foreachPartition`` → one new
+stdlib ``urllib`` connection per row (no driver collect; N partitions
 post in parallel, the Flink sink's parallelism knob ≙ partition count).
 """
 
@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame
 
 def post_partition(rows: Iterator, timeout: float = 5.0, max_retries: int = 2) -> None:
     """Executor-side worker: POST each row's content to its url.
-    Row contract: content, url, content_type, method columns."""
+    Row contract: content, url, content_type, method columns.  Only a
+    5xx, connection or timeout error is retried."""
     for row in rows:
         data = row["content"].encode("utf-8")
         req = urllib.request.Request(
@@ -37,8 +38,8 @@ def post_partition(rows: Iterator, timeout: float = 5.0, max_retries: int = 2) -
             try:
                 with urllib.request.urlopen(req, timeout=timeout):
                     break
-            except urllib.error.URLError:
-                if attempt == max_retries:
+            except (urllib.error.URLError, ConnectionError, TimeoutError) as exc:
+                if attempt == max_retries or getattr(exc, "code", 500) < 500:
                     raise
 
 

@@ -5,11 +5,10 @@ operators free of Python UDFs."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from fiware_cosmos_orion_flink_connector_examples_spark.plans.registry import QUERIES
+from fiware_cosmos_orion_flink_connector_examples_spark.sources import tables
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,15 +18,9 @@ def plan_of(spark, name: str) -> str:
     # scale-adaptive scan spread (tables._scan_spread — a deliberate
     # round-robin exchange for single-split local inputs) is pinned
     # separately in test_scan_spread.py, so disable it here.
-    old = os.environ.get("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES")
-    os.environ["SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tables, "SPREAD_MIN_BYTES", 0)
         df = QUERIES[name].fn(spark, SF)
-    finally:
-        if old is None:
-            del os.environ["SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES"]
-        else:
-            os.environ["SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES"] = old
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -723,7 +716,7 @@ def test_cms_sketch_is_partial_agged(spark, monkeypatch):
         _heavy_hitters_cms_frames,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "0")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 0)
     res, caches = _heavy_hitters_cms_frames(spark, SF)
     try:
         plan = res._jdf.queryExecution().explainString(

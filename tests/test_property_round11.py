@@ -9,7 +9,7 @@ def test_model_lru_bounds_and_refreshes():
     unbounded): inserts past cap evict least-recently-used, hits
     refresh recency, and the public get/setitem contract matches the
     plain-dict usage in pca_fit / kmeans_fit_sample."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators.similarity import (
+    from fiware_cosmos_orion_flink_connector_examples_spark.operators.caching import (
         _ModelLRU,
     )
 
@@ -27,6 +27,22 @@ def test_model_lru_bounds_and_refreshes():
     # quantizer cache relies on (empty corpus memoizes [])
     lru[("k", "empty")] = []
     assert lru.get(("k", "empty")) == [] and lru.get(("k", "empty")) is not None
+
+
+def test_word_freq_memo_is_bounded(monkeypatch):
+    """The BPE word-frequency memo shares the model LRU's cap of 32:
+    a 33rd key evicts the first."""
+    from collections import OrderedDict
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
+
+    cache = text._WORD_FREQ_CACHE
+    monkeypatch.setattr(cache, "_d", OrderedDict())
+    for i in range(33):
+        cache[("k", i)] = [("w", i)]
+    assert len(cache) == 32
+    assert cache.get(("k", 0)) is None
+    assert cache.get(("k", 1)) == [("w", 1)] and cache.get(("k", 32)) == [("w", 32)]
 
 
 def test_bm25_tf_and_length_monotonicity(spark):

@@ -21,6 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from fiware_cosmos_orion_flink_connector_examples_spark.sources import tables
 from fiware_cosmos_orion_flink_connector_examples_spark.sources.tables import (
     load_table,
 )
@@ -37,7 +38,7 @@ def _plan(df) -> str:
 
 
 def test_spread_fires_and_pushdown_survives(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 1)
     df = load_table(spark, SF, "lineitem", spread=True).filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", "l_extendedprice")
@@ -57,7 +58,7 @@ def test_spread_fires_and_pushdown_survives(spark, monkeypatch):
 
 
 def test_no_spread_when_scan_already_wide(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 1)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     # 4 KB splits: ceil(size/mpb) >= defaultParallelism → input-derived
     # condition says the scan is already wide; no exchange added.
@@ -69,9 +70,9 @@ def test_no_spread_when_scan_already_wide(spark, monkeypatch):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-@pytest.mark.parametrize("floor", ["0", str(64 * 1024 * 1024)])
+@pytest.mark.parametrize("floor", [0, 64 * 1024 * 1024])
 def test_no_spread_below_floor_or_disabled(spark, monkeypatch, floor):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", floor)
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", floor)
     plan = _plan(load_table(spark, SF, "lineitem", spread=True))
     assert "Exchange" not in plan
 
@@ -80,12 +81,12 @@ def test_spread_is_opt_in_per_call_site(spark, monkeypatch):
     # Interleaved A/B showed the spread only pays where the consumer
     # does heavy row-local work before its first shuffle; the default
     # load is therefore unchanged (no exchange) even above the floor.
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 1)
     assert "Exchange" not in _plan(load_table(spark, SF, "lineitem"))
 
 
 def test_results_identical_with_and_without_spread(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "1")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 1)
     agg_on = (
         load_table(spark, SF, "orders", spread=True)
         .groupBy("o_orderstatus")
@@ -98,7 +99,7 @@ def test_results_identical_with_and_without_spread(spark, monkeypatch):
         .orderBy("o_orderstatus")
         .collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", "0")
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 0)
     agg_off = (
         load_table(spark, SF, "orders", spread=True)
         .groupBy("o_orderstatus")

@@ -1,9 +1,15 @@
 """Regenerate PLANS.md: the formatted physical plan of each headline
 query at sf0.01 — reviewable evidence that pushdown/broadcast/top-k
-shapes hold.  Run: python tools/dump_plans.py"""
+shapes hold.  Run: python tools/dump_plans.py
+
+With query names, write each one's plan to DIR/<query>.txt instead
+(SPARK_GRAFT_SF_DIR, default sf0.01); a before/after pair is one run on
+each checkout:  python tools/dump_plans.py --out DIR q1 q2 ..."""
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 from pathlib import Path
 
@@ -103,7 +109,6 @@ HEADLINE = [
     "phrase_match_topk",
     "hybrid_rrf_served_topk",
     "retrieval_mrr_ndcg",
-    "events_dau_wau",
     "dedup_semantic_semdedup",
     "decontaminate_fuzzy_minhash",
     "curriculum_shard_order",
@@ -113,9 +118,26 @@ HEADLINE = [
 SF = "/root/testdata/sf0.01"
 
 
-def main() -> None:
-    spark = get_spark(app_name="dump-plans", cpus=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def _formatted(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    ).rstrip()
+
+
+def dump_named(spark, out_dir: Path, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF)
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in names:
+        try:
+            plan = _formatted(spark, QUERIES[name].fn(spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001 — report and continue
+            print(f"FAILED {name}: {exc}", flush=True)
+            continue
+        (out_dir / f"{name}.txt").write_text(f"# {name}, sf_dir={sf_dir}\n{plan}\n")
+        print(f"wrote {out_dir / name}.txt", flush=True)
+
+
+def dump_headline(spark) -> None:
     out = [
         "# PLANS — formatted physical plans of headline queries (sf0.01)",
         "",
@@ -126,13 +148,25 @@ def main() -> None:
         "",
     ]
     for name in HEADLINE:
-        df = QUERIES[name].fn(spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
+        plan = _formatted(spark, QUERIES[name].fn(spark, SF))
+        out += [f"## {name}", "", "```", plan, "```", ""]
     (REPO / "PLANS.md").write_text("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINE)} plans)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", type=Path, help="directory for DIR/<query>.txt")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.queries and args.out is None:
+        ap.error("named queries need --out DIR")
+    spark = get_spark(app_name="dump-plans", cpus=8, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.queries:
+        dump_named(spark, args.out, args.queries)
+    else:
+        dump_headline(spark)
     spark.stop()
 
 
