@@ -94,7 +94,7 @@ def main() -> None:
         #    equal a from-scratch index of the table's CURRENT content
         rebuilt = f"{tmp}/rebuilt_idx"
         current = layout.snapshot_read(spark, table)
-        text.phrase_index_write(current, rebuilt, n_buckets=4)
+        text.search_index_write(current, rebuilt, n_buckets=4)
         synced = {
             (r["doc_id"], r["n_occurrences"])
             for r in text.phrase_count_from_index(spark, idx, ["hash", "join"]).collect()

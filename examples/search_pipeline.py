@@ -1,10 +1,10 @@
 """The RETRIEVAL/serving flow end to end — what the round-11 search
 tier composes into (no reference analog; engine-native):
 
-  documents → BM25 index build (keyed postings + doc-length tables)
-  → incremental batch ingest (bucket-pruned MERGE) → tombstone
-  deletes → compaction → stored-index BM25 top-k ≡ from-corpus
-  scores → hybrid lexical×vector RRF fusion over the embeddings
+  documents → search index build (BM25 postings, doc lengths and
+  positions as snapshot sub-tables under one atomic root) →
+  incremental batch ingest (bucket-pruned MERGE) → deletes →
+  compaction → stored-index BM25 top-k ≡ from-corpus scores → hybrid lexical×vector RRF fusion over the embeddings
   table → query-model distillation (the streaming gate's frozen
   artifact); embeddings → IVF index build (partition-pruned
   inverted lists) → stored-index ANN search ≡ in-memory IVF.
@@ -47,19 +47,19 @@ def main() -> None:
     )
 
     with tempfile.TemporaryDirectory() as tmp:
-        # 1. build the BM25 index from the first 80% of the corpus,
+        # 1. build the search index from the first 80% of the corpus,
         #    then MERGE-ingest the rest (the daily-batch shape)
         head = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        idx = f"{tmp}/bm25"
-        text.bm25_index_write(head, idx, n_buckets=8)
-        text.bm25_index_ingest(spark, batch, idx)
+        idx = f"{tmp}/search"
+        text.search_index_write(head, idx, n_buckets=8)
+        text.search_index_ingest(spark, batch, idx)
 
-        # 2. tombstone a slice, compact it away
+        # 2. delete a slice, compact the merged sub-tables
         dead = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id")
         n_dead = dead.count()
-        text.bm25_index_delete(spark, dead, idx)
-        text.bm25_index_compact(spark, idx)
+        text.search_index_delete(spark, dead, idx)
+        text.search_index_compact(spark, idx)
 
         # 3. stored-index scores == from-corpus scores (the contract)
         live = docs.filter(F.col("doc_id") % 97 != 0)

@@ -9,8 +9,9 @@ rankers).  ONE fusion core serves BOTH paths:
 * the in-memory path — ``bm25_scores`` + ``topk_cosine_bruteforce``,
   the hash-green ``hybrid_rrf_topk`` registered query;
 * the index-served path — ``bm25_from_index`` + ``ann_index_search``
-  over the stored lake indexes (``bm25_index_write`` postings/doclen
-  tables, ``ann_index_write`` hive-partitioned inverted lists).
+  over the stored lake indexes (the ``search_index_write`` postings/
+  doclen sub-tables, ``ann_index_write`` hive-partitioned inverted
+  lists).
 
 Sharing the fusion expression is what makes the round-12 pin
 meaningful: the served path is pytest-pinned row-identical to the
@@ -116,10 +117,10 @@ def hybrid_rrf_from_indexes(
     in-memory ``hybrid_rrf_topk`` shape, fusing the two stored
     indexes the round-11 maintenance layer built:
 
-    * lexical: ``bm25_from_index`` over the ``bm25_index_write``
-      postings/doclen tables (query-term-bounded scan, tombstones
-      honored, identical scores to the from-corpus path by the shared
-      ``_bm25_score_parts`` core);
+    * lexical: ``bm25_from_index`` over the ``search_index_write``
+      postings/doclen sub-tables (query-term-bounded scan pinned to
+      the index root, identical scores to the from-corpus path by the
+      shared ``_bm25_score_parts`` core);
     * vector: ``ann_index_search`` over the ``ann_index_write``
       partition-pruned inverted lists.  ``nprobe=None`` probes EVERY
       cell — exhaustive search, row-identical to the brute-force

@@ -1361,11 +1361,10 @@ def ann_index_rebuild(
     the coarse quantizer on the index's CURRENT logical contents
     (original + every added batch, via the bounded-sample trainer),
     rewrite the inverted lists under the new centroids to a sibling
-    ``.rebuild.tmp``, and swap with the two-rename / keep-``.old``
-    discipline ``bm25_index_compact`` uses — a crash at any point
-    leaves the pre-rebuild index recoverable (re-running the rebuild
-    performs the recovery), and readers never observe a half-written
-    index."""
+    ``.rebuild.tmp``, and swap with two renames, keeping ``.old``
+    until the new index is live — a crash at any point leaves the
+    pre-rebuild index recoverable (re-running the rebuild performs the
+    recovery), and readers never observe a half-written index."""
     import json
 
     from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (

@@ -1714,8 +1714,7 @@ def _bm25_index_parts(
     docs: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """(postings, doc lengths) for a doc batch — the single source of
-    the index-build arithmetic (write and ingest previously carried
-    verbatim copies; review finding, round 11)."""
+    the index-build arithmetic, shared by write and ingest."""
     base = docs.filter(F.col(text_col).isNotNull())
     postings = (
         base.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
@@ -1727,46 +1726,6 @@ def _bm25_index_parts(
         F.col(id_col), token_count(text_col).cast("long").alias("dl")
     ).filter(F.col("dl") > 0)
     return postings, dl
-
-
-def bm25_index_write(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 16,
-) -> None:
-    """Materialize the BM25 index as TWO keyed tables under ``path`` —
-    the search-index-maintenance shape (Lucene segment merge /
-    Elasticsearch reindex, done as lake tables):
-
-      * ``<path>/postings`` — (pkey, term, doc id, tf), one row per
-        posting, keyed on ``pkey = term||':'||id`` so an incremental
-        batch MERGEs bucket-pruned (``layout.merge_upsert``: re-adding
-        a changed doc REPLACES its postings for unchanged terms and
-        inserts new ones).
-      * ``<path>/doclen`` — (id, dl), keyed on the doc id.
-
-    df and the (N, Σdl) scalars are NOT stored: they are one
-    partial-aggregable pass over the stored tables at query time
-    (storing them would make every ingest a read-modify-write of
-    global state; deriving them keeps ingest append/merge-only —
-    the same reasoning as the mergeable-sketch rollups).  Query with
-    ``bm25_from_index``; scores are identical to ``bm25_scores`` on
-    the same logical corpus (pytest-pinned) because both feed the
-    same ``_bm25_score_parts`` core."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    postings, dl = _bm25_index_parts(docs, id_col, text_col)
-    # postings are keyed on term:doc for MERGE but QUERIED by term —
-    # term-sorted row groups make the per-query lookup row-group-
-    # skippable instead of a full postings scan (round 12)
-    layout.write_keyed(
-        postings, f"{path.rstrip('/')}/postings", "pkey", n_buckets,
-        sort_within="term",
-    )
-    layout.write_keyed(dl, f"{path.rstrip('/')}/doclen", id_col, n_buckets)
-    _write_docterms(docs, path, id_col, text_col, n_buckets)
 
 
 def _docterms_parts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1781,98 +1740,6 @@ def _docterms_parts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _write_docterms(docs, path, id_col, text_col, n_buckets):
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    layout.write_keyed(
-        _docterms_parts(docs, id_col, text_col),
-        f"{path.rstrip('/')}/docterms",
-        id_col,
-        n_buckets,
-    )
-
-
-def _stale_posting_keys(spark, path: str, new_docs_terms: DataFrame, id_col: str):
-    """(id, term) pairs present in the stored index for the batch's
-    docs but ABSENT from their new text — the postings a changed-doc
-    re-ingest must drop.  The old-term lookup reads ONLY the batch
-    docs' hash buckets of the doc-keyed ``docterms`` table (manual
-    bucket pruning off the sidecar's n_buckets), never the postings
-    table.  Returns None for a pre-round-12 index with no docterms
-    table (the documented append-only caveat applies there)."""
-    import json
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        _fs,
-        _read_small,
-        read_keyed,
-    )
-
-    base = f"{path.rstrip('/')}/docterms"
-    jvm, fs = _fs(spark, base)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/_keyed_layout.json")):
-        return None
-    meta = json.loads(_read_small(spark, f"{base}/_keyed_layout.json"))
-    nb = int(meta["n_buckets"])
-    batch_ids = new_docs_terms.select(id_col).distinct()
-    touched = [
-        r["_b"]
-        for r in batch_ids.select(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(nb)).alias("_b")
-        )
-        .distinct()
-        .collect()
-    ]  # bounded by n_buckets — a layout constant
-    old_terms = (
-        read_keyed(spark, base)
-        .filter(F.col("_bucket").isin(touched))
-        .join(F.broadcast(batch_ids), id_col, "semi")
-        .select(F.col(id_col), F.explode("terms").alias("term"))
-    )
-    new_pairs = new_docs_terms.select(
-        F.col(id_col), F.explode("terms").alias("term")
-    )
-    return old_terms.join(new_pairs, [id_col, "term"], "left_anti")
-
-
-def bm25_index_ingest(
-    spark,
-    new_docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incremental index maintenance: MERGE a new/changed doc batch
-    into a ``bm25_index_write`` index — only the hash buckets holding
-    the batch's postings/doc-lengths are rewritten (the merge_upsert
-    copy-on-write contract).
-
-    CHANGED-doc correctness (round 12): a re-ingested doc's new text
-    may have DROPPED terms, whose (term, doc) posting rows would
-    otherwise survive as ghosts.  The per-doc ``docterms`` listing
-    (doc-keyed → its read prunes to the batch docs' buckets) yields
-    those stale keys, which ride the SAME merge as tf=0 SOFT-DELETE
-    rows — readers filter ``tf > 0`` (one shared read path), and
-    ``bm25_index_compact`` rewrites them away physically (the Lucene
-    delete-then-merge lifecycle).  A pre-round-12 index without a
-    docterms table keeps the old append-only behavior, stated not
-    hidden."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    postings, dl = _bm25_index_parts(new_docs, id_col, text_col)
-    new_terms = _docterms_parts(new_docs, id_col, text_col)
-    stale = _stale_posting_keys(spark, path, new_terms, id_col)
-    if stale is not None:
-        soft_deletes = stale.select(
-            _posting_key(id_col), "term", id_col, F.lit(0).cast("long").alias("tf")
-        )
-        postings = postings.unionByName(soft_deletes)
-    layout.merge_upsert(spark, f"{path.rstrip('/')}/postings", postings, "pkey")
-    layout.merge_upsert(spark, f"{path.rstrip('/')}/doclen", dl, id_col)
-    if stale is not None:
-        layout.merge_upsert(spark, f"{path.rstrip('/')}/docterms", new_terms, id_col)
-
-
 def bm25_from_index(
     spark,
     path: str,
@@ -1882,80 +1749,37 @@ def bm25_from_index(
     b: float = 0.75,
     root_version: int | None = None,
 ) -> DataFrame:
-    """Score queries against a stored ``bm25_index_write`` index: df
-    and the corpus scalars are re-derived in one partial-aggregable
-    pass over the stored tables (posting rows for df are pre-filtered
-    to the query terms — the bm25_scores posting-bounded discipline
-    does not apply to df here because df needs the STORED per-term
-    postings anyway, which is exactly what the term-keyed bucket
-    layout prunes to), then the shared scoring core runs unchanged.
-    ``root_version`` (versioned indexes only) serves the index exactly
-    as it stood at that root commit — cross-table time travel."""
-    postings, dl = _bm25_index_tables(spark, path, id_col, root_version)
+    """Score queries against a ``search_index_write`` index: df and the
+    corpus scalars are re-derived in one partial-aggregable pass over
+    the stored tables (posting rows for df are pre-filtered to the
+    query terms — the bm25_scores posting-bounded discipline does not
+    apply to df here because df needs the STORED per-term postings
+    anyway, which is exactly what the term-sorted posting files skip
+    to), then the shared scoring core runs unchanged.  Every sub-table
+    is read at the version the index root pins; ``root_version`` serves
+    the index exactly as it stood at that root commit — cross-table
+    time travel.  Raises ``ValueError`` when ``path`` has no index
+    root."""
+    postings, dl = _bm25_index_tables(spark, path, root_version)
     qt = F.broadcast(query_terms.select("term").distinct())
     tf = postings.join(qt, "term").select(id_col, "term", "tf")
     # postings are (term, doc)-unique, so df = tf's per-term row count
-    # — deriving it re-reads nothing (review finding, round 11)
+    # — deriving it re-reads nothing
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
     return _bm25_score_parts(tf, dl, dfreq, stats, query_terms, id_col, k1, b)
 
 
-def _bm25_index_tables(spark, path: str, id_col: str, root_version: int | None = None):
-    """Read the live view of a stored BM25 index: postings + doc
-    lengths with tombstoned docs (bm25_index_delete) anti-joined out —
-    the read-side half of log-structured deletes.  The tombstone set
-    is deletion-sized; broadcast it.
-
-    A VERSIONED index (``search_index_write``) is auto-detected by its
-    root: every sub-table reads AT THE ROOT'S PINNED VERSION — one
-    consistent cross-table snapshot, immune to concurrent ingests, no
-    tombstones (versioned deletes are real merge deletes)."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        read_keyed,
+def _bm25_index_tables(spark, path: str, root_version: int | None = None):
+    """(postings, doc lengths) of the index at ``path``, both pinned to
+    one root — a consistent cross-table snapshot, immune to concurrent
+    ingests (deletes are real merge deletes, so there is nothing to
+    filter out)."""
+    root = _index_root(spark, path, root_version)
+    return (
+        _pinned_table(spark, path, root, "postings"),
+        _pinned_table(spark, path, root, "doclen"),
     )
-
-    root = _index_root(spark, path)
-    if root is not None:
-        if root_version is not None:
-            from fiware_cosmos_orion_flink_connector_examples_spark.sources import (
-                layout,
-            )
-
-            root = layout.index_root_resolve(spark, path, root_version)
-        postings = (
-            _pinned_keyed_read(
-                spark, f"{path.rstrip('/')}/postings", root["tables"]["postings"]
-            )
-            .drop("pkey")
-            .filter(F.col("tf") > 0)
-        )
-        dl = _pinned_keyed_read(
-            spark, f"{path.rstrip('/')}/doclen", root["tables"]["doclen"]
-        )
-        return postings, dl
-
-    if root_version is not None:
-        raise ValueError(
-            "_bm25_index_tables: root_version is only meaningful for a "
-            "versioned (search_index_write) index"
-        )
-    postings = (
-        read_keyed(spark, f"{path.rstrip('/')}/postings")
-        .drop("pkey", "_bucket")
-        .filter(F.col("tf") > 0)  # tf=0 = changed-doc soft delete
-    )
-    dl = read_keyed(spark, f"{path.rstrip('/')}/doclen").drop("_bucket")
-    jvm = spark._jvm
-    t_dir = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/tombstones")
-    fs = t_dir.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(t_dir):
-        dead = F.broadcast(
-            spark.read.parquet(f"{path.rstrip('/')}/tombstones").select(id_col)
-        )
-        postings = postings.join(dead, id_col, "left_anti")
-        dl = dl.join(dead, id_col, "left_anti")
-    return postings, dl
 
 
 def bm25_query_model(
@@ -1966,13 +1790,13 @@ def bm25_query_model(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> dict:
-    """Distill a stored ``bm25_index_write`` index into the tiny
-    serving artifact a STREAMING scorer needs: per-query-term df plus
-    the (N, Σdl) corpus scalars — a handful of integers, refreshed
+    """Distill a ``search_index_write`` index into the tiny serving
+    artifact a STREAMING scorer needs: per-query-term df plus the
+    (N, Σdl) corpus scalars — a handful of integers, refreshed
     out-of-band whenever the index is re-built/merged (the
     streaming_quality_gate model-artifact discipline).  Returns
     ``{"k1", "b", "n_docs", "sum_dl", "terms": [(term, df), ...]}``."""
-    postings, dl = _bm25_index_tables(spark, path, id_col)
+    postings, dl = _bm25_index_tables(spark, path)
     qt = F.broadcast(query_terms.select("term").distinct())
     dfreq = (
         postings.join(qt, "term")
@@ -1992,128 +1816,11 @@ def bm25_query_model(
     }
 
 
-def bm25_index_delete(
-    spark,
-    ids: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-) -> None:
-    """Tombstone deletion for a ``bm25_index_write`` index — the
-    log-structured answer to the ingest caveat (postings are keyed
-    (term, doc), so a changed/removed doc can't drop stale term rows
-    in place): deleted doc ids MERGE into a third keyed table
-    ``<path>/tombstones`` and ``bm25_from_index`` anti-joins them out
-    of BOTH postings and doc lengths at query time.  Re-adding a
-    previously deleted doc = ingest its postings AND delete its
-    tombstone (compaction — rewriting postings minus tombstoned docs
-    and clearing the table — is the same bucket-pruned merge_upsert
-    machinery, run out-of-band)."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    t_path = f"{path.rstrip('/')}/tombstones"
-    rows = ids.select(F.col(id_col)).distinct()
-    jvm = spark._jvm
-    fs_p = jvm.org.apache.hadoop.fs.Path(t_path + "/_keyed_layout.json")
-    fs = fs_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(fs_p):
-        layout.merge_upsert(spark, t_path, rows, id_col)
-    else:
-        layout.write_keyed(rows, t_path, id_col, n_buckets=4)
-
-
-def bm25_index_compact(
-    spark,
-    path: str,
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-) -> None:
-    """Out-of-band compaction for a tombstoned BM25 index: rewrite
-    postings and doc lengths WITHOUT tombstoned docs as fresh keyed
-    tables, then drop the tombstone table — the log-structured
-    merge/compact step that reclaims space and restores pure
-    bucket-pruned reads (the read-side anti-join disappears until the
-    next delete).  The rewrite goes to a sibling ``.compact.tmp``
-    directory and swaps in with one rename per table, keeping every
-    ``.{table}.old`` backup until BOTH tables are live (the
-    merge_upsert deferred-cleanup discipline).  Crash recovery is
-    built in: compaction starts by restoring any table caught inside
-    a previous run's rename window (live dir missing, data in
-    ``.{table}.old``), so "recover by re-running compaction" is a
-    real contract, not a hope (review finding, round 11)."""
-    import json
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        _fs,
-        _read_small,
-    )
-
-    base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    # recovery pass FIRST: a prior compact may have died between its
-    # two renames, leaving {base}/{t} only at {base}/.{t}.old
-    for t in ("postings", "doclen", "docterms"):
-        cur = jvm.org.apache.hadoop.fs.Path(f"{base}/{t}")
-        old = jvm.org.apache.hadoop.fs.Path(f"{base}/.{t}.old")
-        if not fs.exists(cur) and fs.exists(old):
-            if not fs.rename(old, cur):
-                raise IOError(f"bm25_index_compact: recovery of {t} failed")
-    if n_buckets is None:
-        n_buckets = int(
-            json.loads(
-                _read_small(spark, f"{base}/postings/_keyed_layout.json").decode()
-            )["n_buckets"]
-        )
-    postings, dl = _bm25_index_tables(spark, path, id_col)
-    tmp = base + ".compact.tmp"
-    layout.write_keyed(
-        postings.select(_posting_key(id_col), "term", id_col, "tf"),
-        f"{tmp}/postings",
-        "pkey",
-        n_buckets,
-        sort_within="term",
-    )
-    layout.write_keyed(dl, f"{tmp}/doclen", id_col, n_buckets)
-    tables = ["postings", "doclen"]
-    dt_p = jvm.org.apache.hadoop.fs.Path(f"{base}/docterms")
-    if fs.exists(dt_p) or fs.exists(
-        jvm.org.apache.hadoop.fs.Path(f"{base}/.docterms.old")
-    ):
-        # rebuild the per-doc term listing from the LIVE (tf>0,
-        # tombstone-free) postings so compaction also clears the
-        # soft-delete bookkeeping
-        docterms = (
-            postings.groupBy(id_col)
-            .agg(F.sort_array(F.collect_set("term")).alias("terms"))
-        )
-        layout.write_keyed(docterms, f"{tmp}/docterms", id_col, n_buckets)
-        tables.append("docterms")
-    swapped = []
-    for t in tables:
-        cur = jvm.org.apache.hadoop.fs.Path(f"{base}/{t}")
-        old = jvm.org.apache.hadoop.fs.Path(f"{base}/.{t}.old")
-        new = jvm.org.apache.hadoop.fs.Path(f"{tmp}/{t}")
-        if fs.exists(old):
-            fs.delete(old, True)  # stale backup from a CLEAN prior run
-        if fs.exists(cur) and not fs.rename(cur, old):
-            raise IOError(f"bm25_index_compact: rename {cur} -> {old} failed")
-        if not fs.rename(new, cur):
-            fs.rename(old, cur)
-            raise IOError(f"bm25_index_compact: rename {new} -> {cur} failed")
-        swapped.append(old)
-    # cleanup only after BOTH tables are live — any crash above leaves
-    # every pre-compact table recoverable by the pass at the top
-    for old in swapped:
-        fs.delete(old, True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/tombstones"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-
-
 def _phrase_index_parts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Positional postings for a doc batch: one row per (term, doc)
     holding the SORTED array of 0-based token positions — keyed on the
-    same ``pkey = term||':'||id`` as the BM25 postings so the two
-    indexes share one MERGE maintenance story (a changed doc's batch
+    same ``pkey = term||':'||id`` as the BM25 postings so both posting
+    tables share one merge maintenance story (a changed doc's batch
     replaces its rows bucket-pruned)."""
     base = docs.filter(F.col(text_col).isNotNull())
     return (
@@ -2124,76 +1831,6 @@ def _phrase_index_parts(docs: DataFrame, id_col: str, text_col: str) -> DataFram
     )
 
 
-def phrase_index_write(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 16,
-) -> None:
-    """Materialize the POSITIONAL posting index at ``<path>/positions``
-    — the stored-index variant ``phrase_match_topk``'s doc names
-    (quoted-phrase search without rescanning the corpus), laid out
-    exactly like the BM25 postings table (``layout.write_keyed`` on
-    pkey) so it can live beside one at the same ``path`` and share its
-    tombstone table.  Positions are the tokenizer's 0-based offsets;
-    adjacency (p2 = p1 + 1) is all phrase matching needs, so the base
-    never leaks into results.  Query with ``phrase_count_from_index``;
-    maintain with ``phrase_index_ingest`` (same caveat as the BM25
-    ingest: re-ingesting a CHANGED doc cannot drop a term the new
-    text no longer contains — deletion needs the tombstone table or
-    compaction)."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    layout.write_keyed(
-        _phrase_index_parts(docs, id_col, text_col),
-        f"{path.rstrip('/')}/positions",
-        "pkey",
-        n_buckets,
-        sort_within="term",
-    )
-    # per-doc term listing for changed-doc stale-key detection; when
-    # co-located with a BM25 index at the same path the two writes
-    # produce identical content (same tokenizer) — harmless overwrite
-    _write_docterms(docs, path, id_col, text_col, n_buckets)
-
-
-def phrase_index_ingest(
-    spark,
-    new_docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Incremental positional-index maintenance: MERGE a new/changed
-    doc batch — only the hash buckets holding the batch's (term, doc)
-    keys are rewritten (the merge_upsert copy-on-write contract), and
-    a changed doc's position arrays REPLACE the old ones wholesale
-    because the whole array is the row value (no partial-array merge
-    to get wrong).  Terms the new text DROPPED ride the same merge as
-    empty-array soft-delete rows (keys from the doc-keyed ``docterms``
-    listing, bucket-pruned) — the reader filters them, compaction of a
-    co-located BM25 index clears the shared bookkeeping."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    parts = _phrase_index_parts(new_docs, id_col, text_col)
-    new_terms = _docterms_parts(new_docs, id_col, text_col)
-    stale = _stale_posting_keys(spark, path, new_terms, id_col)
-    if stale is not None:
-        empty = F.array().cast("array<int>")
-        parts = parts.unionByName(
-            stale.select(_posting_key(id_col), "term", id_col, empty.alias("positions"))
-        )
-    layout.merge_upsert(
-        spark,
-        f"{path.rstrip('/')}/positions",
-        parts,
-        "pkey",
-    )
-    if stale is not None:
-        layout.merge_upsert(spark, f"{path.rstrip('/')}/docterms", new_terms, id_col)
-
-
 def phrase_count_from_index(
     spark,
     path: str,
@@ -2201,68 +1838,27 @@ def phrase_count_from_index(
     id_col: str = "doc_id",
     root_version: int | None = None,
 ) -> DataFrame:
-    """Exact phrase occurrence counts served from a stored
-    ``phrase_index_write`` index: start from the first term's position
+    """Exact phrase occurrence counts served from a
+    ``search_index_write`` index: start from the first term's position
     arrays and FOLD the remaining terms in — at step i, keep only
     first-token positions p whose doc also has term_i at p+i
     (``F.filter`` + ``array_contains`` over the two arrays: row-local
     once the per-term rows are doc-joined).  Output: (id, n_occurrences
     > 0), row-identical to the row-local zip_with counter on the same
     corpus (pytest-pinned and driver-asserted via the served-equals
-    envelope).
+    envelope).  Positions are read at the version the index root pins;
+    ``root_version`` serves the index exactly as it stood at that root
+    commit.  Raises ``ValueError`` when ``path`` has no index root.
 
     Scale shape: the scan touches ONLY the phrase's terms' posting
-    rows (term-filtered off the keyed table — Σ df(term_i) rows, never
-    the corpus), then L-1 doc-keyed joins whose inputs shrink
+    rows (term-filtered off the term-sorted files — Σ df(term_i) rows,
+    never the corpus), then L-1 doc-keyed joins whose inputs shrink
     monotonically (each step filters to docs still matching the
-    prefix).  Tombstones at ``<path>/tombstones`` (shared with a
-    co-located BM25 index) are anti-joined out, deletion-sized and
-    broadcast."""
+    prefix)."""
     if not phrase:
         raise ValueError("phrase_count_from_index: empty phrase")
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        _fs,
-        read_keyed,
-    )
-
-    root = _index_root(spark, path)
-    if root is not None:
-        # versioned index: positions pinned to the root's consistent
-        # cross-table snapshot; deletes are real, no tombstone pass.
-        # root_version = CROSS-TABLE TIME TRAVEL: serve the index
-        # exactly as it stood at that root commit.
-        if root_version is not None:
-            from fiware_cosmos_orion_flink_connector_examples_spark.sources import (
-                layout,
-            )
-
-            root = layout.index_root_resolve(spark, path, root_version)
-        tbl = (
-            _pinned_keyed_read(
-                spark, f"{path.rstrip('/')}/positions", root["tables"]["positions"]
-            )
-            .drop("pkey")
-            .filter(F.size("positions") > 0)
-        )
-    elif root_version is not None:
-        raise ValueError(
-            "phrase_count_from_index: root_version is only meaningful for "
-            "a versioned (search_index_write) index"
-        )
-    else:
-        tbl = (
-            read_keyed(spark, f"{path.rstrip('/')}/positions")
-            .drop("pkey", "_bucket")
-            .filter(F.size("positions") > 0)  # changed-doc soft deletes
-        )
-
-        jvm, fs = _fs(spark, path)
-        t_dir = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/tombstones")
-        if fs.exists(t_dir):
-            dead = F.broadcast(
-                spark.read.parquet(f"{path.rstrip('/')}/tombstones").select(id_col)
-            )
-            tbl = tbl.join(dead, id_col, "left_anti")
+    root = _index_root(spark, path, root_version)
+    tbl = _pinned_table(spark, path, root, "positions")
     cur = tbl.filter(F.col("term") == phrase[0]).select(
         F.col(id_col), F.col("positions").alias("ps")
     )
@@ -2287,38 +1883,43 @@ def phrase_count_from_index(
 
 
 # ---------------------------------------------------------------------------
-# VERSIONED COMBINED SEARCH INDEX — snapshot sub-tables under ONE atomic root
+# SEARCH INDEX — BM25 + phrase snapshot sub-tables under ONE atomic root
 #
-# The round-13 gap: bm25_index_ingest/phrase_index_ingest update their
-# tables with SEQUENTIAL merges, so a crash or concurrent reader between
-# them sees postings scored against a stale doclen.  The versioned index
-# stores every sub-table (postings, doclen, docterms, positions) as a
-# snapshot table and publishes ONE index root per ingest
-# (layout.index_root_commit): readers pin every sub-table to the root's
-# recorded versions, a crash between sub-merges leaves only dangling
-# unreferenced sub-versions, and re-running the ingest completes it
-# (content-idempotent upserts + root txn watermark).  Deletions are REAL
-# snapshot_merge deletes (no tombstone anti-join on the read path), time
-# travel and CDC come free per sub-table, and a root version is a
-# consistent cross-table snapshot.  Reference: n/a (the reference's only
-# sink is HTTP, Example2.scala:42) — [ext] index-maintenance contract.
+# The index stores every sub-table (postings, doclen, docterms,
+# positions) as a snapshot table and publishes ONE index root per
+# write/ingest (layout.index_root_commit): readers pin every sub-table
+# to the root's recorded versions, so a reader never scores postings
+# against a stale doclen, a crash between sub-merges leaves only
+# dangling unreferenced sub-versions, and re-running the ingest
+# completes it (content-idempotent upserts + root txn watermark).
+# Deletions are REAL snapshot_merge deletes, time travel and CDC come
+# free per sub-table, and a root version is a consistent cross-table
+# snapshot.  Reference: n/a (the reference's only sink is HTTP,
+# Example2.scala:42) — [ext] index-maintenance contract.
 
 
-def _index_root(spark, path: str):
-    """Resolved index root at ``path`` or None (plain directory index)."""
+def _index_root(spark, path: str, root_version: int | None = None) -> dict:
+    """The resolved root of the index at ``path``: the latest one, or
+    ``root_version``.  Raises ``ValueError`` when ``path`` has none."""
     from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
-    v = layout.index_root_latest(spark, path)
-    return layout.index_root_resolve(spark, path, v) if v else None
+    v = root_version
+    if v is None:
+        v = layout.index_root_latest(spark, path)
+    if not v:
+        raise ValueError(f"{path} has no search index root (see search_index_write)")
+    return layout.index_root_resolve(spark, path, v)
 
 
-def _pinned_keyed_read(spark, table_path: str, version: int):
-    """snapshot_read at a pinned version (schema from the manifest —
-    no _bucket column leaks; returns an empty typed frame for an
-    empty pinned file set)."""
+def _pinned_table(spark, path: str, root: dict, name: str) -> DataFrame:
+    """Sub-table ``name`` of the index at ``path`` at the version
+    ``root`` pins (schema from the manifest — no _bucket column leaks;
+    an empty pinned file set reads as an empty typed frame)."""
     from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
-    return layout.snapshot_read(spark, table_path, version=version)
+    return layout.snapshot_read(
+        spark, f"{path.rstrip('/')}/{name}", version=root["tables"][name]
+    )
 
 
 def _pinned_docterms_pairs(spark, path: str, batch_ids, id_col: str, version: int):
@@ -2379,17 +1980,16 @@ def search_index_write(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 16,
-    phrase: bool = True,
 ) -> int:
-    """Create a VERSIONED combined search index: BM25 postings + doc
-    lengths + the docterms sidecar (+ positional postings when
-    ``phrase``) as snapshot sub-tables, published under one atomic
-    index root.  Serve with ``bm25_from_index`` /
-    ``phrase_count_from_index`` (they auto-detect the root and pin
-    every read); maintain with ``search_index_ingest`` /
-    ``search_index_delete`` / ``search_index_compact``.  Scale shape:
-    identical to the plain index (term-sorted bucket files, posting-
-    bounded serves) plus O(1) root metadata per commit."""
+    """Create the search index: BM25 postings + doc lengths + the
+    docterms sidecar + positional postings as snapshot sub-tables,
+    published under one atomic index root.  Serve with
+    ``bm25_from_index`` / ``phrase_count_from_index`` (they pin every
+    read to the root); maintain with ``search_index_ingest`` /
+    ``search_index_delete`` / ``search_index_compact``.  Posting files
+    are term-sorted within each hash bucket, so serves are
+    posting-bounded; each commit adds O(1) root metadata.  Returns the
+    root version (1)."""
     from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
     spark = docs.sparkSession
@@ -2412,16 +2012,15 @@ def search_index_write(
             id_col,
             n_buckets,
         ),
-    }
-    if phrase:
-        tables["positions"] = layout.snapshot_write_keyed(
+        "positions": layout.snapshot_write_keyed(
             spark,
             _phrase_index_parts(docs, id_col, text_col),
             f"{base}/positions",
             "pkey",
             n_buckets,
             sort_within="term",
-        )
+        ),
+    }
     return layout.index_root_commit(spark, base, tables)
 
 
@@ -2519,21 +2118,20 @@ def _search_index_apply(
         tables["doclen"] = layout.snapshot_merge(
             spark, f"{base}/doclen", dl_upd, id_col, delete_col="_del"
         )
-        if "positions" in tables:
-            drop_pos = drop.select(
-                _posting_key(id_col), "term", F.col(id_col),
-                empty_pos.alias("positions"), F.lit(True).alias("_del"),
-            )
-            pos_upd = drop_pos
-            if upsert_docs is not None:
-                pos_upd = _phrase_index_parts(
-                    upsert_docs, id_col, text_col
-                ).localCheckpoint(eager=True).withColumn(
-                    "_del", F.lit(False)
-                ).unionByName(drop_pos)
-            tables["positions"] = layout.snapshot_merge(
-                spark, f"{base}/positions", pos_upd, "pkey", delete_col="_del"
-            )
+        drop_pos = drop.select(
+            _posting_key(id_col), "term", F.col(id_col),
+            empty_pos.alias("positions"), F.lit(True).alias("_del"),
+        )
+        pos_upd = drop_pos
+        if upsert_docs is not None:
+            pos_upd = _phrase_index_parts(
+                upsert_docs, id_col, text_col
+            ).localCheckpoint(eager=True).withColumn(
+                "_del", F.lit(False)
+            ).unionByName(drop_pos)
+        tables["positions"] = layout.snapshot_merge(
+            spark, f"{base}/positions", pos_upd, "pkey", delete_col="_del"
+        )
         dt_upd = None
         if upsert_docs is not None:
             dt_upd = new_terms.withColumn("_del", F.lit(False))
@@ -2573,11 +2171,11 @@ def search_index_ingest(
     """ATOMIC multi-table incremental ingest: merge a new/changed doc
     batch into every sub-table of a ``search_index_write`` index, then
     publish ONE root — a reader can never see the batch's postings
-    without its doc lengths (the round-13 sequential-merge gap).
+    without its doc lengths.
 
     Changed-doc correctness: terms the new text DROPPED become REAL
     delete rows in the same merges (keys from the PINNED docterms
-    version, bucket-pruned) — no tf=0 ghosts, no tombstone anti-join.
+    version, bucket-pruned), so no stale posting survives a re-ingest.
     ``delete_ids`` rides document DELETIONS in the SAME per-sub-table
     merges and the same root publish (ids must be disjoint from the
     batch's — the CDC sync resolves last-change-per-key first), so one
@@ -2604,11 +2202,11 @@ def search_index_delete(
     txn_id: int | None = None,
     retries: int = 5,
 ) -> int:
-    """ATOMIC document deletion across every sub-table of a versioned
-    index: the docs' stored terms (pinned docterms, bucket-pruned)
-    yield their posting/position keys, which ride REAL delete merges
-    together with the doclen/docterms rows — one root publish, no
-    tombstone table, the read path stays pure pinned reads."""
+    """ATOMIC document deletion across every sub-table of a
+    ``search_index_write`` index: the docs' stored terms (pinned
+    docterms, bucket-pruned) yield their posting/position keys, which
+    ride REAL delete merges together with the doclen/docterms rows —
+    one root publish, and the read path stays pure pinned reads."""
     return _search_index_apply(
         spark, path, None, ids, id_col, "text",
         txn_app, txn_id, retries, "search_index_delete",
@@ -2669,7 +2267,7 @@ def search_index_sync(
 
 
 def search_index_compact(spark, path: str) -> int:
-    """Maintenance for a versioned index: compact_files every sub-table
+    """Maintenance for a search index: compact_files every sub-table
     (posting tables re-clustered on term so row-group skipping stays
     sharp after merge traffic) and publish one root pinning the
     compacted versions.  A sub-table whose latest version is NOT the

@@ -78,7 +78,11 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
 # window-function family, the dedup family — expected per VERDICT r15
 # #8).  Everything outside the window holds a recent proof, so no
 # proof ages past ~3 rounds before rotation re-proves it.
-CHANGED_LAST_ROUND: tuple[str, ...] = ()
+CHANGED_LAST_ROUND: tuple[str, ...] = (
+    # both now serve from the shared search index fixture
+    "hybrid_rrf_served_topk",
+    "phrase_index_served_equals",
+)
 # Documentation + rotation-test bookkeeping (class 2 membership comes
 # from artifact history, not from this tuple).  ROUND HYGIENE: at the
 # START of each round, empty both tuples — the new CORRECTNESS_r*.json

@@ -190,336 +190,14 @@ def write_zordered(
     out.write.format(fmt).mode("overwrite").save(path)
 
 
-def write_keyed(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_buckets: int = 16,
-    fmt: str = "parquet",
-    sort_within: str | list[str] | None = None,
-) -> None:
-    """Write a key-addressed table hive-partitioned by a deterministic
-    hash bucket of ``key_col`` — the layout that makes ``merge_upsert``
-    a partition-pruned copy-on-write instead of a full-table rewrite.
-    One directory per bucket; each bucket clustered into one task's
-    files.  Bucket count is a layout constant: pick it so a bucket
-    (~table/n) fits a rewrite task comfortably, and re-bucket with a
-    fresh write_keyed when the table outgrows it.
-
-    ``sort_within`` clusters rows inside each bucket's files by those
-    columns (recorded in the sidecar; ``merge_upsert`` preserves it on
-    every bucket rewrite).  Use it when reads filter on a NON-key
-    column: bucketing by pkey hash gives merge locality but zero read
-    selectivity for that column, while sorted files make parquet
-    row-group min/max stats sharp — e.g. the BM25/phrase posting
-    tables are keyed on term:doc for MERGE but QUERIED by term, and
-    term-sorted row groups turn a per-query posting lookup from a
-    full-file scan into row-group skipping (the at-scale difference
-    between reading Σ df rows and reading the whole postings
-    table)."""
-    sort_cols = (
-        [sort_within] if isinstance(sort_within, str) else list(sort_within or [])
-    )
-    out = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    ).repartition(F.col("_bucket"))
-    if sort_cols:
-        # _bucket FIRST: FileFormatWriter requires ordering by the
-        # partition columns and would otherwise insert its own
-        # _bucket-only sort, destroying the clustering; with _bucket
-        # as the prefix our order satisfies the requirement and is
-        # kept verbatim
-        out = out.sortWithinPartitions("_bucket", *sort_cols)
-    (
-        out.write.partitionBy("_bucket")
-        .format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )
-    # layout sidecar: the bucket count is part of the table's identity
-    # (hash mod must match on every later upsert even if some bucket
-    # directory happens to be empty) — never inferred from listings
-    import json
-
-    spark = df.sparkSession
-    jvm = spark._jvm
-    meta = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_keyed_layout.json")
-    fs = meta.getFileSystem(spark._jsc.hadoopConfiguration())
-    st = fs.create(meta, True)
-    sidecar = {
-        "key_col": key_col,
-        "n_buckets": n_buckets,
-        # schema rides the sidecar so read_keyed can serve an EMPTY
-        # table (zero rows written -> no part files -> parquet schema
-        # inference would fail)
-        "schema": df.schema.json(),
-    }
-    if sort_cols:
-        sidecar["sort_within"] = sort_cols
-    st.write(bytearray(json.dumps(sidecar).encode()))
-    st.close()
-
-
-def _keyed_has_part_files(jvm, fs, path: str) -> bool:
-    """True iff any VISIBLE ``_bucket=N`` directory holds a part file.
-    Hidden ``._bucket=N.old`` swap leftovers and metadata sidecars are
-    ignored — they are invisible to the Spark reader too.
-
-    Cost (ADVICE r13, accepted as documented): one root listing plus
-    one listing per bucket dir UNTIL the first part file — a non-empty
-    table short-circuits at its first populated bucket (typically 2
-    RPCs total); only the genuinely-empty table pays n_buckets+1.
-    That worst case is the rare one, and the alternative (inferring
-    emptiness from a reader exception) is exactly the silent-data-loss
-    path the round-13 fix removed."""
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path)):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not name.startswith("_bucket="):
-            continue
-        for f in fs.listStatus(st.getPath()):
-            if f.getPath().getName().startswith("part-"):
-                return True
-    return False
-
-
-def read_keyed(spark, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a ``write_keyed`` table, INCLUDING the empty case: a table
-    written from zero rows has a sidecar but no part files, where raw
-    ``spark.read.parquet`` fails schema inference — serve an empty
-    frame from the sidecar's recorded schema instead (with a typed
-    NULL ``_bucket`` so partition-column filters still resolve).
-
-    The empty case is detected EXPLICITLY (zero part files under the
-    visible bucket dirs), never by catching the reader's exception: a
-    real or transient read failure must propagate, because
-    ``merge_upsert`` reads existing rows through here and an
-    empty-frame fallback would silently rewrite touched buckets with
-    only the batch's rows — losing every other key in them."""
-    import json
-
-    from pyspark.sql.types import StructType
-
-    jvm, fs = _fs(spark, path)
-    meta_p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_keyed_layout.json")
-    if not fs.exists(meta_p):
-        raise ValueError(f"read_keyed: {path} is not a write_keyed table")
-    if _keyed_has_part_files(jvm, fs, path.rstrip("/")):
-        if fmt == "parquet":
-            # identity-keyed schema cache (round 18): a keyed table is
-            # a multi-file partitioned dir, so every uncached read pays
-            # footer inference as a whole Spark JOB; serving paths
-            # (bm25/phrase/search indexes) re-read the same published
-            # tables every run.  Recursive identity re-infers on any
-            # bucket rewrite; scan itself unchanged.
-            from fiware_cosmos_orion_flink_connector_examples_spark.sources.tables import (
-                read_parquet_cached,
-            )
-
-            return read_parquet_cached(spark, path)
-        return spark.read.format(fmt).load(path)
-    meta = json.loads(_read_small(spark, f"{path.rstrip('/')}/_keyed_layout.json"))
-    schema = StructType.fromJson(json.loads(meta["schema"]))
-    return spark.createDataFrame([], schema).withColumn(
-        "_bucket", F.lit(None).cast("int")
-    )
-
-
-def merge_upsert(
-    spark,
-    path: str,
-    updates: DataFrame,
-    key_col: str,
-    fmt: str = "parquet",
-) -> int:
-    """MERGE/upsert into a ``write_keyed`` table — the Delta/Iceberg
-    ``MERGE INTO`` shape on plain parquet: rows whose key matches an
-    update are REPLACED, new keys are INSERTED, and only the hash
-    buckets containing updated keys are read or rewritten (copy-on-
-    write at bucket granularity; the filter on ``_bucket`` is classic
-    hive partition pruning, so an upsert touching k of n buckets scans
-    and rewrites k/n of the table).  Returns the rewritten bucket
-    count.
-
-    Updates must be key-unique — MERGE with duplicate source keys has
-    no defined winner, so duplicates raise instead of silently picking
-    one (the Delta MERGE error contract).
-
-    Atomicity, precisely (not overstated): each touched bucket flips
-    via TWO FileSystem renames — cur→``._bucket=N.old``, then
-    tmp→cur.  A reader listing the table BETWEEN those two renames
-    sees the bucket directory missing (an empty bucket, not a mix of
-    old and new files); the window is two metadata operations wide.
-    A crash inside the window leaves the bucket's data intact in the
-    hidden ``._bucket=N.old`` directory — run
-    ``recover_merge_upsert(spark, path)`` to restore it.  To make
-    that recovery always possible, ``.old`` directories are kept
-    until EVERY touched bucket has swapped successfully and are
-    deleted only in a final cleanup pass.  Cross-bucket atomicity
-    needs a metadata layer (Delta/Iceberg commit log) — out of scope
-    for a plain-parquet lake, and stated here rather than pretended
-    away: a crash mid-merge can leave some buckets post-merge and
-    others pre-merge (each bucket internally consistent); re-running
-    the SAME merge_upsert is idempotent (MERGE is key-addressed
-    replace), which is the recovery path for partial application.
-
-    Object-store caveat: ``FileSystem.rename`` is atomic on HDFS and
-    posix-like stores but NOT on S3A (it is a copy+delete that can be
-    observed half-done and is O(data)).  On object stores use a real
-    table format's commit log instead of this swap — the bucket
-    layout and MERGE plan shape carry over unchanged.
-    """
-    import json
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # CHEAP validations first (sidecar existence + key identity are
-    # metadata reads) — a wrong-table call must fail before paying any
-    # Spark job (ADVICE r10).  Bucket count is part of the table's
-    # IDENTITY (the hash mod must match the original write even if a
-    # bucket directory is empty) — read the write_keyed sidecar, never
-    # infer from listings.
-    meta_p = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_keyed_layout.json")
-    if not fs.exists(meta_p):
-        raise ValueError(f"merge_upsert: {path} is not a write_keyed table")
-    stream = fs.open(meta_p)
-    try:
-        raw = bytes(
-            jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
-        )
-    finally:
-        stream.close()
-    meta = json.loads(raw.decode())
-    n_buckets = int(meta["n_buckets"])
-    if meta["key_col"] != key_col:
-        raise ValueError(
-            f"merge_upsert: table is keyed on {meta['key_col']!r}, not {key_col!r}"
-        )
-    dup = (
-        updates.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_upsert: duplicate key {dup[0][key_col]!r} in updates — "
-            "MERGE requires a key-unique source"
-        )
-    upd = updates.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    )
-    touched = sorted(
-        r["_bucket"] for r in upd.select("_bucket").distinct().collect()
-    )  # bounded by n_buckets — a layout constant, never data-scale
-    if not touched:
-        return 0
-    existing = read_keyed(spark, path, fmt).filter(
-        F.col("_bucket").isin(touched)  # partition-pruned scan
-    )
-    keys = upd.select(F.col(key_col))
-    merged = (
-        existing.drop("_bucket")
-        .join(keys, key_col, "left_anti")
-        .unionByName(upd.drop("_bucket"))
-        .withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)),
-        )
-    )
-    tmp = path.rstrip("/") + ".merge.tmp"
-    out = merged.repartition(F.col("_bucket"))
-    if meta.get("sort_within"):
-        # preserve the table's declared in-file clustering — a merge
-        # that dropped it would silently degrade read selectivity on
-        # every rewritten bucket (_bucket prefix: see write_keyed)
-        out = out.sortWithinPartitions("_bucket", *meta["sort_within"])
-    (
-        out.write.partitionBy("_bucket")
-        .format(fmt)
-        .mode("overwrite")
-        .save(tmp)
-    )
-    swapped_olds = []
-    for b in touched:
-        cur = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/_bucket={b}")
-        new = jvm.org.apache.hadoop.fs.Path(f"{tmp}/_bucket={b}")
-        old = jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/._bucket={b}.old")
-        if fs.exists(old):
-            fs.delete(old, True)  # stale backup from a CLEANLY finished run
-        had_cur = fs.exists(cur)
-        if had_cur and not fs.rename(cur, old):
-            raise IOError(f"merge_upsert: rename {cur} -> {old} failed")
-        if not fs.rename(new, cur):
-            if had_cur:
-                fs.rename(old, cur)  # roll back this bucket
-            raise IOError(f"merge_upsert: rename {new} -> {cur} failed")
-        if had_cur:
-            # keep the backup until EVERY bucket has swapped — a crash
-            # from here on must leave all pre-merge data recoverable
-            swapped_olds.append(old)
-    # cleanup pass: only reached once all touched buckets are live
-    for old in swapped_olds:
-        fs.delete(old, True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-    return len(touched)
-
-
-def recover_merge_upsert(spark, path: str) -> dict:
-    """Crash recovery for an interrupted ``merge_upsert``: restore any
-    bucket whose live directory went missing mid-swap and clear
-    leftovers, returning ``{"restored": [...], "cleaned": [...]}``.
-
-    Protocol (driven purely by what's on disk — no journal needed):
-      * ``._bucket=N.old`` present, ``_bucket=N`` MISSING → the crash
-        hit between the two renames; restore old→cur (that bucket
-        returns to its PRE-merge content).
-      * ``._bucket=N.old`` present, ``_bucket=N`` present → the swap
-        completed but the final cleanup pass didn't; the live bucket
-        is post-merge, so the backup is deleted.
-      * a ``<path>.merge.tmp`` staging directory → deleted.
-
-    After recovery the table is readable and internally consistent per
-    bucket, but a crashed merge may be PARTIALLY applied across
-    buckets (some post-merge, restored ones pre-merge) — re-running
-    the same ``merge_upsert`` completes it idempotently, since MERGE
-    is key-addressed replace."""
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    hpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    restored, cleaned = [], []
-    if fs.exists(hpath):
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if not (name.startswith("._bucket=") and name.endswith(".old")):
-                continue
-            bucket = name[len("._bucket=") : -len(".old")]
-            cur = jvm.org.apache.hadoop.fs.Path(f"{base}/_bucket={bucket}")
-            if fs.exists(cur):
-                fs.delete(st.getPath(), True)
-                cleaned.append(name)
-            else:
-                if not fs.rename(st.getPath(), cur):
-                    raise IOError(f"recover_merge_upsert: rename {name} failed")
-                restored.append(f"_bucket={bucket}")
-    tmp = jvm.org.apache.hadoop.fs.Path(base + ".merge.tmp")
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-        cleaned.append(tmp.getName())
-    return {"restored": sorted(restored), "cleaned": sorted(cleaned)}
-
-
 # --- snapshot-isolated tables (manifest commit log) --------------------------
 #
-# The missing metadata layer merge_upsert's docstring names: plain
-# parquet directories can only swap per-directory, so multi-bucket /
-# multi-partition changes are never atomic as a whole.  A MANIFEST
-# table fixes that the way Iceberg/Delta do, minus the format baggage:
-# data files are immutable and write-once under <path>/data/, and each
-# COMMIT is ONE atomic create-style rename of a complete
-# _manifest_v<N>.json (staged as a hidden .tmp, renamed to a
+# Plain parquet directories can only swap per-directory, so
+# multi-bucket / multi-partition changes are never atomic as a whole.
+# A MANIFEST table fixes that the way Iceberg/Delta do, minus the
+# format baggage: data files are immutable and write-once under
+# <path>/data/, and each COMMIT is ONE atomic create-style rename of a
+# complete _manifest_v<N>.json (staged as a hidden .tmp, renamed to a
 # destination that must not exist — so two racing committers of the
 # same version conflict instead of clobbering: optimistic
 # concurrency, Iceberg's commit rule).  Readers list the manifests
@@ -528,8 +206,7 @@ def recover_merge_upsert(spark, path: str) -> dict:
 # observe a half-committed state, because a manifest either exists
 # completely or not at all, and nothing it references is ever mutated.
 #
-# METADATA SCALING (round 12 — the r11 verdict's one flagged
-# scale-killer): the manifest no longer inlines the table's file list.
+# METADATA SCALING: the manifest does not inline the table's file list.
 # Each commit writes ONE immutable SEGMENT file under <path>/segments/
 # describing only that commit's delta — files added (plus their
 # per-file stats and bucket assignments), buckets replaced (merge),
@@ -547,8 +224,8 @@ def recover_merge_upsert(spark, path: str) -> dict:
 # to readers and reclaimable by vacuum_snapshots.  There is
 # deliberately NO mutable pointer file: a delete+recreate pointer has
 # a reader-visible missing window and a crash there would reset the
-# version counter (review finding, round 11).  Same caveat as
-# everything rename-based: atomic on HDFS/posix stores, not on S3A.
+# version counter.  Same caveat as everything rename-based: atomic on
+# HDFS/posix stores, not on S3A.
 
 
 class SnapshotTxnAlreadyApplied(Exception):
@@ -1350,6 +1027,18 @@ def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
     }
 
 
+def _write_buckets(df: DataFrame, data_dir: str, sort_within: str | None) -> None:
+    """Write ``df`` (carrying ``_bucket``) as one file set per bucket,
+    rows ordered on ``sort_within`` inside each file when given."""
+    out = df.repartition(F.col("_bucket"))
+    if sort_within:
+        # _bucket prefix REQUIRED (see compact_files): FileFormatWriter
+        # demands ordering by the partition column and would otherwise
+        # insert its own _bucket-only sort, discarding the clustering
+        out = out.sortWithinPartitions("_bucket", sort_within)
+    out.write.partitionBy("_bucket").parquet(data_dir)
+
+
 def snapshot_write_keyed(
     spark,
     df: DataFrame,
@@ -1364,14 +1053,11 @@ def snapshot_write_keyed(
     """Create a KEYED snapshot table: rows hash-bucketed by ``key_col``
     into one file set per bucket, the bucket map recorded in the
     commit's segment — the layout that makes ``snapshot_merge`` a
-    bucket-pruned copy-on-write whose commit is ATOMIC ACROSS BUCKETS
-    (the property plain-directory ``merge_upsert`` cannot give: its
-    per-bucket swaps are individually atomic, the whole merge is not).
-    ``sort_within`` clusters each bucket's files on a column (the
-    write_keyed row-group-skip trick — posting tables sort on term);
-    later merges rewrite touched buckets unsorted, so run
-    ``compact_files(sort_by=...)`` to restore clustering after heavy
-    merge traffic.
+    bucket-pruned copy-on-write whose commit is ATOMIC ACROSS BUCKETS.
+    ``sort_within`` clusters each bucket's files on a column (term-
+    sorted posting files make a per-term lookup row-group-skippable
+    instead of a full scan); it is recorded with the table's keying, so
+    merges and DV compaction keep it on every bucket they rewrite.
 
     ``bucket_col`` (round 14) makes the bucket assignment PLUGGABLE: an
     int column of ``df`` (caller-computed — e.g. an IVF cell id) places
@@ -1397,13 +1083,7 @@ def snapshot_write_keyed(
         if bucket_col is not None
         else F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
     )
-    out = df.withColumn("_bucket", bucket_expr).repartition(F.col("_bucket"))
-    if sort_within:
-        # _bucket prefix REQUIRED (see compact_files): FileFormatWriter
-        # demands ordering by the partition column and would otherwise
-        # insert its own _bucket-only sort, discarding the clustering
-        out = out.sortWithinPartitions("_bucket", sort_within)
-    out.write.partitionBy("_bucket").parquet(data_dir)
+    _write_buckets(df.withColumn("_bucket", bucket_expr), data_dir, sort_within)
     files, buckets = _list_bucket_files(jvm, fs, data_dir)
     seg = {"add": sorted(files), "buckets": buckets, "truncate": True}
     if stats_cols and files:
@@ -1422,12 +1102,12 @@ def snapshot_write_keyed(
         "mode": "overwrite",
         "schema": df.schema.json(),
         "segments": [rel],
-        "keyed": (
-            {"key_col": key_col, "n_buckets": n_buckets, "bucket_col": bucket_col}
-            if bucket_col is not None
-            else {"key_col": key_col, "n_buckets": n_buckets}
-        ),
+        "keyed": {"key_col": key_col, "n_buckets": n_buckets},
     }
+    if bucket_col is not None:
+        manifest["keyed"]["bucket_col"] = bucket_col
+    if sort_within:
+        manifest["keyed"]["sort_within"] = sort_within
     if _txn_update:
         # a streaming sink creating its table on batch 0 needs the
         # watermark on the CREATING commit too, or a replayed batch 0
@@ -1587,8 +1267,8 @@ def snapshot_merge(
     whole merge becomes visible in ONE atomic manifest rename.  A
     reader can never see half a merge, a crash anywhere leaves the
     table at the previous version, and time travel reaches the
-    pre-merge state — the three guarantees the plain-directory
-    ``merge_upsert`` documents as out of its reach.
+    pre-merge state — none of which a per-directory rename swap can
+    give.
 
     ``delete_col`` names a boolean column in ``updates``: rows where
     it is true DELETE their key (WHEN MATCHED … DELETE; deleting an
@@ -1860,7 +1540,7 @@ def snapshot_merge(
             survivors
         )
         merged = merged.withColumn("_bucket", bucket_expr)
-    merged.repartition(F.col("_bucket")).write.partitionBy("_bucket").parquet(data_dir)
+    _write_buckets(merged, data_dir, keyed.get("sort_within"))
     new_files, new_buckets = _list_bucket_files(jvm, fs, data_dir)
     seg: dict = {
         "add": sorted(new_files),
@@ -2887,7 +2567,6 @@ def compact_files(
             # _bucket prefix REQUIRED: FileFormatWriter demands ordering
             # by the partition column and would otherwise insert its own
             # _bucket-only sort, silently discarding the clustering
-            # (write_keyed line ~220 documents the same contract)
             out = out.sortWithinPartitions("_bucket", sort_by or "_z")
         if zorder_by:
             out = out.drop("_z")
@@ -3031,11 +2710,8 @@ def compact_dv_buckets(spark, path: str) -> int | None:
     )
     new_version = resolved["version"] + 1
     data_dir = f"{base}/data/v{new_version}-{uuid.uuid4().hex[:8]}"
-    (
-        df.withColumn("_bucket", bucket_expr)
-        .repartition(F.col("_bucket"))
-        .write.partitionBy("_bucket")
-        .parquet(data_dir)
+    _write_buckets(
+        df.withColumn("_bucket", bucket_expr), data_dir, keyed.get("sort_within")
     )
     new_files, new_buckets = _list_bucket_files(jvm, fs, data_dir)
     seg: dict = {

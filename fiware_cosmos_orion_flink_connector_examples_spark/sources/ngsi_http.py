@@ -6,8 +6,9 @@ Example1.scala:16-17; README.md:93-94,122).
 Spark-first architecture, two layers:
 
 1. ``NgsiHttpReceiver`` — a tiny threaded HTTP server that SPOOLS each
-   POST body (plus Fiware-Service / Fiware-ServicePath headers and an
-   arrival timestamp) to a JSON-lines spool directory.  Push-based HTTP
+   accepted POST body (plus Fiware-Service / Fiware-ServicePath headers
+   and an arrival timestamp) to a JSON-lines spool directory; oversized
+   and non-notification bodies are refused (413 / 400).  Push-based HTTP
    has no replayable offsets, so durability comes from the spool: one
    file per drain interval, append-only, fsync'd before rotation.
 2. ``OrionHttpDataSource`` — a Spark 4 Python Data Source
@@ -57,9 +58,26 @@ NOTIFICATION_ROW_SCHEMA = StructType(
 )
 
 
+# Largest notification body the receiver accepts: a POST declaring a
+# longer body is answered 413 before any of it is read.
+MAX_BODY_BYTES = 1 << 20
+
+
+def _is_notification(body: bytes) -> bool:
+    """True iff ``body`` is an NGSI-v2 notification: a JSON object
+    carrying a ``data`` list."""
+    try:
+        doc = json.loads(body)
+    except ValueError:
+        return False
+    return isinstance(doc, dict) and isinstance(doc.get("data"), list)
+
+
 class NgsiHttpReceiver:
     """Threaded HTTP server spooling NGSI notifications to JSON-lines
-    files (one line per POST: {payload, service, servicePath, ts})."""
+    files (one line per accepted POST: {payload, service, servicePath,
+    ts}).  A body over ``MAX_BODY_BYTES`` is answered 413 and one that
+    is not a notification 400; neither is spooled."""
 
     def __init__(self, spool_dir: str, port: int = 9001, rotate_secs: float = 1.0):
         self.spool_dir = spool_dir
@@ -89,11 +107,23 @@ class NgsiHttpReceiver:
 
         class Handler(BaseHTTPRequestHandler):
             def do_POST(self):  # noqa: N802 (http.server API)
-                length = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(length).decode("utf-8", errors="replace")
+                try:
+                    length = int(self.headers.get("Content-Length", 0))
+                except ValueError:
+                    length = 0  # unreadable length: an empty body, refused below
+                if length > MAX_BODY_BYTES:
+                    self.send_response(413)
+                    self.end_headers()
+                    self.close_connection = True
+                    return
+                body = self.rfile.read(max(length, 0))
+                if not _is_notification(body):
+                    self.send_response(400)
+                    self.end_headers()
+                    return
                 receiver._write(
                     {
-                        "payload": body,
+                        "payload": body.decode("utf-8", errors="replace"),
                         "service": self.headers.get("Fiware-Service", ""),
                         "servicePath": self.headers.get("Fiware-ServicePath", ""),
                         "ts": time.time(),

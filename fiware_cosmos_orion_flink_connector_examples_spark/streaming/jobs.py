@@ -1525,11 +1525,11 @@ def maintain_cms_rollup(
         # batch).  Write the merged ≤ depth×width-row frame to a
         # sibling tmp, then two-rename swap with the .old kept until
         # the new table is live — a crash at any point leaves a
-        # recoverable state (the merge_upsert discipline).  The batch
-        # watermark is staged into the SAME tmp dir so the swap
-        # commits counters and watermark atomically: a retry after a
-        # completed swap sees batch_id ≤ watermark above and skips
-        # instead of double-merging (review finding, round 11).
+        # recoverable state.  The batch watermark is staged into the
+        # SAME tmp dir so the swap commits counters and watermark
+        # atomically: a retry after a completed swap sees batch_id ≤
+        # watermark above and skips instead of double-merging (review
+        # finding, round 11).
         tmp = base + ".tmp"
         fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
         merged.write.mode("overwrite").parquet(tmp)

@@ -183,129 +183,6 @@ def test_zorder_empty_input_writes_empty_table(spark, tmp_path):
     assert spark.read.parquet(out).count() == 0
 
 
-def test_merge_upsert_replaces_inserts_and_prunes(spark, tmp_path):
-    """write_keyed + merge_upsert: matched keys are replaced, new keys
-    inserted, untouched buckets keep their exact files (copy-on-write
-    proof — the upsert never rewrote them), and duplicate-key update
-    sources are rejected."""
-    import pytest as _pytest
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    path = str(tmp_path / "keyed")
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(200)], "k long, v string"
-    )
-    layout.write_keyed(base, path, "k", n_buckets=8)
-
-    before = {f for f in spark.read.parquet(path).inputFiles()}
-    updates = spark.createDataFrame(
-        [(3, "CHANGED"), (777, "NEW")], "k long, v string"
-    )
-    n = layout.merge_upsert(spark, path, updates, "k")
-    assert 1 <= n <= 2
-
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    expect = {i: f"v{i}" for i in range(200)}
-    expect[3] = "CHANGED"
-    expect[777] = "NEW"
-    assert got == expect
-
-    # copy-on-write: files in untouched buckets are byte-for-byte the
-    # same paths; only the touched bucket dirs changed
-    after = {f for f in spark.read.parquet(path).inputFiles()}
-    touched_dirs = {f.rsplit("/", 1)[0] for f in (before ^ after)}
-    assert len(touched_dirs) <= 2 * n
-    untouched_before = {f for f in before if f.rsplit("/", 1)[0] not in touched_dirs}
-    assert untouched_before <= after
-
-    with _pytest.raises(ValueError, match="duplicate key"):
-        layout.merge_upsert(
-            spark,
-            path,
-            spark.createDataFrame([(1, "a"), (1, "b")], "k long, v string"),
-            "k",
-        )
-
-
-def test_merge_upsert_requires_keyed_table(spark, tmp_path):
-    """A plain (non-write_keyed) parquet dir is rejected instead of
-    silently mis-bucketing."""
-    import pytest as _pytest
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    path = str(tmp_path / "plain")
-    spark.range(10).write.parquet(path)
-    with _pytest.raises(ValueError, match="not a write_keyed"):
-        layout.merge_upsert(
-            spark, path, spark.createDataFrame([(1, "a")], "k long, v string"), "k"
-        )
-
-
-def test_merge_upsert_crash_recovery_restores_missing_bucket(spark, tmp_path):
-    """Simulate the documented crash window (bucket renamed to
-    ._bucket=N.old, live dir gone): recover_merge_upsert restores the
-    pre-merge bucket, deletes completed-swap backups and staging dirs,
-    and a re-run of the same merge completes idempotently."""
-    import shutil
-    from pathlib import Path as P
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    path = str(tmp_path / "keyed")
-    base = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(100)], "k long, v string"
-    )
-    layout.write_keyed(base, path, "k", n_buckets=4)
-    updates = spark.createDataFrame([(3, "CHANGED")], "k long, v string")
-    layout.merge_upsert(spark, path, updates, "k")
-
-    # crash simulation: one bucket mid-swap (live dir missing, data in
-    # .old), one bucket post-swap with a leftover backup, plus a stale
-    # staging dir
-    buckets = sorted(p for p in P(path).iterdir() if p.name.startswith("_bucket="))
-    crashed, finished = buckets[0], buckets[1]
-    shutil.move(str(crashed), str(crashed.parent / f".{crashed.name}.old"))
-    shutil.copytree(str(finished), str(finished.parent / f".{finished.name}.old"))
-    (P(path + ".merge.tmp")).mkdir()
-
-    result = layout.recover_merge_upsert(spark, path)
-    assert result["restored"] == [crashed.name]
-    assert f".{finished.name}.old" in result["cleaned"]
-    assert any(c.endswith(".merge.tmp") for c in result["cleaned"])
-    assert not list(P(path).glob("._bucket=*.old"))
-    assert not P(path + ".merge.tmp").exists()
-
-    # table is whole again and the re-run is an idempotent no-op-shape
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    expect = {i: f"v{i}" for i in range(100)}
-    expect[3] = "CHANGED"
-    assert got == expect
-    layout.merge_upsert(spark, path, updates, "k")
-    got2 = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got2 == expect
-
-
-def test_merge_upsert_validates_before_any_spark_job(spark, tmp_path):
-    """A wrong-table / wrong-key call fails on the cheap sidecar checks
-    without running the duplicate-key Spark job (ADVICE r10: metadata
-    validation precedes cluster work)."""
-    import pytest as _pytest
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
-
-    path = str(tmp_path / "keyed")
-    layout.write_keyed(
-        spark.createDataFrame([(1, "a")], "k long, v string"), path, "k", n_buckets=2
-    )
-    # duplicate-key source AND wrong key_col: the sidecar identity check
-    # must win (proving it runs before the duplicate-key job)
-    dup_wrong_key = spark.createDataFrame([(1, "a"), (1, "b")], "wrong long, v string")
-    with _pytest.raises(ValueError, match="keyed on 'k'"):
-        layout.merge_upsert(spark, path, dup_wrong_key, "wrong")
-
-
 def test_snapshot_commit_read_append_time_travel(spark, tmp_path):
     """Manifest commit log: overwrite/append versions, time travel to
     any retained version, O(1) latest-pointer resolution."""

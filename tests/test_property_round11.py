@@ -191,8 +191,9 @@ def test_decayed_engagement_bounds(spark):
 
 def test_bm25_index_roundtrip_and_incremental_merge(spark, tmp_path):
     """The stored-index path scores IDENTICALLY to the from-corpus
-    path, and an incremental ingest (new docs MERGEd into the keyed
-    tables) equals a full rebuild over the unioned corpus."""
+    path, and an incremental ingest (new docs merged into the index's
+    snapshot sub-tables) equals a full rebuild over the unioned
+    corpus."""
     from pyspark.sql import functions as F
 
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
@@ -213,7 +214,7 @@ def test_bm25_index_roundtrip_and_incremental_merge(spark, tmp_path):
         [(0, "apple"), (0, "plum"), (1, "fig")], "query_id int, term string"
     )
     idx = str(tmp_path / "bm25idx")
-    text.bm25_index_write(corpus0, idx, n_buckets=4)
+    text.search_index_write(corpus0, idx, n_buckets=4)
 
     def as_map(df):
         return {
@@ -224,7 +225,7 @@ def test_bm25_index_roundtrip_and_incremental_merge(spark, tmp_path):
         text.bm25_scores(corpus0, q)
     )
 
-    text.bm25_index_ingest(spark, batch, idx)
+    text.search_index_ingest(spark, batch, idx)
     full = corpus0.unionByName(batch)
     assert as_map(text.bm25_from_index(spark, idx, q)) == as_map(
         text.bm25_scores(full, q)
@@ -232,50 +233,9 @@ def test_bm25_index_roundtrip_and_incremental_merge(spark, tmp_path):
 
     # re-ingesting the SAME batch is idempotent (MERGE replaces
     # matched posting keys, inserts nothing new)
-    text.bm25_index_ingest(spark, batch, idx)
+    text.search_index_ingest(spark, batch, idx)
     assert as_map(text.bm25_from_index(spark, idx, q)) == as_map(
         text.bm25_scores(full, q)
-    )
-
-
-def test_bm25_index_tombstone_delete(spark, tmp_path):
-    """Log-structured deletes: tombstoned docs vanish from stored-index
-    scores AND from the distilled query model (df/N/Σdl), matching a
-    full rebuild without those docs; re-ingest + tombstone-clear via a
-    fresh delete table is out-of-scope here (compaction, stated)."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "apple pear plum grape"),
-            (2, "apple apple plum grape"),
-            (3, "pear kiwi fig"),
-            (4, "apple fig fig"),
-        ],
-        "doc_id long, text string",
-    )
-    q = spark.createDataFrame([(0, "apple"), (0, "fig")], "query_id int, term string")
-    idx = str(tmp_path / "idx")
-    text.bm25_index_write(corpus, idx, n_buckets=4)
-    text.bm25_index_delete(
-        spark, spark.createDataFrame([(2,), (4,)], "doc_id long"), idx
-    )
-
-    survivors = corpus.filter("doc_id NOT IN (2, 4)")
-
-    def as_map(df):
-        return {(r["query_id"], r["doc_id"]): r["score_q12"] for r in df.collect()}
-
-    assert as_map(text.bm25_from_index(spark, idx, q)) == as_map(
-        text.bm25_scores(survivors, q)
-    )
-    model = text.bm25_query_model(spark, idx, q)
-    assert model["n_docs"] == 2 and dict(model["terms"])["apple"] == 1
-
-    # deleting MORE ids MERGEs into the existing tombstone table
-    text.bm25_index_delete(spark, spark.createDataFrame([(1,)], "doc_id long"), idx)
-    assert as_map(text.bm25_from_index(spark, idx, q)) == as_map(
-        text.bm25_scores(corpus.filter("doc_id = 3"), q)
     )
 
 
@@ -296,7 +256,7 @@ def test_streaming_bm25_gate_matches_batch(spark, tmp_path):
         [(0, "hash"), (0, "join"), (0, "table")], "query_id int, term string"
     )
     idx = str(tmp_path / "idx")
-    text.bm25_index_write(corpus, idx, n_buckets=4)
+    text.search_index_write(corpus, idx, n_buckets=4)
     model = text.bm25_query_model(spark, idx, q)
 
     # batch comparator: same frozen stats through the shared core
@@ -341,40 +301,6 @@ def test_streaming_bm25_gate_matches_batch(spark, tmp_path):
     assert got == expected
     for r in rows:
         assert r.pass_gate == (r.score >= 0.5)
-
-
-def test_bm25_index_compact_clears_tombstones(spark, tmp_path):
-    """Compaction rewrites the index minus tombstoned docs, drops the
-    tombstone table, and scores stay identical before/after."""
-    from pathlib import Path as P
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
-
-    corpus = spark.createDataFrame(
-        [(i, f"apple w{i} plum") for i in range(40)],
-        "doc_id long, text string",
-    )
-    q = spark.createDataFrame([(0, "apple"), (0, "w7")], "query_id int, term string")
-    idx = str(tmp_path / "idx")
-    text.bm25_index_write(corpus, idx, n_buckets=4)
-    text.bm25_index_delete(
-        spark, spark.createDataFrame([(7,), (8,)], "doc_id long"), idx
-    )
-
-    def as_map(df):
-        return {(r["query_id"], r["doc_id"]): r["score_q12"] for r in df.collect()}
-
-    before = as_map(text.bm25_from_index(spark, idx, q))
-    text.bm25_index_compact(spark, idx)
-    assert not (P(idx) / "tombstones").exists()
-    assert as_map(text.bm25_from_index(spark, idx, q)) == before
-    # physically gone, not just filtered
-    assert spark.read.parquet(f"{idx}/doclen").filter("doc_id IN (7, 8)").count() == 0
-    # deletes keep working after compaction (fresh tombstone table)
-    text.bm25_index_delete(spark, spark.createDataFrame([(9,)], "doc_id long"), idx)
-    assert as_map(text.bm25_from_index(spark, idx, q)) == as_map(
-        text.bm25_scores(corpus.filter("doc_id NOT IN (7, 8, 9)"), q)
-    )
 
 
 def test_ann_index_partition_pruned_search(spark, tmp_path):
@@ -486,40 +412,6 @@ def test_maintain_cms_rollup_equals_oneshot(spark, tmp_path):
         (r["d"], r["bucket"]): r["c"] for r in spark.read.parquet(table).collect()
     }
     assert sum(after_new.values()) > sum(oneshot.values())
-
-
-def test_bm25_index_compact_recovers_crashed_swap(spark, tmp_path):
-    """Compaction's built-in recovery: a table caught inside the
-    rename window (live dir gone, data only in .{t}.old) is restored
-    at the start of the next compaction run, and the run completes
-    normally (review finding r11: 're-run to recover' must be real)."""
-    import shutil
-    from pathlib import Path as P
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
-
-    corpus = spark.createDataFrame(
-        [(i, f"apple w{i}") for i in range(20)], "doc_id long, text string"
-    )
-    q = spark.createDataFrame([(0, "apple")], "query_id int, term string")
-    idx = str(tmp_path / "idx")
-    text.bm25_index_write(corpus, idx, n_buckets=4)
-    text.bm25_index_delete(spark, spark.createDataFrame([(5,)], "doc_id long"), idx)
-
-    # crash simulation: postings renamed away, never replaced
-    shutil.move(f"{idx}/postings", f"{idx}/.postings.old")
-    text.bm25_index_compact(spark, idx)
-
-    got = {
-        (r["query_id"], r["doc_id"]): r["score_q12"]
-        for r in text.bm25_from_index(spark, idx, q).collect()
-    }
-    expect = {
-        (r["query_id"], r["doc_id"]): r["score_q12"]
-        for r in text.bm25_scores(corpus.filter("doc_id != 5"), q).collect()
-    }
-    assert got == expect
-    assert not (P(idx) / ".postings.old").exists()
 
 
 def test_ann_index_add_equals_rebuild(spark, tmp_path):

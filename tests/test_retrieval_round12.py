@@ -1,9 +1,9 @@
 """Round-12 retrieval serving paths.
 
 Pins VERDICT r11 Next #3/#4: the index-served hybrid RRF path is
-row-identical to the in-memory hash-green query, and the positional
-phrase index reproduces the row-local counter under builds, incremental
-ingest, changed-doc re-ingest, tombstones, and >2-term phrases.
+row-identical to the in-memory hash-green query, and the search index's
+positional postings reproduce the row-local counter under builds,
+incremental ingest, changed-doc re-ingest, and >2-term phrases.
 Reference scope: [ext] — the reference (5 Flink demos) has no
 retrieval surface.
 """
@@ -16,6 +16,7 @@ from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
     similarity,
     text,
 )
+from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 from fiware_cosmos_orion_flink_connector_examples_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -42,7 +43,7 @@ def test_hybrid_served_row_identical_to_inmemory(spark, tmp_path):
         "id", "rank_lex", "rank_vec", "rrf", "fused_rank"
     )
 
-    text.bm25_index_write(docs, str(tmp_path / "bm25"), n_buckets=4)
+    text.search_index_write(docs, str(tmp_path / "bm25"), n_buckets=4)
     cents = similarity.kmeans_fit_sample(emb, k=8)
     similarity.ann_index_write(emb, str(tmp_path / "ivf"), cents)
     served = retrieval.hybrid_rrf_from_indexes(
@@ -60,23 +61,28 @@ def test_hybrid_served_row_identical_to_inmemory(spark, tmp_path):
 
 def test_hybrid_served_respects_bm25_maintenance(spark, tmp_path):
     """The served path sees index MAINTENANCE: deleting a doc that the
-    in-memory path still ranks changes the served lexical list — the
-    index, not the corpus scan, is the source of truth."""
+    in-memory path still ranks changes the served lexical list and the
+    distilled query model — the index, not the corpus scan, is the
+    source of truth."""
     docs = load_table(spark, SF, "documents")
     qterms = spark.createDataFrame(
         [(0, "hash"), (0, "join")], "query_id int, term string"
     )
     idx = str(tmp_path / "bm25")
-    text.bm25_index_write(docs, idx, n_buckets=4)
+    text.search_index_write(docs, idx, n_buckets=4)
     lex_before = retrieval.rank_lexical(
         text.bm25_from_index(spark, idx, qterms), 5
     )
     top_doc = lex_before.filter("rank_lex = 1").collect()[0]["id"]
-    text.bm25_index_delete(
+    model_before = text.bm25_query_model(spark, idx, qterms)
+    text.search_index_delete(
         spark, spark.createDataFrame([(top_doc,)], "doc_id long"), idx
     )
     lex_after = retrieval.rank_lexical(text.bm25_from_index(spark, idx, qterms), 5)
     assert top_doc not in {r["id"] for r in lex_after.collect()}
+    model_after = text.bm25_query_model(spark, idx, qterms)
+    assert model_after["n_docs"] == model_before["n_docs"] - 1
+    assert dict(model_after["terms"])["hash"] == dict(model_before["terms"])["hash"] - 1
 
 
 def _rowlocal_counts(docs, phrase):
@@ -106,7 +112,7 @@ def test_phrase_index_equals_rowlocal(spark, tmp_path, phrase):
     beyond the registered query's bigram)."""
     docs = load_table(spark, SF, "documents")
     idx = str(tmp_path / "pidx")
-    text.phrase_index_write(docs, idx, n_buckets=4)
+    text.search_index_write(docs, idx, n_buckets=4)
     served = text.phrase_count_from_index(spark, idx, phrase)
     want = _rows(_rowlocal_counts(docs, phrase))
     assert _rows(served) == want
@@ -117,48 +123,30 @@ def test_phrase_index_equals_rowlocal(spark, tmp_path, phrase):
 
 
 def test_phrase_index_incremental_ingest_equals_rebuild(spark, tmp_path):
-    """MERGE-maintained index (half corpus + ingest of the rest, plus
+    """Merge-maintained index (half corpus + ingest of the rest, plus
     a CHANGED doc whose re-ingest replaces its position arrays) serves
     the same counts as a from-scratch build of the final corpus."""
     docs = load_table(spark, SF, "documents").filter("doc_id < 200")
     first = docs.filter("doc_id < 100")
     rest = docs.filter("doc_id >= 100")
     idx = str(tmp_path / "pidx")
-    text.phrase_index_write(first, idx, n_buckets=4)
-    text.phrase_index_ingest(spark, rest, idx)
+    text.search_index_write(first, idx, n_buckets=4)
+    text.search_index_ingest(spark, rest, idx)
     # change one doc: its new text moves the phrase
     changed = spark.createDataFrame(
         [(5, "hash join hash join now appears hash join")],
         "doc_id long, text string",
     )
-    text.phrase_index_ingest(spark, changed, idx)
+    text.search_index_ingest(spark, changed, idx)
     # build the reference index from the FINAL logical corpus
     full = str(tmp_path / "pfull")
     base = docs.filter("doc_id != 5").select("doc_id", "text").unionByName(
         changed
     )
-    text.phrase_index_write(base, full, n_buckets=4)
+    text.search_index_write(base, full, n_buckets=4)
     got = _rows(text.phrase_count_from_index(spark, idx, ["hash", "join"]))
     want = _rows(text.phrase_count_from_index(spark, full, ["hash", "join"]))
-    # the merged index may keep stale (term, doc) rows for terms the
-    # new text dropped — but the PHRASE counts for doc 5 come from its
-    # replaced arrays, so the phrase result matches the rebuild
     assert (5, 3) in got and got == want
-
-
-def test_phrase_index_honors_tombstones(spark, tmp_path):
-    """A tombstoned doc disappears from served phrase counts (shared
-    tombstone table with a co-located BM25 index)."""
-    docs = load_table(spark, SF, "documents")
-    idx = str(tmp_path / "pidx")
-    text.phrase_index_write(docs, idx, n_buckets=4)
-    served = text.phrase_count_from_index(spark, idx, ["hash", "join"])
-    victim = served.orderBy("doc_id").limit(1).collect()[0]["doc_id"]
-    text.bm25_index_delete(
-        spark, spark.createDataFrame([(victim,)], "doc_id long"), idx
-    )
-    after = text.phrase_count_from_index(spark, idx, ["hash", "join"])
-    assert victim not in {r["doc_id"] for r in after.collect()}
 
 
 def test_ann_index_drift_monitor_and_rebuild(spark, tmp_path):
@@ -218,28 +206,38 @@ def test_ann_index_drift_monitor_and_rebuild(spark, tmp_path):
     assert exact["recall_at_k"] == 1.0
 
 
+def _pinned_files(spark, idx, name):
+    """The data files of sub-table ``name`` that the index root pins."""
+    root = layout.index_root_resolve(spark, idx)
+    return layout.snapshot_manifest(spark, f"{idx}/{name}", root["tables"][name])[
+        "files"
+    ]
+
+
 def test_posting_tables_term_sorted_within_files(spark, tmp_path):
     """The posting tables' in-file clustering contract: rows inside
-    every file are term-sorted after the initial write AND after a
-    MERGE ingest rewrite (the sidecar carries sort_within, so
-    merge_upsert preserves it) — what makes a query-term lookup
-    row-group-skippable instead of a full postings scan."""
+    every posting file the index root pins are term-sorted after the
+    initial write AND after a merge ingest rewrite (the keyed manifest
+    records sort_within, so snapshot_merge keeps it) — what makes a
+    query-term lookup row-group-skippable instead of a full postings
+    scan."""
     docs = load_table(spark, SF, "documents").filter("doc_id < 150")
     idx = str(tmp_path / "bm25")
-    text.bm25_index_write(docs.filter("doc_id < 100"), idx, n_buckets=4)
-    text.bm25_index_ingest(spark, docs.filter("doc_id >= 100"), idx)
+    text.search_index_write(docs.filter("doc_id < 100"), idx, n_buckets=4)
+    text.search_index_ingest(spark, docs.filter("doc_id >= 100"), idx)
 
-    rows = (
-        spark.read.parquet(f"{idx}/postings")
-        .select(F.input_file_name().alias("f"), "term")
-        .collect()
-    )
-    by_file: dict = {}
-    for r in rows:
-        by_file.setdefault(r["f"], []).append(r["term"])
-    assert len(by_file) > 1
-    for f, terms in by_file.items():
-        assert terms == sorted(terms), f"unsorted file {f}"
+    for name in ("postings", "positions"):
+        rows = (
+            spark.read.parquet(*_pinned_files(spark, idx, name))
+            .select(F.input_file_name().alias("f"), "term")
+            .collect()
+        )
+        by_file: dict = {}
+        for r in rows:
+            by_file.setdefault(r["f"], []).append(r["term"])
+        assert len(by_file) > 1
+        for f, terms in by_file.items():
+            assert terms == sorted(terms), f"unsorted file {f}"
     # and the scores still match the from-corpus path after the ingest
     q = spark.createDataFrame([(0, "hash"), (0, "join")], "query_id int, term string")
     got = {
@@ -254,12 +252,11 @@ def test_posting_tables_term_sorted_within_files(spark, tmp_path):
 
 
 def test_changed_doc_drops_stale_terms(spark, tmp_path):
-    """Round-12 ghost-posting fix: re-ingesting a CHANGED doc whose new
-    text dropped a term soft-deletes the stale (term, doc) posting —
-    stored-index BM25 scores equal the from-corpus scores of the FINAL
-    logical corpus even for the dropped term (previously a documented
-    append-only caveat), the phrase index stops matching the dropped
-    phrase, and compaction clears the soft-delete rows physically."""
+    """Re-ingesting a CHANGED doc whose new text dropped a term deletes
+    the stale (term, doc) posting: stored-index BM25 scores equal the
+    from-corpus scores of the FINAL logical corpus even for the dropped
+    term, the phrase index stops matching the dropped phrase, and
+    compaction leaves the stale posting in no file the root pins."""
     corpus = spark.createDataFrame(
         [
             (1, "alpha beta gamma alpha"),
@@ -269,14 +266,12 @@ def test_changed_doc_drops_stale_terms(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
-    text.bm25_index_write(corpus, idx, n_buckets=4)
-    text.phrase_index_write(corpus, idx, n_buckets=4)
+    text.search_index_write(corpus, idx, n_buckets=4)
     # doc 1 changes: loses 'alpha' and the 'beta gamma' adjacency
     changed = spark.createDataFrame(
         [(1, "gamma epsilon beta")], "doc_id long, text string"
     )
-    text.bm25_index_ingest(spark, changed, idx)
-    text.phrase_index_ingest(spark, changed, idx)
+    text.search_index_ingest(spark, changed, idx)
 
     final = corpus.filter("doc_id != 1").unionByName(changed)
     q = spark.createDataFrame(
@@ -289,7 +284,7 @@ def test_changed_doc_drops_stale_terms(spark, tmp_path):
     got = as_map(text.bm25_from_index(spark, idx, q))
     want = as_map(text.bm25_scores(final, q))
     assert got == want
-    assert (0, 1) not in got  # the ghost posting the old ingest kept
+    assert (0, 1) not in got  # the stale posting is gone
 
     phr = {
         (r["doc_id"], r["n_occurrences"])
@@ -297,21 +292,22 @@ def test_changed_doc_drops_stale_terms(spark, tmp_path):
     }
     assert phr == {(3, 2)}  # doc 1's old adjacency is gone
 
-    # compaction rewrites the soft deletes away and rebuilds docterms
-    raw_before = (
-        spark.read.parquet(f"{idx}/postings").filter("tf = 0").count()
-    )
-    assert raw_before > 0
-    text.bm25_index_compact(spark, idx)
-    assert spark.read.parquet(f"{idx}/postings").filter("tf = 0").count() == 0
+    # compaction rewrites the pinned files: the stale posting is in
+    # none of them, scores are unchanged, docterms carries the new text
+    text.search_index_compact(spark, idx)
+    raw = spark.read.parquet(*_pinned_files(spark, idx, "postings"))
+    assert raw.filter("term = 'alpha' AND doc_id = 1").count() == 0
     assert as_map(text.bm25_from_index(spark, idx, q)) == want
+    root = layout.index_root_resolve(spark, idx)
     dt = {
         r["doc_id"]: list(r["terms"])
-        for r in spark.read.parquet(f"{idx}/docterms").collect()
+        for r in layout.snapshot_read(
+            spark, f"{idx}/docterms", version=root["tables"]["docterms"]
+        ).collect()
     }
     assert "alpha" not in dt[1] and "epsilon" in dt[1]
     # a second changed-doc ingest AFTER compaction still drops cleanly
-    text.bm25_index_ingest(
+    text.search_index_ingest(
         spark,
         spark.createDataFrame([(2, "delta only")], "doc_id long, text string"),
         idx,

@@ -46,21 +46,29 @@ def _phrase_set(spark, path, phrase=("hash", "join")):
     }
 
 
-def test_versioned_index_equals_plain(spark, tmp_path):
-    """Served BM25 scores and phrase counts off a versioned index are
-    row-identical to the plain-directory index over the same corpus —
-    the root changes the commit protocol, never the math."""
-    plain, versioned = str(tmp_path / "plain"), str(tmp_path / "versioned")
+def test_versioned_index_equals_from_corpus(spark, tmp_path):
+    """Served BM25 scores and phrase counts off the index are
+    row-identical to the from-corpus scorer and the row-local phrase
+    counter over the same corpus — the root changes the commit
+    protocol, never the math."""
+    from tests.test_retrieval_round12 import _rowlocal_counts
+
+    idx = str(tmp_path / "idx")
     docs = _docs(spark)
-    text.bm25_index_write(docs, plain, n_buckets=4)
-    text.phrase_index_write(docs, plain, n_buckets=4)
-    text.search_index_write(docs, versioned, n_buckets=4)
-    assert layout.index_root_latest(spark, versioned) == 1
-    assert _bm25_set(spark, versioned) == _bm25_set(spark, plain)
-    assert _phrase_set(spark, versioned) == _phrase_set(spark, plain)
+    text.search_index_write(docs, idx, n_buckets=4)
+    assert layout.index_root_latest(spark, idx) == 1
+    assert _bm25_set(spark, idx) == {
+        (r["query_id"], r["doc_id"], r["score_q12"])
+        for r in text.bm25_scores(docs, _qterms(spark)).collect()
+    }
+    want = {tuple(r) for r in _rowlocal_counts(docs, ["hash", "join"]).collect()}
+    assert _phrase_set(spark, idx) == want and want
     # query model (streaming serving artifact) rides the same tables
-    m = text.bm25_query_model(spark, versioned, _qterms(spark))
+    m = text.bm25_query_model(spark, idx, _qterms(spark))
     assert m["n_docs"] == 5 and dict(m["terms"])["hash"] == 3
+    # a directory with no index root is refused, not read as empty
+    with pytest.raises(ValueError, match="no search index root"):
+        text.bm25_from_index(spark, str(tmp_path), _qterms(spark))
 
 
 def test_versioned_ingest_delete_equal_scratch_rebuild(spark, tmp_path):

@@ -95,8 +95,16 @@ def test_spool_stream_matches_batch(spark, tmp_path):
 
 def test_orion_http_source_end_to_end(spark, tmp_path):
     """Full O1 path: HTTP POST → receiver spool → custom Python
-    DataSource → windowed min → memory sink."""
+    DataSource → windowed min → memory sink.  A body that is not a
+    notification is answered 400, one declaring more than
+    MAX_BODY_BYTES 413, and neither reaches the spool."""
+    import http.client
+    import urllib.error
     import urllib.request
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
+        MAX_BODY_BYTES,
+    )
 
     spool = str(tmp_path / "http_spool")
     receiver = NgsiHttpReceiver(spool, port=0).start()
@@ -112,6 +120,27 @@ def test_orion_http_source_end_to_end(spark, tmp_path):
                 },
             )
             urllib.request.urlopen(req, timeout=5)
+        malformed = urllib.request.Request(
+            f"http://127.0.0.1:{receiver.port}/notify",
+            data=b'{"subscriptionId": "x"}',
+            headers={"Content-Type": "application/json"},
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(malformed, timeout=5)
+        assert err.value.code == 400
+        # the oversized POST only declares its length: the receiver
+        # must answer from the header alone, without reading a body
+        conn = http.client.HTTPConnection("127.0.0.1", receiver.port, timeout=5)
+        conn.putrequest("POST", "/notify")
+        conn.putheader("Content-Length", str(MAX_BODY_BYTES + 1))
+        conn.endheaders()
+        assert conn.getresponse().status == 413
+        conn.close()
+        spooled = []
+        for f in sorted(os.listdir(spool)):
+            with open(os.path.join(spool, f)) as fh:
+                spooled += fh.read().splitlines()
+        assert len(spooled) == 10
         deadline = time.time() + 10
         while time.time() < deadline:
             if os.path.isdir(spool) and any(f.endswith(".jsonl") for f in os.listdir(spool)):
