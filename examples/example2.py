@@ -5,13 +5,9 @@ print of the posted content (the multi-consumer DAG)."""
 import tempfile
 
 from _runner import base_args, run_until_interrupt, start
-from pyspark.sql import functions as F
 
-from fiware_cosmos_orion_flink_connector_examples_spark.operators.ngsi import (
-    entity_update_url,
-    to_ngsi_update_json,
-)
 from fiware_cosmos_orion_flink_connector_examples_spark.streaming.jobs import (
+    sink_envelopes,
     streaming_window_min,
 )
 from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
@@ -23,12 +19,6 @@ if __name__ == "__main__":
     p.add_argument("--broker", default="http://localhost:1026", help="Context Broker base URL")
     args = p.parse_args()
     spark, stream, receiver = start(args)
-    mins = streaming_window_min(stream)
-    envelopes = mins.select(
-        to_ngsi_update_json(F.col("temperature_min"), "temperature_min").alias("content"),
-        entity_update_url(f"{args.broker}/v2/entities/", F.col("id")).alias("url"),
-        F.lit("application/json").alias("content_type"),
-        F.lit("POST").alias("method"),
-    )
+    envelopes = sink_envelopes(streaming_window_min(stream), f"{args.broker}/v2/entities/")
     q = write_http_and_console(envelopes, tempfile.mkdtemp(prefix="ckpt_ex2_"))
     run_until_interrupt(q, receiver)

@@ -3,12 +3,9 @@ navigate information.value, explode the buses list, Bus(name, price),
 keyed sliding-window min price → console."""
 
 from _runner import base_args, run_until_interrupt, start
-from pyspark.sql import functions as F
 
-from fiware_cosmos_orion_flink_connector_examples_spark.operators.ngsi import (
-    explode_buses,
-    flatten_entities,
-    parse_notifications,
+from fiware_cosmos_orion_flink_connector_examples_spark.streaming.jobs import (
+    streaming_window_bus_min,
 )
 from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
     write_console,
@@ -17,11 +14,4 @@ from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
 if __name__ == "__main__":
     args = base_args(__doc__).parse_args()
     spark, stream, receiver = start(args)
-    buses = explode_buses(flatten_entities(parse_notifications(stream)))
-    mins = (
-        buses.withWatermark("ts", "10 seconds")
-        .groupBy(F.window("ts", "5 seconds", "2 seconds").alias("w"), "name")
-        .agg(F.min("price").alias("price_min"))
-        .select(F.col("w.start").alias("window_start"), "name", "price_min")
-    )
-    run_until_interrupt(write_console(mins), receiver)
+    run_until_interrupt(write_console(streaming_window_bus_min(stream)), receiver)

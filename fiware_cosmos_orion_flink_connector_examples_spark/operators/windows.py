@@ -30,18 +30,16 @@ def sliding_window_agg(
     aggs: Sequence[Column],
     size: str = "5 seconds",
     slide: str = "2 seconds",
-    start_as_epoch: bool = True,
 ) -> DataFrame:
     """Keyed sliding-window aggregation (O4+O5+O6/O7).
 
     ``aggs`` are aliased aggregate Columns, e.g. ``F.min("value").alias("min_value")``.
-    Returns window_start (epoch seconds BIGINT by default, for stable
+    Returns window_start (epoch seconds BIGINT, for stable
     cross-engine comparison) + keys + aggregates.
     """
     w = F.window(ts_col, size, slide).alias("w")
     out = df.groupBy(w, *key_cols).agg(*aggs)
-    start = F.col("w.start").cast("long") if start_as_epoch else F.col("w.start")
-    return out.select(start.alias("window_start"), *key_cols, *[c for c in out.columns if c not in {"w", *key_cols}])
+    return out.select(F.col("w.start").cast("long").alias("window_start"), *key_cols, *[c for c in out.columns if c not in {"w", *key_cols}])
 
 
 def tumbling_window_agg(

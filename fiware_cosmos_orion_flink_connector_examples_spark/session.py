@@ -18,18 +18,18 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "fiware-cosmos-orion-flink-connector-examples-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    cpus defaults to $SPARK_GRAFT_CPUS (driver contract) else all cores.
+    A launcher's master and ``spark.sql.shuffle.partitions`` win: under
+    ``spark-submit`` (which hands the driver its JVM through
+    ``PYSPARK_GATEWAY_PORT``) the session keeps the submitted master.
+    Otherwise it runs local[cpus], cpus defaulting to $SPARK_GRAFT_CPUS
+    (driver contract) else all cores.  Shuffle partitions default to
+    the session's core count.
     """
-    cpus_s = str(cpus) if cpus else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus_s}]")
-        .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -41,7 +41,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus_s = str(cpus) if cpus else os.environ.get("SPARK_GRAFT_CPUS", "*")
+        builder = builder.master(f"local[{cpus_s}]")
+    spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    if not sc.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    return spark
 
 
 def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:

@@ -26,20 +26,19 @@ filter/projection.
 At cluster scale the receiver would sit behind a load balancer writing
 to shared storage (or Kafka) — the reader side is unchanged; local
 mode runs receiver and reader in one process.
-
-Dev fallback (no custom source needed): ``spool_stream_df`` reads the
-same spool with the built-in json file source.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import (
     StringType,
@@ -62,6 +61,9 @@ NOTIFICATION_ROW_SCHEMA = StructType(
 # longer body is answered 413 before any of it is read.
 MAX_BODY_BYTES = 1 << 20
 
+# Spool file rotation interval: one file per second of arrivals.
+ROTATE_SECS = 1.0
+
 
 def _is_notification(body: bytes) -> bool:
     """True iff ``body`` is an NGSI-v2 notification: a JSON object
@@ -79,13 +81,11 @@ class NgsiHttpReceiver:
     ts}).  A body over ``MAX_BODY_BYTES`` is answered 413 and one that
     is not a notification 400; neither is spooled."""
 
-    def __init__(self, spool_dir: str, port: int = 9001, rotate_secs: float = 1.0):
+    def __init__(self, spool_dir: str, port: int = 9001):
         self.spool_dir = spool_dir
         self.port = port
-        self.rotate_secs = rotate_secs
         os.makedirs(spool_dir, exist_ok=True)
         self._lock = threading.Lock()
-        self._seq = 0
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -94,13 +94,12 @@ class NgsiHttpReceiver:
         # name is monotonically ordered so the reader can tail in order
         with self._lock:
             fname = os.path.join(
-                self.spool_dir, f"{int(time.time() / self.rotate_secs)}-{os.getpid()}.jsonl"
+                self.spool_dir, f"{int(time.time() / ROTATE_SECS)}-{os.getpid()}.jsonl"
             )
             with open(fname, "a", encoding="utf-8") as f:
                 f.write(json.dumps(record) + "\n")
                 f.flush()
                 os.fsync(f.fileno())
-            self._seq += 1
 
     def start(self) -> "NgsiHttpReceiver":
         receiver = self
@@ -323,18 +322,9 @@ class OrionHttpDataSource(DataSource):
 
 
 def register_orion_source(spark) -> None:
+    """Register ``orion_http`` with the session.  The source's classes
+    are pickled by value, so the Python workers that plan and read the
+    stream need not import this package: a driver launched outside the
+    repo root with no ``PYTHONPATH`` still reads the spool."""
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(OrionHttpDataSource)
-
-
-def spool_stream_df(spark, spool_dir: str):
-    """Built-in-source fallback: the same spool read via the json file
-    source (no custom DataSource in the loop)."""
-    return (
-        spark.readStream.schema(
-            "payload string, service string, servicePath string, ts double"
-        )
-        .json(spool_dir)
-        .selectExpr(
-            "payload", "service", "servicePath", "timestamp_seconds(ts) AS ts"
-        )
-    )

@@ -1,65 +1,108 @@
-"""Streaming lifts of the reference pipelines + streaming-only
-operators (watermarks, dedup-in-time, custom stateful sessionization).
+"""The reference jobs, defined once for stream and batch, plus the
+streaming-only operators (watermarks, dedup-in-time, custom stateful
+sessionization).
+
+Each reference job maps a DataFrame of notification rows (payload
+STRING, service, servicePath, ts TIMESTAMP) to its result.  The same
+function runs on the ``orion_http`` stream and on a batch DataFrame,
+where ``withWatermark`` is a no-op — the Structured Streaming
+unification (SIGMOD'18).
+
+Job shapes (reference) and the functions that define them here:
+  Example1 (Example1.scala:14-33): source -> flatMap entities -> map
+    Temp_Node(id, temperature) -> keyBy(id) -> timeWindow(5,2) ->
+    min(temperature) -> print                      ``streaming_window_min``
+  Example2/3 (Example2.scala:17-47): same through min, then
+    OrionSinkObject(json, URL_CB + id + "/attrs", JSON, POST) ->
+    OrionSink + print(content)                     ``sink_envelopes``
+  Example4 (Example4.scala:17-35): custom AverageAggregate (sum,count)
+    -> windowed avg                                ``streaming_window_avg``
+  Example5 (Example5.scala:14-37): nested information.value ->
+    explode buses -> Bus(name, price) -> keyBy(name) ->
+    timeWindow(5,2) -> min(price)                  ``streaming_window_bus_min``
 
 Semantics mapping (SURVEY.md §7 'hard parts' #1): Flink 1.9
 processing-time sliding windows emit every pane close; Structured
 Streaming's closest analog is ingest-timestamp event time + ``update``
 output mode, which re-emits a (window, key) row whenever a micro-batch
-changes it.  ``append`` mode + watermark emits once per closed window
-— both are exposed; update is the default to mirror the reference.
+changes it.  ``append`` mode + watermark emits once per closed window.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fiware_cosmos_orion_flink_connector_examples_spark.operators.ngsi import (
+    entity_update_url,
+    explode_buses,
     flatten_entities,
     parse_notifications,
     project_temp_nodes,
+    to_ngsi_update_json,
 )
 
+# The reference's window: timeWindow(Time.seconds(5), Time.seconds(2)).
+WINDOW_SIZE = "5 seconds"
+WINDOW_SLIDE = "2 seconds"
 
-def streaming_window_min(
-    notifications: DataFrame,
-    size: str = "5 seconds",
-    slide: str = "2 seconds",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Example1 as a stream: watermarked keyed sliding-window min.
-    State: one row per (id, window) in the state store, dropped once
-    the watermark passes window end — bounded by key-cardinality ×
-    (size/slide) live windows regardless of input rate."""
-    nodes = project_temp_nodes(flatten_entities(parse_notifications(notifications)))
+
+def _window_agg(rows: DataFrame, key: str, agg: Column, watermark: str) -> DataFrame:
+    """Watermarked keyed sliding-window aggregate ->
+    (window_start, window_end, key, aggregate).  State: one row per
+    (key, window) in the state store, dropped once the watermark passes
+    window end — bounded by key-cardinality × (size/slide) live windows
+    regardless of input rate."""
     return (
-        nodes.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"), "id")
-        .agg(F.min("temperature").alias("temperature_min"))
+        rows.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", WINDOW_SIZE, WINDOW_SLIDE).alias("w"), key)
+        .agg(agg)
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            "id",
-            "temperature_min",
+            "*",
         )
+        .drop("w")
     )
 
 
-def streaming_window_avg(
-    notifications: DataFrame,
-    size: str = "5 seconds",
-    slide: str = "2 seconds",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Example4 as a stream (incremental avg: the state store keeps the
-    (sum, count) accumulator exactly like AverageAggregate,
-    Example4.scala:39-49)."""
-    nodes = project_temp_nodes(flatten_entities(parse_notifications(notifications)))
-    return (
-        nodes.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"), "id")
-        .agg(F.avg("temperature").alias("temperature_avg"))
-        .select(F.col("w.start").alias("window_start"), "id", "temperature_avg")
+def _temp_nodes(notifications: DataFrame) -> DataFrame:
+    return project_temp_nodes(flatten_entities(parse_notifications(notifications)))
+
+
+def streaming_window_min(notifications: DataFrame, watermark: str = "10 seconds") -> DataFrame:
+    """Example1: windowed min temperature per entity id."""
+    return _window_agg(
+        _temp_nodes(notifications), "id", F.min("temperature").alias("temperature_min"), watermark
+    )
+
+
+def streaming_window_avg(notifications: DataFrame, watermark: str = "10 seconds") -> DataFrame:
+    """Example4: windowed average temperature per entity id (the state
+    store keeps the (sum, count) accumulator exactly like
+    AverageAggregate, Example4.scala:39-49)."""
+    return _window_agg(
+        _temp_nodes(notifications), "id", F.avg("temperature").alias("temperature_avg"), watermark
+    )
+
+
+def streaming_window_bus_min(notifications: DataFrame, watermark: str = "10 seconds") -> DataFrame:
+    """Example5: windowed min price per bus company over the nested
+    information.value buses (Example5.scala:20-30)."""
+    buses = explode_buses(flatten_entities(parse_notifications(notifications)))
+    return _window_agg(buses, "name", F.min("price").alias("price_min"), watermark)
+
+
+def sink_envelopes(mins: DataFrame, url_cb: str) -> DataFrame:
+    """Example2/3: each windowed min becomes the HTTP sink's
+    (content, url, content_type, method) record (OrionSinkObject,
+    Example2.scala:35-38).  Example3 differs from Example2 only in
+    ``url_cb``, the broker address (Example3.scala:13)."""
+    return mins.select(
+        to_ngsi_update_json(F.col("temperature_min"), "temperature_min").alias("content"),
+        entity_update_url(url_cb, F.col("id")).alias("url"),
+        F.lit("application/json").alias("content_type"),
+        F.lit("POST").alias("method"),
     )
 
 

@@ -22,7 +22,12 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 
 
-def post_partition(rows: Iterator, timeout: float = 5.0, max_retries: int = 2) -> None:
+# Per-request timeout (s) and retries after the first attempt.
+POST_TIMEOUT_S = 5.0
+POST_RETRIES = 2
+
+
+def post_partition(rows: Iterator) -> None:
     """Executor-side worker: POST each row's content to its url.
     Row contract: content, url, content_type, method columns.  Only a
     5xx, connection or timeout error is retried."""
@@ -34,12 +39,12 @@ def post_partition(rows: Iterator, timeout: float = 5.0, max_retries: int = 2) -
             method=row["method"],
             headers={"Content-Type": row["content_type"]},
         )
-        for attempt in range(max_retries + 1):
+        for attempt in range(POST_RETRIES + 1):
             try:
-                with urllib.request.urlopen(req, timeout=timeout):
+                with urllib.request.urlopen(req, timeout=POST_TIMEOUT_S):
                     break
             except (urllib.error.URLError, ConnectionError, TimeoutError) as exc:
-                if attempt == max_retries or getattr(exc, "code", 500) < 500:
+                if attempt == POST_RETRIES or getattr(exc, "code", 500) < 500:
                     raise
 
 
@@ -48,24 +53,19 @@ def http_sink_batch(batch_df: DataFrame, batch_id: int) -> None:
     batch_df.foreachPartition(post_partition)
 
 
-def write_http(
-    df: DataFrame,
-    checkpoint_dir: str,
-    trigger_secs: float | None = None,
-    output_mode: str = "update",
-):
+def write_http(df: DataFrame, checkpoint_dir: str, trigger_secs: float | None = None):
     """Attach the HTTP sink to a streaming DataFrame of sink envelopes.
     ``trigger_secs`` is the P2 throttling analog (Orion subscription
     ``throttling: 5`` ≙ ProcessingTime trigger).
 
-    ``update`` output mode is the default on purpose: it re-POSTs a
+    Every sink here runs in ``update`` output mode: it re-POSTs a
     (key, window) row whenever a micro-batch changes it — the closest
     match to Flink's per-pane emission (Example1.scala:27-28); with
-    ``append`` a windowed agg only reaches the broker after the
+    ``append`` a windowed agg would only reach the broker after the
     watermark closes the window."""
     w = (
         df.writeStream.foreachBatch(http_sink_batch)
-        .outputMode(output_mode)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_secs:
@@ -73,9 +73,7 @@ def write_http(
     return w.start()
 
 
-def write_http_and_console(
-    df: DataFrame, checkpoint_dir: str, output_mode: str = "update"
-):
+def write_http_and_console(df: DataFrame, checkpoint_dir: str):
     """Example2's multi-consumer DAG (the same stream feeds OrionSink
     AND print, Example2.scala:42,45): one foreachBatch persists the
     micro-batch, then both consumers read the cached result — one
@@ -91,15 +89,13 @@ def write_http_and_console(
 
     return (
         df.writeStream.foreachBatch(both)
-        .outputMode(output_mode)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
 
 
-def write_console(df: DataFrame, output_mode: str = "update", serialize: bool = True):
-    """O11: console sink.  ``serialize=True`` ≙ the reference's
-    ``.print().setParallelism(1)`` — coalesce to one writer so output
-    interleaves deterministically."""
-    out = df.coalesce(1) if serialize else df
-    return out.writeStream.outputMode(output_mode).format("console").start()
+def write_console(df: DataFrame):
+    """O11: console sink, coalesced to one writer so output interleaves
+    deterministically (the reference's ``.print().setParallelism(1)``)."""
+    return df.coalesce(1).writeStream.outputMode("update").format("console").start()

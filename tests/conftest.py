@@ -40,7 +40,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="engine-tests", cpus=8)
     yield s
     s.stop()
 

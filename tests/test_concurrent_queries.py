@@ -13,7 +13,7 @@ import json
 from pyspark.sql import functions as F
 
 from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
-    spool_stream_df,
+    register_orion_source,
 )
 from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
 from fiware_cosmos_orion_flink_connector_examples_spark.operators.ngsi import (
@@ -60,7 +60,8 @@ def test_five_concurrent_queries_progress_and_isolate(spark, tmp_path):
     spool = tmp_path / "spool"
     rows = flat_sequence(18)  # one time-ordered sequence, fed in two parts
     _spool_write(spool, rows[:12], "000.jsonl")
-    stream = spool_stream_df(spark, str(spool))
+    register_orion_source(spark)
+    stream = spark.readStream.format("orion_http").option("spool_dir", str(spool)).load()
 
     nodes = project_temp_nodes(flatten_entities(parse_notifications(stream)))
     q_min = _start(jobs.streaming_window_min(stream), "cc_min", tmp_path)

@@ -114,3 +114,39 @@ def test_example3_smoke_against_mock_broker(tmp_path):
             proc.kill()
             proc.wait(10)
         broker.shutdown()
+
+
+_SUBMIT_PROBE = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from fiware_cosmos_orion_flink_connector_examples_spark.session import get_spark
+spark = get_spark(app_name="submit-probe", cpus=8)
+print("PROBE " + json.dumps({{
+    "master": spark.sparkContext.master,
+    "partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+}}))
+spark.stop()
+"""
+
+
+def test_spark_submit_master_and_partitions_survive(spark, tmp_path):
+    """DEPLOY.md §4: a submitted master and partition count reach the
+    session; ``get_spark`` picks local[cpus] and one shuffle partition
+    per core only when no launcher set them (the 8-core test session)."""
+    import pyspark
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.sparkContext.defaultParallelism == 8
+    probe = tmp_path / "probe.py"
+    probe.write_text(_SUBMIT_PROBE.format(repo=str(REPO)))
+    submit = Path(pyspark.__file__).parent / "bin" / "spark-submit"
+    proc = subprocess.run(
+        [str(submit), "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7", str(probe)],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=180,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-4000:]
+    assert json.loads(lines[-1][len("PROBE "):]) == {"master": "local[2]", "partitions": "7"}

@@ -1,6 +1,6 @@
-"""Golden tests: the five reference pipelines on deterministic NGSI
-fixtures, compared against an independent plain-Python oracle
-(FIXTURES.md 'Golden-test recipe')."""
+"""Golden tests: the reference jobs (``streaming/jobs.py``) on
+deterministic NGSI fixtures as batch DataFrames, compared against an
+independent plain-Python oracle (FIXTURES.md 'Golden-test recipe')."""
 
 from __future__ import annotations
 
@@ -10,13 +10,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from fiware_cosmos_orion_flink_connector_examples_spark.operators import ngsi
-from fiware_cosmos_orion_flink_connector_examples_spark.streaming import pipelines
+from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
 from tests.fixtures import (
     bus_sequence,
     expected_sliding_windows,
     flat_payload,
     flat_sequence,
 )
+
+
+def _by_window(df, key, value):
+    """{(window_start epoch seconds, key): value} of a windowed job."""
+    rows = df.select(F.col("window_start").cast("long").alias("ws"), key, value).collect()
+    return {(r.ws, r[key]): r[value] for r in rows}
 
 
 @pytest.fixture(scope="module")
@@ -55,14 +61,11 @@ def test_missing_attribute_policy(spark):
     assert vals[0].v is None
     # one record lands in 2 or 3 overlapping 5s/2s windows depending on
     # where its timestamp falls within the slide (t mod 2 < 1 → 3 else 2)
-    assert pipelines.example1(df.withColumn("ts", F.current_timestamp())).count() in (2, 3)
+    assert jobs.streaming_window_min(df.withColumn("ts", F.current_timestamp())).count() in (2, 3)
 
 
 def test_example1_golden(spark, flat_df):
-    got = {
-        (r.window_start, r.id): r.temperature_min
-        for r in pipelines.example1(flat_df).collect()
-    }
+    got = _by_window(jobs.streaming_window_min(flat_df), "id", "temperature_min")
     exp = {
         k: min(vs)
         for k, vs in expected_sliding_windows(
@@ -73,10 +76,7 @@ def test_example1_golden(spark, flat_df):
 
 
 def test_example4_golden(spark, flat_df):
-    got = {
-        (r.window_start, r.id): r.temperature_avg
-        for r in pipelines.example4(flat_df).collect()
-    }
+    got = _by_window(jobs.streaming_window_avg(flat_df), "id", "temperature_avg")
     exp = {
         k: sum(vs) / len(vs)
         for k, vs in expected_sliding_windows(
@@ -88,10 +88,7 @@ def test_example4_golden(spark, flat_df):
 
 
 def test_example5_golden(spark, bus_df):
-    got = {
-        (r.window_start, r.name): r.price_min
-        for r in pipelines.example5(bus_df).collect()
-    }
+    got = _by_window(jobs.streaming_window_bus_min(bus_df), "name", "price_min")
     rows = []
     for ts, _, p1, p2 in bus_sequence():
         rows.append((ts, "BusCompany1", p1))
@@ -101,7 +98,8 @@ def test_example5_golden(spark, bus_df):
 
 
 def test_example2_sink_envelope(spark, flat_df):
-    out = pipelines.example2(flat_df).collect()
+    mins = jobs.streaming_window_min(flat_df)
+    out = jobs.sink_envelopes(mins, "http://localhost:1026/v2/entities/").collect()
     assert all(r.url.startswith("http://localhost:1026/v2/entities/R1/attrs") for r in out)
     assert all(r.method == "POST" and r.content_type == "application/json" for r in out)
     # content byte-compatible with Example2.scala:50's hand-built string

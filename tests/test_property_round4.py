@@ -159,4 +159,4 @@ def test_bloom_probe_no_false_negatives(grams, bits):
 def _bloom_spark():
     from fiware_cosmos_orion_flink_connector_examples_spark.session import get_spark
 
-    return get_spark(app_name="engine-tests", cpus=8, shuffle_partitions=8)
+    return get_spark(app_name="engine-tests", cpus=8)

@@ -1,6 +1,6 @@
-"""Streaming tests: spool source → watermarked window aggs →
-memory/HTTP sinks, the custom orion_http DataSource end-to-end, and
-the stateful sessionizer vs its batch twin.
+"""Streaming tests: the orion_http spool source → watermarked window
+aggs → memory/HTTP sinks, the receiver end-to-end, and the stateful
+sessionizer vs its batch twin.
 
 Processing-time nondeterminism is removed by fixture timestamps
 (SURVEY.md §5) and availableNow/processAllAvailable triggers.
@@ -20,9 +20,8 @@ from pyspark.sql import functions as F
 from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
     NgsiHttpReceiver,
     register_orion_source,
-    spool_stream_df,
 )
-from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs, pipelines
+from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
 from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
     http_sink_batch,
 )
@@ -48,22 +47,38 @@ def _write_spool(tmp_path, rows):
     return str(spool)
 
 
+def _orion_stream(spark, spool):
+    """The notification stream the examples and the benchmark read."""
+    register_orion_source(spark)
+    return spark.readStream.format("orion_http").option("spool_dir", str(spool)).load()
+
+
+def _run_to_end(writer):
+    """Run a query until the spool is drained, including the no-data
+    batch that emits the windows its watermark closed, then stop it.
+    (``orion_http`` has no AvailableNow support, so an ``availableNow``
+    trigger runs one batch and never that no-data batch.)"""
+    q = writer.trigger(processingTime="100 milliseconds").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
 def test_spool_stream_matches_batch(spark, tmp_path):
     """The SAME pipeline function runs on the stream and on a batch DF;
     results must agree (Structured Streaming unification)."""
     rows = flat_sequence(20)
     spool = _write_spool(tmp_path, rows)
-    stream = spool_stream_df(spark, spool)
+    stream = _orion_stream(spark, spool)
     out = jobs.streaming_window_min(stream)
-    q = (
+    _run_to_end(
         out.writeStream.format("memory")
         .queryName("t_spool_min")
         .outputMode("append")
-        .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
     )
-    q.awaitTermination(60)
     got = {
         (r.window_start, r.id): r.temperature_min
         for r in spark.sql("select * from t_spool_min").collect()
@@ -73,9 +88,7 @@ def test_spool_stream_matches_batch(spark, tmp_path):
     )
     exp = {
         (r.window_start, r.id): r.temperature_min
-        for r in pipelines.example1(batch_df)
-        .withColumn("window_start", F.timestamp_seconds("window_start"))
-        .collect()
+        for r in jobs.streaming_window_min(batch_df).collect()
     }
     # append mode emits exactly the windows the final watermark closed:
     # window_end (= start + 5s) ≤ max_event_ts - 10s watermark delay
@@ -169,6 +182,53 @@ def test_orion_http_source_end_to_end(spark, tmp_path):
         receiver.stop()
 
 
+_OUTSIDE_PROBE = """
+import sys
+sys.path.insert(0, {repo!r})
+from fiware_cosmos_orion_flink_connector_examples_spark.session import get_spark
+from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
+    register_orion_source,
+)
+spark = get_spark(app_name="outside-probe", cpus=1)
+register_orion_source(spark)
+stream = spark.readStream.format("orion_http").option("spool_dir", {spool!r}).load()
+q = (
+    stream.writeStream.format("memory").queryName("probe")
+    .trigger(availableNow=True).option("checkpointLocation", {ckpt!r}).start()
+)
+q.awaitTermination(120)
+print("PROBE_ROWS", spark.sql("select count(*) n from probe").first().n)
+spark.stop()
+"""
+
+
+def test_orion_source_runs_outside_repo_root(tmp_path):
+    """A driver started outside the repo root with no PYTHONPATH reads
+    the spool: the Python workers that plan and read ``orion_http``
+    must not need to import this package."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    spool = _write_spool(tmp_path, flat_sequence(5))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        _OUTSIDE_PROBE.format(repo=str(repo), spool=spool, ckpt=str(tmp_path / "ckpt"))
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(probe)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=180,
+    )
+    assert "PROBE_ROWS 5" in proc.stdout, proc.stderr[-4000:]
+
+
 def test_orion_source_subscription_pushdown(spark, tmp_path):
     """P1: attrs projection + condition filter applied in the reader."""
     rows = flat_sequence(6)
@@ -227,7 +287,9 @@ def test_http_sink_round_trip(spark, tmp_path):
         batch_df = spark.createDataFrame(
             [(ts, p) for ts, p, _ in rows], "ts timestamp, payload string"
         )
-        env = pipelines.example2(batch_df, url_cb=f"http://127.0.0.1:{port}/v2/entities/")
+        env = jobs.sink_envelopes(
+            jobs.streaming_window_min(batch_df), f"http://127.0.0.1:{port}/v2/entities/"
+        )
         http_sink_batch(env, 0)
         assert _CapturingHandler.captured
         path, body = _CapturingHandler.captured[0]
@@ -309,7 +371,7 @@ def test_streaming_dedup(spark, tmp_path):
     # duplicate every payload
     dup = rows + rows
     spool = _write_spool(tmp_path, dup)
-    stream = spool_stream_df(spark, spool)
+    stream = _orion_stream(spark, spool)
     out = jobs.streaming_dedup(stream, ["payload"])
     q = (
         out.writeStream.format("memory")
@@ -398,9 +460,10 @@ def test_dual_sink_multi_consumer(spark, tmp_path, capfd):
     try:
         rows = flat_sequence(6)
         spool = _write_spool(tmp_path, rows)
-        stream = spool_stream_df(spark, spool)
-        env = pipelines.example2(
-            stream, url_cb=f"http://127.0.0.1:{server.server_port}/v2/entities/"
+        stream = _orion_stream(spark, spool)
+        env = jobs.sink_envelopes(
+            jobs.streaming_window_min(stream),
+            f"http://127.0.0.1:{server.server_port}/v2/entities/",
         )
         q = write_http_and_console(env, str(tmp_path / "ckpt_dual"))
         deadline = time.time() + 30
@@ -424,7 +487,7 @@ def test_stream_stream_join(spark, tmp_path):
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import ngsi
 
     def side(attr):
-        s = spool_stream_df(spark, spool)
+        s = _orion_stream(spark, spool)
         ents = ngsi.flatten_entities(ngsi.parse_notifications(s))
         return ents.select(
             ngsi.entity_id("entity").alias(f"id_{attr}"),
@@ -549,33 +612,6 @@ def test_sessionizer_on_rocksdb_state_store(spark, tmp_path):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         else:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_notification_stream_factory(spark, tmp_path):
-    """One pipeline, three transports: the factory yields the same
-    schema for orion_http and spool; unknown transports error clearly."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.factory import (
-        notification_stream,
-    )
-
-    rows = flat_sequence(3)
-    spool = _write_spool(tmp_path, rows)
-    a = notification_stream(spark, "orion_http", spool_dir=spool)
-    b = notification_stream(spark, "spool", spool_dir=spool)
-    assert a.schema == b.schema
-    out = jobs.streaming_window_min(b, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_factory")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_fac"))
-        .start()
-    )
-    q.awaitTermination(60)
-    assert spark.sql("select count(*) n from t_factory").first().n > 0
-    with pytest.raises(ValueError, match="unknown transport"):
-        notification_stream(spark, "pigeon")
 
 
 def test_orion_source_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -705,17 +741,14 @@ def test_watermark_drops_late_data(spark, tmp_path):
     out_dir = str(tmp_path / "late_out")
 
     def run_once():
-        stream = spool_stream_df(spark, str(spool))
+        stream = _orion_stream(spark, spool)
         res = jobs.streaming_window_min(stream, watermark="5 seconds")
-        q = (
+        _run_to_end(
             res.writeStream.format("parquet")
             .outputMode("append")
-            .trigger(availableNow=True)
             .option("path", out_dir)
             .option("checkpointLocation", str(tmp_path / "late_ckpt"))
-            .start()
         )
-        q.awaitTermination(60)
 
     # batch 1: events at t+0..t+2 (min 20) then t+30 pushes the
     # watermark to t+25, closing and emitting the early windows
@@ -765,26 +798,32 @@ def test_windowed_state_recovers_across_restart(spark, tmp_path):
     out_dir = str(tmp_path / "state_out")
 
     def run_once():
-        stream = spool_stream_df(spark, str(spool))
+        stream = _orion_stream(spark, spool)
         res = jobs.streaming_window_min(stream, watermark="5 seconds")
-        q = (
+        return _run_to_end(
             res.writeStream.format("parquet")
             .outputMode("append")
-            .trigger(availableNow=True)
             .option("path", out_dir)
             .option("checkpointLocation", str(tmp_path / "state_ckpt"))
-            .start()
         )
-        q.awaitTermination(60)
 
-    # run 1: two events in the window starting t0 (temps 30, 25); the
-    # watermark stays below the window end, so nothing emits yet
+    # run 1, at 32 shuffle partitions: two events in the window starting
+    # t0 (temps 30, 25); the watermark stays below the window end, so
+    # nothing emits yet
     write("000.jsonl", [(0, 30.0), (1, 25.0)])
-    run_once()
-    # run 2 (fresh query, same checkpoint): a lower temp in the SAME
-    # window + a late-clock event that closes it
+    session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        run_once()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", session_partitions)
+    # run 2 (fresh query, same checkpoint, back in the session's 8
+    # partitions): a lower temp in the SAME window + a late-clock event
+    # that closes it.  The state keeps the checkpoint's 32 partitions.
     write("001.jsonl", [(2, 20.0), (30, 99.0)])
-    run_once()
+    q = run_once()
+    assert session_partitions == "8"
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 32
     rows = spark.read.parquet(out_dir).collect()
     by_window = {r.window_start: r.temperature_min for r in rows}
     target = t0.replace(tzinfo=None)  # epoch-aligned window at t0
@@ -801,7 +840,7 @@ def test_stream_static_dimension_join(spark, tmp_path):
     stream side never shuffles for the dimension join."""
     rows = flat_sequence(8)
     spool = _write_spool(tmp_path, rows)
-    stream = spool_stream_df(spark, spool)
+    stream = _orion_stream(spark, spool)
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import ngsi
 
     nodes = ngsi.project_temp_nodes(

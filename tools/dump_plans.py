@@ -161,7 +161,7 @@ def main() -> None:
     args = ap.parse_args()
     if args.queries and args.out is None:
         ap.error("named queries need --out DIR")
-    spark = get_spark(app_name="dump-plans", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="dump-plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     if args.queries:
         dump_named(spark, args.out, args.queries)
