@@ -4,8 +4,10 @@ console/HTTP sink wiring."""
 from __future__ import annotations
 
 import argparse
+import signal
 import sys
 import tempfile
+import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -39,9 +41,20 @@ def start(args):
 
 
 def run_until_interrupt(query, receiver):
+    """Serve until the query ends or Ctrl-C, then stop both.  SIGINT
+    only sets a flag that a Python sleep loop polls: raised inside a
+    blocking call into the JVM, or handled by PySpark's own handler
+    (which calls into the JVM from the interrupted thread), it would
+    surface as a ``Py4JError`` instead of stopping the query."""
+    interrupted: list[int] = []
+    previous = signal.signal(signal.SIGINT, lambda signum, _frame: interrupted.append(signum))
     try:
-        query.awaitTermination()
-    except KeyboardInterrupt:
-        query.stop()
+        while query.isActive and not interrupted:
+            time.sleep(0.5)
     finally:
+        query.stop()
         receiver.stop()
+        signal.signal(signal.SIGINT, previous)
+    failure = query.exception()
+    if failure is not None:
+        raise SystemExit(f"query failed: {failure}")

@@ -12,7 +12,43 @@ from __future__ import annotations
 import functools
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+# The engine's defaults.  Each yields to a value the launcher passed.
+_ENGINE_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # driver testdata ships nanosecond parquet timestamps (events.ts)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.ui.enabled": "false",
+}
+
+# Checkpoint manager for sessions whose checkpoints are on the local
+# FS.  Spark's default, the FileContext manager, forks ~60 shells per
+# micro-batch (readlink, chmod) on a Hadoop local FS without the native
+# library; the FileSystem manager forks ~12.  It gives up only the
+# atomic rename that a FileContext buys on a distributed store.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def _launcher_conf() -> SparkConf:
+    """The confs the driver JVM was launched with: spark-submit's
+    ``--conf`` and spark-defaults.conf, or ``PYSPARK_SUBMIT_ARGS``.
+    Launches the JVM when none runs yet, with the engine's driver heap;
+    a heap in ``PYSPARK_SUBMIT_ARGS`` comes later on the command line
+    and wins."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    SparkContext._ensure_initialized(conf=SparkConf().set("spark.driver.memory", mem))
+    return SparkConf()
 
 
 def get_spark(
@@ -21,33 +57,30 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    A launcher's master and ``spark.sql.shuffle.partitions`` win: under
-    ``spark-submit`` (which hands the driver its JVM through
-    ``PYSPARK_GATEWAY_PORT``) the session keeps the submitted master.
-    Otherwise it runs local[cpus], cpus defaulting to $SPARK_GRAFT_CPUS
-    (driver contract) else all cores.  Shuffle partitions default to
-    the session's core count.
+    Whatever the launcher set wins.  Under ``spark-submit`` (which
+    hands the driver its JVM through ``PYSPARK_GATEWAY_PORT``) the
+    session keeps the submitted master; otherwise it runs local[cpus],
+    cpus defaulting to $SPARK_GRAFT_CPUS (driver contract) else all
+    cores.  Each ``_ENGINE_CONFS`` default applies only where the
+    launcher passed no value.  Shuffle partitions default to the
+    session's core count and, on a ``local[...]`` master, the
+    checkpoint manager to ``LOCAL_CHECKPOINT_MANAGER``.
     """
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # driver testdata ships nanosecond parquet timestamps (events.ts)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
+    launched = _launcher_conf()
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in _ENGINE_CONFS.items():
+        if not launched.contains(key):
+            builder = builder.config(key, value)
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         cpus_s = str(cpus) if cpus else os.environ.get("SPARK_GRAFT_CPUS", "*")
         builder = builder.master(f"local[{cpus_s}]")
     spark = builder.getOrCreate()
     sc = spark.sparkContext
-    if not sc.getConf().contains("spark.sql.shuffle.partitions"):
+    conf = sc.getConf()
+    if not conf.contains("spark.sql.shuffle.partitions"):
         spark.conf.set("spark.sql.shuffle.partitions", str(sc.defaultParallelism))
+    if sc.master.startswith("local") and not conf.contains(CHECKPOINT_MANAGER_CONF):
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, LOCAL_CHECKPOINT_MANAGER)
     return spark
 
 

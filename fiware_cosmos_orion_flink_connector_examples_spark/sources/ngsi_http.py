@@ -14,7 +14,19 @@ Spark-first architecture, two layers:
 2. ``OrionHttpDataSource`` — a Spark 4 Python Data Source
    (``spark.dataSource.register``) whose stream reader tails the spool
    with (file, line) offsets → restart-safe, exactly-once into the
-   checkpoint.  ``spark.readStream.format("orion_http")``.
+   checkpoint.  ``spark.readStream.format("orion_http")``.  It is a
+   simple stream reader: the query's long-lived source runner on the
+   driver reads each batch's lines and hands them to the JVM with the
+   plan, so a micro-batch starts no Python worker task.  A Python
+   worker task costs ~230 ms of CPU in its start-up alone, more than
+   reading a second of notifications; the stream planned one read
+   partition per batch anyway, so no read parallelism is lost.
+
+Delivery: every accepted notification enters exactly one committed
+micro-batch, and a batch replayed after a restart reads the same lines.
+Through the HTTP sink (``streaming/sinks.py``, which POSTs from the
+driver too) the reference path is at-least-once per micro-batch, with
+one idempotent POST per (entity, window).
 
 Subscription-style pushdown (P1, curl_SubscribeToEntityNotifications.sh:11-25):
 ``option("attrs", "temperature,pressure")`` projects attributes at
@@ -30,16 +42,18 @@ mode runs receiver and reader in one process.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import sys
 import threading
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark import cloudpickle
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     StringType,
     StructField,
@@ -163,15 +177,16 @@ class _SpoolOffset:
         return _SpoolOffset(d["fname"], d["line"])
 
 
-class _SpoolPartition(InputPartition):
-    def __init__(self, files: list[tuple[str, int, int]], spool_dir: str, opts: dict):
-        self.files = files  # (fname, start_line, end_line_exclusive; -1 = EOF)
-        self.spool_dir = spool_dir
-        self.opts = opts
+class OrionHttpStreamReader(SimpleDataSourceStreamReader):
+    """Tails the spool from the long-lived Python source runner on the
+    driver: ``read`` returns the rows after an offset together with the
+    offset that ends them, and Spark ships those rows to the JVM as
+    Arrow with the batch plan.  A micro-batch therefore starts no
+    Python worker task, and one runner process serves the whole query;
+    ``readBetweenOffsets`` replays a checkpointed batch after a
+    restart."""
 
-
-class OrionHttpStreamReader(DataSourceStreamReader):
-    def __init__(self, schema: StructType, options: dict):
+    def __init__(self, options: dict):
         # Spark lower-cases DataSource option keys before delivery
         options = {k.lower(): v for k, v in options.items()}
         self.spool_dir = options.get("spool_dir") or options.get("path")
@@ -185,8 +200,18 @@ class OrionHttpStreamReader(DataSourceStreamReader):
         self.max_batch_rows = int(options.get("maxbatchrows", 0)) or None
 
     def initialOffset(self) -> dict:
-        self._last_start = _SpoolOffset("", 0)
-        return self._last_start.to_dict()
+        return _SpoolOffset("", 0).to_dict()
+
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+        rows, end = self._scan(_SpoolOffset.from_dict(start), None)
+        return iter(rows), end.to_dict()
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        rows, _ = self._scan(_SpoolOffset.from_dict(start), _SpoolOffset.from_dict(end))
+        return iter(rows)
+
+    def commit(self, end: dict) -> None:
+        pass  # spool retained; offset progress lives in the checkpoint
 
     def _spool_files(self) -> list[str]:
         try:
@@ -194,87 +219,49 @@ class OrionHttpStreamReader(DataSourceStreamReader):
         except FileNotFoundError:
             return []
 
-    def latestOffset(self) -> dict:
-        # The Python DataSource API has no latestOffset(start, limit)
-        # form, so maxBatchRows is applied by walking forward from the
-        # last planned position (updated by every partitions() call; the
-        # runner may call latestOffset before initialOffset, so None ⇒
-        # walk from zero).  On checkpoint restart the first bounded
-        # offsets can trail the committed start — Spark then plans a few
-        # empty batches until the walk passes it; no loss, no dupes.
-        files = self._spool_files()
-        if not files:
-            return _SpoolOffset("", 0).to_dict()
-        if self.max_batch_rows is not None:
-            start = self._last_start or _SpoolOffset("", 0)
-            end = self._bounded_offset(start, files)
-            self._last_start = end
-            return end.to_dict()
-        last = files[-1]
-        with open(os.path.join(self.spool_dir, last), "rb") as f:
-            n_lines = sum(1 for _ in f)
-        return _SpoolOffset(last, n_lines).to_dict()
-
-    _last_start: _SpoolOffset | None = None
-
-    def _bounded_offset(self, start: "_SpoolOffset", files: list[str]) -> "_SpoolOffset":
-        budget = self.max_batch_rows
+    def _scan(
+        self, start: _SpoolOffset, stop: _SpoolOffset | None
+    ) -> tuple[list[tuple], _SpoolOffset]:
+        """Rows of the spool lines after ``start``: up to ``stop`` when
+        given, else at most ``max_batch_rows`` lines.  Only lines ending
+        in a newline count — the receiver may be mid-write — so the
+        scan halts at a partial line and the next read resumes there.
+        Returns the rows and the offset just past the last line taken."""
+        budget = self.max_batch_rows if stop is None else None
+        rows: list[tuple] = []
         end = start
-        for fname in files:
-            if start.fname and fname < start.fname:
-                continue
-            skip = start.line if fname == start.fname else 0
-            with open(os.path.join(self.spool_dir, fname), "rb") as f:
-                n_lines = sum(1 for _ in f)
-            take = min(max(n_lines - skip, 0), budget)
-            end = _SpoolOffset(fname, skip + take)
-            budget -= take
-            if budget <= 0:
-                break
-        return end
-
-    def partitions(self, start: dict, end: dict):
-        s, e = _SpoolOffset.from_dict(start), _SpoolOffset.from_dict(end)
-        self._last_start = e  # next latestOffset() walks forward from here
-        work: list[tuple[str, int, int]] = []
         for fname in self._spool_files():
-            if fname < s.fname or fname > e.fname or (not e.fname):
+            if fname < start.fname:
                 continue
-            start_line = s.line if fname == s.fname else 0
-            end_line = e.line if fname == e.fname else -1
-            if end_line == -1 or end_line > start_line:
-                work.append((fname, start_line, end_line))
-        opts = {"attrs": self.attrs, "condition": self.condition}
-        return [_SpoolPartition(work, self.spool_dir, opts)]
-
-    def commit(self, end: dict) -> None:
-        pass  # spool retained; offset progress lives in the checkpoint
-
-    def read(self, partition: _SpoolPartition):
-        import datetime as dt
-
-        attrs = partition.opts["attrs"]
-        condition = partition.opts["condition"]
-        for fname, start_line, end_line in partition.files:
-            path = os.path.join(partition.spool_dir, fname)
-            with open(path, encoding="utf-8") as f:
+            if stop is not None and fname > stop.fname:
+                break
+            skip = start.line if fname == start.fname else 0
+            last = stop.line if stop is not None and fname == stop.fname else None
+            with open(os.path.join(self.spool_dir, fname), "rb") as f:
                 for i, line in enumerate(f):
-                    if i < start_line or (end_line != -1 and i >= end_line):
+                    if i < skip:
                         continue
-                    rec = json.loads(line)
-                    payload = rec["payload"]
-                    if attrs or condition:
-                        payload = _apply_subscription(payload, attrs, condition)
-                        if payload is None:
-                            continue
-                    yield (
-                        payload,
-                        rec.get("service", ""),
-                        rec.get("servicePath", ""),
-                        dt.datetime.fromtimestamp(rec["ts"], dt.timezone.utc).replace(
-                            tzinfo=None
-                        ),
-                    )
+                    if i == last or budget == 0 or not line.endswith(b"\n"):
+                        return rows, end
+                    end = _SpoolOffset(fname, i + 1)
+                    if budget is not None:
+                        budget -= 1
+                    row = self._row(line)
+                    if row is not None:
+                        rows.append(row)
+        return rows, end
+
+    def _row(self, line: bytes) -> tuple | None:
+        """One spool line as a (payload, service, servicePath, ts) row,
+        or None when the subscription pushdown drops it."""
+        rec = json.loads(line)
+        payload = rec["payload"]
+        if self.attrs or self.condition:
+            payload = _apply_subscription(payload, self.attrs, self.condition)
+            if payload is None:
+                return None
+        ts = dt.datetime.fromtimestamp(rec["ts"], dt.timezone.utc).replace(tzinfo=None)
+        return payload, rec.get("service", ""), rec.get("servicePath", ""), ts
 
 
 def _apply_subscription(payload: str, attrs: list[str], condition: list[str]) -> str | None:
@@ -317,8 +304,8 @@ class OrionHttpDataSource(DataSource):
     def schema(self) -> StructType:
         return NOTIFICATION_ROW_SCHEMA
 
-    def streamReader(self, schema: StructType) -> OrionHttpStreamReader:
-        return OrionHttpStreamReader(schema, dict(self.options))
+    def simpleStreamReader(self, schema: StructType) -> OrionHttpStreamReader:
+        return OrionHttpStreamReader(dict(self.options))
 
 
 def register_orion_source(spark) -> None:

@@ -96,13 +96,15 @@ def streaming_window_bus_min(notifications: DataFrame, watermark: str = "10 seco
 def sink_envelopes(mins: DataFrame, url_cb: str) -> DataFrame:
     """Example2/3: each windowed min becomes the HTTP sink's
     (content, url, content_type, method) record (OrionSinkObject,
-    Example2.scala:35-38).  Example3 differs from Example2 only in
+    Example2.scala:35-38), plus the ``window_end`` the HTTP sink sends
+    an entity's updates in.  Example3 differs from Example2 only in
     ``url_cb``, the broker address (Example3.scala:13)."""
     return mins.select(
         to_ngsi_update_json(F.col("temperature_min"), "temperature_min").alias("content"),
         entity_update_url(url_cb, F.col("id")).alias("url"),
         F.lit("application/json").alias("content_type"),
         F.lit("POST").alias("method"),
+        "window_end",
     )
 
 

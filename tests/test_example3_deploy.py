@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import http.server
 import json
+import os
 import signal
 import socket
 import subprocess
@@ -124,24 +125,44 @@ spark = get_spark(app_name="submit-probe", cpus=8)
 print("PROBE " + json.dumps({{
     "master": spark.sparkContext.master,
     "partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    "broadcast": spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
+    "checkpoint_manager": spark.conf.get("spark.sql.streaming.checkpointFileManagerClass"),
 }}))
 spark.stop()
 """
 
 
 def test_spark_submit_master_and_partitions_survive(spark, tmp_path):
-    """DEPLOY.md §4: a submitted master and partition count reach the
-    session; ``get_spark`` picks local[cpus] and one shuffle partition
-    per core only when no launcher set them (the 8-core test session)."""
+    """DEPLOY.md §4: what a launcher submits reaches the session — the
+    master, the partition count and any conf ``get_spark`` has a default
+    for; ``get_spark`` picks local[cpus], one shuffle partition per core
+    and the FileSystem checkpoint manager only when no launcher set them
+    (the 8-core test session)."""
     import pyspark
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.session import (
+        CHECKPOINT_MANAGER_CONF,
+        LOCAL_CHECKPOINT_MANAGER,
+    )
 
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.sparkContext.defaultParallelism == 8
+    assert spark.conf.get(CHECKPOINT_MANAGER_CONF) == LOCAL_CHECKPOINT_MANAGER
+    submitted_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    )
     probe = tmp_path / "probe.py"
     probe.write_text(_SUBMIT_PROBE.format(repo=str(REPO)))
     submit = Path(pyspark.__file__).parent / "bin" / "spark-submit"
     proc = subprocess.run(
-        [str(submit), "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=7", str(probe)],
+        [
+            str(submit),
+            "--master", "local[2]",
+            "--conf", "spark.sql.shuffle.partitions=7",
+            "--conf", "spark.sql.autoBroadcastJoinThreshold=1m",
+            "--conf", f"{CHECKPOINT_MANAGER_CONF}={submitted_manager}",
+            str(probe),
+        ],
         cwd=str(tmp_path),
         capture_output=True,
         text=True,
@@ -149,4 +170,50 @@ def test_spark_submit_master_and_partitions_survive(spark, tmp_path):
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE ")]
     assert proc.returncode == 0 and lines, proc.stderr[-4000:]
-    assert json.loads(lines[-1][len("PROBE "):]) == {"master": "local[2]", "partitions": "7"}
+    assert json.loads(lines[-1][len("PROBE "):]) == {
+        "master": "local[2]",
+        "partitions": "7",
+        "broadcast": "1m",
+        "checkpoint_manager": submitted_manager,
+    }
+
+
+def test_example_exits_cleanly_on_sigint(tmp_path):
+    """Ctrl-C stops a running example: the query and the receiver are
+    stopped and the script exits 0, with no Py4J traceback."""
+    proc = subprocess.Popen(
+        [sys.executable, "-u", str(REPO / "examples" / "example1.py"),
+         "--port", "0", "--spool", str(tmp_path / "spool")],
+        cwd=str(REPO),
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        stdout=subprocess.PIPE,
+        stderr=subprocess.STDOUT,
+        text=True,
+    )
+    out: list[str] = []
+    threading.Thread(target=lambda: out.extend(proc.stdout), daemon=True).start()
+    try:
+        deadline = time.time() + 150
+        port = None
+        while time.time() < deadline and not any("Batch:" in ln for ln in out):
+            assert proc.poll() is None, "".join(out)[-4000:]
+            listening = [ln for ln in out if ln.startswith("listening for NGSI notifications on :")]
+            if listening and port is None:
+                port = int(listening[0].split(":")[1].split(",")[0])
+            if port is not None:
+                req = urllib.request.Request(
+                    f"http://127.0.0.1:{port}/notify",
+                    data=flat_payload(21.0, 700.0).encode(),
+                    headers={"Content-Type": "application/json"},
+                )
+                urllib.request.urlopen(req, timeout=5)
+            time.sleep(1)
+        assert any("Batch:" in ln for ln in out), "".join(out)[-4000:]
+        proc.send_signal(signal.SIGINT)
+        assert proc.wait(60) == 0, "".join(out)[-4000:]
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait(10)
+    text = "".join(out)
+    assert "Traceback" not in text and "Py4JError" not in text, text[-4000:]

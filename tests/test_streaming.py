@@ -300,6 +300,55 @@ def test_http_sink_round_trip(spark, tmp_path):
         server.shutdown()
 
 
+def test_http_sink_sends_newest_window_last(spark, tmp_path):
+    """Per entity, the sink sends its envelopes in window order and
+    skips one equal to the previous send: the broker ends on the newest
+    window's min, with non-monotone temperatures too, and no two
+    consecutive POSTs to one URL carry the same content."""
+    import datetime as dt
+    import random
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import write_http
+    from tests.fixtures import T0, expected_sliding_windows
+
+    rng = random.Random(7)
+    rows, events = [], []
+    for i in range(20):
+        ts = T0 + dt.timedelta(seconds=i)
+        for eid in ("R1", "R2", "R3"):
+            temp = float(rng.randint(18, 53))
+            rows.append((ts, flat_payload(temp, 1.0, eid)))
+            events.append((ts, eid, temp))
+    spool = _write_spool(tmp_path, rows)
+    newest: dict[str, tuple] = {}
+    for (start, eid), temps in expected_sliding_windows(events).items():
+        newest[eid] = max(newest.get(eid, (start, min(temps))), (start, min(temps)))
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _CapturingHandler)
+    _CapturingHandler.captured = []
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        env = jobs.sink_envelopes(
+            jobs.streaming_window_min(_orion_stream(spark, spool)),
+            f"http://127.0.0.1:{server.server_port}/v2/entities/",
+        )
+        q = write_http(env, str(tmp_path / "ckpt_ordered"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        server.shutdown()
+    sent: dict[str, list[str]] = {}
+    for path, body in _CapturingHandler.captured:
+        sent.setdefault(path, []).append(body)
+    assert set(sent) == {f"/v2/entities/{e}/attrs" for e in newest}
+    for eid, (_, expected) in newest.items():
+        bodies = sent[f"/v2/entities/{eid}/attrs"]
+        assert json.loads(bodies[-1])["temperature_min"]["value"] == expected
+        assert all(a != b for a, b in zip(bodies, bodies[1:])), bodies
+
+
 def test_streaming_bloom_decontamination_matches_batch(spark, tmp_path):
     """Stream/batch unification for the bloom decontamination prune:
     the SAME fitted bloom words drive a Structured Streaming ingest
@@ -447,9 +496,20 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
     assert got == exp_closed
 
 
-def test_dual_sink_multi_consumer(spark, tmp_path, capfd):
+def _jvm_stderr(request) -> str:
+    """What the JVM wrote to stderr since pytest last read it.  The JVM
+    inherits pytest's global fd capture, not a test's ``capfd``."""
+    capman = request.config.pluginmanager.getplugin("capturemanager")
+    if capman is None or not capman.is_globally_capturing():
+        return ""
+    return capman.read_global_capture().err
+
+
+def test_dual_sink_multi_consumer(spark, tmp_path, capfd, request):
     """Example2's multi-consumer DAG: one stream feeds the HTTP sink AND
-    the console print (Example2.scala:42,45)."""
+    the console print (Example2.scala:42,45).  Stopping the query as
+    soon as the first update lands, mid-batch, must not kill the stream
+    thread with a ``StackOverflowError``."""
     from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
         write_http_and_console,
     )
@@ -465,14 +525,19 @@ def test_dual_sink_multi_consumer(spark, tmp_path, capfd):
             jobs.streaming_window_min(stream),
             f"http://127.0.0.1:{server.server_port}/v2/entities/",
         )
+        _jvm_stderr(request)
         q = write_http_and_console(env, str(tmp_path / "ckpt_dual"))
         deadline = time.time() + 30
         while time.time() < deadline and not _CapturingHandler.captured:
-            time.sleep(0.5)
+            time.sleep(0.05)
         q.stop()
         assert _CapturingHandler.captured, "HTTP consumer must receive updates"
-        out = capfd.readouterr().out
-        assert "temperature_min" in out, "console consumer must print content"
+        out = capfd.readouterr()
+        assert "temperature_min" in out.out, "console consumer must print content"
+        time.sleep(1)  # let the stopped stream thread finish logging
+        err = out.err + capfd.readouterr().err + _jvm_stderr(request)
+        assert "StackOverflowError" not in err, err[-4000:]
+        assert q.exception() is None
     finally:
         server.shutdown()
 
@@ -521,18 +586,21 @@ def test_source_backpressure_maxbatchrows(spark, tmp_path):
     """maxBatchRows caps records per micro-batch without losing data."""
     from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
         OrionHttpStreamReader,
-        _SpoolOffset,
     )
 
     rows = flat_sequence(10)
     spool = _write_spool(tmp_path, rows)
-    # unit: bounded offset walks forward by exactly the budget
-    r = OrionHttpStreamReader(None, {"spool_dir": spool, "maxBatchRows": "3"})
-    o0 = _SpoolOffset("", 0)
-    o1 = r._bounded_offset(o0, r._spool_files())
-    assert o1.line == 3
-    o2 = r._bounded_offset(o1, r._spool_files())
-    assert o2.line == 6
+    # unit: each read takes at most the budget and ends where the next starts
+    r = OrionHttpStreamReader({"spool_dir": spool, "maxBatchRows": "3"})
+    offset, sizes = r.initialOffset(), []
+    for _ in range(5):
+        batch, end = r.read(offset)
+        batch = list(batch)
+        assert list(r.readBetweenOffsets(offset, end)) == batch
+        sizes.append(len(batch))
+        offset = end
+    assert sizes == [3, 3, 3, 1, 0]
+    assert offset == {"fname": "000.jsonl", "line": 10}
     # e2e: rate-limited stream still delivers ALL records across
     # multiple micro-batches.  (availableNow would snapshot ONE bounded
     # offset and stop at 3 rows — a continuous trigger is required.)
@@ -559,6 +627,33 @@ def test_source_backpressure_maxbatchrows(spark, tmp_path):
     q.stop()
     assert spark.sql("select count(*) n from t_bp").first().n == 10
     assert max(b for b in batches if b) <= 3  # every batch respected the cap
+
+
+def test_source_leaves_partial_line_for_next_read(tmp_path):
+    """A spool line still being written (no trailing newline yet) is
+    not read: the read ends before it and the next read takes it once
+    it is complete."""
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources.ngsi_http import (
+        OrionHttpStreamReader,
+    )
+
+    spool = _write_spool(tmp_path, flat_sequence(3))
+    path = os.path.join(spool, "000.jsonl")
+    with open(path) as f:
+        lines = f.read().splitlines(keepends=True)
+    with open(path, "w") as f:
+        f.writelines(lines[:2])
+        f.write(lines[2][: len(lines[2]) // 2])
+    r = OrionHttpStreamReader({"spool_dir": spool})
+    batch, end = r.read(r.initialOffset())
+    assert len(list(batch)) == 2 and end == {"fname": "000.jsonl", "line": 2}
+    batch, again = r.read(end)
+    assert list(batch) == [] and again == end
+    with open(path, "a") as f:
+        f.write(lines[2][len(lines[2]) // 2 :])
+    batch, end = r.read(end)
+    assert [row[0] for row in batch] == [flat_sequence(3)[2][1]]
+    assert end == {"fname": "000.jsonl", "line": 3}
 
 
 def test_sessionizer_on_rocksdb_state_store(spark, tmp_path):
@@ -664,10 +759,11 @@ def test_orion_source_checkpoint_restart_exactly_once(spark, tmp_path):
 def test_http_sink_retries_transient_failure(spark):
     """O10 at-least-once: a 500 on the first attempt is retried; a 400
     is a client error and is raised after one attempt."""
-    import urllib.error
+    from pyspark.sql import Row
 
     from fiware_cosmos_orion_flink_connector_examples_spark.streaming.sinks import (
-        post_partition,
+        SinkPostError,
+        post_envelopes,
     )
 
     def serve(status):
@@ -688,8 +784,8 @@ def test_http_sink_retries_transient_failure(spark):
         server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
         threading.Thread(target=server.serve_forever, daemon=True).start()
         rows = [
-            {"content": f"c{i}", "url": f"http://127.0.0.1:{server.server_port}/x",
-             "content_type": "text/plain", "method": "POST"}
+            Row(content=f"c{i}", url=f"http://127.0.0.1:{server.server_port}/x",
+                content_type="text/plain", method="POST")
             for i in range(3)
         ]
         return server, Handler.seen, rows
@@ -697,7 +793,7 @@ def test_http_sink_retries_transient_failure(spark):
     # fail every first attempt
     server, seen, rows = serve(lambda attempt: 500 if attempt == 1 else 200)
     try:
-        post_partition(iter(rows))
+        assert post_envelopes(rows) == 3
         assert all(n == 2 for n in seen.values()), seen
     finally:
         server.shutdown()
@@ -705,8 +801,9 @@ def test_http_sink_retries_transient_failure(spark):
     server, seen, rows = serve(lambda attempt: 400)
     try:
         for row in rows:
-            with pytest.raises(urllib.error.HTTPError):
-                post_partition(iter([row]))
+            with pytest.raises(SinkPostError) as err:
+                post_envelopes([row])
+            assert err.value.status == 400
         assert seen == {f"c{i}": 1 for i in range(3)}, seen
     finally:
         server.shutdown()
