@@ -568,7 +568,8 @@ def hash_dup_pairs(
 
 
 # Measured regimes for pair-endpoint joins (tools/pair_join_crossover
-# .py, local[32], synthetic pair sets over a 400k-doc frame): the two
+# .py, now deleted, in git history; local[32], synthetic pair sets over
+# a 400k-doc frame): the two
 # plans are within noise up to ~100k pairs (0.61 vs 0.58 s at 100k)
 # and shuffle pulls ahead once the pair set rivals the corpus (0.67 vs
 # 1.12 s at 500k, 1.41 vs 12.4 s at 16M) — locally the corpus is small
@@ -696,7 +697,8 @@ def connected_components(
     identical labels on the same graph.
 
     The default bound is MEASURED, not guessed (tools/cc_crossover.py,
-    local[32], random pair graphs over 4P docs): driver vs distributed
+    now deleted, in git history; local[32], random pair graphs over 4P
+    docs): driver vs distributed
     wall-clock is 2.5 s vs 8.0 s at 50k pairs, 2.0 s vs 11.1 s at 200k,
     7.6 s vs 21.7 s at 800k — the crossover sits well above 10⁶ pairs,
     and a 10⁶-pair collect is ~16 MB / a ~2M-entry dict, far below any

@@ -296,7 +296,8 @@ def _apply_group_deltas(
     groups), DELETE groups whose row count reaches zero, and commit the
     merge with the consumed-watermark txn update — one atomic view
     commit.  Raises ``SnapshotTxnAlreadyApplied`` /
-    ``SnapshotVersionConflict`` for the caller's retry loop."""
+    ``SnapshotVersionConflict`` for the caller's
+    ``layout.optimistic_commit``."""
     agg = deltas.groupBy(*group_cols).agg(
         F.sum("_dn").alias("_dn"),
         *[F.sum(_sum_name(c)).alias(f"_d_{c}") for c in sum_cols],
@@ -340,7 +341,6 @@ def agg_view_sync(
     group_cols: list[str],
     sum_cols: list[str],
     txn_app: str = "agg-view",
-    retries: int = 5,
     merge_mode: str = "cow",
 ) -> tuple[int | None, int]:
     """Advance the view over every source commit since its watermark
@@ -363,8 +363,8 @@ def agg_view_sync(
     ``layout.compact_dv_buckets`` materializes the debt (the
     maintenance report recommends it when DV coverage passes 25 %)."""
     src_latest = layout.snapshot_latest_version(spark, source_path)
-    last_err: Exception | None = None
-    for _ in range(retries):
+
+    def attempt() -> tuple[int | None, int]:
         view_cur = layout.snapshot_latest_version(spark, view_path)
         consumed = (
             layout.snapshot_manifest(spark, view_path, view_cur)["txn"].get(txn_app)
@@ -379,29 +379,27 @@ def agg_view_sync(
         deltas = _span_deltas(
             spark, source_path, consumed, src_latest, group_cols, sum_cols
         )
-        try:
-            v = _apply_group_deltas(
-                spark,
-                view_path,
-                view_cur,
-                deltas,
-                group_cols,
-                sum_cols,
-                {txn_app: src_latest},
-                merge_mode=merge_mode,
-            )
-            return v, src_latest
-        except layout.SnapshotTxnAlreadyApplied:
-            # replayed span — already in the view.  Report the watermark
-            # the WINNING sync actually consumed (ADVICE r14: a
-            # concurrent sync may have consumed a NEWER source version
-            # than the src_latest this loser resolved before racing)
-            wm = layout.snapshot_manifest(spark, view_path)["txn"].get(txn_app)
-            return None, wm if wm is not None else src_latest
-        except layout.SnapshotVersionConflict as e:
-            last_err = e
-            continue  # foreign view commit landed — re-read and retry
-    raise IOError(f"agg_view_sync: view kept conflicting: {last_err}")
+        v = _apply_group_deltas(
+            spark,
+            view_path,
+            view_cur,
+            deltas,
+            group_cols,
+            sum_cols,
+            {txn_app: src_latest},
+            merge_mode=merge_mode,
+        )
+        return v, src_latest
+
+    def applied() -> tuple[None, int]:
+        # replayed span — already in the view.  Report the watermark
+        # the WINNING sync actually consumed (a concurrent sync may
+        # have consumed a NEWER source version than the src_latest
+        # this loser resolved before racing)
+        wm = layout.snapshot_manifest(spark, view_path)["txn"].get(txn_app)
+        return None, wm if wm is not None else src_latest
+
+    return layout.optimistic_commit("agg_view_sync", attempt, applied)
 
 
 def agg_view_read(spark, view_path: str, version: int | None = None) -> DataFrame:
@@ -448,7 +446,6 @@ def distinct_view_sync(
     group_cols: list[str],
     distinct_col: str,
     txn_app: str = "distinct-view",
-    retries: int = 5,
     merge_mode: str = "cow",
 ) -> tuple[int | None, int]:
     """Advance the pair view over every source commit since its
@@ -456,7 +453,7 @@ def distinct_view_sync(
     passthrough) as ``agg_view_sync``."""
     return agg_view_sync(
         spark, source_path, view_path, group_cols + [distinct_col], [],
-        txn_app, retries, merge_mode=merge_mode,
+        txn_app, merge_mode=merge_mode,
     )
 
 
@@ -868,7 +865,6 @@ def join_view_sync(
     group_cols: list[str],
     sum_cols: list[str],
     txn_app: str = "join-view",
-    retries: int = 5,
     how: str = "inner",
     merge_mode: str = "cow",
 ) -> tuple[int | None, tuple[int, int]]:
@@ -913,7 +909,7 @@ def join_view_sync(
     if how == "right":
         v, (cb, ca) = join_view_sync(
             spark, b_path, a_path, view_path, join_col, group_cols,
-            sum_cols, txn_app, retries, how="left", merge_mode=merge_mode,
+            sum_cols, txn_app, how="left", merge_mode=merge_mode,
         )
         return v, (ca, cb)
     if how not in ("inner", "left", "full"):
@@ -923,8 +919,8 @@ def join_view_sync(
     jcols = _as_join_cols(join_col)
     a_latest = layout.snapshot_latest_version(spark, a_path)
     b_latest = layout.snapshot_latest_version(spark, b_path)
-    last_err: Exception | None = None
-    for _ in range(retries):
+
+    def attempt() -> tuple[int | None, tuple[int, int]]:
         view_cur = layout.snapshot_latest_version(spark, view_path)
         txn = layout.snapshot_manifest(spark, view_path, view_cur)["txn"]
         a_consumed = txn.get(f"{txn_app}.a")
@@ -1058,19 +1054,17 @@ def join_view_sync(
             txn_update[f"{txn_app}.a"] = a_latest
         if b_latest > b_consumed:
             txn_update[f"{txn_app}.b"] = b_latest
-        try:
-            v = _apply_group_deltas(
-                spark, view_path, view_cur, deltas, group_cols, sum_cols,
-                txn_update, merge_mode=merge_mode,
-            )
-            return v, (max(a_latest, a_consumed), max(b_latest, b_consumed))
-        except layout.SnapshotTxnAlreadyApplied:
-            wm = layout.snapshot_manifest(spark, view_path)["txn"]
-            return None, (
-                wm.get(f"{txn_app}.a", a_latest),
-                wm.get(f"{txn_app}.b", b_latest),
-            )
-        except layout.SnapshotVersionConflict as e:
-            last_err = e
-            continue  # foreign view commit landed — re-read and retry
-    raise IOError(f"join_view_sync: view kept conflicting: {last_err}")
+        v = _apply_group_deltas(
+            spark, view_path, view_cur, deltas, group_cols, sum_cols,
+            txn_update, merge_mode=merge_mode,
+        )
+        return v, (max(a_latest, a_consumed), max(b_latest, b_consumed))
+
+    def applied() -> tuple[None, tuple[int, int]]:
+        wm = layout.snapshot_manifest(spark, view_path)["txn"]
+        return None, (
+            wm.get(f"{txn_app}.a", a_latest),
+            wm.get(f"{txn_app}.b", b_latest),
+        )
+
+    return layout.optimistic_commit("join_view_sync", attempt, applied)

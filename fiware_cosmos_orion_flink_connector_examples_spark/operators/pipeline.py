@@ -40,13 +40,12 @@ Crash anywhere ⇒ previous root serves; retry ⇒ the same batch id
 completes the remaining legs and publishes.  Single-pipeline-writer
 ownership is assumed for the MEMBER tables (the standard lakehouse
 job-owns-its-tables contract).  Foreign writers to the catalog ROOT
-are absorbed by a re-resolve-and-retry loop around the publish
-(``SnapshotVersionConflict`` → re-read the root, retry the rename —
-the ADVICE r15 finding: the retry this module's round-15 docstring
-claimed now actually exists).  Cross-member coherence is CHECKED, not
-assumed: every consumer leg reports the source version it consumed,
-and a disagreement (a foreign writer violating the member contract
-mid-apply) re-syncs the laggards up to 3 passes before raising.
+are absorbed by ``layout.optimistic_commit`` around the publish
+(``SnapshotVersionConflict`` → re-read the root, retry the rename).
+Cross-member coherence is CHECKED, not assumed: every consumer leg
+reports the source version it consumed, and a disagreement (a
+foreign writer violating the member contract mid-apply) re-syncs the
+laggards up to 3 passes before raising.
 
 Upgrades ``examples/lakehouse_pipeline.py``'s per-step exactly-once
 chain to pipeline-atomic (VERDICT r14 directive #4, generalized per
@@ -430,7 +429,6 @@ def pipeline_apply_legs(
     legs: list[dict],
     batches: dict[str, DataFrame],
     batch_id: int,
-    retries: int = 5,
     _crash_before_publish: bool = False,
     _crash_after_leg: str | None = None,
 ) -> int:
@@ -569,32 +567,29 @@ def pipeline_apply_legs(
         )
 
     # 3. one root rename, absorbing replays (txn watermark) and foreign
-    # ROOT writers (re-resolve-and-retry — ADVICE r15).  catalog_commit
-    # REPLACES the member set, so members the catalog holds beyond this
-    # pipeline's legs (another tool's tables, a foreign member added
-    # mid-apply) CARRY FORWARD at their resolved pins — the retry never
-    # silently drops a foreign member (lost-update guard).
-    last_err: Exception | None = None
-    for attempt in range(retries):
-        if attempt:
-            cat = layout.catalog_resolve(spark, catalog_path)
+    # ROOT writers (re-resolve-and-retry).  catalog_commit REPLACES the
+    # member set, so members the catalog holds beyond this pipeline's
+    # legs (another tool's tables, a foreign member added mid-apply)
+    # CARRY FORWARD at their resolved pins — the retry never silently
+    # drops a foreign member (lost-update guard).
+    def publish() -> int:
+        root = layout.catalog_resolve(spark, catalog_path)
         merged = {
             name: (t["path"], t["version"], t["kind"])
-            for name, t in cat["tables"].items()
+            for name, t in root["tables"].items()
             if name not in pins
         }
         merged.update(pins)
-        try:
-            return layout.catalog_commit(
-                spark, catalog_path, merged,
-                _txn_update={_CAT_APP: batch_id},
-                expected_version=cat["version"],
-            )
-        except layout.SnapshotTxnAlreadyApplied:
-            return layout.index_root_latest(spark, catalog_path)
-        except layout.SnapshotVersionConflict as e:
-            last_err = e
-    raise IOError(f"pipeline_apply_legs: root kept conflicting: {last_err}")
+        return layout.catalog_commit(
+            spark, catalog_path, merged,
+            _txn_update={_CAT_APP: batch_id},
+            expected_version=root["version"],
+        )
+
+    return layout.optimistic_commit(
+        "pipeline_apply_legs", publish,
+        lambda: layout.index_root_latest(spark, catalog_path),
+    )
 
 
 # --- the original three-member shape, as a leg list --------------------------

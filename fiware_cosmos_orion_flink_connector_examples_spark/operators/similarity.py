@@ -1500,7 +1500,6 @@ def ann_index_add_versioned(
     path: str,
     txn_app: str | None = None,
     txn_id: int | None = None,
-    retries: int = 5,
     delete_ids: DataFrame | None = None,
 ) -> int:
     """Atomic incremental add: assign the batch to the FROZEN root
@@ -1517,8 +1516,8 @@ def ann_index_add_versioned(
 
     base = path.rstrip("/")
     txn = {txn_app: int(txn_id)} if txn_app is not None else None
-    last_err = None
-    for _ in range(retries):
+
+    def attempt() -> int:
         root = _ann_root(spark, base)
         if root is None:
             raise ValueError(f"ann_index_add_versioned: no root at {path}")
@@ -1552,17 +1551,15 @@ def ann_index_add_versioned(
         tables[name] = layout.snapshot_merge(
             spark, f"{base}/{name}", rows, meta["id_col"], delete_col=delete_col
         )
-        try:
-            return layout.index_root_commit(
-                spark, base, tables, _txn_update=txn,
-                expected_version=root["version"],
-            )
-        except layout.SnapshotTxnAlreadyApplied:
-            return layout.index_root_latest(spark, base)
-        except layout.SnapshotVersionConflict as e:
-            last_err = e
-            continue
-    raise IOError(f"ann_index_add_versioned: root kept conflicting: {last_err}")
+        return layout.index_root_commit(
+            spark, base, tables, _txn_update=txn,
+            expected_version=root["version"],
+        )
+
+    return layout.optimistic_commit(
+        "ann_index_add_versioned", attempt,
+        lambda: layout.index_root_latest(spark, base),
+    )
 
 
 def ann_index_rebuild_versioned(

@@ -2033,17 +2033,17 @@ def _search_index_apply(
     text_col: str,
     txn_app: str | None,
     txn_id: int | None,
-    retries: int,
     caller: str,
 ) -> int:
-    """The ONE read-merge-publish loop behind ingest/delete/sync: build
+    """The ONE read-merge-publish step behind ingest/delete/sync: build
     every sub-table's merge batch (upserts with _del=False, dropped or
     deleted keys as REAL delete rows keyed off the PINNED docterms
     version, bucket-pruned), merge each sub-table, publish one root.
     ``upsert_docs`` and ``delete_ids`` must be key-disjoint (the sync
     resolves last-change-per-key before calling).  A foreign root
-    landing mid-apply raises SnapshotVersionConflict → re-resolve,
-    re-merge (content-idempotent), re-publish; a replayed txn id is a
+    landing mid-apply raises SnapshotVersionConflict →
+    ``layout.optimistic_commit`` re-resolves, re-merges
+    (content-idempotent) and re-publishes; a replayed txn id is a
     no-op; crash recovery = re-run (dangling sub-versions are merged
     over, only a root makes anything visible)."""
     from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
@@ -2076,8 +2076,8 @@ def _search_index_apply(
         all_ids = del_ids
     else:
         raise ValueError(f"{caller}: nothing to apply")
-    last_err = None
-    for _ in range(retries):
+
+    def attempt() -> int:
         root = layout.index_root_resolve(spark, base)
         if txn is not None:
             wm = root["txn"].get(txn_app)
@@ -2144,17 +2144,14 @@ def _search_index_apply(
         tables["docterms"] = layout.snapshot_merge(
             spark, f"{base}/docterms", dt_upd, id_col, delete_col="_del"
         )
-        try:
-            return layout.index_root_commit(
-                spark, base, tables, _txn_update=txn,
-                expected_version=root["version"],
-            )
-        except layout.SnapshotTxnAlreadyApplied:
-            return layout.index_root_latest(spark, base)
-        except layout.SnapshotVersionConflict as e:
-            last_err = e
-            continue
-    raise IOError(f"{caller}: root commit kept conflicting: {last_err}")
+        return layout.index_root_commit(
+            spark, base, tables, _txn_update=txn,
+            expected_version=root["version"],
+        )
+
+    return layout.optimistic_commit(
+        caller, attempt, lambda: layout.index_root_latest(spark, base)
+    )
 
 
 def search_index_ingest(
@@ -2165,7 +2162,6 @@ def search_index_ingest(
     text_col: str = "text",
     txn_app: str | None = None,
     txn_id: int | None = None,
-    retries: int = 5,
     delete_ids: DataFrame | None = None,
 ) -> int:
     """ATOMIC multi-table incremental ingest: merge a new/changed doc
@@ -2189,7 +2185,7 @@ def search_index_ingest(
     version (the current one when the txn id was already applied)."""
     return _search_index_apply(
         spark, path, new_docs, delete_ids, id_col, text_col,
-        txn_app, txn_id, retries, "search_index_ingest",
+        txn_app, txn_id, "search_index_ingest",
     )
 
 
@@ -2200,7 +2196,6 @@ def search_index_delete(
     id_col: str = "doc_id",
     txn_app: str | None = None,
     txn_id: int | None = None,
-    retries: int = 5,
 ) -> int:
     """ATOMIC document deletion across every sub-table of a
     ``search_index_write`` index: the docs' stored terms (pinned
@@ -2209,7 +2204,7 @@ def search_index_delete(
     one root publish, and the read path stays pure pinned reads."""
     return _search_index_apply(
         spark, path, None, ids, id_col, "text",
-        txn_app, txn_id, retries, "search_index_delete",
+        txn_app, txn_id, "search_index_delete",
     )
 
 
@@ -2259,7 +2254,7 @@ def search_index_sync(
     dels = last.filter(F.col("_change") == "delete").select(id_col)
     v = _search_index_apply(
         spark, index_path, ups, dels, id_col, text_col,
-        txn_app, cur, 5, "search_index_sync",
+        txn_app, cur, "search_index_sync",
     )
     if cursor_path is not None:
         layout.snapshot_tail_commit(spark, cursor_path, cur)

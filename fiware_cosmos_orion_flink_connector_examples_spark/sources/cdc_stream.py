@@ -57,7 +57,8 @@ Read path (round 17): ``read()`` yields ``pyarrow.RecordBatch``es —
 the pre-image filter and the _version/_change envelope are built
 arrow-side, so a ``startVersion=0`` BOOTSTRAP of a large table stays
 vectorized end-to-end instead of funneling rows through the Python
-interpreter (~10× on a 1M-row bootstrap; tools/cdc_read_smoke.py).
+interpreter (~10× on a 1M-row bootstrap; measured with
+tools/cdc_read_smoke.py, now deleted, in git history).
 That said, for VERY large tables the recommended pattern is still:
 bootstrap via a batch ``layout.snapshot_read`` (full parquet scan
 speed, no streaming machinery), then start the stream with

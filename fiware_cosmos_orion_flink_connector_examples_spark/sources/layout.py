@@ -260,9 +260,37 @@ class SnapshotVersionConflict(IOError):
     READ-MODIFY-WRITE callers (e.g. the rollup sink sums the batch
     into the CURRENT table rows before merging: a foreign-app commit
     landing between that read and the merge would be silently
-    overwritten for touched keys without this guard).  Subclasses
-    IOError so existing retry loops (``except IOError: re-read and
-    retry``) handle it with no changes."""
+    overwritten for touched keys without this guard).  Also raised
+    by ``_commit_manifest`` and ``index_root_commit`` when a concurrent
+    committer wins the rename, and by ``optimistic_commit`` when every
+    attempt conflicted.  Subclasses IOError."""
+
+
+# Attempts ``optimistic_commit`` makes before it gives up.
+COMMIT_ATTEMPTS = 5
+
+
+def optimistic_commit(caller: str, attempt, applied=lambda: None):
+    """The one conflict-retry policy of every read-modify-commit
+    writer (sinks, views, index roots, catalogs): ``attempt()`` reads
+    the latest state, checks its own watermark, merges and commits,
+    returning its result.  A ``SnapshotVersionConflict`` (a foreign
+    commit landed since the read, or won the rename) re-runs it, up to
+    ``COMMIT_ATTEMPTS`` times, then raises ``SnapshotVersionConflict``
+    naming ``caller``.  ``SnapshotTxnAlreadyApplied`` (a concurrent
+    instance of the same app committed first) returns ``applied()``.
+    Any other error propagates after one try."""
+    for _ in range(COMMIT_ATTEMPTS):
+        try:
+            return attempt()
+        except SnapshotTxnAlreadyApplied:
+            return applied()
+        except SnapshotVersionConflict as e:
+            last_err = e
+    raise SnapshotVersionConflict(
+        f"{caller}: commit kept conflicting after {COMMIT_ATTEMPTS} "
+        f"attempts: {last_err}"
+    )
 
 
 def _fs(spark, path: str):
@@ -302,9 +330,10 @@ def _commit_manifest(spark, base: str, version: int, manifest: dict) -> None:
     """Atomically publish _manifest_v<version>.json: stage the full
     bytes at a hidden .tmp name, then rename to the final name.  The
     destination must not exist — Hadoop rename returns false then, so
-    a concurrent commit of the same version raises instead of
-    clobbering (optimistic concurrency).  Every commit is stamped
-    with ``committed_at`` (epoch seconds, round 17) — the basis for
+    a concurrent commit of the same version raises
+    ``SnapshotVersionConflict`` instead of clobbering (optimistic
+    concurrency).  Every commit is stamped with ``committed_at``
+    (epoch seconds, round 17) — the basis for
     timestamp time travel (``snapshot_version_at``); pre-round-17
     manifests without the field fall back to file mtime there."""
     import json
@@ -318,7 +347,7 @@ def _commit_manifest(spark, base: str, version: int, manifest: dict) -> None:
     dst = jvm.org.apache.hadoop.fs.Path(f"{base}/_manifest_v{version}.json")
     if fs.exists(dst) or not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
         fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
-        raise IOError(
+        raise SnapshotVersionConflict(
             f"snapshot commit conflict: version {version} already exists "
             f"(concurrent committer won); retry from the new latest"
         )
@@ -343,6 +372,20 @@ def _load_manifest_doc(spark, base: str, version: int) -> dict:
     import json
 
     return json.loads(_read_small(spark, f"{base}/_manifest_v{version}.json"))
+
+
+def _txn_applied(
+    spark, base: str, app: str, batch_id: int, version: int | None = None
+) -> bool:
+    """True when manifest ``version`` (default: the latest) already
+    carries ``app``'s watermark at or past ``batch_id`` — a replayed
+    batch."""
+    if version is None:
+        version = snapshot_latest_version(spark, base)
+    if version <= 0:
+        return False
+    last = (_load_manifest_doc(spark, base, version).get("txn") or {}).get(app)
+    return last is not None and batch_id <= last
 
 
 # (base, version, manifest-file identity) -> resolved manifest.  Sound
@@ -1947,33 +1990,20 @@ def snapshot_append_stream(
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base = path.rstrip("/")
-        last_err: Exception | None = None
-        for _ in range(5):
-            cur = snapshot_latest_version(spark, base)
-            if cur > 0:
-                prev = _load_manifest_doc(spark, base, cur)
-                last = (prev.get("txn") or {}).get(txn_app_id)
-                if last is not None and batch_id <= last:
-                    return  # retry replay of an already-committed batch
-            try:
-                snapshot_commit(
-                    spark,
-                    batch,
-                    base,
-                    mode="append",
-                    stats_cols=stats_cols,
-                    _txn_update={txn_app_id: batch_id},
-                )
-                return
-            except SnapshotTxnAlreadyApplied:
-                return  # a concurrent instance of THIS app won
-            except IOError as e:  # lost the optimistic-concurrency race
-                last_err = e
-                continue
-        raise IOError(
-            f"snapshot_append_stream: commit kept conflicting for batch "
-            f"{batch_id}: {last_err}"
-        )
+
+        def attempt() -> None:
+            if _txn_applied(spark, base, txn_app_id, batch_id):
+                return  # retry replay of an already-committed batch
+            snapshot_commit(
+                spark,
+                batch,
+                base,
+                mode="append",
+                stats_cols=stats_cols,
+                _txn_update={txn_app_id: batch_id},
+            )
+
+        optimistic_commit(f"snapshot_append_stream batch {batch_id}", attempt)
 
     return commit_batch
 
@@ -2000,34 +2030,21 @@ def snapshot_merge_stream(
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base = path.rstrip("/")
-        last_err: Exception | None = None
-        for _ in range(5):
-            cur = snapshot_latest_version(spark, base)
-            if cur > 0:
-                prev = _load_manifest_doc(spark, base, cur)
-                last = (prev.get("txn") or {}).get(txn_app_id)
-                if last is not None and batch_id <= last:
-                    return  # retry replay of an already-committed batch
-            try:
-                snapshot_merge(
-                    spark,
-                    base,
-                    batch,
-                    key_col,
-                    delete_col=delete_col,
-                    change_log=change_log,
-                    _txn_update={txn_app_id: batch_id},
-                )
-                return
-            except SnapshotTxnAlreadyApplied:
-                return  # a concurrent instance of THIS app won
-            except IOError as e:  # lost the optimistic-concurrency race
-                last_err = e
-                continue
-        raise IOError(
-            f"snapshot_merge_stream: commit kept conflicting for batch "
-            f"{batch_id}: {last_err}"
-        )
+
+        def attempt() -> None:
+            if _txn_applied(spark, base, txn_app_id, batch_id):
+                return  # retry replay of an already-committed batch
+            snapshot_merge(
+                spark,
+                base,
+                batch,
+                key_col,
+                delete_col=delete_col,
+                change_log=change_log,
+                _txn_update={txn_app_id: batch_id},
+            )
+
+        optimistic_commit(f"snapshot_merge_stream batch {batch_id}", attempt)
 
     return merge_batch
 
@@ -3096,15 +3113,23 @@ def _tail_cursor_versions(jvm, fs, cursor_path: str) -> list[int]:
 
 
 def _read_tail_cursor(spark, cursor_path: str) -> int | None:
-    """Max over the versioned cursor files; falls back to a legacy
-    plain cursor file written by the old delete+rename scheme."""
+    """Max over the versioned cursor files (None when there is none)."""
     jvm, fs = _fs(spark, cursor_path)
-    versions = _tail_cursor_versions(jvm, fs, cursor_path)
-    if versions:
-        return max(versions)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(cursor_path)):
-        return int(_read_small(spark, cursor_path).decode().strip())
-    return None
+    return max(_tail_cursor_versions(jvm, fs, cursor_path), default=None)
+
+
+def _write_tail_cursor(spark, jvm, fs, cursor_path: str, cursor: int) -> None:
+    """Stage ``cursor`` at ``<cursor_path>.tmp-<N>`` and rename it to
+    its versioned name.  A rename that finds the version already
+    written (a concurrent or replayed commit) just drops the stage —
+    fine under max-wins."""
+    tmp = f"{cursor_path}.tmp-{cursor}"
+    _write_small(spark, tmp, str(cursor).encode())
+    dst = jvm.org.apache.hadoop.fs.Path(f"{cursor_path}.v{cursor:020d}")
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
+        if not fs.exists(dst):
+            raise IOError(f"snapshot tail cursor: rename to {dst} failed")
+        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
 
 
 def snapshot_tail_commit(spark, cursor_path: str, cursor: int) -> None:
@@ -3114,9 +3139,9 @@ def snapshot_tail_commit(spark, cursor_path: str, cursor: int) -> None:
 
     The cursor is a VERSIONED file (``<cursor_path>.v<N>``, reader
     takes the max) so there is no instant at which no cursor exists:
-    the old delete-then-rename scheme had a crash window between the
-    delete and the rename that re-bootstrapped the consumer from
-    version 0 and re-delivered the entire history — the same
+    a delete-then-rename scheme would have a crash window between the
+    delete and the rename that re-bootstraps the consumer from
+    version 0 and re-delivers the entire history — the same
     delete+recreate pointer window the manifest design bans.  Old
     cursor files AND superseded ``.tmp-*`` stages (a crash between
     write and rename orphans one) are pruned only after the new
@@ -3125,19 +3150,10 @@ def snapshot_tail_commit(spark, cursor_path: str, cursor: int) -> None:
     a cursor lower than an existing versioned file is shadowed by
     max-wins reads — deliberate consumer rewind is a distinct
     operation, ``snapshot_tail_rewind``."""
-    jvm, fs = _fs(spark, cursor_path)
     cursor = int(cursor)
-    tmp = f"{cursor_path}.tmp-{cursor}"
-    _write_small(spark, tmp, str(cursor).encode())
-    dst = jvm.org.apache.hadoop.fs.Path(f"{cursor_path}.v{cursor:020d}")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-        # a concurrent/replayed commit already wrote this version —
-        # fine under max-wins, just drop our tmp
-        if fs.exists(dst):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
-        else:
-            raise IOError(f"snapshot_tail_commit: rename to {dst} failed")
-    # prune superseded cursors + any legacy plain file (post-commit)
+    jvm, fs = _fs(spark, cursor_path)
+    _write_tail_cursor(spark, jvm, fs, cursor_path, cursor)
+    # prune superseded cursors (post-commit)
     for v in _tail_cursor_versions(jvm, fs, cursor_path):
         if v < cursor:
             fs.delete(
@@ -3158,9 +3174,6 @@ def snapshot_tail_commit(spark, cursor_path: str, cursor: int) -> None:
                     stale = True  # unparseable tmp: ours are always -<int>
                 if stale:
                     fs.delete(st.getPath(), False)
-    legacy = jvm.org.apache.hadoop.fs.Path(cursor_path)
-    if fs.exists(legacy):
-        fs.delete(legacy, False)
 
 
 def snapshot_tail_rewind(spark, cursor_path: str, cursor: int) -> None:
@@ -3172,23 +3185,14 @@ def snapshot_tail_rewind(spark, cursor_path: str, cursor: int) -> None:
     at either the old or the new cursor, never cursorless (the
     re-bootstrap-from-zero window the versioned scheme exists to
     close).  Re-delivery downstream is at-least-once by contract."""
-    jvm, fs = _fs(spark, cursor_path)
     cursor = int(cursor)
-    tmp = f"{cursor_path}.tmp-{cursor}"
-    _write_small(spark, tmp, str(cursor).encode())
-    dst = jvm.org.apache.hadoop.fs.Path(f"{cursor_path}.v{cursor:020d}")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-        if not fs.exists(dst):
-            raise IOError(f"snapshot_tail_rewind: rename to {dst} failed")
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
+    jvm, fs = _fs(spark, cursor_path)
+    _write_tail_cursor(spark, jvm, fs, cursor_path, cursor)
     for v in _tail_cursor_versions(jvm, fs, cursor_path):
         if v > cursor:
             fs.delete(
                 jvm.org.apache.hadoop.fs.Path(f"{cursor_path}.v{v:020d}"), False
             )
-    legacy = jvm.org.apache.hadoop.fs.Path(cursor_path)
-    if fs.exists(legacy):
-        fs.delete(legacy, False)
 
 
 # ---------------------------------------------------------------------------
@@ -3285,8 +3289,8 @@ def index_root_commit(
     forward; ``_txn_update`` must ADVANCE its app's watermark or
     ``SnapshotTxnAlreadyApplied`` aborts (zombie-writer guard);
     ``expected_version`` raises ``SnapshotVersionConflict`` when a
-    foreign root landed since the caller resolved its base (the
-    read-merge-publish loop re-resolves and retries); the rename
+    foreign root landed since the caller resolved its base
+    (``optimistic_commit`` re-resolves and retries); the rename
     itself refuses to clobber, so two same-version publishers cannot
     both win.  Returns the committed root version."""
     import json

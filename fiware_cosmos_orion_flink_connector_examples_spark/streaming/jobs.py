@@ -388,7 +388,7 @@ def maintain_hourly_rollup_txn(
         the base rows are read at a pinned version and the merge
         carries ``expected_version=`` that same version, so a foreign
         commit landing between the read and the merge raises
-        ``SnapshotVersionConflict`` (an IOError — the retry loop
+        ``SnapshotVersionConflict`` (``layout.optimistic_commit``
         re-reads the new latest and recomputes) instead of silently
         losing the foreign keys' updates (review finding, round 13:
         the guard existed but was not wired here);
@@ -428,57 +428,45 @@ def maintain_hourly_rollup_txn(
             )
             .select("k", "hour", "event_type", "n_events", "sum_value")
         )
-        last_err = None
-        for _ in range(5):
+
+        def attempt() -> None:
             cur = layout.snapshot_latest_version(spark, base)
-            if cur > 0:
-                prev = layout._load_manifest_doc(spark, base, cur)
-                last = (prev.get("txn") or {}).get(txn_app_id)
-                if last is not None and batch_id <= last:
-                    return  # replay of an already-committed batch
-            try:
-                if cur == 0:
-                    layout.snapshot_write_keyed(
-                        spark,
-                        part,
-                        base,
-                        "k",
-                        n_buckets=8,
-                        _txn_update={txn_app_id: batch_id},
-                    )
-                    return
-                # pin the read to the version the merge will claim to
-                # supersede — read + merge form one optimistic txn
-                existing = layout.snapshot_read(spark, base, version=cur)
-                merged = (
-                    part.unionByName(
-                        existing.join(
-                            F.broadcast(part.select("k")), "k", "semi"
-                        )
-                    )
-                    .groupBy("k", "hour", "event_type")
-                    .agg(
-                        F.sum("n_events").alias("n_events"),
-                        F.sum("sum_value").alias("sum_value"),
-                    )
-                )
-                layout.snapshot_merge(
+            if layout._txn_applied(spark, base, txn_app_id, batch_id, cur):
+                return  # replay of an already-committed batch
+            if cur == 0:
+                layout.snapshot_write_keyed(
                     spark,
+                    part,
                     base,
-                    merged,
                     "k",
+                    n_buckets=8,
                     _txn_update={txn_app_id: batch_id},
-                    expected_version=cur,
                 )
                 return
-            except layout.SnapshotTxnAlreadyApplied:
-                return  # a concurrent instance of THIS app won
-            except IOError as e:  # lost an optimistic-concurrency race
-                last_err = e
-                continue
-        raise IOError(
-            f"maintain_hourly_rollup_txn: commit kept conflicting for "
-            f"batch {batch_id}: {last_err}"
+            # pin the read to the version the merge will claim to
+            # supersede — read + merge form one optimistic txn
+            existing = layout.snapshot_read(spark, base, version=cur)
+            merged = (
+                part.unionByName(
+                    existing.join(F.broadcast(part.select("k")), "k", "semi")
+                )
+                .groupBy("k", "hour", "event_type")
+                .agg(
+                    F.sum("n_events").alias("n_events"),
+                    F.sum("sum_value").alias("sum_value"),
+                )
+            )
+            layout.snapshot_merge(
+                spark,
+                base,
+                merged,
+                "k",
+                _txn_update={txn_app_id: batch_id},
+                expected_version=cur,
+            )
+
+        layout.optimistic_commit(
+            f"maintain_hourly_rollup_txn batch {batch_id}", attempt
         )
 
     return merge_batch
@@ -1737,16 +1725,6 @@ def maintain_agg_view(
     string the view was created with (``ivm.agg_view_create``'s
     ``txn_app``, default ``"agg-view"``).
 
-    BEHAVIOR CHANGE NOTE (round 15→16, ADVICE r15): this sink's
-    default ``txn_app`` changed from ``"agg-view-stream"`` (round 14,
-    itself broken for default-created views) to ``"agg-view"`` so the
-    defaults pair.  A deployment whose view was explicitly created
-    with ``txn_app="agg-view-stream"`` and relies on this sink's
-    default is NOT broken by the change: when the view carries no
-    watermark under ``txn_app`` but DOES carry one under the legacy
-    ``"{txn_app}-stream"`` key, the sink falls back to it (loudly —
-    one warning per sink) instead of raising 'carries no watermark'.
-
     ``merge_mode`` (round 17) applies to BOTH legs: ``"auto"`` lets a
     needle micro-batch write deletion-vector sidecars instead of
     rewriting source/view buckets (the steady-state streaming shape —
@@ -1756,7 +1734,6 @@ def maintain_agg_view(
     The lakehouse "always-fresh aggregate" twin of
     ``maintain_search_index`` / ``maintain_ann_index``.  Returns the
     function for ``writeStream.foreachBatch``."""
-    state = {"app": txn_app}
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
@@ -1781,32 +1758,10 @@ def maintain_agg_view(
             )
         except _layout.SnapshotTxnAlreadyApplied:
             pass  # replayed batch — the source already has it
-        try:
-            _ivm.agg_view_sync(
-                spark, source_path, view_path, group_cols, sum_cols,
-                txn_app=state["app"], merge_mode=merge_mode,
-            )
-        except ValueError as e:
-            if "carries no" not in str(e) or state["app"] != txn_app:
-                raise
-            legacy = f"{txn_app}-stream"
-            wm = _layout.snapshot_manifest(spark, view_path)["txn"].get(legacy)
-            if wm is None:
-                raise
-            import warnings
-
-            warnings.warn(
-                f"maintain_agg_view: view {view_path} carries its watermark "
-                f"under the legacy key {legacy!r} (pre-round-15 default); "
-                f"falling back to it — recreate the view with "
-                f"txn_app={txn_app!r} to silence this",
-                stacklevel=2,
-            )
-            state["app"] = legacy
-            _ivm.agg_view_sync(
-                spark, source_path, view_path, group_cols, sum_cols,
-                txn_app=legacy, merge_mode=merge_mode,
-            )
+        _ivm.agg_view_sync(
+            spark, source_path, view_path, group_cols, sum_cols,
+            txn_app=txn_app, merge_mode=merge_mode,
+        )
 
     return apply_batch
 

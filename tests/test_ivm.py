@@ -1056,38 +1056,6 @@ def test_maintain_join_view_e2e_structured_streaming(spark, tmp_path):
     assert layout.snapshot_latest_version(spark, view) == vv
 
 
-def test_maintain_agg_view_legacy_watermark_fallback(spark, tmp_path):
-    """ADVICE r15: a view created with the pre-round-15 default
-    txn_app='agg-view-stream' keeps working under the sink's new
-    'agg-view' default — the sink probes the legacy '{txn_app}-stream'
-    key (with a warning) instead of raising 'carries no watermark'."""
-    import warnings
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
-
-    source, view = str(tmp_path / "src"), str(tmp_path / "view")
-    layout.snapshot_write_keyed(
-        spark, _src(spark, [(i, "ab"[i % 2], i) for i in range(10)]), source, "k"
-    )
-    ivm.agg_view_create(spark, source, view, ["g"], ["x"],
-                        txn_app="agg-view-stream")
-    sink = jobs.maintain_agg_view(source, view, "k", ["g"], ["x"])  # default
-
-    b0 = spark.createDataFrame(
-        [(0, "b", 100, False), (20, "c", 7, False)],
-        "k long, g string, x long, _del boolean",
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        sink(b0, 0)
-        assert any("legacy key" in str(w.message) for w in caught)
-    assert _view(spark, view) == _recompute(spark, source)
-    # second batch sticks to the probed key with no re-raise
-    sink(spark.createDataFrame(
-        [(1, "c", 5, False)], "k long, g string, x long, _del boolean"), 1)
-    assert _view(spark, view) == _recompute(spark, source)
-
-
 def test_randomized_right_join_view_equals_recompute(spark, tmp_path):
     """Model-based stress of the RIGHT join wrapper (LEFT with the
     tables swapped internally): unmatched DIMENSION rows survive

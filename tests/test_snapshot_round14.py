@@ -25,8 +25,7 @@ def _kv(spark, pairs):
 def test_snapshot_merge_expected_version_guard(spark, tmp_path):
     """snapshot_merge(expected_version=N) raises SnapshotVersionConflict
     BEFORE anything is written when the latest version is no longer N,
-    and SnapshotVersionConflict is an IOError so existing
-    except-IOError-retry loops absorb it unchanged."""
+    and SnapshotVersionConflict is an IOError."""
     path = str(tmp_path / "snap")
     layout.snapshot_write_keyed(spark, _kv(spark, [(1, "a"), (2, "b")]), path, "k")
     layout.snapshot_merge(spark, path, _kv(spark, [(2, "b2")]), "k")  # -> v2
