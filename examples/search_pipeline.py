@@ -6,8 +6,9 @@ tier composes into (no reference analog; engine-native):
   incremental batch ingest (bucket-pruned MERGE) → deletes →
   compaction → stored-index BM25 top-k ≡ from-corpus scores → hybrid lexical×vector RRF fusion over the embeddings
   table → query-model distillation (the streaming gate's frozen
-  artifact); embeddings → IVF index build (partition-pruned
-  inverted lists) → stored-index ANN search ≡ in-memory IVF.
+  artifact); embeddings → IVF index build (inverted lists as a
+  snapshot table, centroids in the index root) → cell-pruned
+  stored-index ANN search ≡ in-memory IVF.
 
 Run: python examples/search_pipeline.py [--sf-dir /root/testdata/sf0.001]
 """
@@ -81,7 +82,7 @@ def main() -> None:
             f"n_terms={len(model['terms'])}"
         )
 
-        # 5. ANN serving index: partition-pruned inverted lists
+        # 5. ANN serving index: cell-pruned inverted lists
         cents = similarity.kmeans_fit_sample(emb, k=8)
         ivf = f"{tmp}/ivf"
         similarity.ann_index_write(emb, ivf, cents)

@@ -288,7 +288,6 @@ def _apply_group_deltas(
     group_cols: list[str],
     sum_cols: list[str],
     txn_update: dict,
-    merge_mode: str = "cow",
 ) -> int:
     """Shared view-merge tail of every sync: aggregate signed per-row
     contributions (``_dn`` + per-column signed sums) by group, add them
@@ -330,7 +329,6 @@ def _apply_group_deltas(
         delete_col="_del",
         _txn_update=txn_update,
         expected_version=view_cur,
-        mode=merge_mode,
     )
 
 
@@ -341,7 +339,6 @@ def agg_view_sync(
     group_cols: list[str],
     sum_cols: list[str],
     txn_app: str = "agg-view",
-    merge_mode: str = "cow",
 ) -> tuple[int | None, int]:
     """Advance the view over every source commit since its watermark
     in ONE atomic view merge: aggregate the span's signed deltas by
@@ -352,16 +349,7 @@ def agg_view_sync(
     consumed_source_version)`` — None when there was nothing new.
     Safe under concurrent foreign view writers (optimistic
     ``expected_version`` retry) and under replay (the watermark
-    absorbs an already-consumed span).
-
-    ``merge_mode`` (round 17) passes through to the view table's
-    ``snapshot_merge``: ``"auto"`` lets a needle sync on a huge view
-    write deletion-vector sidecars instead of rewriting its touched
-    buckets (write cost O(changed groups), not O(touched-bucket
-    rows)) — semantics are identical (MOR is pytest-pinned
-    changelog-equal to COW), reads pay one bounded anti-join until
-    ``layout.compact_dv_buckets`` materializes the debt (the
-    maintenance report recommends it when DV coverage passes 25 %)."""
+    absorbs an already-consumed span)."""
     src_latest = layout.snapshot_latest_version(spark, source_path)
 
     def attempt() -> tuple[int | None, int]:
@@ -387,7 +375,6 @@ def agg_view_sync(
             group_cols,
             sum_cols,
             {txn_app: src_latest},
-            merge_mode=merge_mode,
         )
         return v, src_latest
 
@@ -446,14 +433,11 @@ def distinct_view_sync(
     group_cols: list[str],
     distinct_col: str,
     txn_app: str = "distinct-view",
-    merge_mode: str = "cow",
 ) -> tuple[int | None, int]:
     """Advance the pair view over every source commit since its
-    watermark — same exactly-once contract (and ``merge_mode``
-    passthrough) as ``agg_view_sync``."""
+    watermark — same exactly-once contract as ``agg_view_sync``."""
     return agg_view_sync(
-        spark, source_path, view_path, group_cols + [distinct_col], [],
-        txn_app, merge_mode=merge_mode,
+        spark, source_path, view_path, group_cols + [distinct_col], [], txn_app
     )
 
 
@@ -866,7 +850,6 @@ def join_view_sync(
     sum_cols: list[str],
     txn_app: str = "join-view",
     how: str = "inner",
-    merge_mode: str = "cow",
 ) -> tuple[int | None, tuple[int, int]]:
     """Advance the join view over every commit BOTH sources made since
     their watermarks, in ONE atomic view merge: signed delta rows of
@@ -909,7 +892,7 @@ def join_view_sync(
     if how == "right":
         v, (cb, ca) = join_view_sync(
             spark, b_path, a_path, view_path, join_col, group_cols,
-            sum_cols, txn_app, how="left", merge_mode=merge_mode,
+            sum_cols, txn_app, how="left"
         )
         return v, (ca, cb)
     if how not in ("inner", "left", "full"):
@@ -1055,8 +1038,7 @@ def join_view_sync(
         if b_latest > b_consumed:
             txn_update[f"{txn_app}.b"] = b_latest
         v = _apply_group_deltas(
-            spark, view_path, view_cur, deltas, group_cols, sum_cols,
-            txn_update, merge_mode=merge_mode,
+            spark, view_path, view_cur, deltas, group_cols, sum_cols, txn_update
         )
         return v, (max(a_latest, a_consumed), max(b_latest, b_consumed))
 

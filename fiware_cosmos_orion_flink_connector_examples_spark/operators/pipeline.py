@@ -330,7 +330,7 @@ def _ann_sync(
         (F.col("_change") != "delete") & F.col(vec_col).isNotNull()
     ).select(id_col, vec_col)
     dels = last.filter(F.col("_change") == "delete").select(id_col)
-    v = _sim.ann_index_add_versioned(
+    v = _sim.ann_index_add(
         spark, ups, leg["path"],
         txn_app=leg["txn_app"], txn_id=cur, delete_ids=dels,
     )
@@ -405,7 +405,7 @@ def pipeline_create_legs(
             pins[name] = (path, root_v, "index_root")
         elif kind == "ann_index":
             src = layout.snapshot_read(spark, paths[leg["source"]])
-            root_v = _sim.ann_index_write_versioned(
+            root_v = _sim.ann_index_write(
                 src.filter(F.col(leg["vec_col"]).isNotNull()).select(
                     leg["id_col"], leg["vec_col"]
                 ),

@@ -10,8 +10,8 @@ rankers).  ONE fusion core serves BOTH paths:
   the hash-green ``hybrid_rrf_topk`` registered query;
 * the index-served path — ``bm25_from_index`` + ``ann_index_search``
   over the stored lake indexes (the ``search_index_write`` postings/
-  doclen sub-tables, ``ann_index_write`` hive-partitioned inverted
-  lists).
+  doclen sub-tables, the ``ann_index_write`` inverted-lists table),
+  each pinned by its index root.
 
 Sharing the fusion expression is what makes the round-12 pin
 meaningful: the served path is pytest-pinned row-identical to the
@@ -28,9 +28,9 @@ Scale shape: both candidate lists are top-k-bounded BEFORE the fusion
 join (≤ 2·k_candidates rows per query at any corpus size), the fused
 window partitions per query, and the served path's scans are
 posting-bounded (BM25 term-filtered before any shuffle) and
-partition-pruned (IVF ``_list IN (probed)``).  The RRF score is a
-fixed two-term double expression — no variable-order summation, so it
-is bit-stable across partitionings and engines.
+cell-pruned (only the IVF lists files of probed cells are read).  The
+RRF score is a fixed two-term double expression — no variable-order
+summation, so it is bit-stable across partitionings and engines.
 """
 
 from __future__ import annotations
@@ -122,35 +122,31 @@ def hybrid_rrf_from_indexes(
       the index root, identical scores to the from-corpus path by the
       shared ``_bm25_score_parts`` core);
     * vector: ``ann_index_search`` over the ``ann_index_write``
-      partition-pruned inverted lists.  ``nprobe=None`` probes EVERY
-      cell — exhaustive search, row-identical to the brute-force
-      in-memory ranker (the pytest/driver pin); a smaller ``nprobe``
-      is the recall/latency dial whose loss the IVF recall envelope
-      queries bound.
+      inverted lists, cell-pruned off the lists manifest.
+      ``nprobe=None`` probes EVERY cell (the root's centroid count) —
+      exhaustive search, row-identical to the brute-force in-memory
+      ranker (the pytest and oracle pin); a smaller ``nprobe`` is the
+      recall/latency dial whose loss the IVF recall envelope queries
+      bound.
 
     ``query_terms``: (query_id, term); ``query_vectors``: rows with
     the index's id/vec columns, where the vector id IS the query id —
-    align the two id spaces upstream.  Returns the ``rrf_fuse``
-    frame."""
-    import json
-
+    align the two id spaces upstream.  Raises ``ValueError`` when
+    either path has no index root.  Returns the ``rrf_fuse`` frame."""
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
         similarity,
         text,
     )
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        _read_small,
-    )
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
+    ann_root = layout.index_root_resolve(spark, ann_path)
+    if nprobe is None:
+        nprobe = max(1, len(ann_root["extra"]["centroids"]))
     scored = text.bm25_from_index(spark, bm25_path, query_terms, id_col=id_col)
     lex = rank_lexical(scored, k_candidates, id_col)
-    if nprobe is None:
-        meta = json.loads(
-            _read_small(spark, f"{ann_path.rstrip('/')}/_ivf_index.json").decode()
-        )
-        nprobe = max(1, len(meta["centroids"]))
     searched = similarity.ann_index_search(
-        spark, ann_path, query_vectors, k=k_candidates, nprobe=nprobe
+        spark, ann_path, query_vectors, k=k_candidates, nprobe=nprobe,
+        root_version=ann_root["version"],
     )
     vec = rank_vector(searched, k_candidates)
     return rrf_fuse(lex, vec, k=k, rrf_k=rrf_k)

@@ -7137,8 +7137,9 @@ def _search_index(spark, sf_dir: str) -> str:
 
 
 def _ivf_served_index(spark, sf_dir: str) -> str:
-    """The IVF inverted lists over ``sf_dir``'s embeddings, built once
-    per process like ``_search_index``."""
+    """The IVF index (``ann_index_write``: lists snapshot table +
+    centroids in the index root) over ``sf_dir``'s embeddings, built
+    once per process like ``_search_index``."""
 
     def build(work: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -7188,7 +7189,7 @@ def _ivf_served_index(spark, sf_dir: str) -> str:
     """,
     doc="X3/X4 INDEX-SERVED hybrid retrieval, hash-checked END-TO-END: "
     "bm25_from_index over the search index's postings/doclen tables + "
-    "ann_index_search over the partition-pruned IVF inverted lists "
+    "ann_index_search over the file-pruned IVF inverted lists "
     "(nprobe=all → exhaustive, bit-identical to brute force), fused "
     "by the SAME retrieval.rrf core as the in-memory hybrid_rrf_topk "
     "— and the oracle is that query's full DuckDB SQL, so the driver "
@@ -7198,7 +7199,7 @@ def _ivf_served_index(spark, sf_dir: str) -> str:
     "expression is one shared function.  The indexes build once per "
     "process into a fingerprinted temp dir, so repeat runs "
     "measure the SERVE cost — the 100 TB economics this path exists "
-    "for (posting-bounded + partition-pruned scans instead of corpus "
+    "for (posting-bounded + cell-pruned scans instead of corpus "
     "scans).",
     tags=("ext", "similarity", "text", "X3", "X4", "retrieval", "hybrid"),
 )
@@ -8144,7 +8145,7 @@ def search_index_atomic_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expressible; rows-only with in-row envelope booleans, the exact
     # invariants pinned by pytest (test_ext_operators / similarity)
     doc="[ext] X3 ANN DRIFT MONITOR + ATOMIC REBUILD, driver-registered "
-    "(VERDICT r13 directive #5), running on the round-14 VERSIONED ANN "
+    "(VERDICT r13 directive #5), running on the ANN "
     "index (inverted lists as a snapshot table bucketed by coarse "
     "cell, centroids pinned in the index root — adds are atomic "
     "merges, rebuild flips centroids+lists in ONE root rename): train "
@@ -8158,9 +8159,9 @@ def search_index_atomic_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on the full contents (observability values — bounded-probe recall "
     "at tiny nprobe is geometry-noisy, so no ordering is claimed), "
     "plus the rebuild's DETERMINISTIC integrity envelopes: exhaustive "
-    "recall is still exactly 1.0 through the atomic two-rename swap, "
+    "recall is still exactly 1.0 through the atomic root flip, "
     "and the rebuilt index holds every vector (no loss through the "
-    "swap).  The probe set is a bounded deterministic sample (<=16 "
+    "flip).  The probe set is a bounded deterministic sample (<=16 "
     "queries), so monitor cost is independent of index size — the "
     "maintenance-cadence economics the 100 TB deployment needs.",
     tags=("ext", "similarity", "X3", "ann", "envelope"),
@@ -8201,11 +8202,10 @@ def ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = similarity.kmeans_fit_sample(
             head, k=8, cache_key=("ann_drift_head", sf_dir)
         )
-        # round 14: the VERSIONED index — the driver row proves the
-        # snapshot-backed ANN serving path (atomic add + root-flip
-        # rebuild), not just the monitor arithmetic
-        similarity.ann_index_write_versioned(head, idx, cents)
-        similarity.ann_index_add_versioned(spark, tail, idx)
+        # the registered row proves the ANN serving path (atomic add +
+        # root-flip rebuild), not just the monitor arithmetic
+        similarity.ann_index_write(head, idx, cents)
+        similarity.ann_index_add(spark, tail, idx)
         # the PRE-rebuild observations exist only before the root flip —
         # persist them with the fixture (deterministic: seeded kmeans,
         # fixed probe sample) so cached repeats serve them
@@ -8219,7 +8219,7 @@ def ann_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "full": pre_pair[len(cents)],
             "drifted": pre_pair[1],
         }
-        similarity.ann_index_rebuild_versioned(spark, idx, k_centroids=8)
+        similarity.ann_index_rebuild(spark, idx, k_centroids=8)
         with open(f"{root_dir}/pre.json", "w") as fh:
             json.dump(pre, fh)
 

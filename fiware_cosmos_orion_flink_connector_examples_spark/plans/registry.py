@@ -79,31 +79,10 @@ def register(name: str, oracle: str | None = None, doc: str = "", tags: tuple[st
 # #8).  Everything outside the window holds a recent proof, so no
 # proof ages past ~3 rounds before rotation re-proves it.
 CHANGED_LAST_ROUND: tuple[str, ...] = (
-    # both now serve from the shared search index fixture
+    # both serve from the shared search index fixture; the hybrid's
+    # vector leg now serves from the one ANN index format
     "hybrid_rrf_served_topk",
     "phrase_index_served_equals",
-)
-# Documentation + rotation-test bookkeeping (class 2 membership comes
-# from artifact history, not from this tuple).  ROUND HYGIENE: at the
-# START of each round, empty both tuples — the new CORRECTNESS_r*.json
-# artifact turns last round's never-checked/changed entries into
-# history, and stale entries here would front queries that no longer
-# need it.  Repopulate CHANGED_LAST_ROUND only for oracle-bearing
-# queries physically rewritten after their latest driver proof.
-# NOTE: ordered_query_names() never consults this tuple — class-2
-# membership comes from artifact history alone — and the rotation test
-# asserts window membership only for entries with NO artifact history,
-# so a CORRECTNESS artifact landing mid/post-round cannot break the
-# suite (ADVICE r5 medium; the r5 breakage mode).
-NEW_THIS_ROUND: tuple[str, ...] = (
-    # r17 round hygiene: emptied at round start — CORRECTNESS_r16.json
-    # landed with every registration green (50 checked, 0 fail), so
-    # prior rounds' entries are now artifact history.  Repopulated
-    # below as round-17 queries register.
-    "snapshot_mor_capstone",  # r17 directive #1: merge-on-read DVs
-    "snapshot_restore_capstone",  # r17 directive #2: rollback verb
-    "join_view_composite_key_capstone",  # r17 directive #3
-    "join_pair_readers_capstone",  # r17 directive #6
 )
 
 

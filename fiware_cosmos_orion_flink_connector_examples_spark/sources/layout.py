@@ -53,62 +53,6 @@ def write_clustered(
     )
 
 
-def compact_table(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    sort_cols: list[str] | None = None,
-    fmt: str = "parquet",
-) -> int:
-    """Small-file compaction (the OPTIMIZE-style maintenance pass):
-    rewrite an unpartitioned table so each output file targets
-    ``target_file_bytes``, optionally restoring ``sort_cols`` order
-    within files (compaction otherwise interleaves row groups and
-    destroys min/max selectivity).  Returns the output file count.
-
-    Sizing goes through the Hadoop FileSystem API (portable to
-    HDFS/S3A, not just local paths): n_files = ceil(current bytes /
-    target).  The rewrite lands in a sibling temp dir and swaps in via
-    two FileSystem renames — readers see the old or the new listing,
-    never a half-written mix; the pre-swap table is deleted only after
-    the swap completes.
-
-    Streaming ingest (per-trigger micro-batch files, the reference's
-    arrival pattern) is exactly what produces the small-file explosion
-    this repairs; run it on a schedule against spool-fed tables.
-    """
-    import math
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(hpath).getLength()
-    n = max(1, math.ceil(total / target_file_bytes))
-
-    df = spark.read.format(fmt).load(path)
-    if sort_cols:
-        # repartitionByRange + sortWithinPartitions: globally range-
-        # clustered files whose min/max stats stay selective
-        out = df.repartitionByRange(n, *[F.col(c) for c in sort_cols])
-        out = out.sortWithinPartitions(*sort_cols)
-    else:
-        out = df.repartition(n)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    old = path.rstrip("/") + ".compact.old"
-    out.write.format(fmt).mode("overwrite").save(tmp)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    old_p = jvm.org.apache.hadoop.fs.Path(old)
-    if fs.exists(old_p):
-        fs.delete(old_p, True)
-    if not fs.rename(hpath, old_p):
-        raise IOError(f"compact_table: rename {path} -> {old} failed")
-    if not fs.rename(tmp_p, hpath):
-        fs.rename(old_p, hpath)  # roll back
-        raise IOError(f"compact_table: rename {tmp} -> {path} failed")
-    fs.delete(old_p, True)
-    return len(spark.read.format(fmt).load(path).inputFiles())
-
-
 def zorder_key(cols: list, bits: int = 8):
     """Morton (Z-order) interleave of pre-scaled integer columns: bit b
     of column i lands at position ``b * len(cols) + i`` of the key, so
@@ -1298,7 +1242,6 @@ def snapshot_merge(
     _txn_update: dict | None = None,
     expected_version: int | None = None,
     mode: str = "cow",
-    mor_max_fraction: float = _DV_AUTO_MAX_FRACTION,
 ) -> int:
     """MERGE INTO a keyed snapshot table with FULL-TABLE atomicity:
     matched keys replaced, new keys inserted, and only the buckets
@@ -1360,7 +1303,7 @@ def snapshot_merge(
       Read cost until then: the anti-join against O(deleted positions).
     - ``"auto"``: per-merge choice, decided from EXACT row counts the
       probe scan already produces — MOR when matched keys are under
-      ``mor_max_fraction`` of the matched buckets' live rows, COW
+      ``_DV_AUTO_MAX_FRACTION`` of the matched buckets' live rows, COW
       otherwise (a backfill that touches most rows should rewrite and
       keep reads clean; a needle update should not rewrite gigabytes).
 
@@ -1531,7 +1474,7 @@ def snapshot_merge(
     if mode == "auto":
         m_rows = sum(r["_matched"] for r in probe_rows if r["_pb"] in mset)
         b_rows = sum(r["_rows"] for r in probe_rows if r["_pb"] in mset)
-        use_mor = bool(b_rows) and m_rows < mor_max_fraction * b_rows
+        use_mor = bool(b_rows) and m_rows < _DV_AUTO_MAX_FRACTION * b_rows
     else:
         use_mor = mode == "mor"
     # matched-bucket rows are ALSO the only possible `_old` rows for

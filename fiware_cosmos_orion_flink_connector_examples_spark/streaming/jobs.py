@@ -277,103 +277,16 @@ def sessionize_batch(events: DataFrame, gap_secs: float = 30.0) -> DataFrame:
     ).drop("session_id")
 
 
-def maintain_hourly_rollup(events: DataFrame, table_path: str):
-    """Continuous-aggregate maintenance: keep an hourly rollup TABLE
-    (parquet, hive-partitioned by hour) incrementally up to date from
-    a stream — the timescale-style materialized rollup, done the
-    Spark-idiomatic way.
-
-    Per micro-batch: (1) partially aggregate the batch per
-    (hour, event_type) — mergeable sums/counts only, never averages;
-    (2) read the CURRENT rollup rows for just the touched hour
-    partitions (partition pruning makes this cheap at any scale);
-    (3) merge by re-summing; (4) write back with DYNAMIC partition
-    overwrite, so only touched hour partitions are replaced — the
-    table stays consistent and untouched history is never rewritten.
-    At 100 TB this is how a 10-year rollup absorbs a late hour without
-    a full recompute.
-
-    DELIVERY CAVEAT (stated, not hidden): this plain-parquet variant is
-    AT-LEAST-ONCE under foreachBatch retries — a batch replayed after
-    its dynamic overwrite completed re-adds its counts, and dynamic
-    partition overwrite is not atomic across partitions, so a crash
-    mid-write can leave some hours post-merge and others pre-merge.
-    ``maintain_hourly_rollup_txn`` is the EXACTLY-ONCE variant on the
-    snapshot commit log (atomic cross-partition commit + per-app
-    batch watermark); use it unless readers require the bare
-    hive-partitioned layout.
-
-    Returns the function to pass to ``foreachBatch``.
-    """
-
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        part = batch.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"),
-            "event_type",
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        part = part.persist()
-        try:
-            hours = [r.hour for r in part.select("hour").distinct().collect()]
-            if not hours:
-                return
-            # Probe table existence explicitly: ONLY a missing table may
-            # fall back to `merged = part`.  A transient read failure
-            # (IO error, corrupt footer, schema drift) must instead fail
-            # the micro-batch so checkpointing retries it — swallowing it
-            # would overwrite touched hour partitions with batch-only
-            # partial counts (silent data loss in the rollup).
-            jvm = spark._jvm
-            jsc = spark._jsc
-            hpath = jvm.org.apache.hadoop.fs.Path(table_path)
-            fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-            if fs.exists(hpath):
-                existing = (
-                    spark.read.parquet(table_path)
-                    .filter(F.col("hour").isin(hours))
-                    .select("hour", "event_type", "n_events", "sum_value")
-                )
-                merged = (
-                    part.unionByName(existing)
-                    .groupBy("hour", "event_type")
-                    .agg(
-                        F.sum("n_events").alias("n_events"),
-                        F.sum("sum_value").alias("sum_value"),
-                    )
-                )
-            else:  # first batch: table does not exist yet
-                merged = part
-            # materialize BEFORE overwriting: `merged` reads the same
-            # path the write replaces — localCheckpoint severs that
-            # read-under-overwrite race (touched partitions only, so
-            # the materialization is small at any scale)
-            merged = merged.localCheckpoint()
-            old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    merged.write.partitionBy("hour")
-                    .mode("overwrite")
-                    .parquet(table_path)
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
-        finally:
-            part.unpersist()
-
-    return merge_batch
-
-
-def maintain_hourly_rollup_txn(
+def maintain_hourly_rollup(
     table_path: str,
     txn_app_id: str = "hourly-rollup",
 ):
-    """EXACTLY-ONCE continuous-aggregate maintenance on the SNAPSHOT
-    layer — the transactional twin of ``maintain_hourly_rollup``:
-    the rollup lives as a keyed snapshot table (key = hour|event_type),
+    """EXACTLY-ONCE continuous-aggregate maintenance: keep an hourly
+    rollup TABLE incrementally up to date from a stream — the
+    timescale-style materialized rollup.  Per micro-batch the batch is
+    partially aggregated per (hour, event_type) — mergeable sums and
+    counts only, never averages — and re-summed into the touched keys.
+    The rollup lives as a keyed snapshot table (key = hour|event_type),
     each micro-batch becomes ONE atomic manifest commit carrying BOTH
     the re-summed touched keys and the per-app batch watermark, so
 
@@ -392,8 +305,8 @@ def maintain_hourly_rollup_txn(
         re-reads the new latest and recomputes) instead of silently
         losing the foreign keys' updates (review finding, round 13:
         the guard existed but was not wired here);
-      * cross-hour atomicity is total — no partial dynamic-overwrite
-        states (the plain variant's documented gap).
+      * cross-hour atomicity is total — a batch touching several
+        hours commits all of them or none.
 
     Scale shape: the batch partial-agg is map-side combined; the
     read-modify joins the CURRENT table against the batch's touched
@@ -466,7 +379,7 @@ def maintain_hourly_rollup_txn(
             )
 
         layout.optimistic_commit(
-            f"maintain_hourly_rollup_txn batch {batch_id}", attempt
+            f"maintain_hourly_rollup batch {batch_id}", attempt
         )
 
     return merge_batch
@@ -1540,7 +1453,7 @@ def maintain_cms_rollup(
             if batch_id <= wm.get("batch_id", -1):
                 return  # redelivered batch already folded into the table
         if fs.exists(hpath):
-            # the maintain_hourly_rollup probe discipline: only a
+            # probe discipline: only a
             # MISSING table falls back to batch-only counts — a read
             # failure must fail the micro-batch so checkpointing
             # retries instead of silently dropping history
@@ -1663,8 +1576,8 @@ def maintain_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """EXACTLY-ONCE streaming maintenance of a VERSIONED IVF index
-    (``similarity.ann_index_write_versioned``): each micro-batch of
+    """EXACTLY-ONCE streaming maintenance of an IVF index
+    (``similarity.ann_index_write``): each micro-batch of
     (vector id, embedding) rows — optionally carrying a boolean
     ``_del`` column for removals — becomes ONE atomic merge into the
     lists snapshot table plus a root publish whose txn watermark is
@@ -1672,7 +1585,7 @@ def maintain_ann_index(
     leaves the previous root serving (the dangling lists sub-version
     is merged over on retry), and a searcher can never see a batch's
     vectors under centroids that didn't place them (adds assign to the
-    FROZEN root centroids; retraining is ``ann_index_rebuild_versioned``,
+    FROZEN root centroids; retraining is ``ann_index_rebuild``,
     a separate atomic root flip).  The ANN twin of
     ``maintain_search_index`` — together they make every serving index
     (BM25/phrase/ANN) maintainable from a stream with the same
@@ -1692,7 +1605,7 @@ def maintain_ann_index(
             flag = F.coalesce(F.col("_del"), F.lit(False))
             dels = batch.filter(flag).select(id_col)
             vecs = batch.filter(~flag).select(id_col, vec_col)
-        _sim.ann_index_add_versioned(
+        _sim.ann_index_add(
             batch.sparkSession,
             vecs,
             index_path,
@@ -1711,7 +1624,6 @@ def maintain_agg_view(
     group_cols: list[str],
     sum_cols: list[str],
     txn_app: str = "agg-view",
-    merge_mode: str = "cow",
 ):
     """EXACTLY-ONCE streaming pipeline sink: each micro-batch of keyed
     upserts (optional boolean ``_del`` column) MERGEs into the source
@@ -1724,12 +1636,6 @@ def maintain_agg_view(
     re-runs the sync).  PAIRING CONTRACT: ``txn_app`` must be the SAME
     string the view was created with (``ivm.agg_view_create``'s
     ``txn_app``, default ``"agg-view"``).
-
-    ``merge_mode`` (round 17) applies to BOTH legs: ``"auto"`` lets a
-    needle micro-batch write deletion-vector sidecars instead of
-    rewriting source/view buckets (the steady-state streaming shape —
-    most triggers touch few keys); run ``layout.compact_dv_buckets``
-    on a maintenance cadence to materialize the accumulated debt.
 
     The lakehouse "always-fresh aggregate" twin of
     ``maintain_search_index`` / ``maintain_ann_index``.  Returns the
@@ -1754,13 +1660,12 @@ def maintain_agg_view(
                 key_col,
                 delete_col="_del" if "_del" in batch.columns else None,
                 _txn_update={f"{txn_app}-src": batch_id},
-                mode=merge_mode,
             )
         except _layout.SnapshotTxnAlreadyApplied:
             pass  # replayed batch — the source already has it
         _ivm.agg_view_sync(
             spark, source_path, view_path, group_cols, sum_cols,
-            txn_app=txn_app, merge_mode=merge_mode,
+            txn_app=txn_app,
         )
 
     return apply_batch
@@ -1821,7 +1726,6 @@ def maintain_join_view(
     txn_app: str = "join-view",
     how: str = "inner",
     side: str = "a",
-    merge_mode: str = "cow",
 ):
     """EXACTLY-ONCE streaming maintenance of an incremental JOIN view
     (round 16, VERDICT r15 #2): each micro-batch of keyed upserts for
@@ -1868,14 +1772,12 @@ def maintain_join_view(
                 key_col,
                 delete_col="_del" if "_del" in batch.columns else None,
                 _txn_update={f"{txn_app}-src.{side}": batch_id},
-                mode=merge_mode,
             )
         except _layout.SnapshotTxnAlreadyApplied:
             pass  # replayed batch — this side already has it
         _ivm.join_view_sync(
             spark, a_path, b_path, view_path, join_col,
             group_cols, sum_cols, txn_app=txn_app, how=how,
-            merge_mode=merge_mode,
         )
 
     return apply_batch

@@ -1,10 +1,12 @@
-"""Round-14 VERSIONED ANN index: IVF inverted lists as a keyed snapshot
-table (bucket = coarse cell via layout's pluggable bucket_col) with the
-trained centroids pinned in the index root — atomic add/rebuild, no
-duplicate rows on re-add, file pruning off the manifest bucket map,
-root-level time travel.  Closes the ANN third of VERDICT r13 missing #3.
+"""The ANN index: IVF inverted lists as a keyed snapshot table (bucket =
+coarse cell via layout's pluggable bucket_col) with the trained
+centroids pinned in the index root — atomic add/rebuild, no duplicate
+rows on re-add, file pruning off the manifest bucket map, root-level
+time travel, and ``ValueError`` for a path with no index root.
 Reference scope note: the reference has no vector surface — [ext].
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,21 +28,20 @@ def _res(df):
     return {(r["q_id"], r["n_id"], r["cos"], r["rank"]) for r in df.collect()}
 
 
-def test_versioned_search_equals_plain_and_bruteforce(spark, tmp_path):
-    """Same centroids, same queries: the versioned index serves rows
-    identical to the plain hive-partitioned index at every nprobe, and
+def test_index_search_equals_ivf_and_bruteforce(spark, tmp_path):
+    """Same centroids, same queries: the stored index serves rows
+    identical to the in-memory topk_cosine_ivf at every nprobe, and
     nprobe=all is bit-identical to brute force."""
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=5)
-    plain, versioned = str(tmp_path / "plain"), str(tmp_path / "versioned")
-    similarity.ann_index_write(emb, plain, cents)
-    similarity.ann_index_write_versioned(emb, versioned, cents)
+    idx = str(tmp_path / "idx")
+    similarity.ann_index_write(emb, idx, cents)
     q = _emb(spark, VECS[:6])
     for nprobe in (1, 2, 4):
-        got = _res(similarity.ann_index_search(spark, versioned, q, k=3, nprobe=nprobe))
-        want = _res(similarity.ann_index_search(spark, plain, q, k=3, nprobe=nprobe))
+        got = _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=nprobe))
+        want = _res(similarity.topk_cosine_ivf(emb, q, cents, k=3, nprobe=nprobe))
         assert got == want, f"nprobe={nprobe}"
-    exhaustive = _res(similarity.ann_index_search(spark, versioned, q, k=3, nprobe=4))
+    exhaustive = _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=4))
     brute = {
         (r["q_id"], r["n_id"], r["cos"], r["rank"])
         for r in similarity.topk_cosine_bruteforce(emb, q, 3).collect()
@@ -51,21 +52,20 @@ def test_versioned_search_equals_plain_and_bruteforce(spark, tmp_path):
 def test_add_replaces_reassigned_vector(spark, tmp_path):
     """Atomic add: a re-added vector id REPLACES its stored row even
     when its embedding moved it to a different cell — exactly one row
-    per id in the lists table (the plain path's bare append would
-    duplicate), and search serves the new embedding."""
+    per id in the lists table, and search serves the new embedding."""
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=5)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
+    similarity.ann_index_write(emb, idx, cents)
 
     moved = _emb(spark, [(7, [99.0, 0.1, 0.1, 0.1]), (100, [1.0, 2.0, 3.0, 4.0])])
-    similarity.ann_index_add_versioned(spark, moved, idx, txn_app="add", txn_id=1)
+    similarity.ann_index_add(spark, moved, idx, txn_app="add", txn_id=1)
     root = layout.index_root_resolve(spark, idx)
     lists = layout.snapshot_read(spark, f"{idx}/lists", version=root["tables"]["lists"])
     assert lists.filter(F.col("vec_id") == 7).count() == 1
     assert lists.count() == 41
     # replayed batch: no-op at the root
-    similarity.ann_index_add_versioned(spark, moved, idx, txn_app="add", txn_id=1)
+    similarity.ann_index_add(spark, moved, idx, txn_app="add", txn_id=1)
     assert layout.index_root_latest(spark, idx) == 2
 
     # exhaustive search ≡ brute force over the UPDATED logical corpus
@@ -90,15 +90,15 @@ def test_atomic_rebuild_and_root_time_travel(spark, tmp_path):
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=2, iters=3)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
-    similarity.ann_index_add_versioned(
+    similarity.ann_index_write(emb, idx, cents)
+    similarity.ann_index_add(
         spark, _emb(spark, [(100 + i, v) for i, v in VECS[:10]]), idx
     )
     pre_root = layout.index_root_resolve(spark, idx)
     q = _emb(spark, VECS[:5])
     pre = _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=1))
 
-    v = similarity.ann_index_rebuild_versioned(spark, idx, k_centroids=4)
+    v = similarity.ann_index_rebuild(spark, idx, k_centroids=4)
     assert v == pre_root["version"] + 1
     root = layout.index_root_resolve(spark, idx)
     assert list(root["tables"]) == [f"lists_r{v}"]
@@ -112,7 +112,9 @@ def test_atomic_rebuild_and_root_time_travel(spark, tmp_path):
     }
     assert got == brute
     # time travel: the pre-rebuild root serves the OLD index unchanged
-    old = similarity._ann_search_versioned(spark, idx, pre_root, q, 3, 1)
+    old = similarity.ann_index_search(
+        spark, idx, q, k=3, nprobe=1, root_version=pre_root["version"]
+    )
     assert _res(old) == pre
 
     # recall monitor rides the versioned index end to end
@@ -127,7 +129,7 @@ def test_add_crash_before_root_leaves_old_index(spark, tmp_path, monkeypatch):
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=3)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
+    similarity.ann_index_write(emb, idx, cents)
     q = _emb(spark, VECS[:4])
     pre = _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=4))
 
@@ -137,14 +139,14 @@ def test_add_crash_before_root_leaves_old_index(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(layout, "index_root_commit", dying_commit)
     batch = _emb(spark, [(200, [5.0, 5.0, 5.0, 5.0])])
     with pytest.raises(RuntimeError, match="injected"):
-        similarity.ann_index_add_versioned(spark, batch, idx, txn_app="a", txn_id=1)
+        similarity.ann_index_add(spark, batch, idx, txn_app="a", txn_id=1)
     monkeypatch.undo()
 
     assert layout.snapshot_latest_version(spark, f"{idx}/lists") == 2  # dangling
     assert layout.index_root_latest(spark, idx) == 1
     assert _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=4)) == pre
 
-    similarity.ann_index_add_versioned(spark, batch, idx, txn_app="a", txn_id=1)
+    similarity.ann_index_add(spark, batch, idx, txn_app="a", txn_id=1)
     assert layout.index_root_latest(spark, idx) == 2
     got = _res(similarity.ann_index_search(spark, idx, q, k=3, nprobe=4))
     brute = {
@@ -161,7 +163,7 @@ def test_versioned_untrained_empty_corpus(spark, tmp_path):
     centroids — searches fall back to (empty) brute force instead of
     crashing, the empty-ingest-day contract every operator keeps."""
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(_emb(spark, []), idx, [])
+    similarity.ann_index_write(_emb(spark, []), idx, [])
     out = similarity.ann_index_search(spark, idx, _emb(spark, VECS[:2]), k=3)
     assert out.count() == 0
 
@@ -174,11 +176,11 @@ def test_add_versioned_with_deletes_is_one_atomic_commit(spark, tmp_path):
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=3)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
+    similarity.ann_index_write(emb, idx, cents)
 
     adds = _emb(spark, [(100, [9.0, 9.0, 9.0, 9.0])])
     dels = spark.createDataFrame([(3,), (5,)], "vec_id long")
-    similarity.ann_index_add_versioned(
+    similarity.ann_index_add(
         spark, adds, idx, txn_app="d", txn_id=1, delete_ids=dels
     )
     assert layout.index_root_latest(spark, idx) == 2  # ONE publish
@@ -211,7 +213,7 @@ def test_maintain_ann_index_exactly_once(spark, tmp_path):
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=3)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
+    similarity.ann_index_write(emb, idx, cents)
     sink = jobs.maintain_ann_index(idx, "stream-app")
 
     b0 = spark.createDataFrame(
@@ -269,7 +271,7 @@ def test_ann_stream_e2e_structured_streaming(spark, tmp_path):
     emb = _emb(spark)
     cents = similarity.kmeans_fit_sample(emb, k=4, iters=3)
     idx = str(tmp_path / "idx")
-    similarity.ann_index_write_versioned(emb, idx, cents)
+    similarity.ann_index_write(emb, idx, cents)
     stream = (
         spark.readStream.schema(
             "vec_id long, embedding array<double>, _del boolean"
@@ -309,3 +311,26 @@ def test_ann_stream_e2e_structured_streaming(spark, tmp_path):
     # checkpointed restart, no new input: no root movement
     start().awaitTermination(120)
     assert layout.index_root_latest(spark, idx) == 3
+
+
+def test_no_index_root_raises_value_error(spark, tmp_path):
+    """A path with no index root (here: plain parquet vectors) is not an
+    ANN index: search, the recall monitor and the hybrid served path
+    each raise ``ValueError`` naming it, the ``bm25_from_index`` rule."""
+    from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
+        retrieval,
+    )
+
+    plain = str(tmp_path / "plain")
+    q = _emb(spark, VECS[:2])
+    q.write.parquet(plain)
+    match = re.escape(f"no committed index root at {plain}")
+    with pytest.raises(ValueError, match=match):
+        similarity.ann_index_search(spark, plain, q, k=3)
+    with pytest.raises(ValueError, match=match):
+        similarity.ann_index_recall(spark, plain, k=3)
+    terms = spark.createDataFrame([(0, "hash")], "query_id int, term string")
+    with pytest.raises(ValueError, match=match):
+        retrieval.hybrid_rrf_from_indexes(
+            spark, str(tmp_path / "bm25"), plain, terms, q
+        )

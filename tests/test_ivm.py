@@ -1689,84 +1689,3 @@ def test_pair_view_readers_over_join_view(spark, tmp_path):
     dims.pop(3)
     ivm.join_view_sync(spark, a, b, view, "j", ["g", "x"], [])
     check()
-
-
-def test_view_sync_merge_mode_auto_uses_dvs(spark, tmp_path):
-    """merge_mode='auto' on a view sync: a needle source commit stops
-    rewriting the view's touched buckets — the view table gains
-    deletion vectors / appended files instead, stays ≡ recompute, and
-    layout.compact_dv_buckets clears the debt without disturbing the
-    watermark (the next sync carries on exactly-once)."""
-    source, view = str(tmp_path / "src"), str(tmp_path / "view")
-    layout.snapshot_write_keyed(
-        spark, _src(spark, [(i, f"g{i % 50}", i) for i in range(500)]),
-        source, "k", n_buckets=4,
-    )
-    ivm.agg_view_create(spark, source, view, ["g"], ["x"], n_buckets=4)
-    v1_files = set(layout.snapshot_manifest(spark, view, 1)["files"])
-    # needle: one group's total moves
-    layout.snapshot_merge(
-        spark, source,
-        spark.createDataFrame(
-            [(7, "g7", 7000, False)],
-            "k long, g string, x long, _del boolean",
-        ),
-        "k", delete_col="_del",
-    )
-    ivm.agg_view_sync(spark, source, view, ["g"], ["x"], merge_mode="auto")
-    m = layout.snapshot_manifest(spark, view)
-    assert m["dv"], "needle sync must take the MOR path"
-    assert v1_files <= set(m["files"]), "no view bucket rewritten"
-    assert _recompute(spark, source) == {
-        (r["g"], r["_n"], r["sum_x"])
-        for r in ivm.agg_view_read(spark, view).collect()
-    }
-    # materialize the debt; the next sync still applies exactly-once
-    layout.compact_dv_buckets(spark, view)
-    assert not layout.snapshot_manifest(spark, view)["dv"]
-    layout.snapshot_merge(
-        spark, source,
-        spark.createDataFrame(
-            [(8, None, None, True)],
-            "k long, g string, x long, _del boolean",
-        ),
-        "k", delete_col="_del",
-    )
-    ivm.agg_view_sync(spark, source, view, ["g"], ["x"], merge_mode="auto")
-    assert _recompute(spark, source) == {
-        (r["g"], r["_n"], r["sum_x"])
-        for r in ivm.agg_view_read(spark, view).collect()
-    }
-
-
-def test_maintain_agg_view_merge_mode_auto(spark, tmp_path):
-    """The streaming sink with merge_mode='auto': needle micro-batches
-    write deletion vectors on BOTH legs (source merge and view merge)
-    instead of rewriting buckets, replays stay absorbed, and the view
-    equals a recompute."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.streaming import (
-        jobs,
-    )
-
-    source, view = str(tmp_path / "src"), str(tmp_path / "view")
-    layout.snapshot_write_keyed(
-        spark, _src(spark, [(i, f"g{i}", i) for i in range(400)]),
-        source, "k",
-    )
-    ivm.agg_view_create(spark, source, view, ["g"], ["x"], txn_app="s")
-    src_v1 = set(layout.snapshot_manifest(spark, source, 1)["files"])
-    sink = jobs.maintain_agg_view(
-        source, view, "k", ["g"], ["x"], txn_app="s", merge_mode="auto"
-    )
-    b0 = spark.createDataFrame(
-        [(7, "g7", 7000, False), (8, None, None, True)],
-        "k long, g string, x long, _del boolean",
-    )
-    sink(b0, 0)
-    sink(b0, 0)  # replay absorbed
-    assert layout.snapshot_manifest(spark, source)["dv"], "source took MOR"
-    assert src_v1 <= set(
-        layout.snapshot_manifest(spark, source)["files"]
-    ), "no source bucket rewritten by the needle batch"
-    assert layout.snapshot_manifest(spark, view)["dv"], "view took MOR"
-    assert _view(spark, view) == _recompute(spark, source)

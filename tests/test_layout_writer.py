@@ -68,66 +68,6 @@ def test_write_clustered_salted_bounds_files(spark, tmp_path):
     assert all(1 <= r.nf <= 3 for r in per_value)
 
 
-def test_compact_table_merges_small_files(spark, tmp_path):
-    """64 tiny streaming-style files compact to the target count with
-    identical content, and the swap leaves no temp dirs behind."""
-    out = str(tmp_path / "tiny_files")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(64).write.parquet(out)
-    assert len(spark.read.parquet(out).inputFiles()) == 64
-    before = sorted(
-        tuple(str(r[c]) for c in sorted(ev.columns))
-        for r in spark.read.parquet(out).collect()
-    )
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        compact_table,
-    )
-
-    n = compact_table(spark, out, target_file_bytes=1 << 30)
-    assert n == 1
-    files = spark.read.parquet(out).inputFiles()
-    assert len(files) == 1
-    after = sorted(
-        tuple(str(r[c]) for c in sorted(ev.columns))
-        for r in spark.read.parquet(out).collect()
-    )
-    assert after == before
-    leftovers = [p.name for p in tmp_path.iterdir() if "compact" in p.name]
-    assert leftovers == []
-
-
-def test_compact_table_restores_sort_selectivity(spark, tmp_path):
-    """With sort_cols, compaction range-partitions + sorts so file-level
-    min/max ranges are disjoint (selective) rather than interleaved."""
-    out = str(tmp_path / "tiny_sorted")
-    ev = load_table(spark, SF, "events")
-    ev.repartition(16).write.parquet(out)
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        compact_table,
-    )
-
-    total = sum(
-        f.stat().st_size
-        for f in (tmp_path / "tiny_sorted").rglob("*.parquet")
-    )
-    n = compact_table(spark, out, target_file_bytes=max(total // 4, 1),
-                      sort_cols=["value"])
-    assert n >= 2
-    # per-file (min, max) of the sort column must not overlap
-    per_file = (
-        spark.read.parquet(out)
-        .select("value", F.input_file_name().alias("f"))
-        .groupBy("f")
-        .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-        .collect()
-    )
-    spans = sorted((r.lo, r.hi) for r in per_file)
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, spans
-
-
 def _files_overlapping_ybox(spark, path, y_lo, y_hi):
     """Count output files whose per-file [min(y), max(y)] intersects
     the box — exactly the pruning decision a min/max-stats reader

@@ -306,8 +306,8 @@ def test_streaming_bm25_gate_matches_batch(spark, tmp_path):
 def test_ann_index_partition_pruned_search(spark, tmp_path):
     """The stored IVF index: search output is row-identical to the
     in-memory topk_cosine_ivf on the same centroids, and the scan is
-    PARTITION-PRUNED to the probed lists (plan shows PartitionFilters
-    on _list; unprobed list directories are never read)."""
+    PRUNED to the probed cells (only lists files whose manifest bucket
+    is a probed cell are read; the others are never opened)."""
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import similarity
     from fiware_cosmos_orion_flink_connector_examples_spark.sources.tables import (
         load_table,
@@ -325,15 +325,22 @@ def test_ann_index_partition_pruned_search(spark, tmp_path):
     assert as_set(got) == as_set(expected)
     assert as_set(got), "non-empty search result"
 
-    # partition pruning: the probed filter reaches the scan
-    import re
+    # cell pruning: with the probed set supplied (the lazy plan —
+    # eagerly() checkpoints the default one), the scan reads exactly
+    # the probed cells' files
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # eagerly() checkpoints the result; re-derive the scan side instead
-    base = spark.read.parquet(idx).filter("_list IN (0, 1)")
-    splan = base._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", splan)
-    assert m and "_list" in m.group(1)
+    probed = similarity._probe_cells(
+        cents, 2, [r["embedding"] for r in qs.collect()]
+    )
+    root = layout.index_root_resolve(spark, idx)
+    man = layout.snapshot_manifest(spark, f"{idx}/lists", root["tables"]["lists"])
+    want_files = {f for f in man["files"] if man["buckets"][f] in probed}
+    lazy = similarity.ann_index_search(spark, idx, qs, k=5, nprobe=2, _probed=probed)
+    assert as_set(lazy) == as_set(expected)
+    read = {f.split("/")[-1] for f in lazy.inputFiles() if f"{idx}/lists/" in f}
+    assert read == {f.split("/")[-1] for f in want_files}
+    assert len(want_files) < len(man["files"]), "some cell was pruned"
 
 
 def test_maintain_cms_rollup_equals_oneshot(spark, tmp_path):

@@ -29,25 +29,6 @@ def test_rotation_priority_classes():
     assert rounds == sorted(rounds), "least-recently-green order violated"
 
 
-def test_new_queries_inside_window():
-    """Every this-round query that has NOT yet earned a driver row must
-    be in the 50-slot driver window — the VERDICT r4 #1 defect (queries
-    shipped without a driver row) must not recur.
-
-    Phase-aware (ADVICE r5 medium): once the round's CORRECTNESS
-    artifact lands, the new queries gain history and rightly rotate
-    toward the back — entries with an artifact row are exempt, so the
-    artifact landing mid/post-round cannot break the suite."""
-    window = set(registry.ordered_query_names()[:50])
-    hist = registry._round_history()
-    missing = [
-        n
-        for n in registry.NEW_THIS_ROUND
-        if n in registry.QUERIES and n not in hist and n not in window
-    ]
-    assert missing == []
-
-
 def test_window_plus_history_covers_everything():
     """Every query is either in this round's 50-window or has a prior
     driver row — the union of artifacts after this round covers the

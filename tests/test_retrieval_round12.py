@@ -153,7 +153,7 @@ def test_ann_index_drift_monitor_and_rebuild(spark, tmp_path):
     """VERDICT r11 #5: ann_index_add freezes centroids, so a drifted
     ingest batch degrades recall SILENTLY — the monitor must measure
     the drop, and ann_index_rebuild (retrain on current contents +
-    atomic swap) must restore it.  Geometry: two well-separated
+    atomic root flip) must restore it.  Geometry: two well-separated
     training clusters; the drifted batch straddles the frozen cells'
     decision boundary, so nprobe=1 queries see only half their true
     neighbors until a retrained centroid captures the new cluster."""
@@ -181,9 +181,12 @@ def test_ann_index_drift_monitor_and_rebuild(spark, tmp_path):
     ]
     drifted = spark.createDataFrame(drift_rows, "vec_id long, embedding array<double>")
     similarity.ann_index_add(spark, drifted, idx)
+    root = layout.index_root_resolve(spark, idx)
+    lists = layout.snapshot_read(
+        spark, f"{idx}/lists", version=root["tables"]["lists"]
+    )
     split = {
-        r["_list"]
-        for r in spark.read.parquet(idx).filter("vec_id >= 100").select("_list").collect()
+        r["_list"] for r in lists.filter("vec_id >= 100").select("_list").collect()
     }
     assert len(split) == 2  # the drift really straddles two cells
 
@@ -194,14 +197,7 @@ def test_ann_index_drift_monitor_and_rebuild(spark, tmp_path):
     after = similarity.ann_index_recall(spark, idx, queries=drifted, k=5, nprobe=1)
     assert after["recall_at_k"] > before["recall_at_k"]
     # and the rebuilt index, probed exhaustively, is exact again
-    import json as _json
-    from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-        _read_small,
-    )
-
-    n_cells = len(
-        _json.loads(_read_small(spark, f"{idx}/_ivf_index.json").decode())["centroids"]
-    )
+    n_cells = len(layout.index_root_resolve(spark, idx)["extra"]["centroids"])
     exact = similarity.ann_index_recall(spark, idx, k=5, nprobe=n_cells)
     assert exact["recall_at_k"] == 1.0
 

@@ -541,7 +541,7 @@ def test_hourly_rollup_txn_exactly_once(spark, tmp_path):
         [(t0, "view", 7.0)],
     ]
     table = str(tmp_path / "rollup")
-    sink = jobs.maintain_hourly_rollup_txn(table, "rollupA")
+    sink = jobs.maintain_hourly_rollup(table, "rollupA")
     for bid, rows in enumerate(batches):
         b = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
         sink(b, bid)
@@ -767,7 +767,7 @@ def test_snapshot_model_with_compactions(spark, tmp_path_factory, ops):
 
 
 def test_hourly_rollup_txn_e2e_structured_streaming(spark, tmp_path):
-    """maintain_hourly_rollup_txn under a real availableNow stream:
+    """maintain_hourly_rollup under a real availableNow stream:
     per-micro-batch atomic commits, totals equal the one-shot batch
     aggregate, and a checkpointed restart with no new input commits
     nothing."""
@@ -796,7 +796,7 @@ def test_hourly_rollup_txn_e2e_structured_streaming(spark, tmp_path):
         )
         q = (
             stream.writeStream.foreachBatch(
-                jobs.maintain_hourly_rollup_txn(table, "rollupE2E")
+                jobs.maintain_hourly_rollup(table, "rollupE2E")
             )
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)

@@ -2,7 +2,7 @@
 
 Closes VERDICT r13 "What's wrong #1": the ``expected_version``
 optimistic-concurrency guard built in round 13 is now WIRED into the
-one caller that motivated it (``maintain_hourly_rollup_txn``'s
+one caller that motivated it (``maintain_hourly_rollup``'s
 read-modify-write), and both the guard itself and the two-writer
 lost-update scenario are pinned here.
 Reference scope note: the reference repo has no storage layer at all
@@ -61,7 +61,7 @@ def test_rollup_txn_two_writer_lost_update(spark, tmp_path, monkeypatch):
     the foreign update to a shared key was silently overwritten."""
     t0 = dt.datetime(2026, 5, 1, 10, 0, 0)
     table = str(tmp_path / "rollup")
-    sink = jobs.maintain_hourly_rollup_txn(table, "rollupRace")
+    sink = jobs.maintain_hourly_rollup(table, "rollupRace")
 
     # batch 0 creates the table: click (1 event, 1.0), view (1, 2.0)
     sink(

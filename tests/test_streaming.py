@@ -1046,10 +1046,10 @@ def test_stream_asof_enrichment_matches_batch(spark, tmp_path):
 
 def test_incremental_hourly_rollup_matches_batch(spark, tmp_path):
     """maintain_hourly_rollup across micro-batches (overlapping hours,
-    late rows included) must equal the one-shot batch rollup, and a
-    second batch touching hour A must not disturb hour B's partition
-    (dynamic partition overwrite)."""
+    late rows included) must equal the one-shot batch rollup."""
     import json as _json
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
     rows = [
         # hour 10 then hour 11, second file revisits hour 10 (late data)
@@ -1074,7 +1074,7 @@ def test_incremental_hourly_rollup_matches_batch(spark, tmp_path):
         .withColumn("ts", F.to_timestamp("ts"))
     )
     q = (
-        stream.writeStream.foreachBatch(jobs.maintain_hourly_rollup(stream, table))
+        stream.writeStream.foreachBatch(jobs.maintain_hourly_rollup(table))
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path / "ckpt_roll"))
         .start()
@@ -1083,7 +1083,7 @@ def test_incremental_hourly_rollup_matches_batch(spark, tmp_path):
 
     got = {
         (r.hour, r.event_type): (r.n_events, r.sum_value)
-        for r in spark.read.parquet(table).collect()
+        for r in layout.snapshot_read(spark, table).collect()
     }
     batch = (
         spark.read.schema(schema)
