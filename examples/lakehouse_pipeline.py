@@ -163,7 +163,7 @@ def main() -> None:
               f"{out['deleted_files']} files / {out['deleted_segments']} segments; "
               f"final table still {layout.snapshot_read(spark, table).count()} docs")
 
-        # 7. PIPELINE-ATOMIC upgrade (round 15): steps 2-5 above are
+        # 7. PIPELINE-ATOMIC upgrade: steps 2-5 above are
         #    each exactly-once but commit independently — a reader
         #    between them sees a fresh source with a stale view.  The
         #    catalog root closes that window: source merge + view sync
@@ -179,26 +179,34 @@ def main() -> None:
             "doc_id", "text", (F.col("doc_id") % 3).alias("g"),
             F.length("text").cast("long").alias("chars"),
         )
-        pipeline.pipeline_create(
-            spark, cat, pdocs, f"{tmp}/p_src", f"{tmp}/p_view", f"{tmp}/p_idx",
-            group_cols=["g"], sum_cols=["chars"], n_buckets=4,
-        )
+        plegs = [
+            pipeline.source_leg(
+                "source", f"{tmp}/p_src", "doc_id", n_buckets=4,
+                txn_app="pipeline-src",
+            ),
+            pipeline.agg_view_leg(
+                "view", f"{tmp}/p_view", "source", ["g"], ["chars"],
+                txn_app="pipeline-view",
+            ),
+            pipeline.search_index_leg(
+                "search", f"{tmp}/p_idx", "source", n_buckets=4,
+                txn_app="pipeline-idx",
+            ),
+        ]
+        pipeline.pipeline_create_legs(spark, cat, plegs, {"source": pdocs})
         batch = spark.createDataFrame(
             [(3, "hash join rewritten again", 0, 25, False)],
             "doc_id long, text string, g long, chars long, _del boolean",
         )
         try:
-            pipeline.pipeline_apply(
-                spark, cat, batch, 1, group_cols=["g"], sum_cols=["chars"],
-                delete_col="_del", _crash_before_publish=True,
+            pipeline.pipeline_apply_legs(
+                spark, cat, plegs, {"source": batch}, 1,
+                _crash_before_publish=True,
             )
         except RuntimeError:
             pass  # crashed mid-pipeline: sub-commits dangle, root serves v1
         assert layout.catalog_resolve(spark, cat)["version"] == 1
-        v = pipeline.pipeline_apply(
-            spark, cat, batch, 1, group_cols=["g"], sum_cols=["chars"],
-            delete_col="_del",
-        )
+        v = pipeline.pipeline_apply_legs(spark, cat, plegs, {"source": batch}, 1)
         res = layout.catalog_resolve(spark, cat)
         print(f"pipeline-atomic: crash left catalog v1 serving the old "
               f"coherent pipeline; retry published v{v} pinning source "

@@ -30,6 +30,17 @@ def md5int64_seeded(col: Column, seed: int | str) -> Column:
     return md5int64(F.concat(F.lit(f"{seed}:"), col))
 
 
+def cms_buckets(term: Column, depth: int, width: int) -> list[Column]:
+    """The count-min sketch's bucket of ``term`` in each of its
+    ``depth`` rows: row d hashes with seed ``cms{d}`` into
+    ``[0, width)``.  DuckDB equivalent per row:
+    ``md5int64(concat('cms', d, ':', term)) % width``."""
+    return [
+        F.pmod(md5int64_seeded(term, f"cms{d}"), F.lit(width))
+        for d in range(depth)
+    ]
+
+
 def fast_hash64(col: Column) -> Column:
     """Production path (no oracle requirement): xxhash64, JVM codegen."""
     return F.xxhash64(col)

@@ -5,8 +5,7 @@ results publish as ONE catalog root rename (``layout.catalog_commit``).
 A reader resolving tables through the catalog can never see a batch's
 source rows without every derived member's matching delta.
 
-Round 16 (VERDICT r15 #1): the member set is DECLARATIVE.  A pipeline
-is a list of LEG specs —
+The member set is DECLARATIVE.  A pipeline is a list of LEG specs —
 
     source_leg("docs", path, key_col="doc_id")
     agg_view_leg("by_src", path, source="docs", group_cols=[...], ...)
@@ -18,10 +17,11 @@ is a list of LEG specs —
 — bootstrapped once with ``pipeline_create_legs`` and advanced
 batch-by-batch with ``pipeline_apply_legs``.  Legs are synced in
 DEPENDENCY ORDER (a join view may read another view as its dimension
-side — the feature-store cascade, VERDICT r15 #3 — because every
-maintained view is itself a keyed snapshot table with its own CDC).
-The original three-member shape (``pipeline_create``/``pipeline_apply``)
-is now a thin wrapper over a fixed leg list.
+side — the feature-store cascade — because every maintained view is
+itself a keyed snapshot table with its own CDC).  There is one API: a
+fixed shape such as source + count/sum view + search index is just a
+three-leg list, and ``streaming.jobs.maintain_pipeline_legs`` is its
+``foreachBatch`` sink.
 
 The two-level guarantee, composed from pieces that already hold it:
 
@@ -47,9 +47,8 @@ reports the source version it consumed, and a disagreement (a
 foreign writer violating the member contract mid-apply) re-syncs the
 laggards up to 3 passes before raising.
 
-Upgrades ``examples/lakehouse_pipeline.py``'s per-step exactly-once
-chain to pipeline-atomic (VERDICT r14 directive #4, generalized per
-VERDICT r15 directive #1).
+``examples/lakehouse_pipeline.py`` shows the upgrade from a per-step
+exactly-once chain to pipeline-atomic.
 
 Reference scope note: the reference repo (226 lines of Flink demo
 Scala) has no storage layer; [ext] infrastructure for the mandated
@@ -162,7 +161,7 @@ def join_view_leg(
     """An incremental JOIN view over members ``a`` and ``b`` (either
     may be a view leg — the cascade case).  ``how`` ∈ {inner, left,
     right, full}.  ``join_col`` is one column or a list (COMPOSITE
-    equi-join key, round 17) — passed through to ``join_view_create``
+    equi-join key) — passed through to ``join_view_create``
     / ``join_view_sync`` verbatim."""
     return {
         "kind": "join_view",
@@ -419,7 +418,7 @@ def pipeline_create_legs(
             raise ValueError(f"pipeline_create_legs: unknown leg kind {kind!r}")
     # no watermark on the bootstrap root: the first applied batch may
     # carry ANY id (Structured Streaming starts at batch 0) — replay
-    # protection begins with the first pipeline_apply stamp
+    # protection begins with the first pipeline_apply_legs stamp
     return layout.catalog_commit(spark, catalog_path, pins)
 
 
@@ -589,87 +588,4 @@ def pipeline_apply_legs(
     return layout.optimistic_commit(
         "pipeline_apply_legs", publish,
         lambda: layout.index_root_latest(spark, catalog_path),
-    )
-
-
-# --- the original three-member shape, as a leg list --------------------------
-
-
-def _classic_legs(
-    source_path: str,
-    view_path: str,
-    index_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    key_col: str,
-    text_col: str,
-    n_buckets: int,
-    delete_col: str | None,
-) -> list[dict]:
-    return [
-        source_leg(
-            "source", source_path, key_col,
-            n_buckets=n_buckets, delete_col=delete_col, txn_app=_SRC_APP,
-        ),
-        agg_view_leg(
-            "view", view_path, "source", group_cols, sum_cols,
-            txn_app=_VIEW_APP,
-        ),
-        search_index_leg(
-            "search", index_path, "source",
-            id_col=key_col, text_col=text_col, n_buckets=n_buckets,
-            txn_app=_IDX_APP,
-        ),
-    ]
-
-
-def pipeline_create(
-    spark,
-    catalog_path: str,
-    docs: DataFrame,
-    source_path: str,
-    view_path: str,
-    index_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 8,
-) -> int:
-    """Bootstrap the classic three-member pipeline (source + count/sum
-    view + search index) — ``pipeline_create_legs`` with the fixed leg
-    list the round-15 API hard-coded.  Returns the catalog version (1).
-    """
-    legs = _classic_legs(
-        source_path, view_path, index_path, group_cols, sum_cols,
-        key_col, text_col, n_buckets, "_del",
-    )
-    return pipeline_create_legs(spark, catalog_path, legs, {"source": docs})
-
-
-def pipeline_apply(
-    spark,
-    catalog_path: str,
-    batch: DataFrame,
-    batch_id: int,
-    group_cols: list[str],
-    sum_cols: list[str],
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    delete_col: str | None = None,
-    _crash_before_publish: bool = False,
-) -> int:
-    """Apply one keyed upsert/delete batch through the classic
-    three-member pipeline — ``pipeline_apply_legs`` over the same fixed
-    leg list.  Returns the published catalog version."""
-    cat = layout.catalog_resolve(spark, catalog_path)
-    legs = _classic_legs(
-        cat["tables"]["source"]["path"],
-        cat["tables"]["view"]["path"],
-        cat["tables"]["search"]["path"],
-        group_cols, sum_cols, key_col, text_col, 8, delete_col,
-    )
-    return pipeline_apply_legs(
-        spark, catalog_path, legs, {"source": batch}, batch_id,
-        _crash_before_publish=_crash_before_publish,
     )

@@ -2130,9 +2130,10 @@ def events_range_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     """,
     doc="Session windows (24h inactivity gap) — batch twin of the "
-    "applyInPandasWithState streaming sessionizer (streaming/jobs.py; "
-    "stream-vs-batch equivalence pytest-verified), built from lag + "
-    "running-sum window functions in exact integer microseconds.",
+    "streaming sessionizer (jobs.sessionize, the built-in "
+    "session_window aggregate; stream-vs-batch equivalence "
+    "pytest-verified), built from lag + running-sum window functions "
+    "in exact integer microseconds.",
     tags=("ext", "session", "stateful"),
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7275,7 +7276,7 @@ def _heavy_hitters_cms_frames(spark: SparkSession, sf_dir: str):
     """(result frame, persisted caches) — split out so the plan test
     can pin the sketch shape on the PRE-checkpoint plan."""
     from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
-        md5int64_seeded,
+        cms_buckets,
     )
 
     depth, width = 4, 1024
@@ -7283,10 +7284,7 @@ def _heavy_hitters_cms_frames(spark: SparkSession, sf_dir: str):
     ex = docs.filter(F.col("text").isNotNull()).select(
         F.explode(text.tokens("text")).alias("term")
     )
-    bucket_cols = [
-        F.pmod(md5int64_seeded(F.col("term"), f"cms{d}"), F.lit(width))
-        for d in range(depth)
-    ]
+    bucket_cols = cms_buckets(F.col("term"), depth, width)
     # ONE tokenize pass (round 18, the F5 derivation discipline, guide
     # §2.3/§2.4): the exact per-term counts are the sufficient
     # statistic for every other frame — previously sketch, exact and
@@ -7317,14 +7315,7 @@ def _heavy_hitters_cms_frames(spark: SparkSession, sf_dir: str):
     probes = top.select(
         "term",
         "exact_cnt",
-        F.posexplode(
-            F.array(
-                *[
-                    F.pmod(md5int64_seeded(F.col("term"), f"cms{d}"), F.lit(width))
-                    for d in range(depth)
-                ]
-            )
-        ).alias("d", "bucket"),
+        F.posexplode(F.array(*bucket_cols)).alias("d", "bucket"),
     )
     est = (
         F.broadcast(probes)
@@ -7437,7 +7428,7 @@ def events_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cms_merge_equals_oneshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
-        md5int64_seeded,
+        cms_buckets,
     )
 
     depth, width = 4, 1024
@@ -7445,12 +7436,11 @@ def cms_merge_equals_oneshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = docs.filter(F.col("text").isNotNull()).select(
         "source", F.explode(text.tokens("text")).alias("term")
     )
-    bucket_cols = [
-        F.pmod(md5int64_seeded(F.col("term"), f"cms{d}"), F.lit(width))
-        for d in range(depth)
-    ]
     cells = ex.select(
-        "source", F.posexplode(F.array(*bucket_cols)).alias("d", "bucket")
+        "source",
+        F.posexplode(F.array(*cms_buckets(F.col("term"), depth, width))).alias(
+            "d", "bucket"
+        ),
     )
     # Round-18 measured-and-REJECTED: persisting per_source (bounded,
     # |sources|×depth×width rows) to derive n_sources from it — saving
@@ -8864,15 +8854,15 @@ def join_view_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(sum(n), 0) AS BIGINT) AS phrase_occurrences
     FROM ph
     """,
-    doc="[ext] PIPELINE-ATOMIC CATALOG capstone (round 15, VERDICT r14 "
-    "#4), hash-checked end-to-end against the raw corpus: bootstrap a "
+    doc="[ext] PIPELINE-ATOMIC CATALOG capstone, hash-checked "
+    "end-to-end against the raw corpus: bootstrap a "
     "whole lakehouse pipeline — documents slice as a keyed snapshot "
     "SOURCE, an incremental count/sum VIEW by source, and the "
     "versioned combined SEARCH INDEX — under ONE catalog root "
     "(layout.catalog_commit generalizes the index-root protocol to N "
     "arbitrary tables at arbitrary paths), then drive one batch "
     "(edits that regroup + re-index docs, deletes, one insert) "
-    "through operators.pipeline.pipeline_apply: source MERGE + "
+    "through operators.pipeline.pipeline_apply_legs: source MERGE + "
     "ivm.agg_view_sync + text.search_index_sync publish as ONE atomic "
     "root rename.  Every served number — source rows and char totals "
     "READ OFF THE MAINTAINED VIEW at its pinned version, phrase "
@@ -8887,7 +8877,6 @@ def join_view_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_atomic_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
-        ivm,
         pipeline,
     )
     from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
@@ -8900,17 +8889,21 @@ def pipeline_atomic_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         cat = f"{path}/cat"
-        pipeline.pipeline_create(
-            spark,
-            cat,
-            docs,
-            f"{path}/src",
-            f"{path}/view",
-            f"{path}/idx",
-            group_cols=["source"],
-            sum_cols=["n_chars"],
-            n_buckets=2,
-        )
+        legs = [
+            pipeline.source_leg(
+                "source", f"{path}/src", "doc_id", n_buckets=2,
+                txn_app="pipeline-src",
+            ),
+            pipeline.agg_view_leg(
+                "view", f"{path}/view", "source", ["source"], ["n_chars"],
+                txn_app="pipeline-view",
+            ),
+            pipeline.search_index_leg(
+                "search", f"{path}/idx", "source", n_buckets=2,
+                txn_app="pipeline-idx",
+            ),
+        ]
+        pipeline.pipeline_create_legs(spark, cat, legs, {"source": docs})
         batch = (
             docs.filter(F.col("doc_id") % 7 == 2)
             .select(
@@ -8939,15 +8932,7 @@ def pipeline_atomic_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        pipeline.pipeline_apply(
-            spark,
-            cat,
-            batch,
-            batch_id=1,
-            group_cols=["source"],
-            sum_cols=["n_chars"],
-            delete_col="_del",
-        )
+        pipeline.pipeline_apply_legs(spark, cat, legs, {"source": batch}, 1)
 
     from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
         text as _text,

@@ -1,6 +1,6 @@
 """The reference jobs, defined once for stream and batch, plus the
-streaming-only operators (watermarks, dedup-in-time, custom stateful
-sessionization).
+streaming-only operators (watermarks, dedup-in-time, session windows,
+custom stateful operators).  Each operator has one body.
 
 Each reference job maps a DataFrame of notification rows (payload
 STRING, service, servicePath, ts TIMESTAMP) to its result.  The same
@@ -120,10 +120,6 @@ def streaming_dedup(
     return notifications.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
-SESSION_SCHEMA = "user_id bigint, session_start timestamp, session_end timestamp, n_events int, sum_value double"
-SESSION_STATE_SCHEMA = "start double, end double, n int, total double"
-
-
 def _ts_us(sec: float):
     """Epoch float-seconds → µs-exact pandas Timestamp.  Constructing
     from float seconds lands on ns precision, which Arrow refuses to
@@ -139,108 +135,32 @@ def sessionize(
     gap_secs: float = 30.0,
     watermark: str = "1 minute",
 ) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: session
-    windows per user_id with a ``gap_secs`` inactivity gap — the
-    'custom stateful op' capability the reference's AggregateFunction
-    hints at but Flink 1.9 windows never needed (SURVEY.md §2.2).
+    """Session windows per ``user_id`` with a ``gap_secs`` inactivity
+    gap, on the built-in ``F.session_window`` aggregate: the state
+    store keeps one row per open session and MERGES sessions whose
+    gap closes (the Structured Streaming session merge, SIGMOD'18), so
+    no custom state code runs.  A session is emitted once the event-time
+    watermark passes its last event + gap (append mode).
 
-    Emits a session row when the event-time timeout fires (watermark
-    passed last-event + gap).  State per key: (start, end, n, total) —
-    constant size, no event buffering."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        user_id = key[0]
-        if state.hasTimedOut:
-            start, end, n, total = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    # µs-exact (see streaming_funnel): float-seconds
-                    # land on ns precision Arrow won't truncate to us
-                    "session_start": [_ts_us(start)],
-                    "session_end": [_ts_us(end)],
-                    "n_events": [n],
-                    "sum_value": [total],
-                }
-            )
-            return
-        start, end, n, total = state.get if state.exists else (None, None, 0, 0.0)
-        closed = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts")
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                t = ts.timestamp()
-                if start is None:
-                    start = end = t
-                    n, total = 1, float(value)
-                elif t - end > gap_secs:
-                    closed.append((start, end, n, total))
-                    start = end = t
-                    n, total = 1, float(value)
-                else:
-                    end = max(end, t)
-                    n += 1
-                    total += float(value)
-        if start is not None:
-            state.update((start, end, n, total))
-            state.setTimeoutTimestamp(int(end * 1000) + int(gap_secs * 1000))
-        if closed:
-            import pandas as pd
-
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": [_ts_us(s) for s, _, _, _ in closed],
-                    "session_end": [_ts_us(e) for _, e, _, _ in closed],
-                    "n_events": [c for _, _, c, _ in closed],
-                    "sum_value": [v for _, _, _, v in closed],
-                }
-            )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def streaming_session_window(
-    events: DataFrame, gap_secs: float = 30.0, watermark: str = "1 minute"
-) -> DataFrame:
-    """NATIVE session windows in Structured Streaming: the built-in
-    twin of the applyInPandasWithState ``sessionize`` (and of the batch
-    ``events_session_window_batch`` query).  groupBy(session_window)
-    keeps per-session state in the state store, MERGES sessions whose
-    gap closes under ``gap_secs``, and emits a row once the event-time
-    watermark passes the session end (append mode) — zero custom state
-    code, the state-store session-merge path Spark ships.
-
-    Output: (user_id, session_start, session_end_gap = last event +
-    gap, n_events, sum_value) — same contract as the batch query."""
+    Output: (user_id, session_start, session_end = the last event,
+    n_events, sum_value) — the contract of ``sessionize_batch``.  Events
+    exactly ``gap_secs`` apart share a session; a larger gap splits it
+    (the batch twin's strict ``> gap``)."""
     # millisecond interval so fractional gaps aren't truncated to 0
-    # (gap_secs=0.5 must mean 500ms, matching the sessionize twin)
+    # (gap_secs=0.5 must mean 500ms)
     gap = f"{int(round(gap_secs * 1000))} milliseconds"
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap), F.col("user_id"))
         .agg(
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).cast("int").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+            F.sum("value").alias("sum_value"),
         )
         .select(
             "user_id",
             F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end_gap"),
+            "session_end",
             "n_events",
             "sum_value",
         )
@@ -291,9 +211,7 @@ def maintain_hourly_rollup(
     the re-summed touched keys and the per-app batch watermark, so
 
       * a batch replayed after a completed commit sees batch_id ≤ its
-        watermark and skips (no double-count — the defect class the
-        round-12 CMS fix closed, solved here by the commit log instead
-        of a swap);
+        watermark and skips (no double-count);
       * a crash anywhere before the manifest rename leaves the table
         at the previous version, and the retry recomputes against that
         unchanged base;
@@ -303,8 +221,7 @@ def maintain_hourly_rollup(
         commit landing between the read and the merge raises
         ``SnapshotVersionConflict`` (``layout.optimistic_commit``
         re-reads the new latest and recomputes) instead of silently
-        losing the foreign keys' updates (review finding, round 13:
-        the guard existed but was not wired here);
+        losing the foreign keys' updates;
       * cross-hour atomicity is total — a batch touching several
         hours commits all of them or none.
 
@@ -408,9 +325,8 @@ def streaming_funnel(
     and within each micro-batch events replay in ts order, so a
     same-batch signup→click→purchase chain resolves all three stages
     at once (the availableNow replay of a history equals the batch
-    funnel exactly — pytest-pinned).  Cross-batch late events carry
-    the same guarantee class as the sessionizer: arrival order within
-    the watermark horizon.
+    funnel exactly — pytest-pinned).  Cross-batch late events are
+    applied in arrival order within the watermark horizon.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -474,9 +390,8 @@ def streaming_transitions(
 
     Within a micro-batch events replay in (ts, event_id) order, so an
     availableNow replay of a history equals the batch lag-window
-    exactly (pytest-pinned); cross-batch late events carry the
-    sessionizer's guarantee class — arrival order within the
-    watermark horizon.
+    exactly (pytest-pinned); cross-batch late events are applied in
+    arrival order within the watermark horizon.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -541,8 +456,8 @@ def streaming_locf(
     history equals the batch resample minus each key's final bin
     (pytest-pinned).  Within a micro-batch events replay in
     (ts, event_id) order; a cross-batch event arriving for an
-    already-closed bin is dropped-late in the same guarantee class as
-    the sessionizer (arrival order within the watermark horizon).
+    already-closed bin is dropped as late (arrival order within the
+    watermark horizon).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -624,9 +539,9 @@ def streaming_cep_signup_purchase(
     replays, which sort per batch) match the batch output exactly
     (pytest-pinned) — including the same-timestamp error/purchase tie,
     which is resolved purchase-first to mirror batch's strictly-inside
-    (t0, t1) error window (ADVICE r6); an out-of-order error crossing
-    micro-batch boundaries is the documented divergence, same
-    guarantee class as the sessionizer.
+    (t0, t1) error window; an out-of-order error crossing
+    micro-batch boundaries is the documented divergence (arrival
+    order within the watermark horizon).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -640,7 +555,7 @@ def streaming_cep_signup_purchase(
             # same-timestamp tie-break: apply a tied 'purchase' BEFORE a
             # tied 'error' — batch rejects only errors STRICTLY inside
             # (t0, t1), so an error timestamped exactly at the matching
-            # purchase must not kill the pattern (ADVICE r6).  Other
+            # purchase must not kill the pattern.  Other
             # types keep event_id order at equal ts.
             pdf = pdf.assign(
                 _tie=(pdf["event_type"] != "purchase").astype("int8")
@@ -687,25 +602,57 @@ DAU_WAU_SCHEMA = "day string, dau bigint, wau bigint, stickiness double"
 DAU_WAU_STATE_SCHEMA = "dau_ids array<bigint>, wau_ids array<bigint>"
 
 
-def _dau_wau_contrib(
-    events: DataFrame, watermark: str, keep_ts: bool = False
+def streaming_dau_wau(
+    events: DataFrame,
+    watermark: str = "1 minute",
 ) -> DataFrame:
-    """Shared contribution-explode stage for the DAU/WAU twins: each
-    event fans into the 7 report days it contributes to (k = 0 marks
-    the DAU contribution), so the stateful stage keys on REPORT DAY.
-    ``keep_ts`` carries the WATERMARKED ts attribute through the
-    projections — EventTimeTimeout requires the watermark column to
-    still be present at the stateful operator (the bounded variant's
-    requirement; the NoTimeout twin prunes it)."""
-    ts_cols = ["ts"] if keep_ts else []
-    return (
+    """Stateful streaming engagement — the live twin of the batch
+    ``events_dau_wau``: per report day, running exact DAU,
+    trailing-7-day WAU, and the DAU/WAU stickiness ratio, re-emitted
+    each micro-batch the day's counts change (update mode — a
+    dashboard upserts on `day`).
+
+    Same contribution-explode shape as the batch query, streamed: each
+    event fans stateless-ly into the 7 report days it contributes to
+    (k = 0 marks the DAU contribution), so the stateful stage keys on
+    REPORT DAY and its per-key state is two distinct-user-id sets —
+    per-day state is bounded by weekly actives, never by event count.
+    At larger cardinalities the exact id sets swap for HLL registers
+    (events_hll_mergeable_daily's sketch, ~2 KB per day constant) with
+    the same plan shape — exact sets keep the twin bit-comparable to
+    the batch oracle here.
+
+    TOTAL state is bounded too: each day key arms an EventTimeTimeout
+    at day_end + 7 days.  Once the watermark passes that point no event
+    can contribute to the day (the last contributing event-day is the
+    report day itself, and its rows are watermark-dropped long before),
+    so the timeout fires and the state row is removed — total state is
+    the ~8-day active horizon × weekly actives, not the deployment's
+    lifetime.  The timeout branch emits nothing: a closed day is final,
+    and update-mode consumers already hold its last value.  Eviction
+    follows the watermark, which only advances after a micro-batch, so
+    a single-batch replay of a whole history evicts nothing before it
+    has emitted every day — that replay equals the batch query exactly
+    (pytest-pinned on the sf0.001 history).
+
+    Day keys are strings (yyyy-MM-dd): Arrow state serialization
+    round-trips strings losslessly, and the batch query emits the same
+    format — the join key for the replay-equality pin.
+    """
+    import datetime as dt
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    # the watermarked ts rides through the projections: EventTimeTimeout
+    # needs the watermark column at the stateful operator
+    contrib = (
         events.withWatermark("ts", watermark)
-        .select(F.to_date("ts").alias("_day"), "user_id", *ts_cols)
+        .select(F.to_date("ts").alias("_day"), "user_id", "ts")
         .select(
             "_day",
             "user_id",
             F.explode(F.sequence(F.lit(0), F.lit(6))).alias("_k"),
-            *ts_cols,
+            "ts",
         )
         .select(
             F.date_format(F.date_add("_day", F.col("_k")), "yyyy-MM-dd").alias(
@@ -713,126 +660,9 @@ def _dau_wau_contrib(
             ),
             "user_id",
             (F.col("_k") == 0).alias("is_dau"),
-            *ts_cols,
+            "ts",
         )
     )
-
-
-def streaming_dau_wau(
-    events: DataFrame,
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """Stateful streaming engagement — the live twin of the batch
-    ``events_dau_wau`` (VERDICT r7 #4): per report day, running exact
-    DAU, trailing-7-day WAU, and the DAU/WAU stickiness ratio,
-    re-emitted each micro-batch the day's counts change (update mode —
-    a dashboard upserts on `day`).
-
-    Same contribution-explode shape as the batch query, streamed: each
-    event fans stateless-ly into the 7 report days it contributes to
-    (k = 0 marks the DAU contribution), so the stateful stage keys on
-    REPORT DAY and its per-key state is two distinct-user-id sets —
-    PER-DAY state is bounded by weekly actives, never by event count,
-    and an availableNow replay of a history equals the batch query
-    exactly (pytest-pinned).  At larger cardinalities the exact id
-    sets swap for HLL registers (events_hll_mergeable_daily's sketch,
-    ~2 KB per day constant) with the same plan shape — exact sets
-    keep the twin bit-comparable to the batch oracle here.
-
-    TOTAL state grows with the number of report days seen
-    (NoTimeout): a day older than watermark + 7 days can never change
-    again.  ``streaming_dau_wau_bounded`` IS the eviction variant a
-    long-running deployment runs (EventTimeTimeout at day_end + 7d,
-    state row count pytest-pinned across a multi-week replay); this
-    NoTimeout twin stays because eviction timing is watermark-
-    dependent and would make the FULL-history availableNow replay ≡
-    batch pin depend on micro-batch boundaries (review finding,
-    round 8 — the bound is per-day, not total).
-
-    Day keys are strings (yyyy-MM-dd): Arrow state serialization
-    round-trips strings losslessly, and the batch query emits the same
-    format — the join key for the replay-equality pin.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    contrib = _dau_wau_contrib(events, watermark)
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        day = key[0]
-        if state.exists:
-            a, b = state.get
-            dau, wau = set(int(x) for x in a), set(int(x) for x in b)
-        else:
-            dau, wau = set(), set()
-        for pdf in pdfs:
-            for uid, is_d in zip(pdf["user_id"], pdf["is_dau"]):
-                u = int(uid)
-                wau.add(u)
-                if is_d:
-                    dau.add(u)
-        state.update((sorted(dau), sorted(wau)))
-        # Emit only days with dau > 0: a report day holding nothing but
-        # trailing-window contributions never appears in the batch
-        # events_dau_wau output, so emitting it would hand a dashboard
-        # upsert extra zero-DAU rows the batch twin contradicts (ADVICE
-        # r8 #3).  State still records the wau contribution — the day
-        # starts emitting the first micro-batch a same-day event lands.
-        if not dau:
-            return
-        # Half-UP rounding to match the batch side's F.round (Spark
-        # rounds half away from zero; Python round() is half-even, so
-        # exact dyadic ties like 1/128 would diverge — ADVICE r8 #1).
-        from decimal import ROUND_HALF_UP, Decimal
-
-        ratio = Decimal(len(dau)) / Decimal(len(wau))
-        stick = float(ratio.quantize(Decimal("0.000001"), ROUND_HALF_UP))
-        yield pd.DataFrame(
-            {
-                "day": [day],
-                "dau": [len(dau)],
-                "wau": [len(wau)],
-                "stickiness": [stick],
-            }
-        )
-
-    return contrib.groupBy("day").applyInPandasWithState(
-        update,
-        outputStructType=DAU_WAU_SCHEMA,
-        stateStructType=DAU_WAU_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_dau_wau_bounded(
-    events: DataFrame,
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """``streaming_dau_wau`` with BOUNDED TOTAL STATE (VERDICT r8 #6
-    — the eviction variant SCALING.md names): identical contribution
-    explode, identical per-day emission, but each day key arms an
-    EventTimeTimeout at day_end + 7 days — once the watermark passes
-    that point no event can contribute to the day (the last
-    contributing event-day is the report day itself, and its rows
-    are watermark-dropped long before day_end + 7d), so the timeout
-    fires and the state row is REMOVED.  Total state is therefore
-    bounded by the ~8-day active horizon × weekly actives, not by
-    deployment lifetime (pytest pins the state row count across a
-    multi-week replay).
-
-    Emission is unaffected: a closed day is final on eviction, and
-    the timeout branch emits nothing (update-mode consumers already
-    hold the day's last value).  Kept separate from the NoTimeout
-    twin because eviction timing is watermark-dependent — the
-    replay ≡ batch pin holds for IN-HORIZON days here, while the
-    NoTimeout twin pins full-history equality."""
-    import datetime as dt
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    contrib = _dau_wau_contrib(events, watermark, keep_ts=True)
 
     def update(key, pdfs, state):
         import pandas as pd
@@ -868,8 +698,17 @@ def streaming_dau_wau_bounded(
         state.setTimeoutTimestamp(
             max(int(day_close.timestamp() * 1000), wm + 1)
         )
+        # Emit only days with dau > 0: a report day holding nothing but
+        # trailing-window contributions never appears in the batch
+        # events_dau_wau output, so emitting it would hand a dashboard
+        # upsert extra zero-DAU rows the batch twin contradicts.  State
+        # still records the wau contribution — the day starts emitting
+        # the first micro-batch a same-day event lands.
         if not dau:
-            return  # zero-DAU days never appear batch-side (ADVICE r8 #3)
+            return
+        # Half-UP rounding to match the batch side's F.round (Spark
+        # rounds half away from zero; Python round() is half-even, so
+        # exact dyadic ties like 1/128 would diverge).
         from decimal import ROUND_HALF_UP, Decimal
 
         ratio = Decimal(len(dau)) / Decimal(len(wau))
@@ -967,9 +806,9 @@ def streaming_hash_dedup(
     # same invariants the batch twin raises on (hash_dup_pairs):
     # without them a max_hamming >= n_bands call would silently lose
     # recall — a pair differing in every band shares no bucket — and
-    # the documented replay ≡ batch contract would break with no error
-    # (review finding, round 8).  ValueError, not assert: `python -O`
-    # strips asserts and re-enables the silent mode (ADVICE r8 #2).
+    # the documented replay ≡ batch contract would break with no error.
+    # ValueError, not assert: `python -O` strips asserts and
+    # re-enables the silent mode.
     if n_bands < max_hamming + 1:
         raise ValueError("pigeonhole needs >= max_hamming+1 bands")
     if bits // n_bands < 1:
@@ -1001,7 +840,7 @@ def streaming_hash_dedup(
                 # (id, hash) re-arrival (source re-listed, item
                 # re-crawled unchanged) must neither re-emit the
                 # pairs already emitted for it nor duplicate bucket
-                # state (review finding, round 8).  Same id with a
+                # state.  Same id with a
                 # CHANGED hash is a new observation and still
                 # compares/stores.
                 if (i, h) in seen:
@@ -1126,8 +965,8 @@ def streaming_curation_gate(
     oov_q: int,
     min_score: float = 0.0,
 ) -> DataFrame:
-    """Live twin of ``corpus_curate_nb``'s first two stages (VERDICT
-    r8 #7): exact first-seen text dedup (stateful) chained into the
+    """Live twin of ``corpus_curate_nb``'s first two stages: exact
+    first-seen text dedup (stateful) chained into the
     stateless naive-Bayes quality gate — the shape of a streaming
     ingest front-end where only the draw (which needs corpus totals)
     stays batch.
@@ -1291,7 +1130,7 @@ def streaming_decontaminate_gate(
         shingles,
     )
 
-    # materialize the 1-row gram-set frame ONCE (ADVICE r10): the
+    # materialize the 1-row gram-set frame ONCE: the
     # static side of a stream-static join re-executes per micro-batch,
     # so without this every batch re-runs the full benchmark
     # distillation (shingle explode + distinct + collect_list).
@@ -1385,114 +1224,75 @@ def maintain_cms_rollup(
     text_col: str = "text",
 ):
     """Continuous count-min sketch maintenance — the frequency twin of
-    ``maintain_hourly_rollup``: keep a (d, bucket) CMS counter TABLE
-    incrementally up to date from a document stream.  Per micro-batch:
-    partially count the batch's token buckets (the exact arithmetic of
-    the batch ``heavy_hitters_cms`` sketch — seeded-md5 buckets), read
-    the current ≤ depth×width-row table, merge by ADDITION (CMS cells
-    are plain counters — the merge is lossless, so the maintained
-    table always EQUALS the one-shot sketch over everything ingested,
-    pytest-pinned), localCheckpoint, overwrite.  The table is
-    model-sized (4096 rows at the defaults) regardless of ingest
-    volume; estimates are min-over-rows lookups against it, exactly as
-    the batch query does.  Returns the function for ``foreachBatch``.
+    ``maintain_hourly_rollup``: keep a (d, bucket, c) CMS counter
+    snapshot table incrementally up to date from a document stream.
+    Per micro-batch: partially count the batch's token buckets (the
+    exact arithmetic of the batch ``heavy_hitters_cms`` sketch —
+    ``hashing.cms_buckets``), add them cell-wise to the latest version
+    (CMS cells are plain counters — the merge is lossless, so the
+    maintained table always EQUALS the one-shot sketch over everything
+    ingested, pytest-pinned), and commit the sum as the next version.
+    The table is model-sized (4096 rows at the defaults) regardless of
+    ingest volume; estimates are min-over-rows lookups against it,
+    exactly as the batch query does.  Readers use
+    ``layout.snapshot_read(spark, table_path)``.  Returns the function
+    for ``foreachBatch``.
 
-    EXACTLY-ONCE under retries: foreachBatch is at-least-once — a
-    crash between a completed swap and the streaming checkpoint commit
-    redelivers the SAME batch_id against the post-swap table, which
-    would double-count its tokens (review finding, round 11).  The
-    last committed batch_id therefore rides INSIDE the swapped table
-    directory as ``_last_batch.json`` (written to the tmp dir before
-    the rename, so watermark and counters commit in the same atomic
-    swap; Spark's parquet reader ignores ``_``-prefixed files), and a
-    redelivered batch_id ≤ the watermark is skipped."""
+    EXACTLY-ONCE under retries: foreachBatch is at-least-once — a crash
+    between a completed commit and the streaming checkpoint commit
+    redelivers the SAME batch_id, which would double-count its tokens.
+    Each commit carries the batch id as the ``cms-rollup`` txn
+    watermark in the same atomic manifest rename as the counters, so a
+    redelivered batch_id ≤ the watermark is skipped.  A crash before
+    the rename leaves the previous version serving, and the retry adds
+    the batch to that unchanged base.  Old versions stay on disk until
+    ``layout.vacuum_snapshots``, like every snapshot table."""
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        import json
         from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
-            md5int64_seeded,
+            cms_buckets,
         )
         from fiware_cosmos_orion_flink_connector_examples_spark.operators.text import (
             tokens,
         )
+        from fiware_cosmos_orion_flink_connector_examples_spark.sources import (
+            layout,
+        )
 
         spark = batch.sparkSession
-        ex = batch.filter(F.col(text_col).isNotNull()).select(
-            F.explode(tokens(text_col)).alias("term")
-        )
-        bucket_cols = [
-            F.pmod(md5int64_seeded(F.col("term"), f"cms{d}"), F.lit(width))
-            for d in range(depth)
-        ]
+        base = table_path.rstrip("/")
         part = (
-            ex.select(F.posexplode(F.array(*bucket_cols)).alias("d", "bucket"))
+            batch.filter(F.col(text_col).isNotNull())
+            .select(F.explode(tokens(text_col)).alias("term"))
+            .select(
+                F.posexplode(
+                    F.array(*cms_buckets(F.col("term"), depth, width))
+                ).alias("d", "bucket")
+            )
             .groupBy("d", "bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        jvm = spark._jvm
-        base = table_path.rstrip("/")
-        hpath = jvm.org.apache.hadoop.fs.Path(base)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        old_p = jvm.org.apache.hadoop.fs.Path(base + ".old")
-        # crash recovery first: a previous batch that died between the
-        # two swap renames left the table only at <path>.old — restore
-        # it before probing existence, otherwise the fallback branch
-        # below would silently rebuild from this batch alone
-        if not fs.exists(hpath) and fs.exists(old_p):
-            if not fs.rename(old_p, hpath):
-                raise IOError(f"maintain_cms_rollup: recovery rename failed")
-        wm_p = jvm.org.apache.hadoop.fs.Path(base + "/_last_batch.json")
-        if fs.exists(wm_p):
-            stream = fs.open(wm_p)
-            try:
-                wm = json.loads(
-                    bytes(jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream))
-                )
-            finally:
-                stream.close()
-            if batch_id <= wm.get("batch_id", -1):
+
+        def attempt() -> None:
+            cur = layout.snapshot_latest_version(spark, base)
+            if layout._txn_applied(spark, base, "cms-rollup", batch_id, cur):
                 return  # redelivered batch already folded into the table
-        if fs.exists(hpath):
-            # probe discipline: only a
-            # MISSING table falls back to batch-only counts — a read
-            # failure must fail the micro-batch so checkpointing
-            # retries instead of silently dropping history
-            existing = spark.read.parquet(base).select("d", "bucket", "c")
-            merged = (
-                part.unionByName(existing)
-                .groupBy("d", "bucket")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
             merged = part
-        # NEVER overwrite the live table in place (review finding,
-        # round 11: mode("overwrite") truncates before the job commits,
-        # and a failure after truncation silently rebuilds from one
-        # batch).  Write the merged ≤ depth×width-row frame to a
-        # sibling tmp, then two-rename swap with the .old kept until
-        # the new table is live — a crash at any point leaves a
-        # recoverable state.  The batch watermark is staged into the
-        # SAME tmp dir so the swap commits counters and watermark
-        # atomically: a retry after a completed swap sees batch_id ≤
-        # watermark above and skips instead of double-merging (review
-        # finding, round 11).
-        tmp = base + ".tmp"
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
-        merged.write.mode("overwrite").parquet(tmp)
-        st_out = fs.create(
-            jvm.org.apache.hadoop.fs.Path(tmp + "/_last_batch.json"), True
-        )
-        st_out.write(bytearray(json.dumps({"batch_id": batch_id}).encode()))
-        st_out.close()
-        fs.delete(old_p, True)
-        had_cur = fs.exists(hpath)
-        if had_cur and not fs.rename(hpath, old_p):
-            raise IOError("maintain_cms_rollup: rename cur -> old failed")
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath):
-            if had_cur:
-                fs.rename(old_p, hpath)
-            raise IOError("maintain_cms_rollup: rename tmp -> cur failed")
-        fs.delete(old_p, True)
+            if cur > 0:
+                merged = (
+                    part.unionByName(layout.snapshot_read(spark, base, version=cur))
+                    .groupBy("d", "bucket")
+                    .agg(F.sum("c").alias("c"))
+                )
+            layout.snapshot_commit(
+                spark,
+                merged,
+                base,
+                mode="overwrite",
+                _txn_update={"cms-rollup": batch_id},
+            )
+
+        layout.optimistic_commit(f"maintain_cms_rollup batch {batch_id}", attempt)
 
     return merge_batch
 
@@ -1520,7 +1320,7 @@ def watermark_drop_report(query) -> dict:
         # state size is a LEVEL, not a flow: the latest batch's value,
         # SUMMED across operators — a multi-operator query (dedup +
         # windowed agg, stream-stream join + agg) otherwise reports
-        # only its last operator (review finding, round 11)
+        # only its last operator
         for op in progresses[-1].get("stateOperators", []) or []:
             totals["state_rows"] += op.get("numRowsTotal", 0) or 0
             totals["state_bytes"] += op.get("memoryUsedBytes", 0) or 0
@@ -1627,9 +1427,11 @@ def maintain_agg_view(
 ):
     """EXACTLY-ONCE streaming pipeline sink: each micro-batch of keyed
     upserts (optional boolean ``_del`` column) MERGEs into the source
-    snapshot table (source txn watermark = ``{txn_app}-src`` keyed by
-    batch id, so a replayed batch is absorbed before it can
-    double-apply), then the incremental count/sum view follows the
+    snapshot table through ``layout.snapshot_merge_stream`` (source txn
+    watermark = ``{txn_app}-src`` keyed by batch id, so a replayed
+    batch is absorbed before it can double-apply, and a merge that
+    loses its rename to a foreign commit re-reads and retries), then
+    the incremental count/sum view follows the
     source's commit log (``ivm.agg_view_sync`` — its own watermark is
     the consumed source version, so the view leg is idempotent
     independently of the source leg; a crash between the two legs just
@@ -1651,65 +1453,15 @@ def maintain_agg_view(
 
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        try:
-            _layout.snapshot_merge(
-                spark,
-                source_path,
-                batch,
-                key_col,
-                delete_col="_del" if "_del" in batch.columns else None,
-                _txn_update={f"{txn_app}-src": batch_id},
-            )
-        except _layout.SnapshotTxnAlreadyApplied:
-            pass  # replayed batch — the source already has it
-        _ivm.agg_view_sync(
-            spark, source_path, view_path, group_cols, sum_cols,
-            txn_app=txn_app,
-        )
-
-    return apply_batch
-
-
-def maintain_pipeline(
-    catalog_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    key_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """PIPELINE-ATOMIC streaming sink (round 15): each micro-batch of
-    keyed doc upserts (optional boolean ``_del`` column) flows through
-    ``operators.pipeline.pipeline_apply`` — source MERGE + incremental
-    agg-view sync + CDC search-index sync, published as ONE catalog
-    root rename per batch, the batch id riding the root as its txn
-    watermark.  This upgrades ``maintain_agg_view``'s per-leg
-    exactly-once to WHOLE-PIPELINE atomicity: a reader resolving
-    through the catalog can never see a batch's source rows without
-    its view delta or its postings, a replayed batch id is absorbed at
-    every leg AND at the root, and a crash mid-batch leaves the
-    previous coherent root serving (the retry completes the same
-    batch).  Member paths come from the catalog itself — create it
-    with ``pipeline.pipeline_create`` first.  Returns the function for
-    ``writeStream.foreachBatch``."""
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
-            pipeline as _pipeline,
-        )
-
-        if batch.isEmpty():
-            return  # no root publish for an empty trigger
-        _pipeline.pipeline_apply(
-            batch.sparkSession,
-            catalog_path,
-            batch,
-            batch_id,
-            group_cols=group_cols,
-            sum_cols=sum_cols,
-            key_col=key_col,
-            text_col=text_col,
+        _layout.snapshot_merge_stream(
+            source_path,
+            key_col,
+            f"{txn_app}-src",
             delete_col="_del" if "_del" in batch.columns else None,
+        )(batch, batch_id)
+        _ivm.agg_view_sync(
+            batch.sparkSession, source_path, view_path, group_cols, sum_cols,
+            txn_app=txn_app,
         )
 
     return apply_batch
@@ -1727,10 +1479,10 @@ def maintain_join_view(
     how: str = "inner",
     side: str = "a",
 ):
-    """EXACTLY-ONCE streaming maintenance of an incremental JOIN view
-    (round 16, VERDICT r15 #2): each micro-batch of keyed upserts for
-    ``side`` (optional boolean ``_del`` column) MERGEs into that
-    side's snapshot table (source txn watermark =
+    """EXACTLY-ONCE streaming maintenance of an incremental JOIN view:
+    each micro-batch of keyed upserts for ``side`` (optional boolean
+    ``_del`` column) MERGEs into that side's snapshot table through
+    ``layout.snapshot_merge_stream`` (source txn watermark =
     ``{txn_app}-src.{side}`` keyed by batch id, so a replayed batch is
     absorbed before it can double-apply), then ``ivm.join_view_sync``
     advances the view over BOTH tables' commit logs — so out-of-band
@@ -1763,20 +1515,14 @@ def maintain_join_view(
 
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        try:
-            _layout.snapshot_merge(
-                spark,
-                merge_path,
-                batch,
-                key_col,
-                delete_col="_del" if "_del" in batch.columns else None,
-                _txn_update={f"{txn_app}-src.{side}": batch_id},
-            )
-        except _layout.SnapshotTxnAlreadyApplied:
-            pass  # replayed batch — this side already has it
+        _layout.snapshot_merge_stream(
+            merge_path,
+            key_col,
+            f"{txn_app}-src.{side}",
+            delete_col="_del" if "_del" in batch.columns else None,
+        )(batch, batch_id)
         _ivm.join_view_sync(
-            spark, a_path, b_path, view_path, join_col,
+            batch.sparkSession, a_path, b_path, view_path, join_col,
             group_cols, sum_cols, txn_app=txn_app, how=how,
         )
 
@@ -1784,16 +1530,20 @@ def maintain_join_view(
 
 
 def maintain_pipeline_legs(catalog_path: str, legs: list[dict], source: str):
-    """PIPELINE-ATOMIC streaming sink over a DECLARATIVE member set
-    (round 16, VERDICT r15 #1): each micro-batch of keyed upserts
-    routes to the named ``source`` leg and flows through
-    ``operators.pipeline.pipeline_apply_legs`` — every source merge,
-    view sync (including join views and views over views), and index
-    sync publishes as ONE catalog root rename per batch, the batch id
-    riding the root as its txn watermark.  The generalized twin of
-    ``maintain_pipeline`` (which is the fixed three-member shape).
-    Create the catalog with ``pipeline.pipeline_create_legs`` first.
-    Returns the function for ``writeStream.foreachBatch``."""
+    """PIPELINE-ATOMIC streaming sink over a DECLARATIVE member set:
+    each micro-batch of keyed upserts routes to the named ``source``
+    leg and flows through ``operators.pipeline.pipeline_apply_legs`` —
+    every source merge, view sync (including join views and views over
+    views), and index sync publishes as ONE catalog root rename per
+    batch, the batch id riding the root as its txn watermark.  This
+    upgrades ``maintain_agg_view``'s per-leg exactly-once to
+    WHOLE-PIPELINE atomicity: a reader resolving through the catalog
+    can never see a batch's source rows without its view delta or its
+    postings, a replayed batch id is absorbed at every leg AND at the
+    root, and a crash mid-batch leaves the previous coherent root
+    serving (the retry completes the same batch).  Create the catalog
+    with ``pipeline.pipeline_create_legs`` first, with the same
+    ``legs``.  Returns the function for ``writeStream.foreachBatch``."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         from fiware_cosmos_orion_flink_connector_examples_spark.operators import (

@@ -120,6 +120,48 @@ def test_two_sided_join_view_retries_lost_rename(spark, tmp_path, monkeypatch):
     assert _groups(ivm.agg_view_read(spark, view).collect()) == _recompute(joined)
 
 
+def test_agg_view_sink_retries_lost_source_rename(spark, tmp_path, monkeypatch):
+    """A foreign commit to the SOURCE wins the rename the view sink's
+    source merge was about to make: the merge re-reads and retries,
+    the batch lands exactly once, and the view follows both commits."""
+    from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
+
+    source, view = str(tmp_path / "src"), str(tmp_path / "view")
+    layout.snapshot_write_keyed(
+        spark,
+        spark.createDataFrame(
+            [(i, "abc"[i % 3], i) for i in range(12)], "k long, g string, x long"
+        ),
+        source, "k",
+    )
+    ivm.agg_view_create(spark, source, view, ["g"], ["x"], n_buckets=2)
+    sink = jobs.maintain_agg_view(source, view, "k", ["g"], ["x"])
+    lost = _lose_next_rename(
+        monkeypatch,
+        source,
+        lambda: layout.snapshot_merge(
+            spark, source,
+            spark.createDataFrame([(5, "d", 40)], "k long, g string, x long"),
+            "k",
+        ),
+    )
+    batch = spark.createDataFrame(
+        [(0, "d", 50, False), (100, "a", 7, False), (1, None, None, True)],
+        "k long, g string, x long, _del boolean",
+    )
+    sink(batch, 0)
+    assert lost == [2]  # the merge lost v2 to the foreign commit
+    assert layout.snapshot_latest_version(spark, source) == 3
+    sink(batch, 0)  # a replay of the same batch id is absorbed
+    assert layout.snapshot_latest_version(spark, source) == 3
+    rows = {r["k"]: (r["g"], r["x"]) for r in layout.snapshot_read(spark, source).collect()}
+    assert rows[0] == ("d", 50) and rows[100] == ("a", 7) and rows[5] == ("d", 40)
+    assert 1 not in rows and len(rows) == 12
+    assert _groups(ivm.agg_view_read(spark, view).collect()) == _recompute(
+        layout.snapshot_read(spark, source)
+    )
+
+
 def test_commit_manifest_lost_rename_is_a_version_conflict(spark, tmp_path):
     path = str(tmp_path / "t")
     layout.snapshot_commit(spark, spark.createDataFrame([(1,)], "k long"), path)

@@ -1,8 +1,8 @@
-"""Catalog-level multi-table transactions (round 15, VERDICT r14 #4):
-N arbitrary snapshot tables + index roots pinned under ONE renamed
-catalog root — a source merge, an agg-view sync, and a search-index
-sync publish as one atomic unit, and readers resolving through the
-catalog can never observe a partial pipeline.
+"""Catalog-level multi-table transactions: N arbitrary snapshot
+tables + index roots pinned under ONE renamed catalog root — a source
+merge, an agg-view sync, and a search-index sync publish as one atomic
+unit, and readers resolving through the catalog can never observe a
+partial pipeline.
 """
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from fiware_cosmos_orion_flink_connector_examples_spark.operators import (
-    ivm,
     pipeline,
     text,
 )
@@ -27,6 +26,24 @@ DOCS = [
 SCHEMA = "doc_id long, text string, source string, n_chars long"
 
 
+def _legs(paths):
+    """Source + count/sum view + search index, the three-member shape."""
+    return [
+        pipeline.source_leg(
+            "source", paths["source"], "doc_id", n_buckets=2,
+            txn_app="pipeline-src",
+        ),
+        pipeline.agg_view_leg(
+            "view", paths["view"], "source", ["source"], ["n_chars"],
+            txn_app="pipeline-view",
+        ),
+        pipeline.search_index_leg(
+            "search", paths["index"], "source", n_buckets=2,
+            txn_app="pipeline-idx",
+        ),
+    ]
+
+
 def _create(spark, tmp_path):
     cat = str(tmp_path / "cat")
     paths = {
@@ -34,16 +51,8 @@ def _create(spark, tmp_path):
         "view": str(tmp_path / "view"),
         "index": str(tmp_path / "idx"),
     }
-    pipeline.pipeline_create(
-        spark,
-        cat,
-        spark.createDataFrame(DOCS, SCHEMA),
-        paths["source"],
-        paths["view"],
-        paths["index"],
-        group_cols=["source"],
-        sum_cols=["n_chars"],
-        n_buckets=2,
+    pipeline.pipeline_create_legs(
+        spark, cat, _legs(paths), {"source": spark.createDataFrame(DOCS, SCHEMA)}
     )
     return cat, paths
 
@@ -90,15 +99,13 @@ BATCH = [
 BATCH_SCHEMA = SCHEMA + ", _del boolean"
 
 
-def _apply(spark, cat, crash=False, batch_id=1):
-    return pipeline.pipeline_apply(
+def _apply(spark, cat, paths, crash=False, batch_id=1, rows=BATCH):
+    return pipeline.pipeline_apply_legs(
         spark,
         cat,
-        spark.createDataFrame(BATCH, BATCH_SCHEMA),
+        _legs(paths),
+        {"source": spark.createDataFrame(rows, BATCH_SCHEMA)},
         batch_id,
-        group_cols=["source"],
-        sum_cols=["n_chars"],
-        delete_col="_del",
         _crash_before_publish=crash,
     )
 
@@ -112,7 +119,7 @@ def test_crash_before_publish_serves_old_root_then_retry_completes(
     assert phrase0 == {(1, 1), (3, 2), (5, 1)}
 
     with pytest.raises(RuntimeError, match="injected crash"):
-        _apply(spark, cat, crash=True)
+        _apply(spark, cat, paths, crash=True)
 
     # every sub-commit LANDED (dangling) ...
     assert layout.snapshot_latest_version(spark, paths["source"]) > res0[
@@ -127,7 +134,7 @@ def test_crash_before_publish_serves_old_root_then_retry_completes(
     assert (view1, phrase1, n1) == (view0, phrase0, n0)
 
     # retry of the SAME batch id completes every leg and publishes once
-    v = _apply(spark, cat, crash=False)
+    v = _apply(spark, cat, paths, crash=False)
     assert v == 2
     res2, view2, phrase2, n2 = _state(spark, cat)
     assert n2 == 5  # -1 delete +1 insert
@@ -145,7 +152,7 @@ def test_crash_before_publish_serves_old_root_then_retry_completes(
     assert view2 == expect
 
     # replayed publish of the same batch id: no new root
-    assert _apply(spark, cat, crash=False, batch_id=1) == 2
+    assert _apply(spark, cat, paths, crash=False, batch_id=1) == 2
 
 
 def test_catalog_read_and_kind_guard(spark, tmp_path):
@@ -157,11 +164,10 @@ def test_catalog_read_and_kind_guard(spark, tmp_path):
 
 def test_catalog_vacuum_protects_pinned_chain(spark, tmp_path):
     cat, paths = _create(spark, tmp_path)
-    _apply(spark, cat, batch_id=1)
-    b2 = [(7, "hash join once more", "new", 19, False)]
-    pipeline.pipeline_apply(
-        spark, cat, spark.createDataFrame(b2, BATCH_SCHEMA), 2,
-        group_cols=["source"], sum_cols=["n_chars"], delete_col="_del",
+    _apply(spark, cat, paths, batch_id=1)
+    _apply(
+        spark, cat, paths, batch_id=2,
+        rows=[(7, "hash join once more", "new", 19, False)],
     )
     assert layout.index_root_latest(spark, cat) == 3
     out = layout.catalog_vacuum(spark, cat, keep_last=1)
@@ -188,40 +194,3 @@ def test_foreign_catalog_commit_conflicts_cleanly(spark, tmp_path):
     layout.catalog_commit(spark, cat, pins)  # foreign root lands
     with pytest.raises(layout.SnapshotVersionConflict):
         layout.catalog_commit(spark, cat, pins, expected_version=res["version"])
-
-
-def test_maintain_pipeline_streaming_sink(spark, tmp_path):
-    """maintain_pipeline: micro-batches (ids starting at 0, the
-    Structured Streaming contract) each publish one catalog root;
-    replays of any batch id are absorbed whole-pipeline; the final
-    catalog serves view == recompute and index == final corpus."""
-    from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
-
-    cat, paths = _create(spark, tmp_path)
-    sink = jobs.maintain_pipeline(cat, group_cols=["source"], sum_cols=["n_chars"])
-
-    b0 = spark.createDataFrame(BATCH, BATCH_SCHEMA)
-    b1 = spark.createDataFrame(
-        [(7, "hash join streamed", "new", 18, False)], BATCH_SCHEMA
-    )
-    sink(b0, 0)
-    sink(b0, 0)  # immediate replay: absorbed at every leg and the root
-    sink(b1, 1)
-    sink(b0, 0)  # stale replay after a later batch
-    sink(spark.createDataFrame([], b0.schema), 2)  # empty: nothing moves
-    res, view_rows, phrase, n_src = _state(spark, cat)
-    assert res["version"] == 3  # create + 2 real batches, replays absorbed
-    assert n_src == 6
-    assert (7, 1) in phrase and (3, 2) not in phrase  # doc 3 deleted in b0
-    expect = {
-        (r["source"], r["n"], r["s"])
-        for r in layout.snapshot_read(
-            spark,
-            res["tables"]["source"]["path"],
-            res["tables"]["source"]["version"],
-        )
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("s"))
-        .collect()
-    }
-    assert view_rows == expect

@@ -349,12 +349,7 @@ def test_maintain_cms_rollup_equals_oneshot(spark, tmp_path):
     lossless, so replay order and batching cannot drift it."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
-    from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
-        md5int64_seeded,
-    )
-    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
     from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
@@ -380,10 +375,38 @@ def test_maintain_cms_rollup_equals_oneshot(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    maintained = {
-        (r["d"], r["bucket"]): r["c"]
-        for r in spark.read.parquet(table).collect()
-    }
+    maintained = _cells(layout.snapshot_read(spark, table))
+    oneshot = _oneshot_cms(docs)
+    assert maintained == oneshot and maintained
+
+    # at-least-once REDELIVERY: a batch_id replayed after its commit
+    # (crash before the checkpoint commit) must be a no-op — the
+    # watermark rides in the table's manifest, so the retry sees it
+    # even though the sink fn is a fresh closure.  A genuinely NEW
+    # batch id still merges.
+    sink = jobs.maintain_cms_rollup(table)
+    replay = spark.createDataFrame([(0, rows[0].text)], "doc_id long, text string")
+    sink(replay, 1)  # last streamed batch_id was 1
+    assert _cells(layout.snapshot_read(spark, table)) == oneshot
+    sink(replay, 2)
+    after_new = _cells(layout.snapshot_read(spark, table))
+    assert sum(after_new.values()) > sum(oneshot.values())
+
+
+def _cells(frame):
+    return {(r["d"], r["bucket"]): r["c"] for r in frame.collect()}
+
+
+def _oneshot_cms(docs):
+    """The reference sketch: every token of ``docs`` counted into its
+    seeded-md5 bucket per row (depth 4, width 1024)."""
+    from pyspark.sql import functions as F
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import (
+        md5int64_seeded,
+    )
+    from fiware_cosmos_orion_flink_connector_examples_spark.operators import text
+
     ex = docs.filter(F.col("text").isNotNull()).select(
         F.explode(text.tokens("text")).alias("term")
     )
@@ -391,34 +414,51 @@ def test_maintain_cms_rollup_equals_oneshot(spark, tmp_path):
         F.pmod(md5int64_seeded(F.col("term"), f"cms{d}"), F.lit(1024))
         for d in range(4)
     ]
-    oneshot = {
-        (r["d"], r["bucket"]): r["c"]
-        for r in ex.select(
-            F.posexplode(F.array(*bucket_cols)).alias("d", "bucket")
-        )
+    return _cells(
+        ex.select(F.posexplode(F.array(*bucket_cols)).alias("d", "bucket"))
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    assert maintained == oneshot and maintained
+    )
 
-    # at-least-once REDELIVERY (ADVICE r11 high): a batch_id replayed
-    # after its swap completed (crash before the checkpoint commit)
-    # must be a no-op — the watermark rides inside the swapped table
-    # dir, so the retry sees it even though the sink fn is a fresh
-    # closure.  A genuinely NEW batch id still merges.
+
+def test_maintain_cms_rollup_crash_before_commit_keeps_previous_counts(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A micro-batch that dies at the manifest commit leaves the
+    previous version serving, and a retry of the same batch id then
+    equals the one-shot sketch over both batches."""
+    import pytest
+
+    from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
+    from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    first, second = docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
+    table = str(tmp_path / "cms_table")
     sink = jobs.maintain_cms_rollup(table)
-    replay = spark.createDataFrame([(0, rows[0].text)], "doc_id long, text string")
-    sink(replay, 1)  # last streamed batch_id was 1
-    after_replay = {
-        (r["d"], r["bucket"]): r["c"] for r in spark.read.parquet(table).collect()
-    }
-    assert after_replay == oneshot
-    sink(replay, 2)
-    after_new = {
-        (r["d"], r["bucket"]): r["c"] for r in spark.read.parquet(table).collect()
-    }
-    assert sum(after_new.values()) > sum(oneshot.values())
+    sink(first, 0)
+    before = _cells(layout.snapshot_read(spark, table))
+    assert before == _oneshot_cms(first)
+
+    real = layout._commit_manifest
+    crashed = []
+
+    def crash_once(spark_, base, version, manifest):
+        if not crashed:
+            crashed.append(version)
+            raise OSError("injected crash at the manifest commit")
+        return real(spark_, base, version, manifest)
+
+    monkeypatch.setattr(layout, "_commit_manifest", crash_once)
+    with pytest.raises(OSError, match="injected crash"):
+        sink(second, 1)
+    assert crashed == [2]
+    assert layout.snapshot_latest_version(spark, table) == 1
+    assert _cells(layout.snapshot_read(spark, table)) == before
+
+    sink(second, 1)  # the retry of the same batch id
+    assert layout.snapshot_latest_version(spark, table) == 2
+    assert _cells(layout.snapshot_read(spark, table)) == _oneshot_cms(docs)
 
 
 def test_ann_index_add_equals_rebuild(spark, tmp_path):

@@ -435,7 +435,8 @@ def test_streaming_dedup(spark, tmp_path):
 
 
 def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """Custom stateful op (applyInPandasWithState) vs its batch twin."""
+    """The streaming sessionizer (native session_window state) vs its
+    independent lag + running-sum batch twin."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
@@ -490,7 +491,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
         (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
         for r in jobs.sessionize_batch(batch_events, gap_secs=30.0).collect()
     }
-    # streaming emits sessions whose timeout fired; the sentinel's own
+    # streaming emits sessions the watermark closed; the sentinel's own
     # session (and any session the final watermark didn't pass) may be open
     exp_closed = {s for s in exp_all if s[0] in (1, 2)}
     assert got == exp_closed
@@ -1095,83 +1096,6 @@ def test_incremental_hourly_rollup_matches_batch(spark, tmp_path):
     want = {(r.hour, r.event_type): (r.n, r.s) for r in batch.collect()}
     assert got == want
     assert len(got) == 4  # (10,a) (10,b) (11,a) (12,b)
-
-
-def test_native_session_window_stream_matches_batch(spark, tmp_path):
-    """Built-in session_window + watermark (state-store session merge)
-    vs the same groupBy(session_window) run as a batch query — the
-    zero-custom-state twin of the applyInPandasWithState sessionizer."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    evs = []
-    eid = 0
-    for user in (1, 2):
-        for burst in range(3):
-            base = t0 + dt.timedelta(minutes=10 * burst)
-            for i in range(4):
-                evs.append((eid, base + dt.timedelta(seconds=5 * i), user, float(10 * user + i)))
-                eid += 1
-    evs.append((eid, t0 + dt.timedelta(hours=2), 99, 0.0))  # watermark push
-    spool = tmp_path / "swspool"
-    spool.mkdir()
-    with open(spool / "a.jsonl", "w") as f:
-        for e, ts, u, v in evs:
-            f.write(
-                json.dumps(
-                    {
-                        "event_id": e,
-                        "ts": ts.replace(tzinfo=dt.timezone.utc).timestamp(),
-                        "user_id": u,
-                        "value": v,
-                    }
-                )
-                + "\n"
-            )
-    stream = (
-        spark.readStream.schema("event_id long, ts double, user_id long, value double")
-        .json(str(spool))
-        .selectExpr("user_id", "timestamp_seconds(ts) AS ts", "value")
-    )
-    out = jobs.streaming_session_window(stream, gap_secs=30.0)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_native_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_sw"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start, r.session_end_gap, r.n_events, r.sum_value)
-        for r in spark.sql("select * from t_native_sessions").collect()
-    }
-    batch_events = spark.createDataFrame(
-        [(u, ts, v) for _, ts, u, v in evs], "user_id long, ts timestamp, value double"
-    )
-    # same groupBy(session_window) as a batch query — watermark is a
-    # no-op on a bounded DataFrame, so this is the full expected set
-    exp_all = {
-        (r.user_id, r.session_start, r.session_end_gap, r.n_events, r.sum_value)
-        for r in batch_events.groupBy(
-            F.session_window("ts", "30 seconds"), F.col("user_id")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end_gap"),
-            "n_events",
-            "sum_value",
-        )
-        .collect()
-    }
-    exp_closed = {s for s in exp_all if s[0] in (1, 2)}
-    assert got == exp_closed
 
 
 def test_stream_redact_and_quality_matches_batch(spark, tmp_path):
@@ -2042,12 +1966,12 @@ def test_streaming_hash_dedup_idempotent_redelivery(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_dau_wau_bounded_evicts_closed_days(spark, tmp_path):
-    """VERDICT r8 #6: the EventTimeTimeout variant must (a) emit the
-    same final per-day counts as the exact python replication for
-    every dau>0 day, and (b) DROP closed-day state — after a
-    multi-week replay the state-store row count is bounded by the
-    active horizon, not the days seen."""
+def test_streaming_dau_wau_evicts_closed_days(spark, tmp_path):
+    """The EventTimeTimeout must (a) leave the same final per-day
+    counts as the exact python replication for every dau>0 day, and
+    (b) DROP closed-day state — after a multi-week replay the
+    state-store row count is bounded by the active horizon, not the
+    days seen."""
     import datetime as dt
 
     from fiware_cosmos_orion_flink_connector_examples_spark.streaming import jobs
@@ -2101,7 +2025,7 @@ def test_streaming_dau_wau_bounded_evicts_closed_days(spark, tmp_path):
         .selectExpr("timestamp_seconds(ts) AS ts", "user_id")
     )
     q = (
-        jobs.streaming_dau_wau_bounded(stream)
+        jobs.streaming_dau_wau(stream)
         .writeStream.format("memory")
         .queryName("t_dwb")
         .outputMode("update")
@@ -2119,9 +2043,9 @@ def test_streaming_dau_wau_bounded_evicts_closed_days(spark, tmp_path):
     got = {d: (r.dau, r.wau) for d, r in best.items()}
     assert got == expected([e for b in weeks + [tail] for e in b])
 
-    # the NoTimeout twin would hold EVERY report day ever seen
+    # without eviction the state would hold EVERY report day ever seen
     # (21 event days + trailing contributions + the straggler ≈ 34
-    # keys); the bounded variant must have evicted everything whose
+    # keys); the timeout must have evicted everything whose
     # day_end + 7d fell behind the final batch's watermark
     n_days_seen = len(
         {
