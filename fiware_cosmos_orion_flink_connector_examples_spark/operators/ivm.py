@@ -257,21 +257,9 @@ def _touched_view_rows(
     from pyspark.sql.types import StructType
 
     manifest = layout.snapshot_manifest(spark, view_path, view_version)
-    keyed = manifest["keyed"]
-    nb = int(keyed["n_buckets"])
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    touched = {
-        r["_b"]
-        for r in agg.select(
-            F.pmod(F.xxhash64(F.col(_GKEY).cast("string")), F.lit(nb)).alias("_b")
-        )
-        .distinct()
-        .collect()
-    }
-    files = [
-        f for f in manifest["files"] if manifest["buckets"].get(f) in touched
-    ]
-    # DV-aware (round 17): merge-on-read deleted positions never surface
+    files = layout.keyed_bucket_files(manifest, agg)
+    # DV-aware: merge-on-read deleted positions never surface
     src = layout.snapshot_read_files(spark, manifest, files, schema)
     return src.select(
         _GKEY,
@@ -715,18 +703,7 @@ def _pruned_join_side(
     bucket_key = None
     if keyed and keyed["key_col"] in join_cols and not keyed.get("bucket_col"):
         bucket_key = keyed["key_col"]
-        nb = int(keyed["n_buckets"])
-        touched = {
-            r["_b"]
-            for r in delta.select(
-                F.pmod(
-                    F.xxhash64(F.col(bucket_key).cast("string")), F.lit(nb)
-                ).alias("_b")
-            )
-            .distinct()
-            .collect()
-        }
-        files = [f for f in files if manifest["buckets"].get(f) in touched]
+        files = layout.keyed_bucket_files(manifest, delta)
         pruned = True
     for c in join_cols:
         if c == bucket_key:  # bucket-pruned already — same column's

@@ -1929,8 +1929,8 @@ def _pinned_docterms_pairs(spark, path: str, batch_ids, id_col: str, version: in
     buckets actually hold batch docs (columnar projection, no terms
     arrays read), then the full rows load from ONLY those buckets.  A
     pure-insert batch (no doc previously indexed) therefore never
-    reads a terms array at all — the read that made a 20k-insert
-    ingest cost a corpus scan in the round-14 smoke."""
+    reads a terms array at all, where a full read would cost a 20k-doc
+    insert a corpus scan."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -1939,16 +1939,7 @@ def _pinned_docterms_pairs(spark, path: str, batch_ids, id_col: str, version: in
 
     base = f"{path.rstrip('/')}/docterms"
     resolved = layout.snapshot_manifest(spark, base, version)
-    nb = int(resolved["keyed"]["n_buckets"])
-    touched = {
-        r["_b"]
-        for r in batch_ids.select(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(nb)).alias("_b")
-        )
-        .distinct()
-        .collect()
-    }  # bounded by n_buckets — a layout constant
-    files = [f for f in resolved["files"] if resolved["buckets"].get(f) in touched]
+    files = layout.keyed_bucket_files(resolved, batch_ids)
     schema = StructType.fromJson(_json.loads(resolved["schema"]))
     if not files:
         return spark.createDataFrame([], schema).select(
@@ -1958,16 +1949,10 @@ def _pinned_docterms_pairs(spark, path: str, batch_ids, id_col: str, version: in
         layout.snapshot_read_files(spark, resolved, files, schema)
         .select(id_col)
         .join(F.broadcast(batch_ids), id_col, "semi")
-        .select(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(nb)).alias("_b")
-        )
-        .distinct()
-        .collect()
     )
-    matched_files = [
-        f for f in files if resolved["buckets"].get(f) in {r["_b"] for r in present}
-    ]
-    old = layout.snapshot_read_files(spark, resolved, matched_files, schema)
+    old = layout.snapshot_read_files(
+        spark, resolved, layout.keyed_bucket_files(resolved, present), schema
+    )
     return (
         old.join(F.broadcast(batch_ids), id_col, "semi")
         .select(F.col(id_col), F.explode("terms").alias("term"))

@@ -1,14 +1,14 @@
-"""The snapshot CDC feed as a NATIVE Structured Streaming source
-(round 16): ``spark.readStream.format("snapshot_cdc").load(path)``
-streams a snapshot table's per-commit changes — ``_version``,
-``_change`` (insert/update/delete) plus the table's columns — into ANY
-streaming query, via PySpark 4's Python Data Source API.
+"""The snapshot CDC feed as a NATIVE Structured Streaming source:
+``spark.readStream.format("snapshot_cdc").load(path)`` streams a
+snapshot table's per-commit changes — ``_version``, ``_change``
+(insert/update/delete) plus the table's columns — into ANY streaming
+query, via PySpark 4's Python Data Source API.
 
 Why this shape: the engine's maintenance sinks (``maintain_agg_view``,
 ``search_index_sync``…) already tail the commit log with their own
 exactly-once cursors, but an EXTERNAL consumer (a Kafka egress job, a
-warehouse loader, someone else's foreachBatch) previously had to poll
-``layout.snapshot_tail`` by hand.  As a registered data source the
+warehouse loader, someone else's foreachBatch) would otherwise have to
+poll ``layout.snapshot_tail`` by hand.  As a registered data source the
 commit log becomes a first-class stream: offsets are commit VERSIONS
 (``{"version": N}``), so Structured Streaming's checkpoint IS the
 cursor — deterministic replay between offsets gives exactly-once to
@@ -21,8 +21,10 @@ ROW READING RUNS ON EXECUTORS, one input partition per recorded delta
 file (``partitions()`` → pyarrow reads inside ``read(partition)``), so
 a large backlog fans out across the cluster instead of funneling
 through the driver.  The reader is PURE PYTHON (json + pyarrow — no
-JVM round-trips): it reads the same ``_manifest_vN.json`` /
-``segments/seg-vN-*.json`` files ``layout`` writes.
+JVM round-trips): it reads the version and segment files ``layout``
+writes, naming and classifying them through ``layout``'s format
+functions (``manifest_file``, ``commit_segment``, ``commit_delta``,
+``commit_time``), which need no Spark session.
 
 Semantics match ``layout.snapshot_changes_feed``: post-image rows only
 (``update_pre`` pre-images stay internal to the IVM algebra — pass
@@ -30,10 +32,10 @@ Semantics match ``layout.snapshot_changes_feed``: post-image rows only
 what an EXTERNAL signed-delta consumer doing its own incremental
 aggregation needs: insert/update +1, delete/update_pre −1), version
 1 (the table's creation) streams as inserts when starting from offset
-0, metadata-only commits contribute nothing, and a truncate/overwrite
-in the span raises (re-bootstrap the consumer).  Vacuumed-away
-versions raise with the re-bootstrap hint rather than silently
-skipping.
+0, compactions contribute nothing, and a truncate/overwrite or a
+restore in the span raises ``layout.SnapshotTruncateInFeed``
+(re-bootstrap the consumer).  Vacuumed-away versions raise with the
+re-bootstrap hint rather than silently skipping.
 
 Usage::
 
@@ -47,23 +49,21 @@ Usage::
             .load("/data/my_table"))
     q = feed.writeStream.foreachBatch(...).start()
 
-``startTimestamp`` (round 17, exclusive with ``startVersion``)
-starts instead from the first commit AT-OR-AFTER the given time
-(epoch seconds or ISO string) — resolved off the manifests'
-``committed_at`` stamps (file-mtime fallback for pre-stamp
-manifests), the Delta ``startingTimestamp`` analog.
+``startTimestamp`` (exclusive with ``startVersion``) starts instead
+from the first commit AT-OR-AFTER the given time (epoch seconds or ISO
+string) — resolved off the versions' ``committed_at`` stamps, the Delta
+``startingTimestamp`` analog.  A version file without the stamp raises
+``ValueError`` naming the file.
 
-Read path (round 17): ``read()`` yields ``pyarrow.RecordBatch``es —
-the pre-image filter and the _version/_change envelope are built
-arrow-side, so a ``startVersion=0`` BOOTSTRAP of a large table stays
-vectorized end-to-end instead of funneling rows through the Python
-interpreter (~10× on a 1M-row bootstrap; measured with
-tools/cdc_read_smoke.py, now deleted, in git history).
-That said, for VERY large tables the recommended pattern is still:
-bootstrap via a batch ``layout.snapshot_read`` (full parquet scan
-speed, no streaming machinery), then start the stream with
-``startVersion = <version you read>`` — the stream then carries only
-O(changed rows) per trigger.
+Read path: ``read()`` yields ``pyarrow.RecordBatch``es — the pre-image
+filter and the _version/_change envelope are built arrow-side, so a
+``startVersion=0`` BOOTSTRAP of a large table stays vectorized
+end-to-end instead of funneling rows through the Python interpreter
+(~10× on a 1M-row bootstrap).  That said, for VERY large tables the
+recommended pattern is still: bootstrap via a batch
+``layout.snapshot_read`` (full parquet scan speed, no streaming
+machinery), then start the stream with ``startVersion = <version you
+read>`` — the stream then carries only O(changed rows) per trigger.
 
 Paths: local/NFS paths and ``file:`` URIs use plain ``open()``;
 paths carrying another scheme (``s3://…``, ``gs://…``) route through
@@ -86,7 +86,6 @@ infrastructure for the mandated training-data pipeline surface.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -97,6 +96,8 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+from fiware_cosmos_orion_flink_connector_examples_spark.sources import layout
 
 
 def _local(path: str) -> str:
@@ -126,6 +127,15 @@ def _open_text(path: str):
     return open(path)
 
 
+def _versions(base: str) -> list[int]:
+    """Every published table version at ``base``, ascending."""
+    if not os.path.isdir(base):
+        return []
+    return sorted(
+        v for v in map(layout.manifest_version, os.listdir(base)) if v is not None
+    )
+
+
 def _version_before(base: str, ts) -> int:
     """The newest version committed strictly BEFORE epoch/ISO ``ts``
     (0 when none) — the startTimestamp cursor: the stream then serves
@@ -138,33 +148,22 @@ def _version_before(base: str, ts) -> int:
 
             ts = _dt.datetime.fromisoformat(ts).timestamp()
     best = 0
-    for m in (re.match(r"_manifest_v(\d+)\.json$", f) for f in os.listdir(base)):
-        if not m:
-            continue
-        v = int(m.group(1))
-        p = os.path.join(base, f"_manifest_v{v}.json")
+    for v in _versions(base):
         try:
-            at = _manifest_doc(base, v).get("committed_at")
+            doc = _manifest_doc(base, v)
         except FileNotFoundError:
-            continue
-        if at is None:
-            at = os.stat(p).st_mtime  # pre-stamp manifest
-        if at < ts:
-            best = max(best, v)
+            continue  # vacuumed since the listing
+        if layout.commit_time(doc, os.path.join(base, layout.manifest_file(v))) < ts:
+            best = v
     return best
 
 
 def _latest_version(base: str) -> int:
-    vs = [
-        int(m.group(1))
-        for f in glob.glob(os.path.join(base, "_manifest_v*.json"))
-        if (m := re.fullmatch(r"_manifest_v(\d+)\.json", os.path.basename(f)))
-    ]
-    return max(vs, default=0)
+    return max(_versions(base), default=0)
 
 
 def _manifest_doc(base: str, version: int) -> dict:
-    p = os.path.join(base, f"_manifest_v{version}.json")
+    p = os.path.join(base, layout.manifest_file(version))
     try:
         with _open_text(p) as fh:
             return json.load(fh)
@@ -224,10 +223,9 @@ class SnapshotCdcStreamReader(DataSourceStreamReader):
         if "startTimestamp" in options:
             # stream every commit whose commit time is >= the given
             # timestamp (epoch seconds or ISO string — the Delta
-            # startingTimestamp analog, round 17): the cursor starts at
-            # the newest EARLIER commit.  Commit times come from the
-            # committed_at manifest stamp; pre-stamp manifests fall
-            # back to file mtime.
+            # startingTimestamp analog): the cursor starts at the
+            # newest EARLIER commit.  Commit times come from the
+            # committed_at manifest stamp.
             self.start_version = _version_before(
                 self.base, options["startTimestamp"]
             )
@@ -241,7 +239,7 @@ class SnapshotCdcStreamReader(DataSourceStreamReader):
         # (pre-evolution files None-fill later-added columns inside
         # read()); per-commit manifests are never consulted for the
         # column list, so a backlog drain crossing a schema evolution
-        # stays aligned with the declared schema (ADVICE r16 #2).
+        # stays aligned with the declared schema.
         if schema is not None:
             from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -265,48 +263,20 @@ class SnapshotCdcStreamReader(DataSourceStreamReader):
 
     # -- planning (driver, metadata-only) ------------------------------
     def partitions(self, start: dict, end: dict) -> list[_CdcPartition]:
+        """One partition per delta file of every commit in (start, end],
+        each commit classified by ``layout.commit_delta`` off its own
+        segment; from offset 0 the table's creation streams as
+        inserts."""
         base = self.base
         out: list[_CdcPartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            doc = _manifest_doc(base, v)
-            segs = doc.get("segments") or []
-            rel = segs[-1] if segs else None
-            if rel is None or f"seg-v{v}-" not in rel:
-                raise ValueError(
-                    f"snapshot_cdc: version {v} of {base} has no own "
-                    "segment — pre-segment history; re-bootstrap"
-                )
-            seg = _segment_doc(base, rel)
-            mode = seg.get("change_mode")
-            if v == 1 and (
-                mode == "truncate"
-                or (mode is None and seg.get("truncate"))
-            ):
-                # the creation commit: adds ARE the rows — both the
-                # keyed layout (truncate flag, no change_mode) and a
-                # plain snapshot_commit overwrite (change_mode
-                # "truncate") bootstrap as inserts (ADVICE r16 #3)
-                mode = "bootstrap"
-            if mode == "log":
-                kind = "log_pre" if self.include_pre else "log"
-                for f in seg.get("changelog") or []:
-                    out.append(_CdcPartition(v, kind, _local(f)))
-            elif mode in ("insert", "bootstrap"):
-                for f in seg.get("add") or []:
-                    out.append(_CdcPartition(v, "insert", _local(f)))
-            elif mode == "truncate":
-                raise ValueError(
-                    f"snapshot_cdc: span crosses a TRUNCATE/overwrite commit "
-                    f"(v{v} of {base}) — not expressible as row changes; "
-                    "re-bootstrap the stream from that version"
-                )
-            elif mode == "none" or (seg.get("truncate") and mode is None):
-                continue  # metadata/file compaction — no logical change
-            else:
-                raise ValueError(
-                    f"snapshot_cdc: version {v} of {base} recorded no change "
-                    "delta — re-bootstrap the stream"
-                )
+            rel = layout.commit_segment(base, v, _manifest_doc(base, v))
+            kind, files = layout.commit_delta(
+                base, v, _segment_doc(base, rel), bootstrap=True
+            )
+            if kind == "log" and self.include_pre:
+                kind = "log_pre"
+            out += [_CdcPartition(v, kind, _local(f)) for f in files]
         return out
 
     # -- reading (executors, pure pyarrow, VECTORIZED) -------------------

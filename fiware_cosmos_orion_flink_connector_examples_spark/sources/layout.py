@@ -1,56 +1,25 @@
-"""Output-layout writer: the storage-side half of the engine.
+"""Snapshot tables: the storage-side half of the engine.
 
-At 100 TB, HOW a table is written decides every later read: files per
-partition value (small-file explosion vs giant-file stragglers),
-within-file ordering (row-group min/max pruning works only on sorted
-data), and hive partition columns (partition pruning / DPP).  The
-reference has no batch sinks at all (its only sink is HTTP,
-Example2.scala:42); this module is the engine's data-lake writer
-discipline, regression-tested in tests/test_layout_writer.py.
+Every table the engine writes (exactly-once stream sinks, incremental
+views, search and ANN indexes, catalogs) is a snapshot table: immutable
+data files plus a log of versioned JSON commit files.  This module is
+the one owner of that log's format: file names, the publish rename,
+the commit builder, the keyed-bucket hash and the reading of what one
+commit changed.  The reference has no batch sinks at all (its only
+sink is HTTP, Example2.scala:42).  Regression tests:
+tests/test_layout_writer.py and tests/test_snapshot_*.py.
 """
 
 from __future__ import annotations
 
+import json
+import re
+import time
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fiware_cosmos_orion_flink_connector_examples_spark.functions.hashing import md5int64
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_cols: list[str],
-    files_per_value: int = 1,
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` hive-partitioned by ``partition_cols`` with a
-    BOUNDED number of files per partition value and rows sorted by
-    ``sort_cols`` inside each file.
-
-    Mechanics: repartition on (partition_cols [+ deterministic salt])
-    clusters each partition value into exactly ``files_per_value``
-    tasks, so each task writes one file per value it holds — no
-    thousand-small-files explosion, no single-writer straggler for a
-    hot value.  ``sortWithinPartitions`` orders rows inside each file,
-    which is what makes parquet row-group min/max statistics
-    selective for later range predicates on ``sort_cols``.  The salt
-    is a hash of the first sort column — deterministic, so repeated
-    runs produce identical layouts."""
-    keys = [F.col(c) for c in partition_cols]
-    if files_per_value > 1:
-        salt = F.pmod(md5int64(F.col(sort_cols[0]).cast("string")), F.lit(files_per_value))
-        clustered = df.repartition(*keys, salt.alias("_salt"))
-    else:
-        clustered = df.repartition(*keys)
-    (
-        clustered.sortWithinPartitions(*partition_cols, *sort_cols)
-        .write.partitionBy(*partition_cols)
-        .format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )
+from pyspark.sql.types import StructType
 
 
 def zorder_key(cols: list, bits: int = 8):
@@ -76,8 +45,7 @@ def _scaled_zorder_key(df: DataFrame, zorder_cols: list[str], bits: int = 8):
     """Build the Morton key COLUMN for ``zorder_cols`` of ``df``: scale
     each column to [0, 2**bits) by its global min/max (ONE 1-row agg —
     the only driver round-trip), then interleave with ``zorder_key``.
-    Shared by ``write_zordered`` (plain parquet) and
-    ``compact_files(zorder_by=...)`` (snapshot tables)."""
+    ``compact_files(zorder_by=...)`` clusters its rewrite on it."""
     exprs = []
     for i, c in enumerate(zorder_cols):
         exprs += [
@@ -102,36 +70,6 @@ def _scaled_zorder_key(df: DataFrame, zorder_cols: list[str], bits: int = 8):
             )
         )
     return zorder_key(scaled, bits)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    n_files: int = 16,
-    bits: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """OPTIMIZE ZORDER-style write (the Delta Lake data-skipping
-    discipline, re-expressed on plain parquet): scale each
-    ``zorder_cols`` column to [0, 2**bits) by its global min/max (ONE
-    1-row agg — the only driver round-trip), Morton-interleave into a
-    single key, then ``repartitionByRange(n_files, key)`` +
-    ``sortWithinPartitions(key)`` so every file covers one compact
-    Z-curve segment.  Per-file min/max statistics then prune box
-    queries on ANY subset of the z-ordered dimensions — a linear sort
-    prunes only its leading column (a y-only predicate reads EVERY
-    x-sorted file; the regression test pins z-order strictly better
-    on exactly that query).  At 100 TB this is a maintenance-pass
-    rewrite, one full shuffle by design — the payoff is every later
-    scan."""
-    out = (
-        df.withColumn("_z", _scaled_zorder_key(df, zorder_cols, bits))
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out.write.format(fmt).mode("overwrite").save(path)
 
 
 # --- snapshot-isolated tables (manifest commit log) --------------------------
@@ -173,28 +111,27 @@ def write_zordered(
 
 
 class SnapshotTxnAlreadyApplied(Exception):
-    """Raised by snapshot_commit/snapshot_merge when a _txn_update does
-    not ADVANCE its app's watermark in the manifest the commit would
-    supersede — the transactional-idempotence guard INSIDE the commit
-    protocol.  The sinks' cheap pre-check catches ordinary replays; this
-    guard closes the zombie-writer race (two live instances of the same
-    app: both pass the pre-check, one commits, the other must abort
-    here instead of appending the batch a second time — Delta's
-    txnVersion revalidation).  Because an interleaving foreign commit
-    makes the rename conflict and the retry re-reads the new manifest,
-    this check is always evaluated against the manifest actually
-    superseded."""
+    """Raised when a ``_txn_update`` does not ADVANCE its app's
+    watermark in the version file the commit would supersede — the
+    transactional-idempotence guard INSIDE the commit protocol.  The
+    sinks' cheap pre-check catches ordinary replays; this guard closes
+    the zombie-writer race (two live instances of the same app: both
+    pass the pre-check, one commits, the other must abort here instead
+    of appending the batch a second time — Delta's txnVersion
+    revalidation).  Because an interleaving foreign commit makes the
+    rename conflict and the retry re-reads the new version, this check
+    is always evaluated against the version actually superseded."""
 
 
 class SnapshotTruncateInFeed(ValueError):
     """Raised when a change-feed span crosses a TRUNCATE/overwrite
-    commit (round 14's truncate marker): a truncate has no row-change
-    representation, and silently full-diffing it would present "every
-    old key deleted, every new key inserted" as if it were ordinary
-    churn.  Consumers catch this, re-bootstrap from
-    ``snapshot_read(version=<the truncating version>)``, and tail from
-    there — the same recovery as a from-zero bootstrap.  Subclasses
-    ValueError so pre-round-14 catch-alls keep working."""
+    commit: a truncate has no row-change representation, and silently
+    full-diffing it would present "every old key deleted, every new key
+    inserted" as if it were ordinary churn.  Consumers catch this,
+    re-bootstrap from ``snapshot_read(version=<the truncating
+    version>)``, and tail from there — the same recovery as a
+    from-zero bootstrap.  Subclasses ValueError, so a consumer that
+    treats every missing delta as a re-bootstrap catches it too."""
 
 
 class SnapshotVersionConflict(IOError):
@@ -205,7 +142,7 @@ class SnapshotVersionConflict(IOError):
     into the CURRENT table rows before merging: a foreign-app commit
     landing between that read and the merge would be silently
     overwritten for touched keys without this guard).  Also raised
-    by ``_commit_manifest`` and ``index_root_commit`` when a concurrent
+    by every version-file publish (``_publish``) when a concurrent
     committer wins the rename, and by ``optimistic_commit`` when every
     attempt conflicted.  Subclasses IOError."""
 
@@ -259,42 +196,173 @@ def _write_small(spark, path: str, data: bytes) -> None:
     st.close()
 
 
+def _is_not_found(e: Exception) -> bool:
+    # Py4J wraps java.io.FileNotFoundException
+    return "FileNotFoundException" in str(e)
+
+
 def _json_safe(v):
     # stats min/max of timestamp/date/decimal columns: serialize as
     # str.  For ISO-8601 temporals lexicographic order IS chronological
     # order; decimal strings do NOT order lexicographically — which is
     # why the segment also records stats_types and snapshot_scan
-    # coerces bounds back to comparable values before pruning (review
-    # finding, round 11: lexicographic '9.5' > '10.2' silently pruned
-    # overlapping files).
+    # coerces bounds back to comparable values before pruning
+    # (lexicographic '9.5' > '10.2' would silently prune overlapping
+    # files).
     return str(v)
 
 
-def _commit_manifest(spark, base: str, version: int, manifest: dict) -> None:
-    """Atomically publish _manifest_v<version>.json: stage the full
-    bytes at a hidden .tmp name, then rename to the final name.  The
-    destination must not exist — Hadoop rename returns false then, so
-    a concurrent commit of the same version raises
-    ``SnapshotVersionConflict`` instead of clobbering (optimistic
-    concurrency).  Every commit is stamped with ``committed_at``
-    (epoch seconds, round 17) — the basis for
-    timestamp time travel (``snapshot_version_at``); pre-round-17
-    manifests without the field fall back to file mtime there."""
-    import json
-    import time
+# --- version files ----------------------------------------------------------
+#
+# A table's commits are ``_manifest_v<N>.json``; an index root's or a
+# catalog's are ``_idxroot_v<N>.json``.  Both are published, listed,
+# time-travelled and guarded by the bodies below, which take the file
+# prefix as their argument.
+_MANIFEST = "_manifest_v"
+_IDXROOT = "_idxroot_v"
 
-    manifest.setdefault("committed_at", time.time())
 
+def _version_name(prefix: str, version: int) -> str:
+    return f"{prefix}{version}.json"
+
+
+def _name_version(prefix: str, name: str) -> int | None:
+    """The version file ``name`` publishes under ``prefix``; None for
+    any other file (hidden stages, segments, data dirs)."""
+    m = re.fullmatch(re.escape(prefix) + r"(\d+)\.json", name)
+    return int(m.group(1)) if m else None
+
+
+def manifest_file(version: int) -> str:
+    """File name (under the table root) of table version ``version``."""
+    return _version_name(_MANIFEST, version)
+
+
+def manifest_version(name: str) -> int | None:
+    """The table version a file name under the table root commits, or
+    None when the file is not a published manifest."""
+    return _name_version(_MANIFEST, name)
+
+
+def _versions(spark, base: str, prefix: str) -> list[int]:
+    """Every published version under ``prefix`` at ``base``, ascending:
+    one directory listing of the root — version files are tiny and
+    vacuum bounds their count."""
     jvm, fs = _fs(spark, base)
-    tmp = f"{base}/._manifest_v{version}.json.tmp"
-    _write_small(spark, tmp, json.dumps(manifest, default=_json_safe).encode())
-    dst = jvm.org.apache.hadoop.fs.Path(f"{base}/_manifest_v{version}.json")
-    if fs.exists(dst) or not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
+    root = jvm.org.apache.hadoop.fs.Path(base)
+    if not fs.exists(root):
+        return []
+    return sorted(
+        v
+        for v in (_name_version(prefix, st.getPath().getName()) for st in fs.listStatus(root))
+        if v is not None
+    )
+
+
+def _publish(spark, base: str, prefix: str, version: int, doc: dict) -> None:
+    """Atomically publish version ``version`` of ``doc`` under
+    ``prefix``: stamp ``committed_at`` (epoch seconds, the basis of
+    timestamp time travel), stage the full bytes at a hidden ``.tmp``
+    name, then rename to the final name.  The destination must not
+    exist — Hadoop rename returns false then — so a concurrent publish
+    of the same version raises ``SnapshotVersionConflict`` instead of
+    clobbering (optimistic concurrency)."""
+    doc.setdefault("committed_at", time.time())
+    jvm, fs = _fs(spark, base)
+    path = jvm.org.apache.hadoop.fs.Path
+    name = _version_name(prefix, version)
+    tmp = f"{base}/.{name}.tmp"
+    _write_small(spark, tmp, json.dumps(doc, default=_json_safe).encode())
+    dst = path(f"{base}/{name}")
+    if fs.exists(dst) or not fs.rename(path(tmp), dst):
+        fs.delete(path(tmp), False)
         raise SnapshotVersionConflict(
-            f"snapshot commit conflict: version {version} already exists "
-            f"(concurrent committer won); retry from the new latest"
+            f"commit conflict: {name} already exists at {base} (a "
+            f"concurrent committer won); re-read the latest and retry"
         )
+
+
+def commit_time(doc: dict, name: str) -> float:
+    """A version file's ``committed_at`` stamp (every publish writes
+    one); ``ValueError`` naming the file ``name`` when it has none."""
+    at = doc.get("committed_at")
+    if at is None:
+        raise ValueError(f"version file {name} carries no committed_at stamp")
+    return float(at)
+
+
+def _parse_ts(ts) -> float:
+    """A timestamp argument as epoch seconds: accepts a number, a
+    ``datetime`` (naive = local time, the ``datetime.timestamp()``
+    contract), or an ISO-8601 string."""
+    import datetime as _dt
+
+    if isinstance(ts, (int, float)):
+        return float(ts)
+    if isinstance(ts, _dt.datetime):
+        return ts.timestamp()
+    if isinstance(ts, str):
+        return _dt.datetime.fromisoformat(ts).timestamp()
+    raise TypeError(f"timestamp must be epoch seconds, datetime, or ISO str: {ts!r}")
+
+
+def _version_at(spark, base: str, prefix: str, timestamp, caller: str) -> int:
+    """TIMESTAMP time travel: the largest retained version under
+    ``prefix`` whose commit time is ≤ ``timestamp`` (epoch seconds,
+    ``datetime``, or ISO string).  Raises ``ValueError`` when the
+    timestamp predates the first RETAINED version (vacuumed history is
+    gone, same contract as version-based travel).  Cost: one listing
+    plus one small read per retained version."""
+    ts = _parse_ts(timestamp)
+    versions = _versions(spark, base, prefix)
+    if not versions:
+        raise ValueError(f"{caller}: no committed version at {base}")
+    best = None
+    for v in versions:
+        name = f"{base}/{_version_name(prefix, v)}"
+        try:
+            doc = json.loads(_read_small(spark, name))
+        except Exception as e:
+            if not _is_not_found(e):
+                raise
+            continue  # vacuumed since the listing
+        if commit_time(doc, name) <= ts:
+            best = v
+    if best is None:
+        raise ValueError(
+            f"{caller}: timestamp {timestamp!r} predates the first "
+            f"retained version of {base}"
+        )
+    return best
+
+
+def _advance_txn(txn: dict, update: dict | None) -> dict:
+    """``txn`` overlaid with ``update``'s per-app watermarks, each of
+    which must ADVANCE its app's watermark in ``txn`` (the superseded
+    version's map) or ``SnapshotTxnAlreadyApplied`` aborts the commit.
+    Deriving the map from the version a commit PROVABLY supersedes
+    (the rename conflict guarantees it) keeps a caller that read a
+    stale version from regressing another app's watermark."""
+    for app, bid in (update or {}).items():
+        wm = txn.get(app)
+        if wm is not None and bid <= wm:
+            raise SnapshotTxnAlreadyApplied(
+                f"txn {app!r} batch {bid} already applied (watermark {wm})"
+            )
+    return {**txn, **(update or {})}
+
+
+# --- table commits ----------------------------------------------------------
+
+
+def _commit_manifest(spark, base: str, version: int, manifest: dict) -> None:
+    """Publish table version ``version``: ``_publish`` under the
+    manifest prefix."""
+    _publish(spark, base, _MANIFEST, version, manifest)
+
+
+def _segment_prefix(version: int) -> str:
+    return f"segments/seg-v{version}-"
 
 
 def _write_segment(spark, base: str, version: int, seg: dict) -> str:
@@ -304,18 +372,157 @@ def _write_segment(spark, base: str, version: int, seg: dict) -> str:
     atomically renamed into place — a crash between the two leaves an
     orphan that vacuum reclaims once the version number is no longer
     in-flight (version-prefixed name, same rule as data dirs)."""
-    import json
-    import uuid
-
-    rel = f"segments/seg-v{version}-{uuid.uuid4().hex[:8]}.json"
+    rel = f"{_segment_prefix(version)}{uuid.uuid4().hex[:8]}.json"
     _write_small(spark, f"{base}/{rel}", json.dumps(seg, default=_json_safe).encode())
     return rel
 
 
-def _load_manifest_doc(spark, base: str, version: int) -> dict:
-    import json
+def _commit_version(
+    spark,
+    base: str,
+    version: int,
+    seg: dict,
+    mode: str,
+    schema: str,
+    segments: list[str] = (),
+    keyed: dict | None = None,
+    txn: dict | None = None,
+    extra: dict | None = None,
+) -> int:
+    """The one commit builder of every table writer: write commit
+    ``version``'s own segment ``seg``, build its manifest (``segments``
+    are the earlier ones it replays on top of — none after a
+    truncate-and-readd — and ``schema`` the committed schema JSON), and
+    publish it.  ``extra`` merges fields into the manifest verbatim.
+    Returns ``version``."""
+    manifest = {
+        "format": 2,
+        "version": version,
+        "mode": mode,
+        "schema": schema,
+        "segments": [*segments, _write_segment(spark, base, version, seg)],
+    }
+    if keyed:
+        manifest["keyed"] = keyed
+    if txn:
+        manifest["txn"] = txn
+    if extra:
+        manifest.update(extra)
+    _commit_manifest(spark, base, version, manifest)
+    return version
 
-    return json.loads(_read_small(spark, f"{base}/_manifest_v{version}.json"))
+
+def _readd_segment(resolved: dict, change_mode: str) -> dict:
+    """A segment that truncates the table and re-adds ``resolved``'s
+    live state — files with their buckets, stats, bloom sidecars and
+    deletion vectors — by reference: no data is copied."""
+    seg = {"truncate": True, "add": list(resolved["files"]), "change_mode": change_mode}
+    for k in ("buckets", "stats", "stats_types", "bloom", "bloom_meta", "dv", "dv_rows"):
+        if resolved[k]:
+            seg[k] = resolved[k]
+    return seg
+
+
+def _part_files(jvm, fs, data_dir: str) -> list[str]:
+    """The ``part-`` files a write left directly under ``data_dir``,
+    sorted."""
+    return sorted(
+        f
+        for f in (
+            st.getPath().toString()
+            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(data_dir))
+        )
+        if f.rsplit("/", 1)[-1].startswith("part-")
+    )
+
+
+def keyed_bucket(keyed: dict):
+    """The bucket-id column of a row of a keyed table, under a
+    manifest's ``keyed`` contract: the ``bucket_col`` value when the
+    table has one, else ``pmod(xxhash64(cast(key as string)),
+    n_buckets)``.  Every bucket map on disk was written with this hash,
+    so it must stay byte-identical."""
+    if keyed.get("bucket_col"):
+        return F.col(keyed["bucket_col"]).cast("int")
+    return F.pmod(
+        F.xxhash64(F.col(keyed["key_col"]).cast("string")),
+        F.lit(int(keyed["n_buckets"])),
+    )
+
+
+def keyed_bucket_files(manifest: dict, keys: DataFrame) -> list[str]:
+    """The files of a keyed table's resolved ``manifest`` that can hold
+    the keys in ``keys`` (a frame carrying the table's key column):
+    the files of the buckets those keys hash to, found with one
+    collect of at most ``n_buckets`` bucket ids.  A ``bucket_col``
+    table places rows by data, not by key, so every file stays."""
+    keyed = manifest["keyed"]
+    if keyed.get("bucket_col"):
+        return list(manifest["files"])
+    touched = {r[0] for r in keys.select(keyed_bucket(keyed)).distinct().collect()}
+    return [f for f in manifest["files"] if manifest["buckets"].get(f) in touched]
+
+
+# --- what one commit changed --------------------------------------------------
+
+
+def commit_segment(base: str, version: int, doc: dict) -> str:
+    """The manifest-relative path of commit ``version``'s OWN segment:
+    the last one its manifest ``doc`` lists (every writer appends its
+    own).  ``ValueError`` when that segment belongs to another
+    version."""
+    segs = doc.get("segments") or []
+    if not segs or not segs[-1].startswith(_segment_prefix(version)):
+        raise ValueError(
+            f"version {version} of {base} has no segment of its own; "
+            "re-bootstrap from a retained version"
+        )
+    return segs[-1]
+
+
+def commit_delta(
+    base: str, version: int, seg: dict, bootstrap: bool = False
+) -> tuple[str, list[str]]:
+    """What commit ``version`` of the table at ``base`` changed, read
+    off its own segment ``seg`` with no IO and no Spark:
+
+    - ``("log", changelog files)`` for a merge: rows carrying
+      ``_change``, update pre-images included;
+    - ``("insert", data files)`` for an append, whose added rows are
+      its inserts;
+    - ``("none", [])`` for a metadata, file or deletion-vector
+      compaction: no logical change.
+
+    With ``bootstrap``, the table's creation (version 1, a
+    truncate-and-add) reads as inserts of its files.  Otherwise a
+    truncate (an overwrite or a restore) raises
+    ``SnapshotTruncateInFeed``, and a commit that recorded no delta (a
+    keyed table's creation) raises ``ValueError``."""
+    mode = seg.get("change_mode")
+    if bootstrap and version == 1 and seg.get("truncate"):
+        mode = "insert"
+    if mode == "log":
+        return "log", list(seg.get("changelog") or [])
+    if mode == "insert":
+        return "insert", list(seg.get("add") or [])
+    if mode == "none":
+        return "none", []
+    if mode == "truncate":
+        raise SnapshotTruncateInFeed(
+            f"change feed span crosses a TRUNCATE/overwrite commit "
+            f"(v{version} of {base}) — a truncate is not expressible as row "
+            f"changes; re-bootstrap the consumer from "
+            f"snapshot_read(version={version}) and tail from there"
+        )
+    raise ValueError(
+        f"version {version} of {base} recorded no change delta (a keyed "
+        "table's creation) — read it with snapshot_read, or diff a span "
+        "with snapshot_changes"
+    )
+
+
+def _load_manifest_doc(spark, base: str, version: int) -> dict:
+    return json.loads(_read_small(spark, f"{base}/{manifest_file(version)}"))
 
 
 def _txn_applied(
@@ -371,10 +578,7 @@ def snapshot_manifest(spark, path: str, version: int | None = None) -> dict:
     (``changelog`` files / ``change_mode`` / ``last_add``) for the
     change feed.  Replay cost is O(total segment entries) small-file
     reads — bounded by ``compact_metadata``; per-COMMIT metadata cost
-    stays O(batch) regardless of table size (the round-12 fix for the
-    r11 O(table-files)-per-commit manifest)."""
-    import json
-
+    stays O(batch) regardless of table size."""
     base = path.rstrip("/")
     if version is None:
         version = snapshot_latest_version(spark, base)
@@ -383,15 +587,15 @@ def snapshot_manifest(spark, path: str, version: int | None = None) -> dict:
     jvm, fs = _fs(spark, base)
     try:
         mst = fs.getFileStatus(
-            jvm.org.apache.hadoop.fs.Path(f"{base}/_manifest_v{version}.json")
+            jvm.org.apache.hadoop.fs.Path(f"{base}/{manifest_file(version)}")
         )
-    except Exception as e:  # Py4J wraps java.io.FileNotFoundException
-        if "FileNotFoundException" not in str(e):
+    except Exception as e:
+        if not _is_not_found(e):
             raise
         raise FileNotFoundError(
             f"snapshot_manifest: version {version} of {base} is missing — "
             f"expired by vacuum_snapshots or never committed "
-            f"(_manifest_v{version}.json not found; latest is "
+            f"({manifest_file(version)} not found; latest is "
             f"{snapshot_latest_version(spark, base)})"
         ) from None
     cache_key = (base, version, mst.getLen(), mst.getModificationTime())
@@ -410,7 +614,7 @@ def snapshot_manifest(spark, path: str, version: int | None = None) -> dict:
     dv: dict = {}  # data file -> [position-delete sidecar parquet files]
     dv_rows: dict = {}  # data file -> live deleted-position count
     seg: dict = {}
-    # INCREMENTAL resolution (round 18, guide §5 driver fixed cost):
+    # INCREMENTAL resolution (driver fixed cost):
     # segments are immutable and write-once, so the resolved state is a
     # pure left fold over the ordered segment list — a cached
     # resolution of any PRIOR version whose segment list is a strict
@@ -536,23 +740,15 @@ def snapshot_commit(
     input_file_name) — the Iceberg-style FILE-SKIPPING metadata
     ``snapshot_scan`` prunes with — together with each column's Spark
     type so string-serialized decimal/temporal bounds compare
-    correctly at scan time (review finding, round 11).
+    correctly at scan time.
 
     Transaction watermarks: the committed ``txn`` map is ALWAYS the
     superseded manifest's map (overwrite included — a crashed stream
     must not double-append after an interleaved batch overwrite, the
-    Delta txnAppId rule) overlaid with ``_txn_update``'s entries.
-    Deriving it from the manifest this commit PROVABLY supersedes (the
-    rename conflict guarantees it) closes the lost-update race where a
-    caller-built map assembled from a stale read regresses another
-    app's just-advanced watermark (review finding, round 11).
-    ``_extra`` merges extra fields into the manifest verbatim.
+    Delta txnAppId rule) overlaid with ``_txn_update``'s entries
+    (``_advance_txn``).  ``_extra`` merges extra fields into the
+    manifest verbatim.
     """
-    import json
-    import uuid
-
-    from pyspark.sql.types import StructType
-
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
     cur_version = snapshot_latest_version(spark, base)
@@ -588,41 +784,25 @@ def snapshot_commit(
                 fields.append(f)
             fields.extend(by_name.values())
             schema = StructType(fields)
-    if _txn_update:
-        for app, bid in _txn_update.items():
-            if app in txn and bid <= txn[app]:
-                raise SnapshotTxnAlreadyApplied(
-                    f"txn {app!r} batch {bid} already applied "
-                    f"(watermark {txn[app]})"
-                )
-        txn.update(_txn_update)
+    txn = _advance_txn(txn, _txn_update)
     new_version = cur_version + 1
     data_dir = f"{base}/data/v{new_version}-{uuid.uuid4().hex[:8]}"
     df.write.mode("error").parquet(data_dir)
-    new_files = [
-        f
-        for f in (
-            st.getPath().toString()
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(data_dir))
-        )
-        if f.rsplit("/", 1)[-1].startswith("part-")
-    ]
-    seg: dict = {"add": sorted(new_files)}
+    new_files = _part_files(jvm, fs, data_dir)
+    seg: dict = {"add": new_files}
     if mode == "append":
         seg["change_mode"] = "insert"  # appends are pure inserts → free CDF
     else:
         seg["truncate"] = True
-        # TRUNCATE MARKER (round 14): the feed must fail LOUDLY on an
-        # overwrite in its span — a truncate is not expressible as row
-        # changes, and the old unmarked segment made the failure a
-        # generic "no delta" instead of naming the cause
+        # TRUNCATE MARKER: the feed must fail LOUDLY on an overwrite in
+        # its span — a truncate is not expressible as row changes
         seg["change_mode"] = "truncate"
     if stats_cols and new_files:
         seg["stats"] = _file_stats(spark, new_files, stats_cols)
         seg["stats_types"] = {
             c: df.schema[c].dataType.simpleString() for c in stats_cols
         }
-    # BLOOM sidecars (round 14): once a table declares bloom columns,
+    # BLOOM sidecars: once a table declares bloom columns,
     # appends keep them alive automatically — a new file without its
     # bitmap is conservatively unprunable, which silently degrades
     # every later point lookup (the stats-maintenance lesson applied
@@ -636,20 +816,10 @@ def snapshot_commit(
     if bmeta and new_files:
         seg["bloom"] = _file_blooms(spark, new_files, bmeta, schema)
         seg["bloom_meta"] = bmeta
-    segments.append(_write_segment(spark, base, new_version, seg))
-    manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": mode,
-        "schema": schema.json(),
-        "segments": segments,
-    }
-    if txn:
-        manifest["txn"] = txn
-    if _extra:
-        manifest.update(_extra)
-    _commit_manifest(spark, base, new_version, manifest)
-    return new_version
+    return _commit_version(
+        spark, base, new_version, seg, mode, schema.json(),
+        segments=segments, txn=txn, extra=_extra,
+    )
 
 
 def _normalize_file_uri(f: str) -> str:
@@ -671,19 +841,7 @@ def snapshot_latest_version(spark, path: str) -> int:
     table root — manifests are tiny and vacuum bounds their count, so
     this stays O(retained versions); hidden ``.tmp`` stages, segment
     files, and data dirs are not consulted."""
-    import re
-
-    base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    root = jvm.org.apache.hadoop.fs.Path(base)
-    if not fs.exists(root):
-        return 0
-    latest = 0
-    for st in fs.listStatus(root):
-        m = re.fullmatch(r"_manifest_v(\d+)\.json", st.getPath().getName())
-        if m:
-            latest = max(latest, int(m.group(1)))
-    return latest
+    return max(_versions(spark, path.rstrip("/"), _MANIFEST), default=0)
 
 
 # Deletion vectors smaller than this many positions (summed over the
@@ -733,10 +891,6 @@ def snapshot_read_files(
     ``with_positions=True`` keeps the ``_dv_file``/``_dv_pos`` identity
     columns on the output — the merge path needs them to RECORD new
     deletion vectors."""
-    import json
-
-    from pyspark.sql.types import StructType
-
     if schema is None:
         schema = StructType.fromJson(json.loads(manifest["schema"]))
     if not files:
@@ -773,62 +927,16 @@ def snapshot_read_files(
     return df
 
 
-def _parse_ts(ts) -> float:
-    """A timestamp argument as epoch seconds: accepts a number, a
-    ``datetime`` (naive = local time, the ``datetime.timestamp()``
-    contract), or an ISO-8601 string."""
-    import datetime as _dt
-
-    if isinstance(ts, (int, float)):
-        return float(ts)
-    if isinstance(ts, _dt.datetime):
-        return ts.timestamp()
-    if isinstance(ts, str):
-        return _dt.datetime.fromisoformat(ts).timestamp()
-    raise TypeError(f"timestamp must be epoch seconds, datetime, or ISO str: {ts!r}")
-
-
 def snapshot_version_at(spark, path: str, timestamp) -> int:
-    """TIMESTAMP time travel resolver (round 17 — the Delta
-    ``TIMESTAMP AS OF`` / Iceberg snapshot-at-time verb): the LARGEST
-    committed version whose commit time is ≤ ``timestamp`` (epoch
-    seconds, ``datetime``, or ISO string).  Commit times come from the
-    ``committed_at`` stamp every manifest carries since round 17;
-    manifests predating the stamp fall back to the manifest file's
-    modification time (stated: mtimes survive most copies but not
-    all — re-commit or restore to refresh the stamp where it
-    matters).  Raises if the timestamp predates the first RETAINED
-    commit (vacuumed history is gone, same contract as version-based
-    travel).  Cost: O(retained versions) small metadata reads."""
-    import json
-
-    base = path.rstrip("/")
-    ts = _parse_ts(timestamp)
-    latest = snapshot_latest_version(spark, base)
-    if latest <= 0:
-        raise ValueError(f"snapshot_version_at: no committed table at {path}")
-    jvm, fs = _fs(spark, base)
-    best = None
-    for v in range(1, latest + 1):
-        mp = f"{base}/_manifest_v{v}.json"
-        p = jvm.org.apache.hadoop.fs.Path(mp)
-        if not fs.exists(p):
-            continue  # vacuumed version — its commit time is gone too
-        try:
-            doc = json.loads(_read_small(spark, mp))
-            at = doc.get("committed_at")
-        except (OSError, ValueError):
-            at = None
-        if at is None:  # legacy manifest: file mtime approximates
-            at = fs.getFileStatus(p).getModificationTime() / 1000.0
-        if at <= ts:
-            best = v
-    if best is None:
-        raise ValueError(
-            f"snapshot_version_at: timestamp {timestamp!r} predates the "
-            f"first retained commit of {path}"
-        )
-    return best
+    """TIMESTAMP time travel resolver (the Delta ``TIMESTAMP AS OF`` /
+    Iceberg snapshot-at-time verb): the LARGEST retained committed
+    version whose ``committed_at`` stamp is ≤ ``timestamp`` (epoch
+    seconds, ``datetime``, or ISO string) — ``_version_at`` over the
+    table's manifests.  Raises ``ValueError`` if the timestamp predates
+    the first RETAINED commit, or if a manifest carries no stamp."""
+    return _version_at(
+        spark, path.rstrip("/"), _MANIFEST, timestamp, "snapshot_version_at"
+    )
 
 
 def snapshot_read(
@@ -836,22 +944,19 @@ def snapshot_read(
 ) -> DataFrame:
     """Read a snapshot table: the latest committed version, an
     explicit ``version``, or the version live at ``timestamp``
-    (``snapshot_version_at``, round 17) for TIME TRAVEL.  The
+    (``snapshot_version_at``) for TIME TRAVEL.  The
     returned frame reads exactly the manifest's immutable resolved
     file list — concurrent commits cannot change what this reader
     sees (snapshot isolation by construction: data files are never
     mutated, only superseded).  Merge-on-read deletion vectors, when
     present, are anti-joined away inside ``snapshot_read_files`` — a
     row whose position is deleted never surfaces, at any version."""
-    import json
-
     base = path.rstrip("/")
     if timestamp is not None:
         if version is not None:
             raise ValueError("snapshot_read: version and timestamp are exclusive")
         version = snapshot_version_at(spark, base, timestamp)
     manifest = snapshot_manifest(spark, base, version)
-    from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     # the manifest's schema is the table contract for THIS version —
@@ -868,38 +973,20 @@ def compact_metadata(spark, path: str) -> int:
     version (``mode='compact-metadata'``, no data change).  Bounds
     resolve cost back to O(live files) after long append/merge chains;
     run it on the same cadence as file compaction.  Time travel to
-    pre-compaction versions still works until vacuum expires them."""
+    pre-compaction versions still works until vacuum expires them.
+    Deletion vectors carry over with their files."""
     base = path.rstrip("/")
     resolved = snapshot_manifest(spark, base)
-    new_version = resolved["version"] + 1
-    seg: dict = {
-        "truncate": True,
-        "add": resolved["files"],
-        "change_mode": "none",  # no data change → the feed skips it
-    }
-    if resolved["buckets"]:
-        seg["buckets"] = resolved["buckets"]
-    if resolved["stats"]:
-        seg["stats"] = resolved["stats"]
-        seg["stats_types"] = resolved["stats_types"]
-    if resolved["bloom"]:
-        seg["bloom"] = resolved["bloom"]
-    if resolved["bloom_meta"]:
-        seg["bloom_meta"] = resolved["bloom_meta"]
-    rel = _write_segment(spark, base, new_version, seg)
-    manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": "compact-metadata",
-        "schema": resolved["schema"],
-        "segments": [rel],
-    }
-    if resolved["keyed"]:
-        manifest["keyed"] = resolved["keyed"]
-    if resolved["txn"]:
-        manifest["txn"] = resolved["txn"]
-    _commit_manifest(spark, base, new_version, manifest)
-    return new_version
+    return _commit_version(
+        spark,
+        base,
+        resolved["version"] + 1,
+        _readd_segment(resolved, "none"),  # no data change → the feed skips it
+        "compact-metadata",
+        resolved["schema"],
+        keyed=resolved["keyed"],
+        txn=resolved["txn"],
+    )
 
 
 def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
@@ -910,7 +997,7 @@ def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
     reaches only retained versions afterwards — the Iceberg
     expire-snapshots contract.
 
-    IN-FLIGHT COMMIT SAFETY (review finding, round 11): a commit
+    IN-FLIGHT COMMIT SAFETY: a commit
     writes its data dir, changelog dir, and segment BEFORE the
     manifest rename, so a concurrent vacuum must not treat them as
     orphans — every such artifact carries a ``v<N>`` version prefix,
@@ -918,22 +1005,18 @@ def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
     version at sweep time (the remove-orphan-files grace rule, made
     deterministic by version numbering).  Returns {"deleted_files": n,
     "deleted_manifests": n, "deleted_segments": n}."""
-    import json
-    import re
-
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
-    latest = snapshot_latest_version(spark, base)
-    if latest <= 0:
+    versions = _versions(spark, base, _MANIFEST)
+    if not versions:
         return {"deleted_files": 0, "deleted_manifests": 0, "deleted_segments": 0}
+    latest = versions[-1]
     keep = set(range(max(1, latest - keep_last + 1), latest + 1))
     live_files: set[str] = set()
     live_segments: set[str] = set()
     dropped_manifests = 0
-    for v in range(1, latest + 1):
-        mp = f"{base}/_manifest_v{v}.json"
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(mp)):
-            continue
+    for v in versions:
+        mp = f"{base}/{manifest_file(v)}"
         if v in keep:
             # live DATA files are the RESOLVED state of each retained
             # version (a segment's adds may be superseded by a later
@@ -963,7 +1046,7 @@ def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
     root = jvm.org.apache.hadoop.fs.Path(base)
     for st in fs.listStatus(root):
         name = st.getPath().getName()
-        if name.startswith("._manifest_v") and name.endswith(".json.tmp"):
+        if name.startswith(f".{_MANIFEST}") and name.endswith(".json.tmp"):
             fs.delete(st.getPath(), False)
     # unreferenced segments (expired history, crashed commits) — skip
     # in-flight version numbers
@@ -985,8 +1068,7 @@ def vacuum_snapshots(spark, path: str, keep_last: int = 2) -> dict:
         for st in fs.listStatus(d):
             if st.isDirectory():
                 # keyed tables nest one _bucket=<b> level under the
-                # version dir (review finding, round 11: the flat walk
-                # never reclaimed keyed files)
+                # version dir
                 _sweep(st.getPath())
                 if not fs.listStatus(st.getPath()):
                     fs.delete(st.getPath(), True)
@@ -1046,7 +1128,7 @@ def snapshot_write_keyed(
     instead of a full scan); it is recorded with the table's keying, so
     merges and DV compaction keep it on every bucket they rewrite.
 
-    ``bucket_col`` (round 14) makes the bucket assignment PLUGGABLE: an
+    ``bucket_col`` makes the bucket assignment PLUGGABLE: an
     int column of ``df`` (caller-computed — e.g. an IVF cell id) places
     each row instead of the key hash, so reads can prune files by a
     SEMANTIC partition (probed cells) straight off the manifest's
@@ -1054,8 +1136,6 @@ def snapshot_write_keyed(
     bucket value changed MOVES — the old row is dropped from its old
     bucket, the new row lands in the new one).  The column stays in
     the schema as ordinary data.  Returns the committed version."""
-    import uuid
-
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
     if snapshot_latest_version(spark, base) != 0:
@@ -1064,60 +1144,44 @@ def snapshot_write_keyed(
         raise ValueError(
             f"snapshot_write_keyed: bucket_col {bucket_col!r} not in df"
         )
+    keyed = {"key_col": key_col, "n_buckets": n_buckets}
+    if bucket_col is not None:
+        keyed["bucket_col"] = bucket_col
+    if sort_within:
+        keyed["sort_within"] = sort_within
     data_dir = f"{base}/data/v1-{uuid.uuid4().hex[:8]}"
-    bucket_expr = (
-        F.col(bucket_col).cast("int")
-        if bucket_col is not None
-        else F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    )
-    _write_buckets(df.withColumn("_bucket", bucket_expr), data_dir, sort_within)
+    _write_buckets(df.withColumn("_bucket", keyed_bucket(keyed)), data_dir, sort_within)
     files, buckets = _list_bucket_files(jvm, fs, data_dir)
-    seg = {"add": sorted(files), "buckets": buckets, "truncate": True}
+    seg = {"add": files, "buckets": buckets, "truncate": True}
     if stats_cols and files:
         # file-skipping stats on a KEYED table: recorded per commit
         # exactly like plain commits; snapshot_merge re-derives the
         # column set from stats_types so every bucket rewrite keeps
-        # the metadata alive (round 12)
+        # the metadata alive
         seg["stats"] = _file_stats(spark, files, stats_cols)
         seg["stats_types"] = {
             c: df.schema[c].dataType.simpleString() for c in stats_cols
         }
-    rel = _write_segment(spark, base, 1, seg)
-    manifest = {
-        "format": 2,
-        "version": 1,
-        "mode": "overwrite",
-        "schema": df.schema.json(),
-        "segments": [rel],
-        "keyed": {"key_col": key_col, "n_buckets": n_buckets},
-    }
-    if bucket_col is not None:
-        manifest["keyed"]["bucket_col"] = bucket_col
-    if sort_within:
-        manifest["keyed"]["sort_within"] = sort_within
-    if _txn_update:
-        # a streaming sink creating its table on batch 0 needs the
-        # watermark on the CREATING commit too, or a replayed batch 0
-        # would hit the already-has-commits guard and crash-loop
-        manifest["txn"] = dict(_txn_update)
-    _commit_manifest(spark, base, 1, manifest)
-    return 1
+    # a streaming sink creating its table on batch 0 needs the
+    # watermark on the CREATING commit too, or a replayed batch 0
+    # would hit the already-has-commits guard and crash-loop
+    return _commit_version(
+        spark, base, 1, seg, "overwrite", df.schema.json(),
+        keyed=keyed, txn=_advance_txn({}, _txn_update),
+    )
 
 
 def _list_bucket_files(jvm, fs, data_dir: str) -> tuple[list[str], dict]:
-    files: list[str] = []
+    """The sorted ``part-`` files of a ``_bucket``-partitioned write and
+    the bucket map {file: bucket}."""
     buckets: dict = {}
     for bdir in fs.listStatus(jvm.org.apache.hadoop.fs.Path(data_dir)):
         name = bdir.getPath().getName()
-        if not name.startswith("_bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        for st in fs.listStatus(bdir.getPath()):
-            f = st.getPath().toString()
-            if f.rsplit("/", 1)[-1].startswith("part-"):
-                files.append(f)
+        if name.startswith("_bucket="):
+            b = int(name.split("=", 1)[1])
+            for f in _part_files(jvm, fs, bdir.getPath().toString()):
                 buckets[f] = b
-    return files, buckets
+    return sorted(buckets), buckets
 
 
 def _change_struct_cols(schema_names: list[str], key_col: str) -> list[str]:
@@ -1175,7 +1239,7 @@ def _file_blooms(spark, files: list[str], meta: dict, schema=None) -> dict:
     distributed pass per column: distinct (file, bit) pairs group per
     file IN THE CLUSTER and an Arrow-batched ``applyInPandas`` packs
     each file's positions into the finished base64 string
-    EXECUTOR-SIDE (round 15, VERDICT r14 #6 / ADVICE r14) — the driver
+    EXECUTOR-SIDE — the driver
     collects one ~bits/6-byte string per file, never files × bits int
     rows; at the 2²³-bit sizing this docstring recommends for 128 MB
     files, a 1 000-file commit streams ~1.4 MB/file of base64 instead
@@ -1246,7 +1310,7 @@ def snapshot_merge(
     """MERGE INTO a keyed snapshot table with FULL-TABLE atomicity:
     matched keys replaced, new keys inserted, and only the buckets
     holding MATCHED keys re-written (copy-on-write via the manifest's
-    bucket map; round 14 made the COW insert-aware — a pure-insert
+    bucket map; the COW is insert-aware — a pure-insert
     batch APPENDS new files to its buckets and rewrites nothing, so
     commit write cost is O(batch); untouched and insert-only buckets'
     files carry over BY REFERENCE in an O(touched) segment), and the
@@ -1262,7 +1326,7 @@ def snapshot_merge(
     commit carries inserts, updates, and deletes together.  The
     column is stripped before writing.
 
-    SCHEMA EVOLUTION (round 14): a merge batch may CARRY NEW COLUMNS —
+    SCHEMA EVOLUTION: a merge batch may CARRY NEW COLUMNS —
     the committed schema becomes the column union (same contract as
     append: existing order first, new columns after; a retype raises;
     a batch MISSING an existing column raises, because an upsert row
@@ -1274,8 +1338,8 @@ def snapshot_merge(
     exact insert/update/delete rows to ``changes/v<N>-<uuid>/`` and
     references them from the segment — the PER-COMMIT CHANGE LOG that
     lets ``snapshot_changes`` / ``snapshot_changes_feed`` serve CDC
-    reads in O(changed rows) instead of diffing two full versions
-    (review finding, round 11).  Cost: one extra join over the
+    reads in O(changed rows) instead of diffing two full versions.
+    Cost: one extra join over the
     already-touched buckets — O(touched), never O(table).  The log
     uses the identical struct-diff semantics as the diff-based feed
     (no-op updates excluded), pytest-pinned row-identical.
@@ -1284,9 +1348,8 @@ def snapshot_merge(
     ``snapshot_commit`` does (the streaming MERGE sink rides it); the
     superseded manifest's ``txn`` map is always carried forward.
 
-    ``mode`` picks the write strategy for MATCHED keys (round 17 —
-    merge-on-read, the Delta deletion-vector / Iceberg position-delete
-    analog):
+    ``mode`` picks the write strategy for MATCHED keys (merge-on-read
+    is the Delta deletion-vector / Iceberg position-delete analog):
 
     - ``"cow"`` (default): copy-on-write — matched buckets rewrite in
       full, exactly as before.
@@ -1324,9 +1387,6 @@ def snapshot_merge(
     would be silently overwritten for touched keys (lost update).
     Callers whose updates are self-contained (plain upserts) omit it.
     Returns the new version."""
-    import json
-    import uuid
-
     if mode not in ("cow", "mor", "auto"):
         raise ValueError(f"snapshot_merge: unknown mode {mode!r}")
     base = path.rstrip("/")
@@ -1345,15 +1405,7 @@ def snapshot_merge(
         raise ValueError(
             f"snapshot_merge: table is keyed on {keyed['key_col']!r}, not {key_col!r}"
         )
-    n_buckets = int(keyed["n_buckets"])
-    if _txn_update:
-        for app, bid in _txn_update.items():
-            prev_wm = resolved["txn"].get(app)
-            if prev_wm is not None and bid <= prev_wm:
-                raise SnapshotTxnAlreadyApplied(
-                    f"txn {app!r} batch {bid} already applied "
-                    f"(watermark {prev_wm})"
-                )
+    txn = _advance_txn(resolved["txn"], _txn_update)
     dup = (
         updates.groupBy(key_col)
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1366,29 +1418,16 @@ def snapshot_merge(
             f"snapshot_merge: duplicate key {dup[0][key_col]!r} in updates"
         )
     bucket_col = keyed.get("bucket_col")
-    bucket_expr = (
-        F.col(bucket_col).cast("int")
-        if bucket_col
-        else F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    )
+    bucket_expr = keyed_bucket(keyed)
     upd = updates.withColumn("_bucket", bucket_expr)
-    touched = sorted(
-        r["_bucket"] for r in upd.select("_bucket").distinct().collect()
-    )  # bounded by n_buckets — a layout constant
     buckets: dict = resolved["buckets"]
     # files to PROBE for key matches: a hash-bucketed key can only live
     # in its hash bucket; a bucket_col table must probe EVERY file (a
     # key's stored cell may differ from the batch's new cell — the
     # probe is still a two-thin-column scan, never a row-payload read)
-    probe_files = (
-        list(resolved["files"])
-        if bucket_col
-        else [f for f in resolved["files"] if buckets.get(f) in touched]
-    )
-    from pyspark.sql.types import StructType
-
+    probe_files = keyed_bucket_files(resolved, updates)
     tbl_schema = StructType.fromJson(json.loads(resolved["schema"]))
-    # SCHEMA EVOLUTION on merge (round 14): same column-union contract
+    # SCHEMA EVOLUTION on merge: same column-union contract
     # as append — update columns the table lacks are appended to the
     # committed schema (old files read as NULL through it; untouched
     # buckets never rewrite), a retype raises.  The delete flag is
@@ -1427,7 +1466,7 @@ def snapshot_merge(
         survivors = survivors.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
             delete_col
         )
-    # INSERT-AWARE COW (round 14): only buckets holding MATCHED keys
+    # INSERT-AWARE COW: only buckets holding MATCHED keys
     # are rewritten — a pure-insert batch (the dominant CDC shape)
     # APPENDS new files to its buckets and removes nothing, so commit
     # write cost is O(batch), not O(touched buckets' bytes).  Match
@@ -1440,7 +1479,7 @@ def snapshot_merge(
     # accumulate files per bucket; compact_files restores one file set
     # per bucket (the Iceberg minor-compaction lifecycle).
     probe_cols = [key_col] + ([bucket_col] if bucket_col else [])
-    # DV-aware probe (round 17): a key whose every stored row is
+    # DV-aware probe: a key whose every stored row is
     # position-deleted is NOT a match — it re-inserts.  Tables without
     # DVs read exactly as before inside snapshot_read_files.
     existing_probe = snapshot_read_files(
@@ -1449,13 +1488,8 @@ def snapshot_merge(
     # per-STORED-bucket (live rows, matched rows) in ONE thin-column
     # aggregation — match detection for every mode, plus the exact
     # numbers mode="auto" decides with (bounded by n_buckets)
-    stored_b = (
-        F.col(bucket_col).cast("int")
-        if bucket_col
-        else F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-    )
     probe_rows = (
-        existing_probe.withColumn("_pb", stored_b)
+        existing_probe.withColumn("_pb", bucket_expr)
         .join(
             updates.select(F.col(key_col), F.lit(1).alias("_mk")).distinct(),
             key_col,
@@ -1496,14 +1530,7 @@ def snapshot_merge(
             F.col("_dv_file").alias("_file"), F.col("_dv_pos").alias("_pos")
         )
         pos.coalesce(1).write.parquet(dv_dir)
-        dv_files = sorted(
-            f
-            for f in (
-                st.getPath().toString()
-                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(dv_dir))
-            )
-            if f.rsplit("/", 1)[-1].startswith("part-")
-        )
+        dv_files = _part_files(jvm, fs, dv_dir)
         # per-data-file position counts: bounded by touched buckets'
         # file count, and the broadcast-gate metadata readers need
         pos_counts = (
@@ -1529,7 +1556,7 @@ def snapshot_merge(
     _write_buckets(merged, data_dir, keyed.get("sort_within"))
     new_files, new_buckets = _list_bucket_files(jvm, fs, data_dir)
     seg: dict = {
-        "add": sorted(new_files),
+        "add": new_files,
         "buckets": new_buckets,
         "remove_buckets": [] if use_mor else matched,
     }
@@ -1587,14 +1614,14 @@ def snapshot_merge(
                 | (F.col("_new") != F.col("_old"))
             )
         )
-        # UPDATE PRE-IMAGES (round 14, the Delta CDF update_preimage
-        # analog): each real update ALSO records its old row under
+        # UPDATE PRE-IMAGES (the Delta CDF update_preimage analog):
+        # each real update ALSO records its old row under
         # _change='update_pre', in the SAME changelog write — emitted
         # by EXPLODING one-or-two rows per change in a single pass
         # over the join (a unionByName of two selects would execute
         # the join twice; the quiet-box bench measured that as +50%
         # on merge-heavy paths).  Default feed reads filter them out
-        # (_commit_change_rows); snapshot_update_preimages serves them
+        # (snapshot_changes_feed); snapshot_update_preimages serves them
         # — the piece that makes downstream aggregates INCREMENTALLY
         # maintainable (an update is -old +new, not a group recompute).
         post = F.struct(
@@ -1619,40 +1646,21 @@ def snapshot_merge(
         )
         changes_dir = f"{base}/changes/v{new_version}-{uuid.uuid4().hex[:8]}"
         changes.write.parquet(changes_dir)
-        seg["changelog"] = sorted(
-            f
-            for f in (
-                st.getPath().toString()
-                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(changes_dir))
-            )
-            if f.rsplit("/", 1)[-1].startswith("part-")
-        )
+        seg["changelog"] = _part_files(jvm, fs, changes_dir)
         seg["change_mode"] = "log"
-    rel = _write_segment(spark, base, new_version, seg)
-    txn = dict(resolved["txn"])
-    if _txn_update:
-        txn.update(_txn_update)
-    out_manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": "merge",
-        # the (possibly evolved) column-union schema — old files read
-        # as NULL through it, time travel shows the pre-evolution shape
-        "schema": tbl_schema.json(),
-        "segments": resolved["segments"] + [rel],
-        "keyed": keyed,
-    }
-    if txn:
-        out_manifest["txn"] = txn
-    _commit_manifest(spark, base, new_version, out_manifest)
-    return new_version
+    # the (possibly evolved) column-union schema — old files read as
+    # NULL through it, time travel shows the pre-evolution shape
+    return _commit_version(
+        spark, base, new_version, seg, "merge", tbl_schema.json(),
+        segments=resolved["segments"], keyed=keyed, txn=txn,
+    )
 
 
 def _coerce_stat_bound(dtype: str | None, v):
     """Coerce a manifest-serialized stats bound (or a caller's query
     bound) back to a comparable value for ``dtype``.  Decimal columns
     serialize as strings whose LEXICOGRAPHIC order is wrong ('9.5' >
-    '10.2') — compare as Decimal (review finding, round 11); temporal
+    '10.2') — compare as Decimal; temporal
     strings parse to datetime/date only when needed (ISO text already
     orders chronologically, so string-vs-string stays as-is)."""
     if v is None or dtype is None:
@@ -1701,18 +1709,15 @@ def snapshot_scan_multi(
     Z-curve segments, so a box predicate on ANY subset of the
     z-ordered dimensions prunes — a linear sort prunes only its
     leading column.  Bounds are compared under each column's RECORDED
-    TYPE (decimal strings as Decimal, not lexicographically — review
-    finding, round 11); any incomparable pair keeps the file
+    TYPE (decimal strings as Decimal, not lexicographically); any
+    incomparable pair keeps the file
     conservatively rather than mis-pruning.  Returns ``(df,
     n_files_read, n_files_total)`` so callers — and the regression
     tests — can SEE the pruning."""
-    import json
-
     if not preds:
         raise ValueError("snapshot_scan_multi: preds must be non-empty")
     base = path.rstrip("/")
     manifest = snapshot_manifest(spark, base, version)
-    from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     stats = manifest["stats"]
@@ -1756,7 +1761,7 @@ def snapshot_scan_multi(
     # bind the MANIFEST schema, exactly as snapshot_read does: after
     # schema evolution a kept pre-evolution file may sort first, and
     # footer inference off it would drop the evolved column the
-    # predicate names (review finding, round 11); deletion vectors of
+    # predicate names; deletion vectors of
     # the KEPT files (only) anti-join inside snapshot_read_files
     return (
         snapshot_read_files(spark, manifest, keep, schema).filter(pred),
@@ -1788,13 +1793,10 @@ def snapshot_point_lookup(
     disagree with itself.  ``value`` must be non-NULL (equality never
     matches NULL) and in the column's native type.  Returns ``(df,
     n_files_read, n_files_total)``."""
-    import json
-
     if value is None:
         raise ValueError("snapshot_point_lookup: value must be non-NULL")
     base = path.rstrip("/")
     manifest = snapshot_manifest(spark, base, version)
-    from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     keep = _files_for_values(spark, manifest, schema, col, [value])
@@ -1822,8 +1824,6 @@ def _files_for_values(spark, manifest, schema, col: str, values: list) -> list:
     False positives cost an extra file read, never a wrong row."""
     import base64
     import bisect
-
-    from pyspark.sql.types import StructType
 
     positions_by_value: dict = {}
     meta = manifest["bloom_meta"].get(col)
@@ -1877,7 +1877,7 @@ def _files_for_values(spark, manifest, schema, col: str, values: list) -> list:
 def snapshot_prune_files_for_values(
     spark, path: str, col: str, values: list, version: int | None = None
 ) -> tuple[list, int]:
-    """File-level SEMI-JOIN pruning (round 16): the subset of a
+    """File-level SEMI-JOIN pruning: the subset of a
     snapshot version's files that might contain ANY of the (bounded,
     non-NULL) probe ``values`` in ``col``, decided from the manifest's
     min/max stats and bloom sidecars without opening a single data
@@ -1889,10 +1889,6 @@ def snapshot_prune_files_for_values(
     ``(files_kept, n_files_total)``; read the kept list with
     ``spark.read.schema(...).parquet(*files)`` and apply the exact
     join/filter on top (pruning is conservative, never wrong)."""
-    import json
-
-    from pyspark.sql.types import StructType
-
     base = path.rstrip("/")
     manifest = snapshot_manifest(spark, base, version)
     schema = StructType.fromJson(json.loads(manifest["schema"]))
@@ -1921,15 +1917,14 @@ def snapshot_append_stream(
     SECOND stream with its own checkpoint (fresh batch ids from 0)
     gets its own watermark instead of being silently discarded, and
     plain batch appends AND overwrites carry every app's watermark
-    forward (review findings, rounds 11–12).  The watermark overlay
+    forward.  The watermark overlay
     happens INSIDE ``snapshot_commit`` against the manifest the commit
     provably supersedes, and an optimistic-concurrency loss re-reads
     and retries — two racing apps can interleave commits without one
-    regressing the other's watermark (review finding, round 11).
+    regressing the other's watermark.
     Structured Streaming delivers batch_ids in increasing order per
     query, which is exactly what a per-app watermark needs.  Returns
     the function for ``foreachBatch``."""
-
     def commit_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base = path.rstrip("/")
@@ -1969,7 +1964,6 @@ def snapshot_merge_stream(
     ``snapshot_merge`` rejects duplicates loudly rather than picking a
     nondeterministic winner).  Returns the function for
     ``foreachBatch``."""
-
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base = path.rstrip("/")
@@ -1998,55 +1992,31 @@ def snapshot_changes(
     from_version: int,
     to_version: int | None = None,
     key_col: str | None = None,
-    prefer_log: bool = True,
 ) -> DataFrame:
-    """CHANGE DATA FEED between two versions of a keyed snapshot
-    table: one row per changed key with ``_change ∈ {insert, update,
-    delete}`` plus the row's new values (old values for deletes) —
-    the Delta CDF shape.
-
-    FAST PATH (round 12): when the versions are ADJACENT and the
-    commit recorded its delta — merges write a per-commit change log,
-    appends ARE their change log (pure inserts read straight from the
-    segment's added files) — the feed reads O(changed rows) instead
-    of diffing two full versions (``prefer_log=False`` forces the
-    diff; the pytest pin runs both and asserts row-identity).
-    Multi-version spans and logless commits (overwrites, pre-round-12
-    history) fall back to the manifest diff: reads both versions'
-    files and diffs by key — the honest cost of a log-free CDF,
-    proportional to the table, not to history.  For a strictly
-    incremental multi-commit consumer, use ``snapshot_changes_feed``,
-    which returns the per-commit rows with their version."""
-    import json
-
+    """NET CHANGE between two versions of a keyed snapshot table: one
+    row per changed key with ``_change ∈ {insert, update, delete}``
+    plus the row's new values (old values for deletes) — the Delta CDF
+    shape, collapsed over the span.  Reads both versions' files and
+    diffs them by key: the honest cost of a log-free diff, proportional
+    to the table, not to history — and the reference the per-commit
+    logs are checked against.  It serves any span, truncates included.
+    For the per-commit rows of a span, each under its version, read
+    ``snapshot_changes_feed`` (O(changed rows))."""
     base = path.rstrip("/")
     if to_version is None:
         to_version = snapshot_latest_version(spark, base)
-    resolved_to = snapshot_manifest(spark, base, to_version)
-    keyed = resolved_to["keyed"]
     if key_col is None:
+        keyed = snapshot_manifest(spark, base, to_version)["keyed"]
         if not keyed:
             raise ValueError("snapshot_changes: pass key_col for non-keyed tables")
         key_col = keyed["key_col"]
-    from pyspark.sql.types import StructType
-
-    if prefer_log and to_version == from_version + 1:
-        try:
-            log = _commit_change_rows(spark, base, resolved_to, key_col)
-        except SnapshotTruncateInFeed:
-            # this API is EXPLICITLY the net-diff view — diffing across
-            # a truncate is its documented honest cost (the incremental
-            # feed is what must fail loudly)
-            log = None
-        if log is not None:
-            return log
     old = snapshot_read(spark, base, from_version)
     new = snapshot_read(spark, base, to_version)
     value_cols = [c for c in new.columns if c != key_col]
     new_types = {f.name: f.dataType for f in new.schema.fields}
     # schema evolution: a column added between the versions is absent
     # from the OLD frame — pad it with typed NULLs so the structs line
-    # up (review finding, round 11)
+    # up
     old_vals = [
         F.col(c) if c in old.columns else F.lit(None).cast(new_types[c]).alias(c)
         for c in value_cols
@@ -2077,57 +2047,6 @@ def snapshot_changes(
     )
 
 
-def _commit_change_rows(spark, base: str, resolved: dict, key_col: str):
-    """The change rows ONE commit recorded, or None when it kept no
-    delta (overwrite / pre-round-12 history).  ``change_mode='log'``
-    reads the merge's written changelog; ``'insert'`` synthesizes the
-    append's inserts from the segment's added files (zero write-side
-    cost); ``'none'`` (metadata compaction) is an empty delta."""
-    import json
-
-    from pyspark.sql.types import StructField, StructType, StringType
-
-    mode = resolved["change_mode"]
-    schema = StructType.fromJson(json.loads(resolved["schema"]))
-    value_fields = [f for f in schema.fields if f.name != key_col]
-    feed_schema = StructType(
-        [schema[key_col], StructField("_change", StringType(), True)]
-        + value_fields
-    )
-    if mode == "log":
-        files = resolved["changelog"] or []
-        if not files:
-            return spark.createDataFrame([], feed_schema)
-        # update PRE-IMAGE rows ride the same files; the default feed
-        # is the Delta CDF post-image shape — serve pre-images only
-        # through snapshot_update_preimages
-        return (
-            spark.read.schema(feed_schema)
-            .parquet(*files)
-            .filter(F.col("_change") != "update_pre")
-        )
-    if mode == "insert":
-        files = resolved["last_add"]
-        if not files:
-            return spark.createDataFrame([], feed_schema)
-        return spark.read.schema(schema).parquet(*files).select(
-            F.col(key_col),
-            F.lit("insert").alias("_change"),
-            *[F.col(f.name) for f in value_fields],
-        )
-    if mode == "none":
-        return spark.createDataFrame([], feed_schema)
-    if mode == "truncate":
-        raise SnapshotTruncateInFeed(
-            f"change feed span crosses a TRUNCATE/overwrite commit "
-            f"(v{resolved['version']} of {base}) — a truncate is not "
-            f"expressible as row changes; re-bootstrap the consumer from "
-            f"snapshot_read(version={resolved['version']}) and tail from "
-            f"there"
-        )
-    return None
-
-
 def snapshot_update_preimages(
     spark, path: str, version: int, key_col: str | None = None
 ) -> DataFrame:
@@ -2140,9 +2059,7 @@ def snapshot_update_preimages(
     downstream aggregate becomes INCREMENTALLY maintainable: an update
     applies as subtract-old-add-new instead of a group recompute —
     see ``operators/ivm.py``."""
-    import json
-
-    from pyspark.sql.types import StructField, StringType, StructType
+    from pyspark.sql.types import StructField, StringType
 
     base = path.rstrip("/")
     resolved = snapshot_manifest(spark, base, version)
@@ -2174,13 +2091,14 @@ def snapshot_span_delta_files(
 ) -> dict:
     """Per-commit delta FILE LISTS over versions (from_version,
     to_version] resolved in O(span) metadata reads — exactly TWO small
-    JSON reads per version (the manifest doc + the version's OWN last
-    segment, never a full segment-chain replay) and ZERO per-version
-    DataFrames.  This is what lets a long-span consumer (the change
-    feed, ``operators/ivm.py``'s sync) read the whole span's rows in
-    ONE parquet scan instead of O(span) plan-node unions — the
-    round-15 fix for VERDICT r14 #3 (a thousand-commit backlog used to
-    blow up driver-side plan analysis long before data cost mattered).
+    JSON reads per version (the manifest doc + the version's OWN
+    segment, never a full segment-chain replay, classified by
+    ``commit_delta``) and ZERO per-version DataFrames.  This is what
+    lets a long-span consumer (the change feed, ``operators/ivm.py``'s
+    sync) read the whole span's rows in ONE parquet scan instead of
+    O(span) plan-node unions (a thousand-commit backlog would
+    otherwise blow up driver-side plan analysis long before data cost
+    mattered).
 
     Returns ``{"to_version", "schema" (to_version's schema JSON),
     "keyed" (to_version's keyed contract or None),
@@ -2190,23 +2108,18 @@ def snapshot_span_delta_files(
     the appends' raw data (pure inserts, the free CDF).  Raises
     ``SnapshotTruncateInFeed`` when the span crosses a truncate/
     overwrite and ``ValueError`` when a version kept no delta;
-    metadata/file compactions (``change_mode='none'``) contribute
-    nothing."""
-    import json
-
+    metadata/file compactions contribute nothing."""
     base = path.rstrip("/")
     if to_version is None:
         to_version = snapshot_latest_version(spark, base)
     if to_version <= from_version:
         raise ValueError("snapshot_span_delta_files: empty version span")
-    log_files: dict[int, list[str]] = {}
-    insert_files: dict[int, list[str]] = {}
-    to_doc: dict = {}
+    files: dict = {"log": {}, "insert": {}}
     for v in range(from_version + 1, to_version + 1):
         try:
             doc = _load_manifest_doc(spark, base, v)
-        except Exception as e:  # Py4J wraps java.io.FileNotFoundException
-            if "FileNotFoundException" not in str(e):
+        except Exception as e:
+            if not _is_not_found(e):
                 raise
             raise FileNotFoundError(
                 f"snapshot_span_delta_files: version {v} of {base} is missing — "
@@ -2214,45 +2127,16 @@ def snapshot_span_delta_files(
                 f"{snapshot_latest_version(spark, base)}); re-bootstrap the "
                 f"consumer from a retained snapshot_read version"
             ) from None
-        if v == to_version:
-            to_doc = doc
-        segs = doc.get("segments") or []
-        rel = segs[-1] if segs else None
-        if rel is not None and f"seg-v{v}-" in rel:
-            seg = json.loads(_read_small(spark, f"{base}/{rel}"))
-            mode = seg.get("change_mode")
-            changelog = seg.get("changelog")
-            added = seg.get("add", [])
-        else:  # unexpected segment shape — the full resolver is the truth
-            resolved = snapshot_manifest(spark, base, v)
-            mode = resolved["change_mode"]
-            changelog = resolved["changelog"]
-            added = resolved["last_add"]
-        if mode == "log":
-            if changelog:
-                log_files[v] = list(changelog)
-        elif mode == "insert":
-            if added:
-                insert_files[v] = list(added)
-        elif mode == "truncate":
-            raise SnapshotTruncateInFeed(
-                f"change feed span crosses a TRUNCATE/overwrite commit "
-                f"(v{v} of {base}) — a truncate is not expressible as row "
-                f"changes; re-bootstrap the consumer from "
-                f"snapshot_read(version={v}) and tail from there"
-            )
-        elif mode != "none":
-            raise ValueError(
-                f"snapshot_span_delta_files: version {v} recorded no change "
-                "delta (overwrite or pre-segment history) — use "
-                "snapshot_changes for a diff-based span"
-            )
+        seg = json.loads(_read_small(spark, f"{base}/{commit_segment(base, v, doc)}"))
+        kind, delta = commit_delta(base, v, seg)
+        if delta:
+            files[kind][v] = delta
     return {
         "to_version": to_version,
-        "schema": to_doc["schema"],
-        "keyed": to_doc.get("keyed"),
-        "log_files": log_files,
-        "insert_files": insert_files,
+        "schema": doc["schema"],
+        "keyed": doc.get("keyed"),
+        "log_files": files["log"],
+        "insert_files": files["insert"],
     }
 
 
@@ -2270,7 +2154,7 @@ def _file_version_expr(files_by_version: dict[int, list[str]]):
     form decoding ('+' → space), but ``_normalize_file_uri``'s
     ``unquote`` leaves '+' alone — without the escape, any table path
     containing '+' missed the map and every row came back
-    ``_version=NULL`` (ADVICE r15, medium).  ``input_file_name()``
+    ``_version=NULL``.  ``input_file_name()``
     percent-encodes raw '+' as '%2B' itself, so every literal '+' seen
     here is a real one.
 
@@ -2278,7 +2162,7 @@ def _file_version_expr(files_by_version: dict[int, list[str]]):
     ``coalesce`` (element_at on a map is NULL on a miss): a span of
     ~10k delta files would otherwise put ~20k literals into ONE
     ``create_map`` call — per-expression pressure in analysis and
-    codegen (VERDICT r15 #5).  Spans of ≤1000 files (every normal
+    codegen.  Spans of ≤1000 files (every normal
     cadence) build exactly the single-map expression they always did.
     """
     pairs = []
@@ -2314,29 +2198,27 @@ def snapshot_changes_feed(
     per change PER COMMIT over versions (from_version, to_version],
     with a ``_version`` column, read entirely from the commits'
     recorded deltas in O(changed rows) — never a table diff.  Raises
-    if any version in the span kept no delta (an overwrite, or
-    pre-round-12 history); metadata-compaction commits contribute
-    nothing.  Unlike ``snapshot_changes`` (which collapses the span
+    if any version in the span kept no delta (an overwrite, a
+    restore, or a keyed table's creation); compaction commits
+    contribute nothing.  Unlike ``snapshot_changes`` (which collapses the span
     into one net diff), consecutive changes to the same key all
     appear, each under its version.
 
-    Round 15: the span is served as AT MOST TWO parquet scans (one
+    The span is served as AT MOST TWO parquet scans (one
     over every log-mode changelog file, one over every append's data
     files, ``_version`` derived from an input-file → commit map) —
     plan size is O(1) in span length, so tailing a thousand-commit
-    backlog builds the same plan as tailing one commit (VERDICT r14
-    #3).  Schema evolution across the span reads through the LATEST
-    schema; columns a commit predates are NULL, exactly as the old
-    per-version ``unionByName(allowMissingColumns=True)`` produced.
+    backlog builds the same plan as tailing one commit.  Schema
+    evolution across the span reads through the LATEST schema; columns
+    a commit predates are NULL, exactly as a per-version
+    ``unionByName(allowMissingColumns=True)`` would produce.
 
-    Round 17: ``from_timestamp`` / ``to_timestamp`` (each exclusive
+    ``from_timestamp`` / ``to_timestamp`` (each exclusive
     with its version twin) bound the span by COMMIT TIME instead —
     'every change since 02:00' resolves through
     ``snapshot_version_at`` (from = the version live AT the
     timestamp, i.e. changes strictly after it; to = the version live
     at the end time)."""
-    import json
-
     from pyspark.sql.types import StringType, StructField, StructType
 
     base = path.rstrip("/")
@@ -2448,7 +2330,7 @@ def compact_files(
     only its leading column).  Mutually exclusive with ``sort_by``.
     Stats for the z-ordered columns are ALWAYS recorded (clustering
     without the stats that exploit it would be a silent no-op — the
-    round-13 ``compact_files`` lesson applied at design time).  On a
+    ``compact_files`` lesson applied at design time).  On a
     keyed table the curve clusters WITHIN each bucket (bucket map
     preserved — merges stay bucket-pruned; scans prune files inside
     every bucket).
@@ -2475,11 +2357,6 @@ def compact_files(
     (default: every column that already had stats, so compaction
     never silently LOSES pruning metadata).  Returns the new
     version."""
-    import json
-    import uuid
-
-    from pyspark.sql.types import StructType
-
     if sort_by and zorder_by:
         raise ValueError("compact_files: sort_by and zorder_by are exclusive")
     base = path.rstrip("/")
@@ -2512,17 +2389,9 @@ def compact_files(
             "tables re-cell via their owning index's rebuild)"
         )
     if keyed:
-        kc, nb = keyed["key_col"], int(keyed["n_buckets"])
         if n_buckets is not None:
-            nb = int(n_buckets)
-            keyed = {**keyed, "n_buckets": nb}
-        bc = keyed.get("bucket_col")
-        bucket_expr = (
-            F.col(bc).cast("int")
-            if bc
-            else F.pmod(F.xxhash64(F.col(kc).cast("string")), F.lit(nb))
-        )
-        out = df.withColumn("_bucket", bucket_expr).repartition(F.col("_bucket"))
+            keyed = {**keyed, "n_buckets": int(n_buckets)}
+        out = df.withColumn("_bucket", keyed_bucket(keyed)).repartition(F.col("_bucket"))
         if sort_by or zorder_by:
             # _bucket prefix REQUIRED: FileFormatWriter demands ordering
             # by the partition column and would otherwise insert its own
@@ -2539,12 +2408,10 @@ def compact_files(
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.partitionBy("_bucket").parquet(data_dir)
         files, buckets = _list_bucket_files(jvm, fs, data_dir)
-        seg["add"] = sorted(files)
+        seg["add"] = files
         seg["buckets"] = buckets
-        # honor the stats_cols param here too (round 16 — it used to
-        # apply only to plain tables, silently ignored on keyed ones):
-        # a keyed compaction can DECLARE new skipping stats, e.g. on a
-        # join FK it just sort_by-clustered
+        # a keyed compaction can DECLARE new skipping stats too, e.g. on
+        # a join FK it just sort_by-clustered
         if stats_cols:
             stats_types = dict(stats_types)
             for c in stats_cols:
@@ -2568,20 +2435,12 @@ def compact_files(
             out = df.repartition(max(1, target_files))
         writer = out.write
         if max_records_per_file:
-            # same chunking contract as the keyed branch (ADVICE r14:
-            # the cap was silently ignored on plain tables) — each
+            # same chunking contract as the keyed branch — each
             # range/Z partition splits into contiguous prunable files
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         writer.parquet(data_dir)
-        files = [
-            f
-            for f in (
-                st.getPath().toString()
-                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(data_dir))
-            )
-            if f.rsplit("/", 1)[-1].startswith("part-")
-        ]
-        seg["add"] = sorted(files)
+        files = _part_files(jvm, fs, data_dir)
+        seg["add"] = files
         if stats_cols is None:
             stats_cols = sorted(stats_types)
         elif zorder_by:
@@ -2602,24 +2461,14 @@ def compact_files(
         if files:
             seg["bloom"] = _file_blooms(spark, files, bmeta, schema)
         seg["bloom_meta"] = bmeta  # declaration survives an empty table
-    rel = _write_segment(spark, base, new_version, seg)
-    manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": "compact-files",
-        "schema": resolved["schema"],
-        "segments": [rel],
-    }
-    if keyed:
-        manifest["keyed"] = keyed
-    if resolved["txn"]:
-        manifest["txn"] = resolved["txn"]
-    _commit_manifest(spark, base, new_version, manifest)
-    return new_version
+    return _commit_version(
+        spark, base, new_version, seg, "compact-files", resolved["schema"],
+        keyed=keyed, txn=resolved["txn"],
+    )
 
 
 def compact_dv_buckets(spark, path: str) -> int | None:
-    """TARGETED deletion-vector materialization (round 17): rewrite
+    """TARGETED deletion-vector materialization: rewrite
     ONLY the buckets whose files carry position-delete sidecars —
     their live rows (DVs applied) re-land as fresh per-bucket files,
     the old files and their sidecar references die in replay
@@ -2639,11 +2488,6 @@ def compact_dv_buckets(spark, path: str) -> int | None:
     clustering matters).  Keyed tables only (DVs arise from keyed
     MOR merges).  Returns the new version, or None when the table
     carries no deletion vectors (nothing to do, no commit)."""
-    import json
-    import uuid
-
-    from pyspark.sql.types import StructType
-
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
     resolved = snapshot_manifest(spark, base)
@@ -2661,48 +2505,32 @@ def compact_dv_buckets(spark, path: str) -> int | None:
     schema = StructType.fromJson(json.loads(resolved["schema"]))
     # live rows only — this rewrite IS the materialization
     df = snapshot_read_files(spark, resolved, files, schema)
-    kc, nb = keyed["key_col"], int(keyed["n_buckets"])
-    bc = keyed.get("bucket_col")
-    bucket_expr = (
-        F.col(bc).cast("int")
-        if bc
-        else F.pmod(F.xxhash64(F.col(kc).cast("string")), F.lit(nb))
-    )
     new_version = resolved["version"] + 1
     data_dir = f"{base}/data/v{new_version}-{uuid.uuid4().hex[:8]}"
     _write_buckets(
-        df.withColumn("_bucket", bucket_expr), data_dir, keyed.get("sort_within")
+        df.withColumn("_bucket", keyed_bucket(keyed)), data_dir, keyed.get("sort_within")
     )
     new_files, new_buckets = _list_bucket_files(jvm, fs, data_dir)
     seg: dict = {
-        "add": sorted(new_files),
+        "add": new_files,
         "buckets": new_buckets,
         "remove_buckets": touched,
         "change_mode": "none",
     }
     if resolved["stats_types"] and new_files:
         cols = sorted(resolved["stats_types"])
-        seg["stats"] = _file_stats(spark, sorted(new_files), cols, schema)
+        seg["stats"] = _file_stats(spark, new_files, cols, schema)
         seg["stats_types"] = resolved["stats_types"]
     if resolved["bloom_meta"]:
         if new_files:
             seg["bloom"] = _file_blooms(
-                spark, sorted(new_files), resolved["bloom_meta"], schema
+                spark, new_files, resolved["bloom_meta"], schema
             )
         seg["bloom_meta"] = resolved["bloom_meta"]
-    rel = _write_segment(spark, base, new_version, seg)
-    manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": "compact-dv",
-        "schema": resolved["schema"],
-        "segments": resolved["segments"] + [rel],
-        "keyed": keyed,
-    }
-    if resolved["txn"]:
-        manifest["txn"] = resolved["txn"]
-    _commit_manifest(spark, base, new_version, manifest)
-    return new_version
+    return _commit_version(
+        spark, base, new_version, seg, "compact-dv", resolved["schema"],
+        segments=resolved["segments"], keyed=keyed, txn=resolved["txn"],
+    )
 
 
 def snapshot_restore(
@@ -2710,7 +2538,7 @@ def snapshot_restore(
 ) -> int:
     """ROLL BACK a snapshot table to an earlier version — as a NEW
     commit that re-pins version ``version``'s resolved file list (the
-    Delta RESTORE / Iceberg rollback-to-snapshot verb, round 17).
+    Delta RESTORE / Iceberg rollback-to-snapshot verb).
     ``timestamp`` restores to the version live at that time instead
     (``snapshot_version_at`` — 'undo everything since 02:00').  No
     data is copied or rewritten: the new commit's one segment
@@ -2764,81 +2592,25 @@ def snapshot_restore(
         )
     target = snapshot_manifest(spark, base, version)  # raises if vacuumed
     current = snapshot_manifest(spark, base, latest)
-    new_version = latest + 1
-    seg: dict = {
-        "truncate": True,
-        "add": list(target["files"]),
-        "change_mode": "truncate",
-        "restore_of": int(version),
-    }
-    if target["buckets"]:
-        seg["buckets"] = dict(target["buckets"])
-    if target["stats"]:
-        seg["stats"] = dict(target["stats"])
-    if target["stats_types"]:
-        seg["stats_types"] = dict(target["stats_types"])
-    if target["bloom"]:
-        seg["bloom"] = dict(target["bloom"])
-    if target["bloom_meta"]:
-        seg["bloom_meta"] = dict(target["bloom_meta"])
-    if target["dv"]:
-        seg["dv"] = {f: list(v) for f, v in target["dv"].items()}
-        seg["dv_rows"] = dict(target["dv_rows"])
-    rel = _write_segment(spark, base, new_version, seg)
-    manifest = {
-        "format": 2,
-        "version": new_version,
-        "mode": "restore",
-        "schema": target["schema"],
-        "segments": [rel],
-    }
-    if target["keyed"]:
-        # the TARGET's keyed contract: the re-pinned files are laid out
-        # under it (a restore across a bucket rescale un-rescales)
-        manifest["keyed"] = target["keyed"]
-    if current["txn"]:
-        manifest["txn"] = dict(current["txn"])
-    _commit_manifest(spark, base, new_version, manifest)
-    return new_version
+    seg = _readd_segment(target, "truncate")
+    seg["restore_of"] = int(version)
+    # the TARGET's keyed contract: the re-pinned files are laid out
+    # under it (a restore across a bucket rescale un-rescales)
+    return _commit_version(
+        spark, base, latest + 1, seg, "restore", target["schema"],
+        keyed=target["keyed"], txn=current["txn"],
+    )
 
 
 def catalog_version_at(spark, path: str, timestamp) -> int:
-    """TIMESTAMP AS OF for catalog roots (round 17): the largest
+    """TIMESTAMP AS OF for catalog and index roots: the largest
     retained root version committed ≤ ``timestamp`` (epoch seconds,
-    ``datetime``, or ISO string) — ``committed_at`` stamps since
-    round 17, file-mtime fallback before.  Same contract as
-    ``snapshot_version_at``, one level up: resolving a time gives the
-    COHERENT cross-table state the pipeline served then."""
-    import json
-    import re as _re
-
-    base = path.rstrip("/")
-    ts = _parse_ts(timestamp)
-    jvm, fs = _fs(spark, base)
-    root = jvm.org.apache.hadoop.fs.Path(base)
-    best = None
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            m = _re.fullmatch(r"_idxroot_v(\d+)\.json", st.getPath().getName())
-            if not m:
-                continue
-            v = int(m.group(1))
-            try:
-                at = json.loads(
-                    _read_small(spark, f"{base}/_idxroot_v{v}.json")
-                ).get("committed_at")
-            except (OSError, ValueError):
-                at = None
-            if at is None:
-                at = st.getModificationTime() / 1000.0
-            if at <= ts and (best is None or v > best):
-                best = v
-    if best is None:
-        raise ValueError(
-            f"catalog_version_at: timestamp {timestamp!r} predates the "
-            f"first retained root of {path}"
-        )
-    return best
+    ``datetime``, or ISO string) — ``snapshot_version_at``'s body one
+    level up: resolving a time gives the COHERENT cross-table state the
+    pipeline served then."""
+    return _version_at(
+        spark, path.rstrip("/"), _IDXROOT, timestamp, "catalog_version_at"
+    )
 
 
 def catalog_restore(
@@ -2895,8 +2667,8 @@ def maintenance_report(
         the next power of two that brings it under);
       - ``compact_files(stats/bloom refresh)`` when declared skipping
         metadata covers less than every live file (appends that
-        skipped ``stats_cols`` silently blunt pruning — the round-13
-        lesson surfaced as a report instead of a surprise).
+        skipped ``stats_cols`` silently blunt pruning — surfaced as a
+        report instead of a surprise).
 
     Pure read-only: returns the report dict, never mutates the table."""
     base = path.rstrip("/")
@@ -2953,7 +2725,7 @@ def maintenance_report(
         v < 1.0 for v in bloom_cov.values()
     ):
         recs.append("compact_files(refresh skipping metadata)")
-    # deletion-vector health (round 17): heavy DV accumulation means
+    # deletion-vector health: heavy DV accumulation means
     # every read pays the anti-join — the TARGETED verb rewrites only
     # the DV'd buckets (O(DV'd buckets), never O(table))
     dv_rows_total = int(sum(resolved["dv_rows"].values()))
@@ -2963,7 +2735,7 @@ def maintenance_report(
     # a table whose latest commit is a restore target candidate: the
     # advisor's recovery verb is snapshot_restore(path, version) — a
     # metadata-only rollback (no data copy); surfaced here so operators
-    # discover it (VERDICT r16 #2)
+    # discover it
     if resolved["mode"] == "restore":
         recs.append("table is a restore — vacuum when history settles")
     return {
@@ -3144,7 +2916,7 @@ def snapshot_tail_rewind(spark, cursor_path: str, cursor: int) -> None:
 # A serving index is rarely ONE table: BM25 needs postings + doclen (+ the
 # docterms sidecar), phrase search adds positions.  Committing them
 # sequentially leaves a window where a reader scores postings against a
-# stale doclen (VERDICT r13 #2).  The root closes it with the same
+# stale doclen.  The root closes it with the same
 # write-once + rename protocol as table manifests, one level up:
 #
 #   {index}/_idxroot_v<K>.json   →  {"tables": {"postings": 7, "doclen": 5},
@@ -3169,36 +2941,24 @@ def index_root_latest(spark, path: str) -> int:
     """Current committed index-root version (0 = none): max N with a
     published ``_idxroot_vN.json`` — one directory listing, same
     discipline as ``snapshot_latest_version``."""
-    import re
-
-    base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    root = jvm.org.apache.hadoop.fs.Path(base)
-    if not fs.exists(root):
-        return 0
-    latest = 0
-    for st in fs.listStatus(root):
-        m = re.fullmatch(r"_idxroot_v(\d+)\.json", st.getPath().getName())
-        if m:
-            latest = max(latest, int(m.group(1)))
-    return latest
+    return max(_versions(spark, path.rstrip("/"), _IDXROOT), default=0)
 
 
 def index_root_resolve(spark, path: str, version: int | None = None) -> dict:
     """Resolve an index root: ``{"version", "tables": {name: pinned
     snapshot version}, "txn": {app: watermark}}``.  Roots are tiny
     (one JSON object, no segment replay) so there is no cache."""
-    import json
-
     base = path.rstrip("/")
     if version is None:
         version = index_root_latest(spark, base)
     if version <= 0:
         raise ValueError(f"index_root_resolve: no committed index root at {path}")
     try:
-        doc = json.loads(_read_small(spark, f"{base}/_idxroot_v{version}.json"))
+        doc = json.loads(
+            _read_small(spark, f"{base}/{_version_name(_IDXROOT, version)}")
+        )
     except Exception as e:
-        if "FileNotFoundException" not in str(e):
+        if not _is_not_found(e):
             raise
         raise FileNotFoundError(
             f"index_root_resolve: root version {version} of {base} is "
@@ -3236,10 +2996,7 @@ def index_root_commit(
     (``optimistic_commit`` re-resolves and retries); the rename
     itself refuses to clobber, so two same-version publishers cannot
     both win.  Returns the committed root version."""
-    import json
-
     base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
     cur = index_root_latest(spark, base)
     if expected_version is not None and cur != expected_version:
         raise SnapshotVersionConflict(
@@ -3252,16 +3009,7 @@ def index_root_commit(
         prev = index_root_resolve(spark, base, cur)
         txn = prev["txn"]
         prev_extra = prev["extra"]
-    if _txn_update:
-        for app, bid in _txn_update.items():
-            wm = txn.get(app)
-            if wm is not None and bid <= wm:
-                raise SnapshotTxnAlreadyApplied(
-                    f"index root txn {app!r} batch {bid} already applied "
-                    f"(watermark {wm})"
-                )
-        txn = dict(txn)
-        txn.update(_txn_update)
+    txn = _advance_txn(txn, _txn_update)
     new_version = cur + 1
     doc = {
         "format": 1,
@@ -3273,61 +3021,67 @@ def index_root_commit(
     final_extra = prev_extra if extra is None else extra
     if final_extra:
         doc["extra"] = final_extra
-    import time as _time
-
-    doc["committed_at"] = _time.time()  # TIMESTAMP AS OF (round 17)
-    tmp = f"{base}/._idxroot_v{new_version}.json.tmp"
-    _write_small(spark, tmp, json.dumps(doc).encode())
-    dst = jvm.org.apache.hadoop.fs.Path(f"{base}/_idxroot_v{new_version}.json")
-    if fs.exists(dst) or not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dst):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), False)
-        raise SnapshotVersionConflict(
-            f"index root commit conflict: version {new_version} already "
-            f"exists (concurrent committer won); re-resolve and retry"
-        )
+    _publish(spark, base, _IDXROOT, new_version, doc)
     return new_version
+
+
+def _vacuum_roots(spark, base: str, keep_last: int, members) -> dict:
+    """Expire root versions older than the last ``keep_last`` AND every
+    member version no retained root pins.  ``members(root_version)``
+    maps a retained root to ``{out_key: (member path, kind, pinned
+    version)}``; each member keeps everything from its OLDEST retained
+    pin forward (``vacuum_snapshots`` with keep_last derived from the
+    pins; dangling newer-than-latest-pin versions stay too: they may
+    belong to an in-flight ingest), so time travel over retained roots
+    stays whole.  A ``kind="index_root"`` member vacuums through
+    ``index_root_vacuum``, which protects ITS sub-tables' pins."""
+    versions = _versions(spark, base, _IDXROOT)
+    if not versions:
+        return {"deleted_roots": 0, "tables": {}}
+    latest = versions[-1]
+    keep_from = max(1, latest - keep_last + 1)
+    # member pins across retained roots BEFORE deleting old roots
+    oldest: dict = {}
+    for v in range(keep_from, latest + 1):
+        for key, (p, kind, tv) in members(v).items():
+            prev = oldest.get(key)
+            oldest[key] = (p, kind, tv if prev is None else min(prev[2], tv))
+    jvm, fs = _fs(spark, base)
+    expired = [v for v in versions if v < keep_from]
+    for v in expired:
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(f"{base}/{_version_name(_IDXROOT, v)}"),
+            False,
+        )
+    out: dict = {}
+    for key, (p, kind, tv) in oldest.items():
+        if kind == "index_root":
+            cur = index_root_latest(spark, p)
+            out[key] = index_root_vacuum(spark, p, keep_last=cur - tv + 1)
+        else:
+            cur = snapshot_latest_version(spark, p)
+            out[key] = vacuum_snapshots(spark, p, keep_last=cur - tv + 1)
+    return {"deleted_roots": len(expired), "tables": out}
 
 
 def index_root_vacuum(spark, path: str, keep_last: int = 2) -> dict:
     """Expire old index roots AND the sub-table versions no retained
-    root pins: drop roots older than the last ``keep_last``, then for
-    each sub-table vacuum everything below the OLDEST still-pinned
-    version (``vacuum_snapshots`` with keep_last derived from the
-    retained pins — a sub-table version a retained root references is
-    never reclaimed, so cross-table time travel over retained roots
-    stays whole)."""
-    import re
-
+    root pins (``_vacuum_roots``: an index root is a catalog whose
+    members are its sub-tables ``{path}/{name}``).  Returns
+    ``{"deleted_roots": n, "tables": {name: vacuum_snapshots report}}``."""
     base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    latest = index_root_latest(spark, base)
-    if latest == 0:
-        return {"deleted_roots": 0, "tables": {}}
-    keep_from = max(1, latest - keep_last + 1)
-    deleted = 0
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(base)):
-        m = re.fullmatch(r"_idxroot_v(\d+)\.json", st.getPath().getName())
-        if m and int(m.group(1)) < keep_from:
-            fs.delete(st.getPath(), False)
-            deleted += 1
-    # oldest pinned version per sub-table across retained roots
-    oldest: dict = {}
-    for v in range(keep_from, latest + 1):
-        root = index_root_resolve(spark, base, v)
-        for name, tv in root["tables"].items():
-            oldest[name] = min(oldest.get(name, tv), tv)
-    out: dict = {}
-    for name, tv in oldest.items():
-        sub = f"{base}/{name}"
-        sub_latest = snapshot_latest_version(spark, sub)
-        # keep everything from the oldest pinned version forward
-        # (dangling newer-than-latest-pin versions included: they may
-        # belong to an in-flight ingest)
-        out[name] = vacuum_snapshots(spark, sub, keep_last=sub_latest - tv + 1)
-    return {"deleted_roots": deleted, "tables": out}
+    return _vacuum_roots(
+        spark,
+        base,
+        keep_last,
+        lambda v: {
+            name: (f"{base}/{name}", "snapshot", tv)
+            for name, tv in index_root_resolve(spark, base, v)["tables"].items()
+        },
+    )
 
 
-# --- CATALOG-LEVEL MULTI-TABLE TRANSACTIONS (round 15, VERDICT r14 #4) ------
+# --- CATALOG-LEVEL MULTI-TABLE TRANSACTIONS ----------------------------------
 #
 # The index-root protocol generalized from "sub-tables of one index"
 # to "N ARBITRARY snapshot tables at arbitrary paths": one write-once-
@@ -3423,40 +3177,17 @@ def catalog_read(
 
 def catalog_vacuum(spark, path: str, keep_last: int = 2) -> dict:
     """Expire old catalog roots AND member versions no retained root
-    pins — ``index_root_vacuum`` semantics with member paths read from
-    the roots.  ``kind="index_root"`` members vacuum through
-    ``index_root_vacuum`` (which protects THEIR sub-tables' pinned
-    versions), keeping the whole catalog → index → sub-table pin chain
-    whole."""
-    import re
-
+    pins — ``_vacuum_roots`` with member paths read from the roots.
+    ``kind="index_root"`` members vacuum through ``index_root_vacuum``,
+    keeping the whole catalog → index → sub-table pin chain whole.
+    Returns ``{"deleted_roots": n, "tables": {member path: report}}``."""
     base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    latest = index_root_latest(spark, base)
-    if latest == 0:
-        return {"deleted_roots": 0, "tables": {}}
-    keep_from = max(1, latest - keep_last + 1)
-    # member pins across retained roots BEFORE deleting old roots
-    oldest: dict = {}
-    meta: dict = {}
-    for v in range(keep_from, latest + 1):
-        cat = catalog_resolve(spark, base, v)
-        for name, t in cat["tables"].items():
-            key = (t["path"], t["kind"])
-            oldest[key] = min(oldest.get(key, t["version"]), t["version"])
-            meta[name] = key
-    deleted = 0
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(base)):
-        m = re.fullmatch(r"_idxroot_v(\d+)\.json", st.getPath().getName())
-        if m and int(m.group(1)) < keep_from:
-            fs.delete(st.getPath(), False)
-            deleted += 1
-    out: dict = {}
-    for (p, kind), tv in oldest.items():
-        if kind == "index_root":
-            cur = index_root_latest(spark, p)
-            out[p] = index_root_vacuum(spark, p, keep_last=cur - tv + 1)
-        else:
-            cur = snapshot_latest_version(spark, p)
-            out[p] = vacuum_snapshots(spark, p, keep_last=cur - tv + 1)
-    return {"deleted_roots": deleted, "tables": out}
+    return _vacuum_roots(
+        spark,
+        base,
+        keep_last,
+        lambda v: {
+            t["path"]: (t["path"], t["kind"], t["version"])
+            for t in catalog_resolve(spark, base, v)["tables"].values()
+        },
+    )

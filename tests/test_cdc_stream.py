@@ -344,3 +344,64 @@ def test_start_timestamp_option(spark, tmp_path):
             .start()
             .awaitTermination(120)
         )
+
+
+def _cdc_files(path, v):
+    """(kind, files) the CDC planner names for commit ``v`` alone —
+    called directly, no stream started."""
+    reader = cdc_stream.SnapshotCdcStreamReader({"path": path})
+    parts = reader.partitions({"version": v - 1}, {"version": v})
+    return {p.kind for p in parts}, sorted(p.file for p in parts)
+
+
+def _span_files(spark, path, v):
+    span = layout.snapshot_span_delta_files(spark, path, v - 1, v)
+    files = span["log_files"].get(v) or span["insert_files"].get(v) or []
+    return sorted(cdc_stream._local(f) for f in files)
+
+
+def test_change_readers_agree_on_every_commit_kind(spark, tmp_path):
+    """The span reader (batch feed, view syncs) and the CDC stream's
+    planner classify every commit kind the same way, version by
+    version: merges and appends name the same delta files, the three
+    compactions name nothing, and a restore raises in both."""
+    p = str(tmp_path / "t")
+    layout.snapshot_write_keyed(
+        spark, _kv(spark, [(i, "abcd"[i % 4], i) for i in range(20)]), p, "k",
+        n_buckets=4,
+    )
+    layout.snapshot_merge(spark, p, _kv(spark, [(100, "z", 1), (101, "z", 2)]), "k")
+    layout.snapshot_merge(spark, p, _kv(spark, [(3, "q", 30), (7, "q", 70)]), "k")
+    layout.snapshot_merge(spark, p, _kv(spark, [(5, "m", 50)]), "k", mode="mor")
+    assert layout.compact_dv_buckets(spark, p) == 5
+    assert layout.compact_files(spark, p, target_files=2) == 6
+    assert layout.compact_metadata(spark, p) == 7
+    assert layout.snapshot_restore(spark, p, version=3) == 8
+
+    # v1, the keyed creation: the stream bootstraps it as inserts of its
+    # files, the span reader has no delta to serve
+    kinds, files = _cdc_files(p, 1)
+    assert kinds == {"insert"}
+    assert files == sorted(
+        cdc_stream._local(f) for f in layout.snapshot_manifest(spark, p, 1)["files"]
+    )
+    with pytest.raises(ValueError):
+        layout.snapshot_span_delta_files(spark, p, 0, 1)
+    for v in (2, 3, 4):  # insert, update and merge-on-read merges
+        kinds, files = _cdc_files(p, v)
+        assert kinds == {"log"} and files, v
+        assert files == _span_files(spark, p, v), v
+    for v in (5, 6, 7):  # the three compactions
+        assert _cdc_files(p, v) == (set(), []), v
+        assert _span_files(spark, p, v) == [], v
+    with pytest.raises(layout.SnapshotTruncateInFeed):
+        _cdc_files(p, 8)
+    with pytest.raises(layout.SnapshotTruncateInFeed):
+        layout.snapshot_span_delta_files(spark, p, 7, 8)
+
+    # a plain table's append is its own insert delta in both readers
+    q = str(tmp_path / "plain")
+    layout.snapshot_commit(spark, _kv(spark, [(1, "a", 1)]), q)
+    layout.snapshot_commit(spark, _kv(spark, [(2, "b", 2)]), q, mode="append")
+    kinds, files = _cdc_files(q, 2)
+    assert kinds == {"insert"} and files == _span_files(spark, q, 2)

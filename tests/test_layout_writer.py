@@ -1,126 +1,10 @@
-"""Writer-layout discipline: bounded files per partition value, rows
-sorted within each file (row-group pruning depends on it), and the
-written table prunes on read."""
+"""Snapshot-table writer discipline: commits, time travel, isolation
+and crash invisibility, stats-pruned scans, vacuum, keyed merges and
+schema evolution."""
 
 from __future__ import annotations
 
-import collections
-
 from pyspark.sql import functions as F
-
-from fiware_cosmos_orion_flink_connector_examples_spark.sources.layout import (
-    write_clustered,
-    write_zordered,
-)
-from fiware_cosmos_orion_flink_connector_examples_spark.sources.tables import load_table
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_write_clustered_layout_and_order(spark, tmp_path):
-    out = str(tmp_path / "events_by_type")
-    ev = load_table(spark, SF, "events")
-    write_clustered(ev, out, ["event_type"], ["ts"], files_per_value=1)
-
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-
-    # exactly one data file per partition value
-    tagged = back.select("event_type", F.input_file_name().alias("f"))
-    per_value = (
-        tagged.groupBy("event_type").agg(F.countDistinct("f").alias("nf")).collect()
-    )
-    assert per_value and all(r.nf == 1 for r in per_value)
-
-    # rows inside each file are sorted by ts
-    rows = back.select(
-        "event_type", "ts", F.input_file_name().alias("f")
-    ).collect()
-    by_file = collections.defaultdict(list)
-    for r in rows:
-        by_file[r.f].append(r.ts)
-    # collect() preserves within-file row order for a simple scan
-    for f, ts_list in by_file.items():
-        assert ts_list == sorted(ts_list), f
-
-    # partition pruning fires on the written layout
-    plan = (
-        back.filter(F.col("event_type") == "click")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [" in plan
-
-
-def test_write_clustered_salted_bounds_files(spark, tmp_path):
-    out = str(tmp_path / "events_salted")
-    ev = load_table(spark, SF, "events")
-    write_clustered(ev, out, ["event_type"], ["ts"], files_per_value=3)
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    per_value = (
-        back.select("event_type", F.input_file_name().alias("f"))
-        .groupBy("event_type")
-        .agg(F.countDistinct("f").alias("nf"))
-        .collect()
-    )
-    assert all(1 <= r.nf <= 3 for r in per_value)
-
-
-def _files_overlapping_ybox(spark, path, y_lo, y_hi):
-    """Count output files whose per-file [min(y), max(y)] intersects
-    the box — exactly the pruning decision a min/max-stats reader
-    makes."""
-    n = 0
-    for f in spark.read.parquet(path).inputFiles():
-        r = spark.read.parquet(f).agg(
-            F.min("y").alias("lo"), F.max("y").alias("hi")
-        ).first()
-        if r.lo <= y_hi and r.hi >= y_lo:
-            n += 1
-    return n
-
-
-def test_zorder_prunes_nonleading_dimension(spark, tmp_path):
-    """The z-order claim, pinned: on a 256x256 grid written as 16
-    files, a y-only box predicate must prune files under the z-order
-    layout and CANNOT prune under the linear x-sort layout (every
-    x-stripe file spans all of y).  Also checks the rewrite is
-    lossless."""
-    grid = spark.range(256 * 256).select(
-        (F.col("id") % 256).alias("x"),
-        (F.col("id") / 256).cast("long").alias("y"),
-    )
-    zpath = str(tmp_path / "zorder")
-    lpath = str(tmp_path / "linear")
-    write_zordered(grid, zpath, ["x", "y"], n_files=16, bits=8)
-    (
-        grid.repartitionByRange(16, F.col("x"))
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-    assert spark.read.parquet(zpath).count() == 256 * 256
-
-    z_hit = _files_overlapping_ybox(spark, zpath, 100, 115)
-    l_hit = _files_overlapping_ybox(spark, lpath, 100, 115)
-    # linear x-sort: every file spans y fully -> zero pruning
-    assert l_hit == len(spark.read.parquet(lpath).inputFiles())
-    # z-order: a 16/256 y-slice touches a bounded fraction of the curve
-    assert z_hit < l_hit
-    assert z_hit <= 8, f"z-order should prune at least half: {z_hit}"
-
-
-def test_zorder_empty_input_writes_empty_table(spark, tmp_path):
-    """Empty input (NULL min/max) degrades to a constant key and an
-    empty table, not a crash."""
-    out = str(tmp_path / "zorder_empty")
-    empty = spark.range(0).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    write_zordered(empty, out, ["x", "y"], n_files=4)
-    assert spark.read.parquet(out).count() == 0
 
 
 def test_snapshot_commit_read_append_time_travel(spark, tmp_path):

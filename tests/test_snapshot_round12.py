@@ -114,18 +114,16 @@ def test_change_log_equals_diff_feed(spark, tmp_path):
     for v in range(1, latest):
         log = {
             (r["k"], r["_change"], r["v"])
-            for r in layout.snapshot_changes(spark, path, v, v + 1).collect()
+            for r in layout.snapshot_changes_feed(spark, path, v, v + 1).collect()
         }
         diff = {
             (r["k"], r["_change"], r["v"])
-            for r in layout.snapshot_changes(
-                spark, path, v, v + 1, prefer_log=False
-            ).collect()
+            for r in layout.snapshot_changes(spark, path, v, v + 1).collect()
         }
         assert log == diff, f"versions {v}->{v + 1}"
     # the no-op update on key 3 in step 2 must appear in NEITHER feed
     assert 3 not in {
-        r["k"] for r in layout.snapshot_changes(spark, path, 2, 3).collect()
+        r["k"] for r in layout.snapshot_changes_feed(spark, path, 2, 3).collect()
     }
 
 
@@ -183,9 +181,7 @@ def test_changes_feed_append_inserts_free(spark, tmp_path):
     assert feed == [(2, 2, "insert", "b"), (2, 3, "insert", "c")]
     diff = sorted(
         (r["k"], r["_change"], r["v"])
-        for r in layout.snapshot_changes(
-            spark, path, 1, 2, key_col="k", prefer_log=False
-        ).collect()
+        for r in layout.snapshot_changes(spark, path, 1, 2, key_col="k").collect()
     )
     assert diff == [(2, "insert", "b"), (3, "insert", "c")]
     # an overwrite cannot be expressed as row changes → the incremental

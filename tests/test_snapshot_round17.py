@@ -511,12 +511,9 @@ def test_timestamp_time_travel_and_restore(spark, tmp_path):
         layout.snapshot_restore(spark, p, 2, timestamp=t_after_v2)
 
 
-def test_version_at_skips_vacuumed_and_falls_back_to_mtime(spark, tmp_path):
+def test_version_at_skips_vacuumed(spark, tmp_path):
     """Vacuumed versions don't resolve (their commit time is gone with
-    them); manifests predating the committed_at stamp resolve via
-    file mtime (legacy fallback)."""
-    import json
-    import os
+    them)."""
     import time
 
     p = str(tmp_path / "t")
@@ -526,16 +523,6 @@ def test_version_at_skips_vacuumed_and_falls_back_to_mtime(spark, tmp_path):
             spark, p, _upd(spark, [(i, "b", i, False)]), "k",
             delete_col="_del",
         )
-    # strip the stamp from v4's manifest (simulate a pre-r17 commit);
-    # mtime fallback must still resolve it
-    mp = os.path.join(p, "_manifest_v4.json")
-    doc = json.loads(open(mp).read())
-    doc.pop("committed_at")
-    open(mp, "w").write(json.dumps(doc))
-    crc = os.path.join(p, "._manifest_v4.json.crc")
-    if os.path.exists(crc):  # hadoop local-fs checksum sidecar
-        os.remove(crc)
-    layout._MANIFEST_CACHE.clear()
     assert layout.snapshot_version_at(spark, p, time.time()) == 4
     layout.vacuum_snapshots(spark, p, keep_last=2)
     # v1/v2 expired: the earliest timestamp now resolvable is v3's
@@ -614,3 +601,22 @@ def test_changes_feed_by_timestamp(spark, tmp_path):
         layout.snapshot_changes_feed(spark, p, 1, from_timestamp=t1)
     with pytest.raises(ValueError, match="required"):
         layout.snapshot_changes_feed(spark, p)
+
+
+def test_compact_metadata_keeps_deletion_vectors(spark, tmp_path):
+    """Collapsing the segment history re-adds the live files WITH their
+    deletion vectors: a merge-on-read update's old row stays deleted,
+    so each key keeps exactly one row."""
+    p = str(tmp_path / "t")
+    layout.snapshot_write_keyed(
+        spark, _src(spark, [(i, "a", i) for i in range(8)]), p, "k", n_buckets=2
+    )
+    layout.snapshot_merge(
+        spark, p, _upd(spark, [(3, "b", 30, False)]), "k",
+        delete_col="_del", mode="mor",
+    )
+    before = _rows(spark, p)
+    layout.compact_metadata(spark, p)
+    assert layout.snapshot_manifest(spark, p)["dv"]
+    assert _rows(spark, p) == before
+    assert layout.snapshot_read(spark, p).count() == 8
